@@ -12,48 +12,67 @@ import org.apache.spark.sql.types.IntegerType
   */
 object Sessions {
 
-  /** graft's native Catalyst extensions, registered the supported way
-    * (SparkSessionExtensions) — usable from `call_function` and SQL.
-    */
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {
     case Literal(i: Int, IntegerType) => i
     case other => throw new IllegalArgumentException(
       s"$fn '$arg' argument must be an int literal, got $other")
   }
 
+  /** graft's native Catalyst extensions, registered the supported way
+    * (SparkSessionExtensions) — usable from `call_function` and SQL.
+    */
   def registerExtensions(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("collect_list_capped"),
-      new ExpressionInfo(
-        classOf[graft.plans.CollectListCapped].getName, "collect_list_capped"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "collect_list_capped(expr, cap) takes exactly 2 arguments")
-        graft.plans.CollectListCapped(
-          children.head, intLit(children(1), "collect_list_capped", "cap"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(
-        classOf[graft.plans.NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          "nfc_normalize(str) takes exactly 1 argument")
-        graft.plans.NfcNormalize(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("topk_by"),
-      new ExpressionInfo(
-        classOf[graft.plans.TopKByScore].getName, "topk_by"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "topk_by(id, score, k) takes exactly 3 arguments")
-        graft.plans.TopKByScore(
-          children(0),
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            children(1), org.apache.spark.sql.types.DoubleType),
-          intLit(children(2), "topk_by", "k"))
-      }))
+    def inject(name: String, cls: Class[_], arity: Int, signature: String)(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity,
+            s"$signature takes exactly $arity argument${if (arity == 1) "" else "s"}")
+          build(children)
+        }))
+    def ints(fn: String, args: Seq[Expression], names: String*): Seq[Int] =
+      args.zip(names).map { case (e, n) => intLit(e, fn, n) }
+
+    inject("token_count", classOf[graft.plans.TokenCount], 1,
+      "token_count(str)")(c => graft.plans.TokenCount(c.head))
+    inject("stopword_ratio", classOf[graft.plans.StopwordRatio], 1,
+      "stopword_ratio(str)")(c => graft.plans.StopwordRatio(c.head))
+    inject("lang_id", classOf[graft.plans.LangId], 1,
+      "lang_id(str)")(c => graft.plans.LangId(c.head))
+    inject("c4_rules", classOf[graft.plans.C4Rules], 3,
+      "c4_rules(str, minLineWords, minSentences)") { c =>
+      val Seq(minLineWords, minSentences) =
+        ints("c4_rules", c.tail, "minLineWords", "minSentences")
+      graft.plans.C4Rules(c.head, minLineWords, minSentences)
+    }
+    val gopherArgs = Seq("minWords", "maxWords", "minMeanWordLen",
+      "maxMeanWordLen", "symbolNum", "symbolDen", "bulletNum", "bulletDen",
+      "ellipsisNum", "ellipsisDen", "alphaNum", "alphaDen", "minStopwordHits")
+    inject("gopher_rules", classOf[graft.plans.GopherRules],
+      1 + gopherArgs.length,
+      gopherArgs.mkString("gopher_rules(str, ", ", ", ")")) { c =>
+      val p = ints("gopher_rules", c.tail, gopherArgs: _*)
+      graft.plans.GopherRules(c.head, graft.plans.GopherParams(
+        p(0), p(1), p(2), p(3), p(4), p(5), p(6), p(7), p(8), p(9), p(10),
+        p(11), p(12)))
+    }
+    inject("collect_list_capped", classOf[graft.plans.CollectListCapped], 2,
+      "collect_list_capped(expr, cap)") { c =>
+      graft.plans.CollectListCapped(
+        c.head, intLit(c(1), "collect_list_capped", "cap"))
+    }
+    inject("nfc_normalize", classOf[graft.plans.NfcNormalize], 1,
+      "nfc_normalize(str)")(c => graft.plans.NfcNormalize(c.head))
+    inject("topk_by", classOf[graft.plans.TopKByScore], 3,
+      "topk_by(id, score, k)") { c =>
+      graft.plans.TopKByScore(
+        c(0),
+        org.apache.spark.sql.catalyst.expressions.Cast(
+          c(1), org.apache.spark.sql.types.DoubleType),
+        intLit(c(2), "topk_by", "k"))
+    }
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -110,7 +110,7 @@ object SparkEntry {
     * durable restart semantics point SPARK_GRAFT_STREAM_CKPT_DIR at
     * real storage — the knob is parameterised, the default is only
     * for checkpoints whose lifetime is one process anyway. */
-  private lazy val streamCkptRoot: java.nio.file.Path = {
+  private[graft] lazy val streamCkptRoot: java.nio.file.Path = {
     val base = sys.env.get("SPARK_GRAFT_STREAM_CKPT_DIR")
       .orElse(Option("/dev/shm").filter { p =>
         val f = new java.io.File(p); f.isDirectory && f.canWrite })
@@ -132,37 +132,59 @@ object SparkEntry {
     p
   }
 
-  /** Fresh checkpoint dir for one streaming run; pair with
-    * `dropStagingDir` after `q.stop()`. */
+  /** Fresh checkpoint dir for one streaming run. */
   private def streamCkpt(name: String): java.nio.file.Path =
     streamCkptRoot.resolve(
       name + "_" + java.util.UUID.randomUUID().toString.replace("-", ""))
 
-  /** Checkpoint dir keyed by the (UUID-unique) memory-sink name, so
-    * the writeStream site allocates it inline and `drainMemorySink`
-    * deletes it after the stream stops. */
-  private val ckptBySink =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]
-  private def streamCkptFor(sink: String): java.nio.file.Path =
-    ckptBySink.computeIfAbsent(sink, n => streamCkpt(n))
+  /** Runs one ephemeral streaming query to completion and returns its
+    * result: `start` gets a fresh checkpoint dir and runs while the
+    * session pins 8 shuffle partitions — the query's stateful-stage
+    * width, fixed in its checkpoint when it starts: 8 suffice for the
+    * fixtures and cut each micro-batch's task overhead 4× against the
+    * session's 32, and each run's checkpoint is fresh, so no stored
+    * state depends on it. Then `processAllAvailable` and `stop`, and
+    * `read` copies the result out eagerly while the stream's files
+    * still exist. The checkpoint is dropped in a `finally`: a stream
+    * that throws leaks no checkpoint. */
+  private[graft] def runStream(s: SparkSession, name: String)(
+      start: String => org.apache.spark.sql.streaming.StreamingQuery)(
+      read: => DataFrame): DataFrame = {
+    val ckpt = streamCkpt(name)
+    try {
+      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+      val q =
+        try {
+          s.conf.set("spark.sql.shuffle.partitions", "8")
+          start(ckpt.toString)
+        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      try q.processAllAvailable() finally q.stop()
+      read
+    } finally dropStagingDir(s, ckpt)
+  }
 
-  /** Drain a FINISHED memory-sink stream: copy the sink's rows out
-    * eagerly (localCheckpoint), then drop the sink's temp view so the
-    * MemorySink's buffered batches become unreachable. Without the
-    * drop every streaming run pins its full sink output in driver
-    * memory for the life of the session — across a 216-query bench
-    * suite (4 runs per query) that accumulation is pure GC pressure
-    * charged to whatever queries run later (the round-17 streaming
-    * tail attribution). Long-lived-session hygiene, zero semantic
-    * change: the returned rows are the same rows. */
-  private def drainMemorySink(
-      s: SparkSession, sink: String, df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint() // eager copy out of the sink
-    s.catalog.dropTempView(sink)
-    // the run's ephemeral checkpoint (offset/commit WAL + state
-    // deltas) dies with the stream it served
-    Option(ckptBySink.remove(sink)).foreach(p => dropStagingDir(s, p))
-    out
+  /** [[runStream]] into a uniquely named memory sink: `stream` is
+    * written in `mode`, and `select(sink)` is copied out eagerly
+    * (localCheckpoint) — project in `select`, since the sink buffers
+    * whole rows. The sink's temp view is dropped in a `finally` too, so
+    * its buffered batches become unreachable whether the stream
+    * succeeded or threw. Without the drop every streaming run pins its
+    * full sink output in driver memory for the life of the session —
+    * across a 216-query bench suite (4 runs per query) that
+    * accumulation is pure GC pressure charged to whatever queries run
+    * later (the round-17 streaming tail attribution). */
+  private[graft] def drainMemoryStream(s: SparkSession, name: String,
+      mode: org.apache.spark.sql.streaming.OutputMode)(
+      stream: => Dataset[_])(select: DataFrame => DataFrame): DataFrame = {
+    val sink = name + "_sink_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    try runStream(s, sink) { ckpt =>
+      stream.writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode)
+        .start()
+    }(select(s.table(sink)).localCheckpoint())
+    finally s.catalog.dropTempView(sink)
   }
 
   /** Best-effort recursive delete of a PER-RUN staging directory once
@@ -3013,28 +3035,13 @@ object SparkEntry {
     }
     val src = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val sink = "q73_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    // per-batch stateful-stage width: 8 state partitions suffice for the
-    // fixture and cut 4 micro-batches' task overhead 4× vs the session's
-    // 32; the conf only pins THIS query's state layout (checkpoints are
-    // per-run temp dirs, so no stored-state compatibility concern)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.nearDupStream(
-            src, idCol = "doc_id", textCol = "text",
-            shingleK = 8, numHashes = 12, bands = 3, threshold = 0.5,
-            maxBucketState = 100000)
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", streamCkptFor(sink).toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
-    drainMemorySink(s, sink,
-      s.table(sink).select(col("id1"), col("id2"), col("est_jaccard")))
+    drainMemoryStream(s, "q73",
+        org.apache.spark.sql.streaming.OutputMode.Append()) {
+      graft.streaming.Streaming.nearDupStream(
+        src, idCol = "doc_id", textCol = "text",
+        shingleK = 8, numHashes = 12, bands = 3, threshold = 0.5,
+        maxBucketState = 100000)
+    }(_.select(col("id1"), col("id2"), col("est_jaccard")))
       .distinct()
   }
 
@@ -4110,23 +4117,12 @@ object SparkEntry {
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"))
       .localCheckpoint(true)
-    val sink = "q93_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.enrich(src, dim, Seq("user_id"))
-          .groupBy(col("segment"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", streamCkptFor(sink).toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
-    drainMemorySink(s, sink,
-      s.table(sink).select(col("segment"), col("n"), col("total_value")))
+    drainMemoryStream(s, "q93",
+        org.apache.spark.sql.streaming.OutputMode.Complete()) {
+      graft.streaming.Streaming.enrich(src, dim, Seq("user_id"))
+        .groupBy(col("segment"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
+    }(_.select(col("segment"), col("n"), col("total_value")))
   }
 
   private val q93Sql =
@@ -4257,28 +4253,16 @@ object SparkEntry {
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
     val views = src.filter(col("event_type") === "view")
     val buys = src.filter(col("event_type") === "purchase")
-    val sink = "q96_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.intervalJoin(
-            views, buys, Seq("user_id"), "ts", "ts",
-            lowerMicros = 0L, upperMicros = 3600L * 1000000L,
-            watermark = "36500 days")
-          .select(col("l_user_id").as("user_id"),
-            col("l_event_id").as("view_id"),
-            col("r_event_id").as("purchase_id"))
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", streamCkptFor(sink).toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
-    drainMemorySink(s, sink,
-      s.table(sink).select(col("user_id"), col("view_id"),
-        col("purchase_id")))
+    drainMemoryStream(s, "q96",
+        org.apache.spark.sql.streaming.OutputMode.Append()) {
+      graft.streaming.Streaming.intervalJoin(
+          views, buys, Seq("user_id"), "ts", "ts",
+          lowerMicros = 0L, upperMicros = 3600L * 1000000L,
+          watermark = "36500 days")
+        .select(col("l_user_id").as("user_id"),
+          col("l_event_id").as("view_id"),
+          col("r_event_id").as("purchase_id"))
+    }(_.select(col("user_id"), col("view_id"), col("purchase_id")))
   }
 
   private val q96Sql =
@@ -4812,25 +4796,13 @@ object SparkEntry {
     val src = s.readStream
       .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val sink = "q107_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.dedupStream(
-            src, tsCol = "ts", textCol = "text", watermark = "1 hour")
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", streamCkptFor(sink).toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
-    // project BEFORE the drain: the sink buffers full texts; the
-    // checkpointed copy carries only (doc_id, text_len)
-    drainMemorySink(s, sink,
-      s.table(sink).select(col("doc_id"),
-        length(col("text")).as("text_len")))
+    // the sink buffers full texts; the copy carries only
+    // (doc_id, text_len)
+    drainMemoryStream(s, "q107",
+        org.apache.spark.sql.streaming.OutputMode.Append()) {
+      graft.streaming.Streaming.dedupStream(
+        src, tsCol = "ts", textCol = "text", watermark = "1 hour")
+    }(_.select(col("doc_id"), length(col("text")).as("text_len")))
   }
 
   private val q107Sql =
@@ -7813,24 +7785,13 @@ object SparkEntry {
     val src = s.readStream
       .schema("key BIGINT, id BIGINT, ts TIMESTAMP, v BIGINT")
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val sink = "q160_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.cusumStream(
-            src.as[graft.streaming.Streaming.CusumPoint],
-            target = 2500L, slack = 1000L, threshold = 30000L)
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", streamCkptFor(sink).toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
-    drainMemorySink(s, sink,
-      s.table(sink).select(col("key").as("user_id"),
-        col("id").as("event_id"), col("s_alarm"), col("alarm_seq")))
+    drainMemoryStream(s, "q160",
+        org.apache.spark.sql.streaming.OutputMode.Append()) {
+      graft.streaming.Streaming.cusumStream(
+          src.as[graft.streaming.Streaming.CusumPoint],
+          target = 2500L, slack = 1000L, threshold = 30000L)
+    }(_.select(col("key").as("user_id"),
+      col("id").as("event_id"), col("s_alarm"), col("alarm_seq")))
   }
 
   // ------------------------------------------------------------------
@@ -8140,22 +8101,12 @@ object SparkEntry {
     val src = s.readStream
       .schema("ts TIMESTAMP, user_id BIGINT")
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val sink = "q168_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.kmvWindowedDistinct(
-            src, tsCol = "ts", valueCol = col("user_id"),
-            windowLen = "1 day", k = 64)
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", streamCkptFor(sink).toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
-    drainMemorySink(s, sink, s.table(sink))
+    drainMemoryStream(s, "q168",
+        org.apache.spark.sql.streaming.OutputMode.Complete()) {
+      graft.streaming.Streaming.kmvWindowedDistinct(
+        src, tsCol = "ts", valueCol = col("user_id"),
+        windowLen = "1 day", k = 64)
+    }(identity)
   }
 
   private val q168Sql =
@@ -8863,31 +8814,25 @@ object SparkEntry {
     // checkpoint on the RAM-backed ephemeral root (see streamCkptRoot)
     // — the parquet OUTPUT stays on disk, only the WAL/state deltas
     // whose lifetime is this run go to memory-speed storage
-    val ckpt = streamCkpt("q183")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        graft.streaming.Streaming.ewmaStream(
-            src.as[graft.streaming.Streaming.EwmaPoint], alpha = 4)
-          .toDF()
-          .writeStream.format("parquet")
-          .option("path", outDir.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
     // eager copy of the (narrow) output, then drop the per-run file
-    // sink + checkpoint — a bench suite otherwise accumulates 4 runs
-    // of 1M-row parquet sinks per invocation in /tmp
-    val out = s.read.parquet(outDir.toString)
-      .select(col("key").as("user_id"), col("id").as("event_id"),
-        col("v"), col("ewma_fx"))
-      .localCheckpoint()
-    dropStagingDir(s, base)
-    dropStagingDir(s, ckpt)
-    out
+    // sink, whether the stream succeeded or threw — a bench suite
+    // otherwise accumulates 4 runs of 1M-row parquet sinks per
+    // invocation in /tmp
+    try runStream(s, "q183") { ckpt =>
+      graft.streaming.Streaming.ewmaStream(
+          src.as[graft.streaming.Streaming.EwmaPoint], alpha = 4)
+        .toDF()
+        .writeStream.format("parquet")
+        .option("path", outDir.toString)
+        .option("checkpointLocation", ckpt)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+        .start()
+    } {
+      s.read.parquet(outDir.toString)
+        .select(col("key").as("user_id"), col("id").as("event_id"),
+          col("v"), col("ewma_fx"))
+        .localCheckpoint()
+    } finally dropStagingDir(s, base)
   }
 
   // ------------------------------------------------------------------

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis functions for large-corpus pipelines (tokenize, quality,
   * language-ID, fingerprinting). All are compositions of built-in codegen'd
-  * expressions — no UDFs — so they stay inside whole-stage codegen and
-  * their filters/projections push down to the scan.
+  * expressions or graft's own codegen'd kernels (`graft.plans`) — no UDFs,
+  * no higher-order-function lambdas in the quality gate — so they stay
+  * inside whole-stage codegen and their filters/projections push down to
+  * the scan.
   *
   * The reference has no scalar-function catalog (every transform is host-
   * language code in a conduit — SURVEY §2.7); these are the Spark-native
@@ -38,7 +40,10 @@ object Text {
   def tokens(c: Column): Column =
     filter(split(c, "\\s+"), t => t =!= "")
 
-  def tokenCount(c: Column): Column = size(tokens(c))
+  /** `size(tokens(c))` as one pass over the text (`token_count`, a
+    * `graft.plans.TextKernels` kernel); null propagates.
+    */
+  def tokenCount(c: Column): Column = call_function("token_count", c)
 
   /** BPE-ish subword split: letters runs, digit runs, single punctuation —
     * a deterministic regex proxy for tokenizer-sized units.
@@ -105,39 +110,21 @@ object Text {
         length(c).cast("double"))
       .otherwise(lit(0.0))
 
-  private val enStop =
-    Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
-  private val deStop =
-    Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "von", "zu")
-  private val frStop =
-    Seq("le", "la", "les", "de", "et", "est", "un", "une", "dans", "que")
-
-  private def stopHits(toks: Column, stops: Seq[String]): Column =
-    size(filter(toks, t => lower(t).isInCollection(stops)))
-
-  /** Fraction of tokens that are (English) stopwords — a standard quality
-    * signal for web-scraped corpora.
+  /** Fraction of [[tokens]] that are (English) stopwords, matched after
+    * `lower` — a standard quality signal for web-scraped corpora. 0.0 for
+    * a document without tokens, and for null. One pass over the text
+    * (`stopword_ratio`, a `graft.plans.TextKernels` kernel).
     */
-  def stopwordRatio(c: Column): Column = {
-    val t = tokens(c)
-    when(size(t) > 0, stopHits(t, enStop).cast("double") / size(t).cast("double"))
-      .otherwise(lit(0.0))
-  }
+  def stopwordRatio(c: Column): Column = call_function("stopword_ratio", c)
 
   /** N-gram-heuristic language ID over {en, de, fr}: highest stopword-hit
-    * count wins, ties broken by that fixed order, no hits ⇒ "und"
-    * (undetermined). Deterministic and oracle-expressible.
+    * count over [[tokens]] (matched after `lower`) wins, ties broken by
+    * that fixed order, no hits ⇒ "und" (undetermined). Deterministic and
+    * oracle-expressible. A null document reads "fr", the value the
+    * former composition's fall-through branch gave. One pass over the
+    * text (`lang_id`, a `graft.plans.TextKernels` kernel).
     */
-  def langId(c: Column): Column = {
-    val t = tokens(c)
-    val en = stopHits(t, enStop)
-    val de = stopHits(t, deStop)
-    val fr = stopHits(t, frStop)
-    when(en === 0 && de === 0 && fr === 0, lit("und"))
-      .when(en >= de && en >= fr, lit("en"))
-      .when(de >= fr, lit("de"))
-      .otherwise(lit("fr"))
-  }
+  def langId(c: Column): Column = call_function("lang_id", c)
 
   /** Composite quality score in [0,1]: penalize very short docs, high
     * punctuation density, low stopword mass. Weights are arbitrary but
@@ -149,13 +136,6 @@ object Text {
     val stopScore = least(stopwordRatio(c) * 5, lit(1.0))
     lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3
   }
-
-  /** The Gopher rule-set stopword list (Rae et al. 2021, §A1.1): a doc
-    * must contain at least `minStopwordHits` DISTINCT of these — the
-    * "is this prose at all" check.
-    */
-  private[graft] val gopherStops =
-    Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
   /** The Gopher quality rule set (Rae et al. 2021, Table A1) as one
     * map-only struct column — the standard named pre-filter every
@@ -176,6 +156,8 @@ object Text {
     *  - `ok_alpha_words`: fraction of words containing ≥1 [A-Za-z]
     *    ≥ minAlphaRatio
     *  - `ok_stopwords`: ≥ minStopwordHits distinct Gopher stopwords
+    *    (Rae et al. 2021, §A1.1: the, be, to, of, and, that, have, with —
+    *    the "is this prose at all" check), matched after `lower`
     *
     * Exactness contract: every ratio threshold is an exact rational
     * `(num, den)` compared by integer cross-multiplication — no float
@@ -186,11 +168,16 @@ object Text {
     * words fails `ok_words` (and therefore `pass`); the ratio rules
     * then compare 0 ≤/≥ 0 and are not meaningful on their own.
     *
-    * Pure composition of codegen'd built-ins + higher-order array ops
-    * — no UDF, fuses into the scan. The reference has no quality
-    * filtering at all (SURVEY §2.7); this is the LLM-pipeline
-    * extension set's named counterpart of [[qualityScore]]'s
-    * continuous signal.
+    * Kernel contract: one `gopher_rules` call (a
+    * `graft.plans.TextKernels` kernel, thresholds passed as int
+    * literals) reads the text once and yields the whole struct; words
+    * are [[tokens]] (Java `\s` runs), word lengths count code points,
+    * bullets and ellipses see lines trimmed of U+0020 only. The kernel
+    * is codegen'd, so a filter on `pass` stays in the scan's
+    * whole-stage-codegen stage. A null text yields a struct of nulls.
+    * The reference has no quality filtering at all (SURVEY §2.7); this
+    * is the LLM-pipeline extension set's named counterpart of
+    * [[qualityScore]]'s continuous signal.
     */
   def gopherRules(
       c: Column,
@@ -202,44 +189,12 @@ object Text {
       maxBulletRatio: (Int, Int) = (9, 10),
       maxEllipsisRatio: (Int, Int) = (3, 10),
       minAlphaRatio: (Int, Int) = (4, 5),
-      minStopwordHits: Int = 2): Column = {
-    val ws = tokens(c)
-    val n = size(ws).cast("long")
-    val sumLen = aggregate(ws, lit(0L), (acc, w) => acc + length(w))
-    val nHash = (length(c) - length(translate(c, "#", ""))).cast("long")
-    val nEllRuns =
-      ((length(c) - length(replace(c, lit("..."), lit("")))) / 3).cast("long")
-    val lines = split(c, "\n")
-    val nLines = size(lines).cast("long")
-    val bullets = size(filter(lines, l =>
-      startswith(ltrim(l), lit("-")) || startswith(ltrim(l), lit("*"))))
-      .cast("long")
-    val ellLines = size(filter(lines, l =>
-      endswith(rtrim(l), lit("...")))).cast("long")
-    val alphaWords = size(filter(ws, w => w.rlike("[A-Za-z]"))).cast("long")
-    val stopHitsDistinct = size(array_intersect(
-      transform(ws, w => lower(w)), typedLit(gopherStops))).cast("long")
-    val okWords = n >= minWords && n <= maxWords
-    val okMean = sumLen >= n * minMeanWordLen && sumLen <= n * maxMeanWordLen
-    val okSymbol =
-      (nHash + nEllRuns) * maxSymbolRatio._2 <= n * maxSymbolRatio._1
-    val okBullet = bullets * maxBulletRatio._2 <= nLines * maxBulletRatio._1
-    val okEll =
-      ellLines * maxEllipsisRatio._2 <= nLines * maxEllipsisRatio._1
-    val okAlpha = alphaWords * minAlphaRatio._2 >= n * minAlphaRatio._1
-    val okStop = stopHitsDistinct >= minStopwordHits
-    struct(
-      n.as("n_words"),
-      okWords.as("ok_words"),
-      okMean.as("ok_mean_word_len"),
-      okSymbol.as("ok_symbol_ratio"),
-      okBullet.as("ok_bullet_lines"),
-      okEll.as("ok_ellipsis_lines"),
-      okAlpha.as("ok_alpha_words"),
-      okStop.as("ok_stopwords"),
-      (okWords && okMean && okSymbol && okBullet && okEll && okAlpha &&
-        okStop).as("pass"))
-  }
+      minStopwordHits: Int = 2): Column =
+    call_function("gopher_rules", (c +: Seq(minWords, maxWords,
+      minMeanWordLen, maxMeanWordLen, maxSymbolRatio._1, maxSymbolRatio._2,
+      maxBulletRatio._1, maxBulletRatio._2, maxEllipsisRatio._1,
+      maxEllipsisRatio._2, minAlphaRatio._1, minAlphaRatio._2,
+      minStopwordHits).map(lit)): _*)
 
   /** The C4 cleaning rule set (Raffel et al. 2020, §2.2) as one
     * map-only struct column — the line-level counterpart of
@@ -263,42 +218,23 @@ object Text {
     *  - `ok_brace`: page does not contain `{` (code, not prose).
     *  - `pass`: the page-rule conjunction AND ≥1 kept line.
     *
-    * Exactness contract: pure string builtins only — literal-newline
-    * split (never regex `\s`), whitespace words via [[tokens]], plain
-    * `contains`/`endswith` after ASCII lowercase, sentence count via
-    * single-char `translate` removal — every field bit-identical in any
-    * engine. Null text propagates null. Pure composition of codegen'd
-    * built-ins + higher-order array ops — no UDF, fuses into the scan.
-    * The reference has no quality filtering at all (SURVEY §2.7).
+    * Exactness contract: lines split on the literal newline (never
+    * regex `\s`), whitespace words via [[tokens]], right trim of U+0020
+    * only, plain `contains` after `lower`, sentence count as `.!?` bytes
+    * of the cleaned text — every field bit-identical in any engine.
+    *
+    * Kernel contract: one `c4_rules` call (a `graft.plans.TextKernels`
+    * kernel, thresholds passed as int literals) reads the text once and
+    * yields the whole struct, `clean_text` included; it is codegen'd, so
+    * a filter on `pass` stays in the scan's whole-stage-codegen stage. A
+    * null text yields a struct of nulls. The reference has no quality
+    * filtering at all (SURVEY §2.7).
     */
   def c4Rules(
       c: Column,
       minLineWords: Int = 5,
-      minSentences: Int = 3): Column = {
-    val lines = split(c, "\n")
-    val kept = filter(lines, { l =>
-      val r = rtrim(l)
-      size(tokens(l)) >= minLineWords &&
-        (endswith(r, lit(".")) || endswith(r, lit("!")) ||
-          endswith(r, lit("?")) || endswith(r, lit("\""))) &&
-        !contains(lower(l), lit("javascript"))
-    })
-    val clean = array_join(kept, "\n")
-    val nSentences =
-      (length(clean) - length(translate(clean, ".!?", ""))).cast("long")
-    val okSentences = nSentences >= minSentences
-    val okLorem = !contains(lower(c), lit("lorem ipsum"))
-    val okBrace = !contains(c, lit("{"))
-    struct(
-      size(lines).cast("long").as("n_lines"),
-      size(kept).cast("long").as("n_lines_kept"),
-      nSentences.as("n_sentences"),
-      okSentences.as("ok_sentences"),
-      okLorem.as("ok_lorem"),
-      okBrace.as("ok_brace"),
-      (okSentences && okLorem && okBrace && size(kept) >= 1).as("pass"),
-      clean.as("clean_text"))
-  }
+      minSentences: Int = 3): Column =
+    call_function("c4_rules", c, lit(minLineWords), lit(minSentences))
 
   /** Strip HTML down to visible text — the extraction stage between a
     * raw crawl and every filter above (quality/langid scores on markup
