@@ -8,8 +8,9 @@ import graft.functions.{Hashing, Text, Vectors}
 import graft.ops.GroupReduce
 import graft.tap.FanOut
 
-/** Driver contract — one `queries` entry per operator from SURVEY.md §2,
-  * each with a DuckDB-equivalent `oracleSql` over the same parquet tables.
+/** Driver contract — one `catalog` [[SparkEntry.Query]] per operator
+  * from SURVEY.md §2, each with a DuckDB-equivalent oracle over the same
+  * parquet tables; `queries` and `oracleSql` are name-keyed views of it.
   *
   * Oracle-determinism conventions used throughout:
   *  - sums of doubles go through DECIMAL(18,4) per element (exact, order-
@@ -32,7 +33,7 @@ object SparkEntry {
     * catalog-table treatment Spark gives named tables (guide §6,
     * file-listing cache), which path-based reads miss; every job
     * still scans the parquet data itself. Keyed by session too: a
-    * probe/spec session must not see another session's relations.
+    * spec session must not see another session's relations.
     * Fixture files are immutable within a process (regenerated
     * fixtures get fresh processes), so the listing cannot go stale. */
   private val tableMemo =
@@ -69,19 +70,34 @@ object SparkEntry {
     sum(c.cast("decimal(18,4)")).cast("double")
 
   /** Per-PROCESS staging root for the cross-query shared taps
-    * (co-order edges for q152/q172, the q160/q183 stream batches).
+    * (co-order edges for q152/q172, the q160/q183 stream batches) and
+    * every query's own staged files (the q35/q75 pipeline taps, the
+    * q174/q175 file directories).
     * Scoped to this JVM — not a fixed /tmp path — so (a) every
     * Verify/Bench invocation computes its staged intermediates from
     * the parquet inputs (nothing persists across runs; memoization is
     * the RSSkip pipeline semantic WITHIN one run, exactly hadron's
     * RerunStrategy scope), and (b) concurrent drivers on one box can
     * never race on a shared staging directory (round-16 ADVICE). */
-  private lazy val procStageRoot: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_stage_")
-    // deleteOnExit() cannot remove a non-empty directory (round-17
-    // ADVICE): a shutdown hook walks the tree children-first instead,
-    // so every JVM invocation (bench, verify, probes) reclaims its
-    // staged parquet rather than leaving it in /tmp forever.
+  private lazy val procStageRoot: String = deleteTreeOnExit(
+    java.nio.file.Files.createTempDirectory("graft_stage_"),
+    "graft-stage-cleanup").toString
+
+  /** `procStageRoot/<kind>-<dir>`: the per-process staging directory of
+    * one query family over one fixture directory. The leaf name starts
+    * with `kind`, never with the `_` a sanitized absolute `dir` starts
+    * with: Spark treats such a name as hidden and warns "All paths were
+    * ignored" on every q174/q175 read of it. */
+  private def stageDir(kind: String, dir: String): String =
+    s"$procStageRoot/$kind-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+
+  /** Registers a shutdown hook that deletes `p`'s tree and returns `p`.
+    * deleteOnExit() cannot remove a non-empty directory (round-17
+    * ADVICE): the hook walks the tree children-first instead, so every
+    * JVM invocation (bench, verify) reclaims its staged files rather
+    * than leaving them in /tmp forever. */
+  private def deleteTreeOnExit(
+      p: java.nio.file.Path, threadName: String): java.nio.file.Path = {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       try {
         import java.nio.file.{Files, Path}
@@ -93,8 +109,8 @@ object SparkEntry {
           })
         finally walk.close()
       } catch { case _: Throwable => () },
-      "graft-stage-cleanup"))
-    p.toString
+      threadName))
+    p
   }
 
   /** Per-PROCESS root for the streaming queries' EPHEMERAL
@@ -115,21 +131,8 @@ object SparkEntry {
       .orElse(Option("/dev/shm").filter { p =>
         val f = new java.io.File(p); f.isDirectory && f.canWrite })
       .getOrElse(System.getProperty("java.io.tmpdir"))
-    val p = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(base), "graft_ckpt_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        val walk = Files.walk(p)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => try Files.deleteIfExists(f) catch {
-            case _: Exception => ()
-          })
-        finally walk.close()
-      } catch { case _: Throwable => () },
-      "graft-ckpt-cleanup"))
-    p
+    deleteTreeOnExit(java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(base), "graft_ckpt_"), "graft-ckpt-cleanup")
   }
 
   /** Fresh checkpoint dir for one streaming run. */
@@ -1201,8 +1204,7 @@ object SparkEntry {
   private def q35(s: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.{Pipeline, RSReRun, Stage}
     import graft.tap.Tap
-    val tmpRoot = sys.props("java.io.tmpdir") +
-      "/graft-q35-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tmpRoot = stageDir("q35", dir)
     val src = Tap.parquet(s"$dir/documents.parquet")
     val s1 = Stage.auto("clean", Seq(src), tmpRoot, rerun = RSReRun) { dfs =>
       val w = Window.partitionBy("fp").orderBy("doc_id")
@@ -3083,7 +3085,7 @@ object SparkEntry {
   // % 10 == 1 against the rest.
   private def q75(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val tmpRoot = "/tmp/graft_q75/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tmpRoot = stageDir("q75", dir)
     val docTap = graft.tap.Tap.parquet(s"$dir/documents.parquet")
     val prep = graft.pipeline.Stage.auto(
         "q75-corpus-banding-v1", Seq(docTap), tmpRoot) {
@@ -3926,8 +3928,7 @@ object SparkEntry {
 
   private def partSuppPairsBuild(s: SparkSession, dir: String)
       : DataFrame = {
-    val tmpRoot =
-      procStageRoot + "/partsupp/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tmpRoot = stageDir("partsupp", dir)
     val liTap = graft.tap.Tap.parquet(s"$dir/lineitem.parquet")
     val sig = graft.pipeline.Pipeline.contentFingerprint(s, Seq(liTap))
     val st = graft.pipeline.Stage.auto(
@@ -7407,8 +7408,7 @@ object SparkEntry {
 
   private def coOrderEdgesBuild(s: SparkSession, dir: String)
       : DataFrame = {
-    val tmpRoot =
-      procStageRoot + "/coorder/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tmpRoot = stageDir("coorder", dir)
     val liTap = graft.tap.Tap.parquet(s"$dir/lineitem.parquet")
     val sig = graft.pipeline.Pipeline.contentFingerprint(s, Seq(liTap))
     val st = graft.pipeline.Stage.auto(
@@ -7731,8 +7731,8 @@ object SparkEntry {
       : String = {
     val tap = graft.tap.Tap.parquet(s"$dir/$table.parquet")
     val sig = graft.pipeline.Pipeline.contentFingerprint(s, Seq(tap))
-    val root = java.nio.file.Paths.get(procStageRoot, s"streamstage_$name",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), s"v$ver-$sig")
+    val root = java.nio.file.Paths.get(
+      stageDir(s"streamstage_$name", dir), s"v$ver-$sig")
     val streamDir = root.resolve("stream")
     val marker = root.resolve("_STAGED")
     if (!java.nio.file.Files.exists(marker)) {
@@ -8388,8 +8388,7 @@ object SparkEntry {
     import java.nio.file.{Files, Paths}
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
       .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      "graft-q174-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val root = Paths.get(stageDir("q174", dir))
     Files.createDirectories(root)
     val csvBody = ("n_nationkey,n_name" +: nat.filter(_._1 < 13)
       .map { case (k, n) => s"$k,$n" }.toSeq).mkString("", "\n", "\n")
@@ -8431,8 +8430,7 @@ object SparkEntry {
     import java.nio.file.{Files, Paths}
     val reg = t(s, dir, "region").select("r_regionkey", "r_name")
       .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      "graft-q175-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val root = Paths.get(stageDir("q175", dir))
     Files.createDirectories(root)
     val paths = reg.map { case (k, n) =>
       val p = root.resolve(s"region_$k.bin")
@@ -10298,441 +10296,235 @@ object SparkEntry {
          w.lang, w.source
        FROM hd LEFT JOIN wide w ON hd.cl = w.cl""")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q216_survivorship" -> (q216 _),
-    "q215_loo_target_encode" -> (q215 _),
-    "q214_vocab_index" -> (q214 _),
-    "q213_hash_features" -> (q213 _),
-    "q212_linkage_scores" -> (q212 _),
-    "q211_seasonal_anomaly" -> (q211 _),
-    "q210_fleiss_kappa" -> (q210 _),
-    "q209_flesch" -> (q209 _),
-    "q208_lead_lag" -> (q208 _),
-    "q207_bootstrap_ci" -> (q207 _),
-    "q206_quantile_map" -> (q206 _),
-    "q205_burstiness" -> (q205 _),
-    "q204_kendall_tau" -> (q204 _),
-    "q203_benford" -> (q203 _),
-    "q202_zipf_slope" -> (q202 _),
-    "q201_weighted_quantiles" -> (q201 _),
-    "q200_tukey_outliers" -> (q200 _),
-    "q199_gini" -> (q199 _),
-    "q198_mann_whitney" -> (q198 _),
-    "q197_winsorized_mean" -> (q197 _),
-    "q196_quantiles" -> (q196 _),
-    "q195_trimmed_mean" -> (q195 _),
-    "q194_ks_statistic" -> (q194 _),
-    "q193_robust_stats" -> (q193 _),
-    "q192_log_odds_terms" -> (q192 _),
-    "q191_cohort_retention" -> (q191 _),
-    "q190_psi" -> (q190 _),
-    "q189_sorted_neighborhood" -> (q189 _),
-    "q188_ndcg" -> (q188 _),
-    "q187_weighted_jaccard" -> (q187 _),
-    "q186_equidepth_hist" -> (q186 _),
-    "q185_scd2" -> (q185 _),
-    "q184_rolling_dau" -> (q184 _),
-    "q183_stream_ewma" -> (q183 _),
-    "q182_halflife_score" -> (q182 _),
-    "q181_key_skew" -> (q181 _),
-    "q180_ngram_repetition" -> (q180 _),
-    "q179_rbo" -> (q179 _),
-    "q178_group_percentile" -> (q178 _),
-    "q177_fd_profile" -> (q177 _),
-    "q176_ngram_novelty" -> (q176 _),
-    "q175_binary_taps" -> (q175 _),
-    "q174_concat_by_file" -> (q174 _),
-    "q173_integrity" -> (q173 _),
-    "q172_assortativity" -> (q172 _),
-    "q171_covisitation" -> (q171 _),
-    "q170_json_profile" -> (q170 _),
-    "q169_maxsim" -> (q169 _),
-    "q168_stream_kmv" -> (q168 _),
-    "q167_percentile_norm" -> (q167 _),
-    "q166_weighted_pagerank" -> (q166 _),
-    "q165_media_neardup" -> (q165 _),
-    "q164_group_auc" -> (q164 _),
-    "q163_rolling_z" -> (q163 _),
-    "q162_ewma" -> (q162 _),
-    "q161_skipgram_pmi" -> (q161 _),
-    "q160_stream_cusum" -> (q160 _),
-    "q159_calibration" -> (q159 _),
-    "q158_dictionary_tag" -> (q158 _),
-    "q157_salted_join" -> (q157 _),
-    "q156_cusum" -> (q156 _),
-    "q155_transitions" -> (q155 _),
-    "q154_attribution" -> (q154 _),
-    "q153_auc" -> (q153 _),
-    "q152_kcore" -> (q152 _),
-    "q151_host_mix" -> (q151 _),
-    "q150_mixed_language" -> (q150 _),
-    "q149_sentence_spans" -> (q149 _),
-    "q148_random_walks" -> (q148 _),
-    "q147_trustrank" -> (q147 _),
-    "q146_triangles" -> (q146 _),
-    "q145_ffd_packing" -> (q145 _),
-    "q144_cohen_kappa" -> (q144 _),
-    "q143_rendezvous" -> (q143 _),
-    "q142_spearman" -> (q142 _),
-    "q141_token_drift" -> (q141 _),
-    "q140_mmr_rerank" -> (q140 _),
-    "q139_dedup_grade" -> (q139 _),
-    "q138_cluster_sample" -> (q138 _),
-    "q137_source_cap" -> (q137 _),
-    "q136_vocab_growth" -> (q136 _),
-    "q135_c4_rules" -> (q135 _),
-    "q134_ngram_diversity" -> (q134 _),
-    "q133_margin_mining" -> (q133 _),
-    "q132_matryoshka_recall" -> (q132 _),
-    "q131_tokenizer_fertility" -> (q131 _),
-    "q130_dup_text_fraction" -> (q130 _),
-    "q129_html_extract" -> (q129 _),
-    "q128_soft_dedup" -> (q128 _),
-    "q127_unimax_sample" -> (q127 _),
-    "q126_gopher_rules" -> (q126 _),
-    "q125_keep_best_dedup" -> (q125 _),
-    "q124_budget_sample" -> (q124 _),
-    "q123_crawl_admission" -> (q123 _),
-    "q122_adaptive_quality" -> (q122 _),
-    "q121_prototypicality" -> (q121 _),
-    "q120_url_dedup" -> (q120 _),
-    "q119_normalize_text" -> (q119 _),
-    "q118_source_boilerplate" -> (q118 _),
-    "q117_ngram_containment" -> (q117 _),
-    "q116_label_agreement" -> (q116 _),
-    "q115_hard_negatives" -> (q115 _),
-    "q114_ann_recall" -> (q114 _),
-    "q113_temperature_mixture" -> (q113 _),
-    "q112_binary_topk" -> (q112 _),
-    "q111_contamination_spans" -> (q111 _),
-    "q110_exactsubstr_dedup" -> (q110 _),
-    "q109_epoch_pack" -> (q109 _),
-    "q108_duplicate_spans" -> (q108 _),
-    "q107_stream_dedup" -> (q107 _),
-    "q106_kmv_setops" -> (q106 _),
-    "q105_target_mixture" -> (q105 _),
-    "q104_leakage_safe_split" -> (q104 _),
-    "q103_event_paths" -> (q103 _),
-    "q102_zorder" -> (q102 _),
-    "q101_count_anomaly" -> (q101 _),
-    "q100_hybrid_search" -> (q100 _),
-    "q99_collocations" -> (q99 _),
-    "q98_fuzzy_join" -> (q98 _),
-    "q97_weighted_sample" -> (q97 _),
-    "q96_stream_join" -> (q96 _),
-    "q95_label_prop" -> (q95 _),
-    "q94_token_entropy" -> (q94 _),
-    "q93_stream_enrich" -> (q93 _),
-    "q92_hits" -> (q92 _),
-    "q91_dsir" -> (q91 _),
-    "q30_embedding_neardup" -> (q30 _),
-    "q31_typed_aggregator" -> (q31 _),
-    "q27_lsh_ann" -> (q27 _),
-    "q28_monoid_join" -> (q28 _),
-    "q29_windowed_counts" -> (q29 _),
-    "q18_minhash_lsh" -> (q18 _),
-    "q19_ngram_jaccard" -> (q19 _),
-    "q20_simhash" -> (q20 _),
-    "q21_text_quality" -> (q21 _),
-    "q22_langid" -> (q22 _),
-    "q23_token_stats" -> (q23 _),
-    "q26_cosine_topk" -> (q26 _),
-    "q01_group_agg" -> (q01 _),
-    "q02_wordcount" -> (q02 _),
-    "q03_join_mr" -> (q03 _),
-    "q04_join_multiway" -> (q04 _),
-    "q05_join_optional" -> (q05 _),
-    "q06_secondary_sort" -> (q06 _),
-    "q07_topk_per_group" -> (q07 _),
-    "q08_fanout_stats" -> (q08 _),
-    "q09_distinct" -> (q09 _),
-    "q10_composite_key" -> (q10 _),
-    "q11_numeric_sort" -> (q11 _),
-    "q12_time_keys" -> (q12 _),
-    "q13_merge_taps" -> (q13 _),
-    "q14_window_running" -> (q14 _),
-    "q15_set_ops" -> (q15 _),
-    "q16_rollup" -> (q16 _),
-    "q17_sessionize" -> (q17 _),
-    "q24_dedup_exact" -> (q24 _),
-    "q25_dedup_fingerprint" -> (q25 _),
-    "q32_multimodal" -> (q32 _),
-    "q33_ivf_ann" -> (q33 _),
-    "q34_training_pipeline" -> (q34 _),
-    "q35_pipeline_stages" -> (q35 _),
-    "q36_hash_split" -> (q36 _),
-    "q37_dup_clusters" -> (q37 _),
-    "q38_mixture" -> (q38 _),
-    "q39_shard_packing" -> (q39 _),
-    "q40_quantized_topk" -> (q40 _),
-    "q41_simhash_hamming" -> (q41 _),
-    "q42_ivf_kmeans" -> (q42 _),
-    "q43_decontaminate" -> (q43 _),
-    "q44_repetition" -> (q44 _),
-    "q45_stratified_sample" -> (q45 _),
-    "q46_tfidf_keywords" -> (q46 _),
-    "q47_pii_redaction" -> (q47 _),
-    "q48_incremental_dedup" -> (q48 _),
-    "q49_label_centroids" -> (q49 _),
-    "q50_kmv_distinct" -> (q50 _),
-    "q51_hamming_clusters" -> (q51 _),
-    "q52_corpus_report" -> (q52 _),
-    "q53_profile" -> (q53 _),
-    "q54_funnel" -> (q54 _),
-    "q55_line_dedup" -> (q55 _),
-    "q56_funnel_window" -> (q56 _),
-    "q57_pq_topk" -> (q57 _),
-    "q58_semdedup" -> (q58 _),
-    "q59_bigram_lm" -> (q59 _),
-    "q60_snapshot_diff" -> (q60 _),
-    "q61_seq_packing" -> (q61 _),
-    "q62_winnow_pairs" -> (q62 _),
-    "q63_para_neardup" -> (q63 _),
-    "q64_sem_decontaminate" -> (q64 _),
-    "q65_classifier" -> (q65 _),
-    "q66_ivfpq" -> (q66 _),
-    "q67_semdedup_incr" -> (q67 _),
-    "q68_ivfpq_residual" -> (q68 _),
-    "q69_ppl_mixture" -> (q69 _),
-    "q70_sem_clusters" -> (q70 _),
-    "q71_trigram_backoff" -> (q71 _),
-    "q72_winnow_decontaminate" -> (q72 _),
-    "q73_stream_neardup" -> (q73 _),
-    "q74_bpe" -> (q74 _),
-    "q75_staged_incremental" -> (q75 _),
-    "q76_asof_join" -> (q76 _),
-    "q77_range_join" -> (q77 _),
-    "q78_bm25_search" -> (q78 _),
-    "q79_heavy_hitters" -> (q79 _),
-    "q80_chunking" -> (q80 _),
-    "q81_asof_forward" -> (q81 _),
-    "q82_bloom_anti_join" -> (q82 _),
-    "q83_kmv_by_group" -> (q83 _),
-    "q84_histogram_quantiles" -> (q84 _),
-    "q85_topk_by_group" -> (q85 _),
-    "q86_pivot" -> (q86 _),
-    "q87_resample_gapfill" -> (q87 _),
-    "q88_cohort_retention" -> (q88 _),
-    "q89_quantiles_by_group" -> (q89 _),
-    "q90_pagerank" -> (q90 _),
+  /** One catalog entry: the query function and its DuckDB oracle over
+    * the same parquet tables. */
+  final case class Query(
+      name: String,
+      run: (SparkSession, String) => DataFrame,
+      oracleSql: String)
+
+  lazy val catalog: Seq[Query] = Seq(
+    Query("q01_group_agg", q01, q01Sql),
+    Query("q02_wordcount", q02, q02Sql),
+    Query("q03_join_mr", q03, q03Sql),
+    Query("q04_join_multiway", q04, q04Sql),
+    Query("q05_join_optional", q05, q05Sql),
+    Query("q06_secondary_sort", q06, q06Sql),
+    Query("q07_topk_per_group", q07, q07Sql),
+    Query("q08_fanout_stats", q08, q08Sql),
+    Query("q09_distinct", q09, q09Sql),
+    Query("q10_composite_key", q10, q10Sql),
+    Query("q11_numeric_sort", q11, q11Sql),
+    Query("q12_time_keys", q12, q12Sql),
+    Query("q13_merge_taps", q13, q13Sql),
+    Query("q14_window_running", q14, q14Sql),
+    Query("q15_set_ops", q15, q15Sql),
+    Query("q16_rollup", q16, q16Sql),
+    Query("q17_sessionize", q17, q17Sql),
+    Query("q18_minhash_lsh", q18, q18Sql),
+    Query("q19_ngram_jaccard", q19, q19Sql),
+    Query("q20_simhash", q20, q20Sql),
+    Query("q21_text_quality", q21, q21Sql),
+    Query("q22_langid", q22, q22Sql),
+    Query("q23_token_stats", q23, q23Sql),
+    Query("q24_dedup_exact", q24, q24Sql),
+    Query("q25_dedup_fingerprint", q25, q25Sql),
+    Query("q26_cosine_topk", q26, q26Sql),
+    Query("q27_lsh_ann", q27, q27Sql),
+    Query("q28_monoid_join", q28, q28Sql),
+    Query("q29_windowed_counts", q29, q29Sql),
+    Query("q30_embedding_neardup", q30, q30Sql),
+    Query("q31_typed_aggregator", q31, q31Sql),
+    Query("q32_multimodal", q32, q32Sql),
+    Query("q33_ivf_ann", q33, q33Sql),
+    Query("q34_training_pipeline", q34, q34Sql),
+    Query("q35_pipeline_stages", q35, q35Sql),
+    Query("q36_hash_split", q36, q36Sql),
+    Query("q37_dup_clusters", q37, q37Sql),
+    Query("q38_mixture", q38, q38Sql),
+    Query("q39_shard_packing", q39, q39Sql),
+    Query("q40_quantized_topk", q40, q40Sql),
+    Query("q41_simhash_hamming", q41, q41Sql),
+    Query("q42_ivf_kmeans", q42, q42Sql),
+    Query("q43_decontaminate", q43, q43Sql),
+    Query("q44_repetition", q44, q44Sql),
+    Query("q45_stratified_sample", q45, q45Sql),
+    Query("q46_tfidf_keywords", q46, q46Sql),
+    Query("q47_pii_redaction", q47, q47Sql),
+    Query("q48_incremental_dedup", q48, q48Sql),
+    Query("q49_label_centroids", q49, q49Sql),
+    Query("q50_kmv_distinct", q50, q50Sql),
+    Query("q51_hamming_clusters", q51, q51Sql),
+    Query("q52_corpus_report", q52, q52Sql),
+    Query("q53_profile", q53, q53Sql),
+    Query("q54_funnel", q54, q54Sql),
+    Query("q55_line_dedup", q55, q55Sql),
+    Query("q56_funnel_window", q56, q56Sql),
+    Query("q57_pq_topk", q57, q57Sql),
+    Query("q58_semdedup", q58, q58Sql),
+    Query("q59_bigram_lm", q59, q59Sql),
+    Query("q60_snapshot_diff", q60, q60Sql),
+    Query("q61_seq_packing", q61, q61Sql),
+    Query("q62_winnow_pairs", q62, q62Sql),
+    Query("q63_para_neardup", q63, q63Sql),
+    Query("q64_sem_decontaminate", q64, q64Sql),
+    Query("q65_classifier", q65, q65Sql),
+    Query("q66_ivfpq", q66, q66Sql),
+    Query("q67_semdedup_incr", q67, q67Sql),
+    Query("q68_ivfpq_residual", q68, q68Sql),
+    Query("q69_ppl_mixture", q69, q69Sql),
+    Query("q70_sem_clusters", q70, q70Sql),
+    Query("q71_trigram_backoff", q71, q71Sql),
+    Query("q72_winnow_decontaminate", q72, q72Sql),
+    Query("q73_stream_neardup", q73, q73Sql),
+    Query("q74_bpe", q74, q74Sql),
+    Query("q75_staged_incremental", q75, q75Sql),
+    Query("q76_asof_join", q76, q76Sql),
+    Query("q77_range_join", q77, q77Sql),
+    Query("q78_bm25_search", q78, q78Sql),
+    Query("q79_heavy_hitters", q79, q79Sql),
+    Query("q80_chunking", q80, q80Sql),
+    Query("q81_asof_forward", q81, q81Sql),
+    Query("q82_bloom_anti_join", q82, q82Sql),
+    Query("q83_kmv_by_group", q83, q83Sql),
+    Query("q84_histogram_quantiles", q84, q84Sql),
+    Query("q85_topk_by_group", q85, q85Sql),
+    Query("q86_pivot", q86, q86Sql),
+    Query("q87_resample_gapfill", q87, q87Sql),
+    Query("q88_cohort_retention", q88, q88Sql),
+    Query("q89_quantiles_by_group", q89, q89Sql),
+    Query("q90_pagerank", q90, q90Sql),
+    Query("q91_dsir", q91, q91Sql),
+    Query("q92_hits", q92, q92Sql),
+    Query("q93_stream_enrich", q93, q93Sql),
+    Query("q94_token_entropy", q94, q94Sql),
+    Query("q95_label_prop", q95, q95Sql),
+    Query("q96_stream_join", q96, q96Sql),
+    Query("q97_weighted_sample", q97, q97Sql),
+    Query("q98_fuzzy_join", q98, q98Sql),
+    Query("q99_collocations", q99, q99Sql),
+    Query("q100_hybrid_search", q100, q100Sql),
+    Query("q101_count_anomaly", q101, q101Sql),
+    Query("q102_zorder", q102, q102Sql),
+    Query("q103_event_paths", q103, q103Sql),
+    Query("q104_leakage_safe_split", q104, q104Sql),
+    Query("q105_target_mixture", q105, q105Sql),
+    Query("q106_kmv_setops", q106, q106Sql),
+    Query("q107_stream_dedup", q107, q107Sql),
+    Query("q108_duplicate_spans", q108, q108Sql),
+    Query("q109_epoch_pack", q109, q109Sql),
+    Query("q110_exactsubstr_dedup", q110, q110Sql),
+    Query("q111_contamination_spans", q111, q111Sql),
+    Query("q112_binary_topk", q112, q112Sql),
+    Query("q113_temperature_mixture", q113, q113Sql),
+    Query("q114_ann_recall", q114, q114Sql),
+    Query("q115_hard_negatives", q115, q115Sql),
+    Query("q116_label_agreement", q116, q116Sql),
+    Query("q117_ngram_containment", q117, q117Sql),
+    Query("q118_source_boilerplate", q118, q118Sql),
+    Query("q119_normalize_text", q119, q119Sql),
+    Query("q120_url_dedup", q120, q120Sql),
+    Query("q121_prototypicality", q121, q121Sql),
+    Query("q122_adaptive_quality", q122, q122Sql),
+    Query("q123_crawl_admission", q123, q123Sql),
+    Query("q124_budget_sample", q124, q124Sql),
+    Query("q125_keep_best_dedup", q125, q125Sql),
+    Query("q126_gopher_rules", q126, q126Sql),
+    Query("q127_unimax_sample", q127, q127Sql),
+    Query("q128_soft_dedup", q128, q128Sql),
+    Query("q129_html_extract", q129, q129Sql),
+    Query("q130_dup_text_fraction", q130, q130Sql),
+    Query("q131_tokenizer_fertility", q131, q131Sql),
+    Query("q132_matryoshka_recall", q132, q132Sql),
+    Query("q133_margin_mining", q133, q133Sql),
+    Query("q134_ngram_diversity", q134, q134Sql),
+    Query("q135_c4_rules", q135, q135Sql),
+    Query("q136_vocab_growth", q136, q136Sql),
+    Query("q137_source_cap", q137, q137Sql),
+    Query("q138_cluster_sample", q138, q138Sql),
+    Query("q139_dedup_grade", q139, q139Sql),
+    Query("q140_mmr_rerank", q140, q140Sql),
+    Query("q141_token_drift", q141, q141Sql),
+    Query("q142_spearman", q142, q142Sql),
+    Query("q143_rendezvous", q143, q143Sql),
+    Query("q144_cohen_kappa", q144, q144Sql),
+    Query("q145_ffd_packing", q145, q145Sql),
+    Query("q146_triangles", q146, q146Sql),
+    Query("q147_trustrank", q147, q147Sql),
+    Query("q148_random_walks", q148, q148Sql),
+    Query("q149_sentence_spans", q149, q149Sql),
+    Query("q150_mixed_language", q150, q150Sql),
+    Query("q151_host_mix", q151, q151Sql),
+    Query("q152_kcore", q152, q152Sql),
+    Query("q153_auc", q153, q153Sql),
+    Query("q154_attribution", q154, q154Sql),
+    Query("q155_transitions", q155, q155Sql),
+    Query("q156_cusum", q156, q156Sql),
+    Query("q157_salted_join", q157, q157Sql),
+    Query("q158_dictionary_tag", q158, q158Sql),
+    Query("q159_calibration", q159, q159Sql),
+    Query("q160_stream_cusum", q160, q156Sql), // stream ≡ batch: same oracle
+    Query("q161_skipgram_pmi", q161, q161Sql),
+    Query("q162_ewma", q162, q162Sql),
+    Query("q163_rolling_z", q163, q163Sql),
+    Query("q164_group_auc", q164, q164Sql),
+    Query("q165_media_neardup", q165, q165Sql),
+    Query("q166_weighted_pagerank", q166, q166Sql),
+    Query("q167_percentile_norm", q167, q167Sql),
+    Query("q168_stream_kmv", q168, q168Sql),
+    Query("q169_maxsim", q169, q169Sql),
+    Query("q170_json_profile", q170, q170Sql),
+    Query("q171_covisitation", q171, q171Sql),
+    Query("q172_assortativity", q172, q172Sql),
+    Query("q173_integrity", q173, q173Sql),
+    Query("q174_concat_by_file", q174, q174Sql),
+    Query("q175_binary_taps", q175, q175Sql),
+    Query("q176_ngram_novelty", q176, q176Sql),
+    Query("q177_fd_profile", q177, q177Sql),
+    Query("q178_group_percentile", q178, q178Sql),
+    Query("q179_rbo", q179, q179Sql),
+    Query("q180_ngram_repetition", q180, q180Sql),
+    Query("q181_key_skew", q181, q181Sql),
+    Query("q182_halflife_score", q182, q182Sql),
+    Query("q183_stream_ewma", q183, q162Sql), // stream ≡ batch: same oracle
+    Query("q184_rolling_dau", q184, q184Sql),
+    Query("q185_scd2", q185, q185Sql),
+    Query("q186_equidepth_hist", q186, q186Sql),
+    Query("q187_weighted_jaccard", q187, q187Sql),
+    Query("q188_ndcg", q188, q188Sql),
+    Query("q189_sorted_neighborhood", q189, q189Sql),
+    Query("q190_psi", q190, q190Sql),
+    Query("q191_cohort_retention", q191, q191Sql),
+    Query("q192_log_odds_terms", q192, q192Sql),
+    Query("q193_robust_stats", q193, q193Sql),
+    Query("q194_ks_statistic", q194, q194Sql),
+    Query("q195_trimmed_mean", q195, q195Sql),
+    Query("q196_quantiles", q196, q196Sql),
+    Query("q197_winsorized_mean", q197, q197Sql),
+    Query("q198_mann_whitney", q198, q198Sql),
+    Query("q199_gini", q199, q199Sql),
+    Query("q200_tukey_outliers", q200, q200Sql),
+    Query("q201_weighted_quantiles", q201, q201Sql),
+    Query("q202_zipf_slope", q202, q202Sql),
+    Query("q203_benford", q203, q203Sql),
+    Query("q204_kendall_tau", q204, q204Sql),
+    Query("q205_burstiness", q205, q205Sql),
+    Query("q206_quantile_map", q206, q206Sql),
+    Query("q207_bootstrap_ci", q207, q207Sql),
+    Query("q208_lead_lag", q208, q208Sql),
+    Query("q209_flesch", q209, q209Sql),
+    Query("q210_fleiss_kappa", q210, q210Sql),
+    Query("q211_seasonal_anomaly", q211, q211Sql),
+    Query("q212_linkage_scores", q212, q212Sql),
+    Query("q213_hash_features", q213, q213Sql),
+    Query("q214_vocab_index", q214, q214Sql),
+    Query("q215_loo_target_encode", q215, q215Sql),
+    Query("q216_survivorship", q216, q216Sql),
   )
 
-  def oracleSql: Map[String, String] = Map(
-    "q30_embedding_neardup" -> q30Sql,
-    "q31_typed_aggregator" -> q31Sql,
-    "q33_ivf_ann" -> q33Sql,
-    "q34_training_pipeline" -> q34Sql,
-    "q35_pipeline_stages" -> q35Sql,
-    "q36_hash_split" -> q36Sql,
-    "q37_dup_clusters" -> q37Sql,
-    "q38_mixture" -> q38Sql,
-    "q39_shard_packing" -> q39Sql,
-    "q40_quantized_topk" -> q40Sql,
-    "q41_simhash_hamming" -> q41Sql,
-    "q42_ivf_kmeans" -> q42Sql,
-    "q43_decontaminate" -> q43Sql,
-    "q44_repetition" -> q44Sql,
-    "q45_stratified_sample" -> q45Sql,
-    "q46_tfidf_keywords" -> q46Sql,
-    "q47_pii_redaction" -> q47Sql,
-    "q48_incremental_dedup" -> q48Sql,
-    "q49_label_centroids" -> q49Sql,
-    "q50_kmv_distinct" -> q50Sql,
-    "q51_hamming_clusters" -> q51Sql,
-    "q52_corpus_report" -> q52Sql,
-    "q53_profile" -> q53Sql,
-    "q54_funnel" -> q54Sql,
-    "q55_line_dedup" -> q55Sql,
-    "q56_funnel_window" -> q56Sql,
-    "q57_pq_topk" -> q57Sql,
-    "q58_semdedup" -> q58Sql,
-    "q59_bigram_lm" -> q59Sql,
-    "q60_snapshot_diff" -> q60Sql,
-    "q61_seq_packing" -> q61Sql,
-    "q62_winnow_pairs" -> q62Sql,
-    "q63_para_neardup" -> q63Sql,
-    "q64_sem_decontaminate" -> q64Sql,
-    "q65_classifier" -> q65Sql,
-    "q66_ivfpq" -> q66Sql,
-    "q67_semdedup_incr" -> q67Sql,
-    "q68_ivfpq_residual" -> q68Sql,
-    "q69_ppl_mixture" -> q69Sql,
-    "q70_sem_clusters" -> q70Sql,
-    "q71_trigram_backoff" -> q71Sql,
-    "q72_winnow_decontaminate" -> q72Sql,
-    "q73_stream_neardup" -> q73Sql,
-    "q74_bpe" -> q74Sql,
-    "q75_staged_incremental" -> q75Sql,
-    "q76_asof_join" -> q76Sql,
-    "q77_range_join" -> q77Sql,
-    "q78_bm25_search" -> q78Sql,
-    "q79_heavy_hitters" -> q79Sql,
-    "q80_chunking" -> q80Sql,
-    "q81_asof_forward" -> q81Sql,
-    "q82_bloom_anti_join" -> q82Sql,
-    "q83_kmv_by_group" -> q83Sql,
-    "q84_histogram_quantiles" -> q84Sql,
-    "q85_topk_by_group" -> q85Sql,
-    "q86_pivot" -> q86Sql,
-    "q87_resample_gapfill" -> q87Sql,
-    "q88_cohort_retention" -> q88Sql,
-    "q89_quantiles_by_group" -> q89Sql,
-    "q90_pagerank" -> q90Sql,
-    "q91_dsir" -> q91Sql,
-    "q92_hits" -> q92Sql,
-    "q93_stream_enrich" -> q93Sql,
-    "q94_token_entropy" -> q94Sql,
-    "q95_label_prop" -> q95Sql,
-    "q96_stream_join" -> q96Sql,
-    "q97_weighted_sample" -> q97Sql,
-    "q98_fuzzy_join" -> q98Sql,
-    "q99_collocations" -> q99Sql,
-    "q100_hybrid_search" -> q100Sql,
-    "q101_count_anomaly" -> q101Sql,
-    "q102_zorder" -> q102Sql,
-    "q103_event_paths" -> q103Sql,
-    "q104_leakage_safe_split" -> q104Sql,
-    "q105_target_mixture" -> q105Sql,
-    "q106_kmv_setops" -> q106Sql,
-    "q108_duplicate_spans" -> q108Sql,
-    "q109_epoch_pack" -> q109Sql,
-    "q110_exactsubstr_dedup" -> q110Sql,
-    "q111_contamination_spans" -> q111Sql,
-    "q112_binary_topk" -> q112Sql,
-    "q113_temperature_mixture" -> q113Sql,
-    "q114_ann_recall" -> q114Sql,
-    "q115_hard_negatives" -> q115Sql,
-    "q116_label_agreement" -> q116Sql,
-    "q117_ngram_containment" -> q117Sql,
-    "q118_source_boilerplate" -> q118Sql,
-    "q216_survivorship" -> q216Sql,
-    "q215_loo_target_encode" -> q215Sql,
-    "q214_vocab_index" -> q214Sql,
-    "q213_hash_features" -> q213Sql,
-    "q212_linkage_scores" -> q212Sql,
-    "q211_seasonal_anomaly" -> q211Sql,
-    "q210_fleiss_kappa" -> q210Sql,
-    "q209_flesch" -> q209Sql,
-    "q208_lead_lag" -> q208Sql,
-    "q207_bootstrap_ci" -> q207Sql,
-    "q206_quantile_map" -> q206Sql,
-    "q205_burstiness" -> q205Sql,
-    "q204_kendall_tau" -> q204Sql,
-    "q203_benford" -> q203Sql,
-    "q202_zipf_slope" -> q202Sql,
-    "q201_weighted_quantiles" -> q201Sql,
-    "q200_tukey_outliers" -> q200Sql,
-    "q199_gini" -> q199Sql,
-    "q198_mann_whitney" -> q198Sql,
-    "q197_winsorized_mean" -> q197Sql,
-    "q196_quantiles" -> q196Sql,
-    "q195_trimmed_mean" -> q195Sql,
-    "q194_ks_statistic" -> q194Sql,
-    "q193_robust_stats" -> q193Sql,
-    "q192_log_odds_terms" -> q192Sql,
-    "q191_cohort_retention" -> q191Sql,
-    "q190_psi" -> q190Sql,
-    "q189_sorted_neighborhood" -> q189Sql,
-    "q188_ndcg" -> q188Sql,
-    "q187_weighted_jaccard" -> q187Sql,
-    "q186_equidepth_hist" -> q186Sql,
-    "q185_scd2" -> q185Sql,
-    "q184_rolling_dau" -> q184Sql,
-    "q183_stream_ewma" -> q162Sql, // stream ≡ batch: same oracle
-    "q182_halflife_score" -> q182Sql,
-    "q181_key_skew" -> q181Sql,
-    "q180_ngram_repetition" -> q180Sql,
-    "q179_rbo" -> q179Sql,
-    "q178_group_percentile" -> q178Sql,
-    "q177_fd_profile" -> q177Sql,
-    "q176_ngram_novelty" -> q176Sql,
-    "q175_binary_taps" -> q175Sql,
-    "q174_concat_by_file" -> q174Sql,
-    "q173_integrity" -> q173Sql,
-    "q172_assortativity" -> q172Sql,
-    "q171_covisitation" -> q171Sql,
-    "q170_json_profile" -> q170Sql,
-    "q169_maxsim" -> q169Sql,
-    "q168_stream_kmv" -> q168Sql,
-    "q167_percentile_norm" -> q167Sql,
-    "q166_weighted_pagerank" -> q166Sql,
-    "q165_media_neardup" -> q165Sql,
-    "q164_group_auc" -> q164Sql,
-    "q163_rolling_z" -> q163Sql,
-    "q162_ewma" -> q162Sql,
-    "q161_skipgram_pmi" -> q161Sql,
-    "q160_stream_cusum" -> q156Sql, // stream ≡ batch: same oracle
-    "q159_calibration" -> q159Sql,
-    "q158_dictionary_tag" -> q158Sql,
-    "q157_salted_join" -> q157Sql,
-    "q156_cusum" -> q156Sql,
-    "q155_transitions" -> q155Sql,
-    "q154_attribution" -> q154Sql,
-    "q153_auc" -> q153Sql,
-    "q152_kcore" -> q152Sql,
-    "q151_host_mix" -> q151Sql,
-    "q150_mixed_language" -> q150Sql,
-    "q149_sentence_spans" -> q149Sql,
-    "q148_random_walks" -> q148Sql,
-    "q147_trustrank" -> q147Sql,
-    "q146_triangles" -> q146Sql,
-    "q145_ffd_packing" -> q145Sql,
-    "q144_cohen_kappa" -> q144Sql,
-    "q143_rendezvous" -> q143Sql,
-    "q142_spearman" -> q142Sql,
-    "q141_token_drift" -> q141Sql,
-    "q140_mmr_rerank" -> q140Sql,
-    "q139_dedup_grade" -> q139Sql,
-    "q138_cluster_sample" -> q138Sql,
-    "q137_source_cap" -> q137Sql,
-    "q136_vocab_growth" -> q136Sql,
-    "q135_c4_rules" -> q135Sql,
-    "q134_ngram_diversity" -> q134Sql,
-    "q133_margin_mining" -> q133Sql,
-    "q132_matryoshka_recall" -> q132Sql,
-    "q131_tokenizer_fertility" -> q131Sql,
-    "q130_dup_text_fraction" -> q130Sql,
-    "q129_html_extract" -> q129Sql,
-    "q128_soft_dedup" -> q128Sql,
-    "q127_unimax_sample" -> q127Sql,
-    "q126_gopher_rules" -> q126Sql,
-    "q125_keep_best_dedup" -> q125Sql,
-    "q124_budget_sample" -> q124Sql,
-    "q123_crawl_admission" -> q123Sql,
-    "q122_adaptive_quality" -> q122Sql,
-    "q121_prototypicality" -> q121Sql,
-    "q120_url_dedup" -> q120Sql,
-    "q119_normalize_text" -> q119Sql,
-    "q107_stream_dedup" -> q107Sql,
-    "q27_lsh_ann" -> q27Sql,
-    "q28_monoid_join" -> q28Sql,
-    "q29_windowed_counts" -> q29Sql,
-    "q18_minhash_lsh" -> q18Sql,
-    "q19_ngram_jaccard" -> q19Sql,
-    "q20_simhash" -> q20Sql,
-    "q21_text_quality" -> q21Sql,
-    "q22_langid" -> q22Sql,
-    "q23_token_stats" -> q23Sql,
-    "q26_cosine_topk" -> q26Sql,
-    "q01_group_agg" -> q01Sql,
-    "q02_wordcount" -> q02Sql,
-    "q03_join_mr" -> q03Sql,
-    "q04_join_multiway" -> q04Sql,
-    "q05_join_optional" -> q05Sql,
-    "q06_secondary_sort" -> q06Sql,
-    "q07_topk_per_group" -> q07Sql,
-    "q08_fanout_stats" -> q08Sql,
-    "q09_distinct" -> q09Sql,
-    "q10_composite_key" -> q10Sql,
-    "q11_numeric_sort" -> q11Sql,
-    "q12_time_keys" -> q12Sql,
-    "q13_merge_taps" -> q13Sql,
-    "q14_window_running" -> q14Sql,
-    "q15_set_ops" -> q15Sql,
-    "q16_rollup" -> q16Sql,
-    "q17_sessionize" -> q17Sql,
-    "q24_dedup_exact" -> q24Sql,
-    "q25_dedup_fingerprint" -> q25Sql,
-    "q32_multimodal" -> q32Sql,
-  )
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map(q => q.name -> q.run).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    catalog.map(q => q.name -> q.oracleSql).toMap
 }

@@ -109,7 +109,7 @@ object Dedup {
     * as shingleDocs: HOF lambdas don't codegen; this loop is the hot
     * path). Emits `bands` rows per doc: (id, "band|sig,sig,...").
     */
-  private[graft] def bandBuckets(
+  private def bandBuckets(
       docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     import org.apache.spark.sql.types._
     val rowsPerBand = numHashes / bands
@@ -1922,35 +1922,7 @@ object Dedup {
       idCol: Column,
       textCol: Column,
       shingleK: Int = 8,
-      charsHint: Long = -1L): DataFrame =
-    ngramNoveltyImpl(df, idCol, textCol, shingleK, charsHint,
-      strategy = "window")
-
-  /** [[ngramNovelty]] with the df-attachment strategy exposed for the
-    * GramReuseProbe A/B (same rows under every strategy):
-    *
-    *  - `"window"` (the production default): df arrives as
-    *    `count(*) OVER (PARTITION BY g)` on the exchanged gram stream
-    *    — ONE exchange, ONE kernel pass, no join at all; the window's
-    *    per-group buffer is one gram's posting list (spills past
-    *    memory, never collects corpus-wide).
-    *  - `"merge"`: join-back hinted to sort-merge. NOTE (probe
-    *    finding): this does NOT buy exchange reuse — the df branch is
-    *    column-pruned to bare `g` rows while the gram side carries
-    *    `(id, g)`, so the two exchanges are not identical and the
-    *    kernel still runs twice, now behind an extra sort.
-    *  - `"broadcast"`: Catalyst's own choice for the join-back form
-    *    (the round-15 shape) — re-executes the kernel for the
-    *    broadcast branch (two map passes over the corpus). */
-  private[graft] def ngramNoveltyImpl(
-      df: DataFrame,
-      idCol: Column,
-      textCol: Column,
-      shingleK: Int,
-      charsHint: Long,
-      strategy: String): DataFrame = {
-    require(Set("window", "merge", "broadcast").contains(strategy),
-      s"unknown df-attachment strategy $strategy")
+      charsHint: Long = -1L): DataFrame = {
     require(shingleK >= 2, s"shingleK must be >= 2, got $shingleK")
     val par = df.sparkSession.sparkContext.defaultParallelism
     val totalChars =
@@ -1968,16 +1940,9 @@ object Dedup {
     // vms is per-doc distinct, so count(*) per hash IS the document
     // frequency — no pre-distinct pass needed; the window/grouping
     // rides the repartition's partitioning (no second exchange)
-    val withDf = strategy match {
-      case "window" =>
-        grams.withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("g")))
-      case pin =>
-        val dfs0 = grams.groupBy("g").agg(count(lit(1)).as("df"))
-        val dfs = if (pin == "merge") dfs0.hint("merge") else dfs0
-        grams.join(dfs, Seq("g"))
-    }
-    withDf
+    grams
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("g")))
       .groupBy("id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("df") === 1L, 1L).otherwise(0L)).as("n_novel"))

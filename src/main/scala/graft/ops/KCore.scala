@@ -46,9 +46,8 @@ object KCore {
     *   point or after `maxRounds` peels, whichever is first. An oracle
     *   unrolling exactly `maxRounds` rounds matches either way.
     * @param broadcastNodesUpTo keep sets up to this size broadcast into
-    *   the semi-joins (default shares [[PageRank.DefaultBroadcastNodesUpTo]]
-    *   and its `GRAFT_BROADCAST_NODES_UP_TO` measurement lever); above
-    *   it both semi-joins fall back to shuffles (result-identical).
+    *   the semi-joins (default shares [[PageRank.DefaultBroadcastNodesUpTo]]);
+    *   above it both semi-joins fall back to shuffles (result-identical).
     * @return (node long, deg long) for every node of the peeled graph.
     */
   def kCore(

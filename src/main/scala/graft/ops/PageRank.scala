@@ -41,24 +41,17 @@ object PageRank {
 
   /** Rank tables up to this many nodes are broadcast into the
     * per-iteration edge join (~16 B/row: 2 M ≈ tens of MB hashed).
-    * `GRAFT_BROADCAST_NODES_UP_TO` overrides the default at process
-    * level — a measurement lever for laddering the shuffle arm (both
-    * arms are result-identical, pinned by spec); explicit call-site
-    * arguments are unaffected. */
-  val DefaultBroadcastNodesUpTo: Long =
-    sys.env.get("GRAFT_BROADCAST_NODES_UP_TO").map(_.toLong)
-      .getOrElse(2L * 1000 * 1000)
+    * Both arms are result-identical (pinned by spec); call sites pass
+    * their own threshold to choose the shuffle arm. */
+  val DefaultBroadcastNodesUpTo: Long = 2L * 1000 * 1000
 
   /** Rank-table lineage is cut (eager localCheckpoint of N rows of two
     * longs) every this-many iterations. 5 trades one extra tiny job
     * per 5 rounds against the quadratic planning growth of an uncut
     * loop; checkpointing is semantically transparent, so any value
     * yields bit-identical ranks (PageRankSpec pins iters=25 vs an
-    * effectively-uncut run). `GRAFT_PAGERANK_CUT_EVERY` overrides at
-    * process level — a measurement lever, not a tuning surface. */
-  val LineageCutEvery: Int =
-    sys.env.get("GRAFT_PAGERANK_CUT_EVERY").map(_.toInt)
-      .getOrElse(5)
+    * effectively-uncut run). */
+  val LineageCutEvery: Int = 5
 
   /** @param edges (srcCol, dstCol) directed edge table; duplicate
     *   edges count twice (pre-`distinct` if that is not intended).

@@ -1024,13 +1024,8 @@ object Similarity extends Serializable {
     * rung, back-to-back flat controls equal to 0.03%): at 64 supers
     * (nlist 4096) the tier is a 3.6% LOSS (6.93 vs 6.69 s — the ~8
     * extra sims/row save almost nothing), at 128 supers (nlist
-    * 16384) an 18% win (26.4 vs 32.2 s) — so the gate sits between.
-    * `GRAFT_HIER_MIN_NTOP` is the measurement lever (the
-    * `GRAFT_PAGERANK_CUT_EVERY` convention): SizingProbe KIND=assign
-    * A/Bs the tiers in one JVM by disabling the gate, it is not a
-    * user knob. */
-  private val HierMinNtop = sys.env.get("GRAFT_HIER_MIN_NTOP")
-    .map(_.toInt).getOrElse(96)
+    * 16384) an 18% win (26.4 vs 32.2 s) — so the gate sits between. */
+  private val HierMinNtop = 96
 
   /** The shared branch-and-bound walk of [[nearestIndexScanner]] and
     * [[assignNearest]] over [[centroidScanGroups]]'s super-cells, with
@@ -2283,7 +2278,7 @@ object Similarity extends Serializable {
   /** The cell arm's scoring tail: exact cosine over the routed
     * candidates, then the (sim, -test_id) struct-max fold that
     * reproduces the closure kernel's lowest-id tie-break.
-    * Package-private so the probe/spec can pin THIS arm specifically
+    * Package-private so the spec can pin THIS arm specifically
     * (the public method routes by the fan-out estimate). */
   private[graft] def cellArmScore(assigned: DataFrame, candidates: DataFrame,
       threshold: Double): DataFrame =
@@ -2414,7 +2409,7 @@ object Similarity extends Serializable {
   }
 
   /** The cell-routed arm's candidate generation, extracted so the
-    * scale probe (`graft.ContaminationProbe`) can count routing
+    * spec can count routing
     * survivors with the SAME bound math the operator ships — never a
     * re-derivation that could drift. Returns (assigned test rows with
     * their cell + angle, corpus candidate rows fanned to the cells

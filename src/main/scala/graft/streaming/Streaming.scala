@@ -22,12 +22,9 @@ object Streaming {
     * standard flatMapGroupsWithState shape — so a pathological key
     * (bot user, boilerplate bucket) is one task's heap; the cap turns
     * that silent OOM into a loud per-key error naming the hot key.
-    * One documented knob instead of per-operator constants (round-10
-    * verdict): `GRAFT_MAX_BUFFERED_PER_KEY` overrides at process
-    * level, call-site arguments override per call. */
-  val DefaultMaxBufferedPerKey: Int =
-    sys.env.get("GRAFT_MAX_BUFFERED_PER_KEY").map(_.toInt)
-      .getOrElse(1 << 20)
+    * One shared default instead of per-operator constants (round-10
+    * verdict); call-site arguments override it per call. */
+  val DefaultMaxBufferedPerKey: Int = 1 << 20
 
   final case class Event(
       event_id: Long, ts: Timestamp, user_id: Long,
@@ -624,8 +621,7 @@ object Streaming {
           val buf = rows.take(maxBufferedPerBucket + 1).toSeq
           require(buf.lengthCompare(maxBufferedPerBucket) <= 0,
             s"bucket has > $maxBufferedPerBucket arrivals in one batch; " +
-              "raise maxBufferedPerBucket (GRAFT_MAX_BUFFERED_PER_KEY) " +
-              "or pre-dedup upstream")
+              "raise maxBufferedPerBucket or pre-dedup upstream")
           val out = Vector.newBuilder[NearDupCandidate]
           buf.sortBy(_._2).foreach { case (_, id, sig, _) =>
             if (!stored.exists(_._1 == id) && !overflowSeen.contains(id)) {

@@ -23,6 +23,35 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("catalog names are unique") {
+    // a Seq keeps a duplicate name that a Map literal silently dropped
+    val dups = SparkEntry.catalog.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name
+    }
+    assert(dups.isEmpty, s"duplicate catalog names: $dups")
+  }
+
+  test("library packages read no environment variables") {
+    // tuning belongs in explicit parameters; only the Bench/Verify
+    // driver contract and SparkEntry's deployment paths read the env
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val pkgs = Seq("ops", "dedup", "similarity", "streaming", "functions",
+      "plans", "pipeline", "tap")
+    val offenders = pkgs.flatMap { pkg =>
+      val root = Paths.get("src/main/scala/graft", pkg)
+      assert(Files.isDirectory(root), s"missing source dir $root")
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .filter { f: Path =>
+          val src = Files.readString(f)
+          src.contains("sys.env") || src.contains("System.getenv")
+        }.map(_.toString).toList
+      finally walk.close()
+    }
+    assert(offenders.isEmpty, s"env reads in library code: $offenders")
+  }
+
   test("oracle SQL only references fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings",

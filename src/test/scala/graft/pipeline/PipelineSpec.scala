@@ -223,6 +223,29 @@ class PipelineSpec extends SparkSpec {
     assert(staged.head._1 > 0)
   }
 
+  test("catalog queries stage their files under the per-process root, " +
+      "never at a fixed tmpdir path another process shares") {
+    import java.nio.file.Paths
+    val dir = sf("sf0.001")
+    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tmpdir = System.getProperty("java.io.tmpdir")
+    val fixed = Seq(Paths.get(tmpdir, s"graft-q35-$tag"),
+      Paths.get("/tmp/graft_q75", tag),
+      Paths.get(tmpdir, s"graft-q174-$tag"),
+      Paths.get(tmpdir, s"graft-q175-$tag"))
+    fixed.foreach(p => Fs.delete(spark, p.toString))
+    def run(q: String) = graft.SparkEntry.queries(q)(spark, dir)
+    run("q35_pipeline_stages").collect()
+    run("q75_staged_incremental").collect()
+    val nations = spark.read.parquet(dir + "/nation.parquet").count()
+    val regions = spark.read.parquet(dir + "/region.parquet").count()
+    // the staged files are read back in full
+    assert(run("q174_concat_by_file").count() == nations)
+    assert(run("q175_binary_taps").count() == 2 * regions)
+    val left = fixed.filter(p => Files.exists(p))
+    assert(left.isEmpty, s"fixed staging paths written: $left")
+  }
+
   test("staged incremental dedup: the prepared-corpus arm equals the " +
       "one-shot minhashLshAgainst, and the second run skips the corpus " +
       "pass (RSSkip memoization)") {

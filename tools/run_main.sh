@@ -1,5 +1,5 @@
 #!/bin/bash
-# Run a graft main (Bench / probes) from a SNAPSHOT of the compiled
+# Run a graft main (graft.Bench) from a SNAPSHOT of the compiled
 # classes, without holding the sbt project lock — so long ladder runs
 # can proceed in the background while sbt keeps compiling/testing.
 # Mirrors build.sbt's fork JVM exactly (add-opens, UTC, no UI, 8g heap
@@ -40,8 +40,8 @@ if ! pgrep -x java >/dev/null 2>&1; then
 fi
 SNAP=$(mktemp -d /tmp/graft_classes_XXXX)
 trap 'rm -rf "$SNAP"' EXIT
-# GRAFT_CLASSES_DIR lets A/B probes point at a worktree's compiled
-# classes (e.g. an old-tree arm) without copying the script.
+# GRAFT_CLASSES_DIR lets tools/ab_block.sh point each arm at its own
+# compiled classes (e.g. an old-tree arm) without copying the script.
 cp -r "${GRAFT_CLASSES_DIR:-/root/repo/target/scala-2.13/classes}"/. "$SNAP"/
 
 ADD_OPENS=""
