@@ -71,32 +71,16 @@ object Decontaminate extends Serializable {
     * Shape: `n_shingles` is `size(vms)` — computed MAP-SIDE, no gram
     * ever shuffles for it — and only contamination HITS flow through the
     * gram join into the (id)-keyed aggregation, then LEFT-join back onto
-    * the per-doc row. The previous left-join formulation shuffled the
-    * whole corpus gram stream twice in the non-broadcast arm (once by
-    * gram for the join, once by id for the count); this one shuffles
-    * hits only after the join (sf0.1, 5% test side: 2.36 → 0.64 s cold,
-    * 0.40 → 0.20 s warm — NOTES.md).
+    * the per-doc row. The previous left-join formulation, with an
+    * unbroadcast test side, shuffled the whole corpus gram stream twice
+    * (once by gram for the join, once by id for the count); this one
+    * shuffles hits only after the join (sf0.1, 5% test side: 2.36 →
+    * 0.64 s cold, 0.40 → 0.20 s warm — NOTES.md).
     *
     * @param docs     the training corpus (big side, scanned once)
     * @param testSet  the evaluation set (small side, broadcast)
     * @param n        n-gram width in whitespace tokens (13 = the usual
     *                 decontamination convention)
-    * @param broadcastTest broadcast the test set's distinct gram hashes
-    *   (default — benchmarks are small by definition). Pass false when
-    *   the "test set" is itself corpus-sized (e.g. decontaminating
-    *   against another training corpus) to shuffle-join on the gram
-    *   hash instead; same lever as Keywords' `broadcastVocab`.
-    * @param bloomExpectedItems non-broadcast arm only: when > 0, build a
-    *   bloom filter over the test grams (expected cardinality = this,
-    *   1% fpp) and pre-filter the corpus gram stream BEFORE its join
-    *   shuffle. The filter is a bounded driver sketch (~1.2 MB per 1M
-    *   items at 1% fpp) built with one extra pass over the test grams —
-    *   overhead that LOSES at sf0.1 (~1 s build vs ~0.4 s join saved,
-    *   NOTES.md) but wins when the corpus gram stream is shuffle-bound
-    *   and mostly clean: every true-negative gram (~all of them) drops
-    *   before the exchange instead of shuffling. False positives only
-    *   cost shuffled rows — the exact join keeps correctness, so the
-    *   output is bit-identical with the lever on or off.
     * @return (id, n_shingles, n_contaminated, contamination) — one row
     *   per training doc with >= 1 n-gram; contamination = fraction of
     *   the doc's DISTINCT n-grams that appear anywhere in the test set.
@@ -106,28 +90,15 @@ object Decontaminate extends Serializable {
   def contamination(
       docs: DataFrame, docId: Column, docText: Column,
       testSet: DataFrame, testId: Column, testText: Column,
-      n: Int = 13,
-      broadcastTest: Boolean = true,
-      bloomExpectedItems: Long = 0L): DataFrame = {
+      n: Int = 13): DataFrame = {
     val d = tokenShingleDocs(docs, docId, docText, n)
-    val t0 = tokenShingleDocs(testSet, testId, testText, n)
-      .select(explode(col("vms")).as("sh")).distinct()
-    val t = if (broadcastTest) broadcast(t0) else t0
+    val t = broadcast(tokenShingleDocs(testSet, testId, testText, n)
+      .select(explode(col("vms")).as("sh")).distinct())
     // cast: size() is int, but n_shingles was born a count() bigint —
     // the schema is part of the oracle contract
     val perDoc = d.select(col("id"),
       size(col("vms")).cast("long").as("n_shingles"))
-    val grams0 = d.select(col("id"), explode(col("vms")).as("sh"))
-    val grams =
-      if (broadcastTest || bloomExpectedItems <= 0L) grams0
-      else {
-        val spark = docs.sparkSession
-        val bf = spark.sparkContext.broadcast(
-          t0.stat.bloomFilter("sh", bloomExpectedItems, 0.01))
-        val mightContain = udf((x: Long) => bf.value.mightContain(x))
-        grams0.filter(mightContain(col("sh")))
-      }
-    val hits = grams
+    val hits = d.select(col("id"), explode(col("vms")).as("sh"))
       .join(t, Seq("sh"))
       .groupBy("id")
       .agg(count(lit(1)).as("n_contaminated"))

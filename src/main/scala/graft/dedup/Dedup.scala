@@ -109,7 +109,7 @@ object Dedup {
     * as shingleDocs: HOF lambdas don't codegen; this loop is the hot
     * path). Emits `bands` rows per doc: (id, "band|sig,sig,...").
     */
-  private def bandBuckets(
+  private[graft] def bandBuckets(
       docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     import org.apache.spark.sql.types._
     val rowsPerBand = numHashes / bands
@@ -529,12 +529,12 @@ object Dedup {
     *
     * Plan shape (the standard web-scale pipeline):
     *   shingle → k-min-hash signature → band keys → explode(bands) →
-    *   self-join on band key (id1 < id2) → distinct pairs → exact-Jaccard
-    *   verify on the shingle sets of surviving candidates.
+    *   group on band key → exact-Jaccard verify of every in-bucket pair
+    *   (id1 < id2) on the shingle sets → distinct pairs.
     *
-    * Scale notes: the explode emits `bands` rows per doc (narrow: band key
-    * + id), the self-join shuffles on band key, and the verify re-joins
-    * only candidate ids back to shingle sets — so the quadratic blowup is
+    * Scale notes: the explode emits `bands` rows per doc (band key + id
+    * + shingle set), the ONE grouping shuffles on band key, and pairs
+    * are verified inside their bucket — so the quadratic blowup is
     * confined to real near-duplicate buckets.
     *
     * An over-cap band bucket (boilerplate text) is NOT dropped silently:
@@ -551,39 +551,29 @@ object Dedup {
     * maxBucketSize` for the representative arm.
     *
     * SIZING (round 15, closing the round-14 ADVICE wart): the
-    * shuffle-sizing inputs (Sizing.groupingPartitions /
-    * jaccardBuildParts) need the corpus cardinality before the plan
-    * exists. Resolution order: `rowsHint >= 0` (authoritative) →
-    * cached-signature count (when `cacheSignatures`; materializes the
-    * cache the banding pass reuses, so upstream runs once) →
+    * grouping-partition count (Sizing.groupingPartitions) needs the
+    * corpus cardinality before the plan exists. Resolution order:
+    * `rowsHint >= 0` (authoritative) →
     * [[graft.ops.Sizing.planRowsEstimate]] (NO Spark job — plan
     * rowCount or sizeInBytes/256, magnitude-right which is all
     * partition sizing needs) → a pruned count() job ONLY when the
-    * plan carries no usable statistic. The default path over a
-    * parquet scan therefore runs zero jobs at plan-build time
-    * (DedupSpec pins this with a job-counting listener). Callers with
-    * an EXPENSIVE upstream plan (a prior join/agg/kernel) whose plan
-    * stats are degenerate should still pass `rowsHint` or set
-    * `cacheSignatures = true`.
+    * plan carries no usable statistic. The path over a parquet scan
+    * therefore runs zero jobs at plan-build time (DedupKernelSpec pins
+    * this with a job-counting listener). Callers with an EXPENSIVE
+    * upstream plan (a prior join/agg/kernel) whose plan stats are
+    * degenerate should pass `rowsHint`.
+    *
+    * The (id, hashed-shingle set) signatures are never cached:
+    * columnar-encoding the ~300-long `vms` array per doc costs more
+    * than re-running the shingle+md5 kernel over the pruned 2-column
+    * scan (sf0.1 quiet-box A/B, 3 paired runs: q18 uncached wins 2/3
+    * with larger margins, q37's iterative consumer uncached 2.5-2.8 s
+    * vs cached 3.7-3.9 s — disjoint spreads twice; NOTES.md). At
+    * cluster scale a cached table is corpus-sized anyway — persist to
+    * a tap between pipeline stages if reuse across jobs is wanted.
     *
     * @param rowsHint known (approximate) row count of `df`; `>= 0`
-    *   skips the sizing count() job entirely. Default -1 = count.
-    * @param cacheSignatures persist the (id, hashed-shingle set) table.
-    *   OFF by default — same lever and same default as nearDupPairs'
-    *   `cacheCorpus`, and measured, not assumed: columnar-encoding the
-    *   ~300-long `vms` array per doc costs more than re-running the
-    *   shingle+md5 kernel over the pruned 2-column scan (sf0.1 quiet-box
-    *   A/B, 3 paired runs: q18 uncached wins 2/3 with larger margins,
-    *   q37's iterative consumer uncached 2.5-2.8 s vs cached 3.7-3.9 s —
-    *   disjoint spreads twice; NOTES.md). Reuse by arm (round-13
-    *   ADVICE): on the default in-group path the signatures feed the
-    *   banding pass plus (when `rowsHint` is unset) the sizing count —
-    *   two uses, so caching pays only when the upstream plan is more
-    *   expensive than one cache materialization; on the off-default
-    *   joined arm they additionally feed BOTH Jaccard verify re-joins
-    *   (three uses), the shape the lever was built for. At cluster
-    *   scale the cached table is corpus-sized anyway — persist to a
-    *   tap between pipeline stages if reuse across jobs is wanted.
+    *   skips the sizing estimate entirely. Default -1 = estimate.
     * @return (id1, id2, jaccard) for candidate pairs with jaccard >= threshold
     */
   def minhashLsh(
@@ -595,67 +585,50 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5,
       maxBucketSize: Int = 1000,
-      cacheSignatures: Boolean = false,
-      verifyInGroup: Boolean = true,
       rowsHint: Long = -1L): DataFrame = {
-    val docs0 = shingleDocs(df, idCol, textCol, shingleK)
+    val docs = shingleDocs(df, idCol, textCol, shingleK)
       .select(col("id"), col("vms"))
-    val docs = if (cacheSignatures) docs0.cache() else docs0
-    // Sizing cardinality: hint > cached-signature count (materializes
-    // the cache the banding pass reuses — upstream runs once) > plan
-    // statistics (round 15: NO job — parquet scans know their bytes
-    // driver-side; sizing only needs the magnitude) > pruned count()
-    // as the last resort when the plan carries no usable size.
+    // Sizing cardinality: hint > plan statistics (round 15: NO job —
+    // parquet scans know their bytes driver-side; sizing only needs
+    // the magnitude) > pruned count() as the last resort when the plan
+    // carries no usable size.
     val nRows =
       if (rowsHint >= 0) rowsHint
-      else if (cacheSignatures) docs.count()
       else graft.ops.Sizing.planRowsEstimate(df)
         .getOrElse(df.select(idCol).count())
-    if (verifyInGroup) {
-      // IN-GROUP Jaccard verify (round 13, the default) — the same
-      // rewrite the embedding family got in round 11, for the same
-      // measured reason: the joined arm attaches two multi-KB vms
-      // payloads to the candidate-pair stream, and at the 1.5M-doc
-      // x300 rung that step alone went 11.8 s → 127 s for exactly-3×
-      // candidate volume (PairStageProbe: every cardinality linear,
-      // the verify join 10.8× — non-spillable hash builds + a
-      // ~100 GB widened pair stream on an 8 g box). Here the shingle
-      // sets ride the ONE grouping shuffle as struct members
-      // (bands × n wide rows — ~6× less traffic than the pair
-      // re-join at the measured ~13-member mean bucket) and pairs
-      // are intersected INSIDE the group; the survivor stream is
-      // emitted verified. Output is row-identical to the joined arm
-      // INCLUDING jaccard values (same sorted-set two-pointer loop;
-      // DedupSpec pins both pipelines equal on an over-cap fixture).
-      // Grouping partitions sized from the banded VOLUME
-      // (Sizing.groupingPartitions — the nearDupPairs discipline).
-      // 64 MB/task target (not the 128 MB default): the member structs
-      // deserialize into collect buffers on every concurrent task, and
-      // the x300 rung measured 8 g/32-thread runs at the heap edge with
-      // 128 MB-class task state — halving the target doubles the task
-      // count for the same total work and buys the headroom cheaply.
-      val parts = graft.ops.Sizing.groupingPartitions(
-        bands.toLong * nRows, 8L * 1024,
-        df.sparkSession.sparkContext.defaultParallelism,
-        targetBytesPerTask = 64L << 20)
-      val banded = bandBucketsWide(docs, numHashes, bands)
-        .repartition(parts, col("bucket"))
-      val grouped = cappedMemberGroups(
-        banded, struct(col("id"), col("vms")), col("id"),
-        maxBucketSize, "graft.minhash")
-      return verifyJaccardGroupsKernel(
-        grouped, docs.schema("id").dataType, threshold).distinct()
-    }
-    // JOINED verify (off-default): kept for the A/B and for callers
-    // that pre-materialize signatures; build partitions sized from the
-    // docs volume (jaccardBuildParts).
-    val parts = jaccardBuildParts(nRows, df.sparkSession)
-
-    val banded = bandBuckets(docs, numHashes, bands)
-    val grouped = cappedBucketGroups(banded, maxBucketSize, "graft.minhash")
-    val pairs = emitPairs(grouped, docs.schema("id").dataType).distinct()
-
-    verifyJaccard(pairs, docs, docs, threshold, parts)
+    // IN-GROUP Jaccard verify (round 13) — the same rewrite the
+    // embedding family got in round 11, for the same measured reason:
+    // a joined verify attaches two multi-KB vms payloads to the
+    // candidate-pair stream, and at the 1.5M-doc x300 rung that step
+    // alone went 11.8 s → 127 s for exactly-3× candidate volume
+    // (PairStageProbe: every cardinality linear, the verify join 10.8×
+    // — non-spillable hash builds + a ~100 GB widened pair stream on
+    // an 8 g box). Here the shingle sets ride the ONE grouping shuffle
+    // as struct members (bands × n wide rows — ~6× less traffic than
+    // the pair re-join at the measured ~13-member mean bucket) and
+    // pairs are intersected INSIDE the group; the survivor stream is
+    // emitted verified. Output is row-identical to the joined pipeline
+    // (bandBuckets → cappedBucketGroups → emitPairs → verifyJaccard)
+    // INCLUDING jaccard values (same sorted-set two-pointer loop;
+    // DedupKernelSpec pins both equal on an over-cap fixture).
+    // Grouping partitions sized from the banded VOLUME
+    // (Sizing.groupingPartitions — the nearDupPairs discipline).
+    // 64 MB/task target (not the 128 MB default): the member structs
+    // deserialize into collect buffers on every concurrent task, and
+    // the x300 rung measured 8 g/32-thread runs at the heap edge with
+    // 128 MB-class task state — halving the target doubles the task
+    // count for the same total work and buys the headroom cheaply.
+    val parts = graft.ops.Sizing.groupingPartitions(
+      bands.toLong * nRows, 8L * 1024,
+      df.sparkSession.sparkContext.defaultParallelism,
+      targetBytesPerTask = 64L << 20)
+    val banded = bandBucketsWide(docs, numHashes, bands)
+      .repartition(parts, col("bucket"))
+    val grouped = cappedMemberGroups(
+      banded, struct(col("id"), col("vms")), col("id"),
+      maxBucketSize, "graft.minhash")
+    verifyJaccardGroupsKernel(
+      grouped, docs.schema("id").dataType, threshold).distinct()
   }
 
   /** The in-group verify tail of [[minhashLsh]]: per bucket, sort the
@@ -1145,18 +1118,18 @@ object Dedup {
     * band value in the low — so the shuffle key is 8 bytes (vs the ~40 B
     * string keys of minhash bands, whose values don't fit a word).
     *
-    * @param cacheSignatures persist the (id, sh) table across its three
-    *   uses (banding + both verify joins). ON by default — the OPPOSITE
-    *   default from minhashLsh's lever, deliberately: a simhash signature
-    *   is 8 bytes/doc where a minhash vms array is ~2.4 KB/doc, so this
-    *   is the "aggregated small, multiple consumers" case the repo's
-    *   cache rule (NOTES.md) says to cache, and the sf0.1 interleaved
-    *   A/B agrees (cached never loses, wins under CPU contention —
-    *   recomputing the per-token md5 kernel 3x is pure waste).
-    *   LIFECYCLE: the cache is pinned until the session drops it — the
-    *   returned plan carries no unpersist handle, so a long-lived
-    *   session calling this repeatedly should `spark.catalog
-    *   .clearCache()` between corpora (as Bench does) or pass false.
+    * The (id, sh) table is cached across its three uses (banding +
+    * both verify joins) — the OPPOSITE of minhashLsh, deliberately: a
+    * simhash signature is 8 bytes/doc where a minhash vms array is
+    * ~2.4 KB/doc, so this is the "aggregated small, multiple consumers"
+    * case the repo's cache rule (NOTES.md) says to cache, and the sf0.1
+    * interleaved A/B agrees (cached never loses, wins under CPU
+    * contention — recomputing the per-token md5 kernel 3x is pure
+    * waste). LIFECYCLE: the cache is pinned until the session drops it
+    * — the returned plan carries no unpersist handle, so a long-lived
+    * session calling this repeatedly should `spark.catalog
+    * .clearCache()` between corpora (as Bench does).
+    *
     * @return (id1, id2, hamming int) for candidate pairs with
     *   hamming <= maxHamming, id1 < id2
     */
@@ -1166,8 +1139,7 @@ object Dedup {
       textCol: Column,
       maxHamming: Int = 3,
       bands: Int = graft.ops.Sizing.Auto,
-      maxBucketSize: Int = 1000,
-      cacheSignatures: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     // Auto-sizing (default): the FEWEST bands that still give the
     // pigeonhole recall guarantee — every extra band narrows the
     // segments and pulls the 2^(64/bands) random-collision ceiling
@@ -1182,8 +1154,7 @@ object Dedup {
       s"radius guarantee needs bands >= maxHamming + 1 " +
         s"(got bands=$bandsN, maxHamming=$maxHamming)")
     val width = 64 / bandsN
-    val sigs0 = simhashSignatures(df, idCol, textCol)
-    val sigs = if (cacheSignatures) sigs0.cache() else sigs0
+    val sigs = simhashSignatures(df, idCol, textCol).cache()
 
     val bandCols = (0 until bandsN).map { b =>
       lit(b.toLong << 32) +
@@ -1589,13 +1560,6 @@ object Dedup {
           .as("text_clean"))
   }
 
-  /** Re-verify candidate pairs with exact Jaccard over the hashed-shingle
-    * sets (deterministic: both sides of the oracle fold hash collisions
-    * identically; at P=1e9+7 the set-jaccard is indistinguishable from
-    * string-shingle jaccard in practice). id1 resolves against `docs1`,
-    * id2 against `docs2` — pass the same table twice for within-corpus
-    * pairs.
-    */
   /** Build-side partition count for [[verifyJaccard]]'s shuffled-hash
     * joins, from the docs-side ROW COUNT: shuffled-hash build sides do
     * not spill (they OOM), so the per-task build — |docs| × multi-KB
@@ -1615,7 +1579,14 @@ object Dedup {
       docRows, 8L * 1024, spark.sparkContext.defaultParallelism,
       targetBytesPerTask = 64L << 20)
 
-  private def verifyJaccard(
+  /** Re-verify candidate pairs with exact Jaccard over the hashed-shingle
+    * sets (deterministic: both sides of the oracle fold hash collisions
+    * identically; at P=1e9+7 the set-jaccard is indistinguishable from
+    * string-shingle jaccard in practice). id1 resolves against `docs1`,
+    * id2 against `docs2` — pass the same table twice for within-corpus
+    * pairs.
+    */
+  private[graft] def verifyJaccard(
       pairs: DataFrame,
       docs1: DataFrame,
       docs2: DataFrame,
@@ -1828,7 +1799,7 @@ object Dedup {
     * and are absent (undetectable at this k).
     *
     * Scale shape: the `Decontaminate` restructure — the test-side hash
-    * set broadcasts (`broadcastTest`, the benchmark-sized default);
+    * set broadcasts (benchmarks are small by definition);
     * only HITS flow through the join and the per-doc aggregation; the
     * per-doc totals come map-side from the selection, joined back at
     * the end.
@@ -1836,12 +1807,10 @@ object Dedup {
   def winnowContamination(
       docs: DataFrame, docId: Column, docText: Column,
       testSet: DataFrame, testId: Column, testText: Column,
-      k: Int = 20, w: Int = 8,
-      broadcastTest: Boolean = true): DataFrame = {
+      k: Int = 20, w: Int = 8): DataFrame = {
     val d = winnowDocs(docs, docId, docText, k, w)
-    val t0 = winnowDocs(testSet, testId, testText, k, w)
-      .select(explode(col("fhs")).as("fh")).distinct()
-    val t = if (broadcastTest) broadcast(t0) else t0
+    val t = broadcast(winnowDocs(testSet, testId, testText, k, w)
+      .select(explode(col("fhs")).as("fh")).distinct())
     val hits = d.select(col("id"), explode(col("fhs")).as("fh"))
       .join(t, "fh")
       .groupBy("id").agg(count(lit(1)).as("n_matched"))

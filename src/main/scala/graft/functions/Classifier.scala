@@ -45,15 +45,14 @@ object Classifier {
     * stream, persisted (the model statistic — its four consumers read
     * the cache, same contract as `LangModel`'s model). The dense table
     * is |vocab| × |classes| rows; scoring joins the score-side token
-    * stream on token — shuffle by default, `broadcastModel` when
-    * vocab × classes fits executors. The argmax is `topk_by` (bounded,
+    * stream on token, with no hint — Spark's size-based join selection
+    * picks the strategy. The argmax is `topk_by` (bounded,
     * map-side partial), not a window. CACHE LIFECYCLE: as
     * `Prefix.runningTotal` — clearCache() between corpora.
     */
   def nbLinear(
       train: DataFrame, trainLabel: Column, trainText: Column,
-      score: DataFrame, scoreId: Column, scoreText: Column,
-      broadcastModel: Boolean = false): DataFrame = {
+      score: DataFrame, scoreId: Column, scoreText: Column): DataFrame = {
     val counts = train
       .select(trainLabel.as("l"), explode(Text.tokens(trainText)).as("t"))
       .filter(col("l").isNotNull) // an unlabeled row is not a class
@@ -67,10 +66,9 @@ object Classifier {
       .crossJoin(v1)
       .select(col("t"), col("l"),
         expr(s"((coalesce(c, 0L) + 1L) * ${Scale}L) div (tot + v)").as("w"))
-    val model = if (broadcastModel) broadcast(dense) else dense
 
     score.select(scoreId.as("id"), explode(Text.tokens(scoreText)).as("t"))
-      .join(model, Seq("t"))
+      .join(dense, Seq("t"))
       .groupBy(col("id"), col("l"))
       .agg(sum(col("w")).as("fx"), count(lit(1)).as("n"))
       .groupBy(col("id"))

@@ -22,8 +22,7 @@ object Keywords {
     * Plan shape at corpus scale: token explode feeds ONE wide grouping
     * shuffle keyed (id, term) for tf (map-side combined); document
     * frequencies aggregate from the tf rows (narrow, vocab-sized) and
-    * BROADCAST back (vocabulary ≪ corpus — set `broadcastVocab` false
-    * to shuffle-join when it is not); the per-doc ranking is `topk_by`'s
+    * BROADCAST back (vocabulary ≪ corpus); the per-doc ranking is `topk_by`'s
     * bounded aggregate, so partials carry at most k terms per (task,
     * doc) into the final narrow shuffle. N rides a 1-row broadcast
     * cross join — no separate driver action.
@@ -34,8 +33,7 @@ object Keywords {
       df: DataFrame,
       idCol: Column,
       textCol: Column,
-      k: Int = 5,
-      broadcastVocab: Boolean = true): DataFrame = {
+      k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val tf = df
       .select(idCol.as("id"),
@@ -52,9 +50,8 @@ object Keywords {
     // explode + shuffle TWICE (a plain count(tf) gets normalized back to
     // count(1) for never-null columns, so the dependency must be one
     // Catalyst cannot see through). KeywordsSpec pins the reuse.
-    val dfreq0 = tf.groupBy("term")
-      .agg(count(when(col("tf") > 0, 1)).as("df"))
-    val dfreq = if (broadcastVocab) broadcast(dfreq0) else dfreq0
+    val dfreq = broadcast(tf.groupBy("term")
+      .agg(count(when(col("tf") > 0, 1)).as("df")))
     val n = broadcast(df.agg(count_distinct(idCol).as("n")))
     tf.join(dfreq, "term")
       .crossJoin(n)

@@ -74,16 +74,13 @@ object LangModel {
     * bounded aggregates far smaller than the corpus; same cache
     * lifecycle as [[bigramLmScore]]); N rides a 1-row broadcast. The
     * score-side trigram stream takes FIVE narrow model joins (c123,
-    * c12, c23, c2, c3) — `broadcastModel` collapses them all to
-    * broadcast hash joins when the model fits executors, the common
-    * clean-reference case.
+    * c12, c23, c2, c3), with no hint — Spark's size-based join
+    * selection picks each strategy.
     */
   def trigramLmScore(
       train: DataFrame, trainId: Column, trainText: Column,
-      score: DataFrame, scoreId: Column, scoreText: Column,
-      broadcastModel: Boolean = false): DataFrame = {
+      score: DataFrame, scoreId: Column, scoreText: Column): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def bc(df: DataFrame) = if (broadcastModel) broadcast(df) else df
     val tri = trigrams(train, trainId, trainText)
       .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
       .persist(lvl)
@@ -97,14 +94,14 @@ object LangModel {
     val n = broadcast(uni.agg(sum(col("cu")).as("n")))
 
     trigrams(score, scoreId, scoreText)
-      .join(bc(tri), Seq("w1", "w2", "w3"), "left")
-      .join(bc(bi.select(col("w1"), col("w2"), col("cb").as("c12"))),
+      .join(tri, Seq("w1", "w2", "w3"), "left")
+      .join(bi.select(col("w1"), col("w2"), col("cb").as("c12")),
         Seq("w1", "w2"), "left")
-      .join(bc(bi.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("cb").as("c23"))), Seq("w2", "w3"), "left")
-      .join(bc(uni.select(col("w").as("w2"), col("cu").as("c2"))),
+      .join(bi.select(col("w1").as("w2"), col("w2").as("w3"),
+        col("cb").as("c23")), Seq("w2", "w3"), "left")
+      .join(uni.select(col("w").as("w2"), col("cu").as("c2")),
         Seq("w2"), "left")
-      .join(bc(uni.select(col("w").as("w3"), col("cu").as("c3"))),
+      .join(uni.select(col("w").as("w3"), col("cu").as("c3")),
         Seq("w3"), "left")
       .crossJoin(n)
       .select(col("id"),
@@ -150,10 +147,9 @@ object LangModel {
     * is not derivable from the bigram table; swap in `Sketch.kmvDistinct`
     * when an approximate V is acceptable at scale. V rides a 1-row
     * broadcast — never a driver action. Scoring is one join of the
-    * score-side bigram stream against the model, shuffled on (w1, w2)
-    * by default; `broadcastModel` is the lever when the model fits
-    * executors (clean-reference training sets — the common CCNet case);
-    * `minBigramCount` prunes the model's long tail (hapax bigrams are
+    * score-side bigram stream against the model, with no hint — Spark's
+    * size-based join selection picks the strategy; `minBigramCount`
+    * prunes the model's long tail (hapax bigrams are
     * most of a web-scale model's rows and smoothing already handles
     * them as unseen), the same df-cap discipline as the Jaccard posting
     * index.
@@ -166,8 +162,7 @@ object LangModel {
   def bigramLmScore(
       train: DataFrame, trainId: Column, trainText: Column,
       score: DataFrame, scoreId: Column, scoreText: Column,
-      minBigramCount: Long = 1L,
-      broadcastModel: Boolean = false): DataFrame = {
+      minBigramCount: Long = 1L): DataFrame = {
     require(minBigramCount >= 1, s"minBigramCount must be >= 1")
     val tbi = bigrams(train, trainId, trainText)
     val c12 = tbi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
@@ -175,12 +170,8 @@ object LangModel {
     // context totals BEFORE pruning: the denominator stays the true
     // bigram-start count, so pruning only zeroes numerators (= unseen)
     val c1 = c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
-    val model0 = if (minBigramCount > 1L)
+    val model = if (minBigramCount > 1L)
       c12.filter(col("c12") >= minBigramCount) else c12
-    val model = if (broadcastModel) broadcast(model0) else model0
-    // the context table is vocab-sized — strictly smaller than the model,
-    // so it inherits the model's broadcast decision
-    val ctx = if (broadcastModel) broadcast(c1) else c1
     val vocab = broadcast(
       train.select(explode(Text.tokens(trainText)).as("w"))
         .agg(count_distinct(col("w")).as("v")))
@@ -189,7 +180,7 @@ object LangModel {
       .join(model, Seq("w1", "w2"), "left")
       // every bigram needs its context total (unseen bigrams included),
       // so c1 rides a separate narrow join, never the model rows
-      .join(ctx, Seq("w1"), "left")
+      .join(c1, Seq("w1"), "left")
       .crossJoin(vocab)
       .select(col("id"),
         ((coalesce(col("c12"), lit(0L)) + 1L) * Scale).as("num"),

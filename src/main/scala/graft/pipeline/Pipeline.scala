@@ -181,11 +181,6 @@ object Pipeline {
   def makeTap(tmpRoot: String, name: String, format: String = "parquet"): Tap =
     Tap(Seq(s"$tmpRoot/graft-tmp-$name"), format)
 
-  /** Short stable digest of a stage's input bindings — the part of
-    * `Stage.auto`'s memoization key that guards against serving one
-    * input's cached output for another (see the invalidation caveat on
-    * `Stage.auto`).
-    */
   /** File-LISTING signature of tap inputs — (path, length,
     * modificationTime) of every file under each tap path, recursive.
     * [[fingerprint]] covers only the BINDINGS (paths/format/options/
@@ -193,17 +188,13 @@ object Pipeline {
     * bytes — keeps the same memoization key and `RSSkip` serves stale
     * output; folding this signature into the `Stage.auto` name makes
     * the key track the data's identity too. Listing only (O(files)
-    * namenode calls, no data read); hidden files (`_SUCCESS`, `.crc`)
-    * are skipped so a re-commit of identical data stays memoized.
+    * namenode calls, no data read). Any rewrite of the data changes
+    * the signature, even a byte-identical one: it creates new
+    * part-file names and mtimes. Hidden files (`_SUCCESS`, `.crc`)
+    * are skipped, so a change to them alone does not.
     */
-  def contentFingerprint(spark: SparkSession, inputs: Seq[Tap]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def put(s: String): Unit = {
-      val b = s.getBytes("UTF-8")
-      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
-      md.update(b)
-    }
-    inputs.foreach { t =>
+  def contentFingerprint(spark: SparkSession, inputs: Seq[Tap]): String =
+    digest(inputs) { (t, put) =>
       t.paths.foreach { p =>
         val f = new Path(p)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -220,12 +211,25 @@ object Pipeline {
           entries.sorted.foreach(put)
         } else put(s"ABSENT:$p")
       }
-      md.update(0.toByte) // tap boundary
     }
-    md.digest().take(6).map("%02x".format(_)).mkString
-  }
 
-  private[pipeline] def fingerprint(inputs: Seq[Tap]): String = {
+  /** Short stable digest of a stage's input bindings — the part of
+    * `Stage.auto`'s memoization key that guards against serving one
+    * input's cached output for another (see the invalidation caveat on
+    * `Stage.auto`).
+    */
+  private[pipeline] def fingerprint(inputs: Seq[Tap]): String =
+    digest(inputs) { (t, put) =>
+      t.paths.foreach(put)
+      put(t.format)
+      t.options.toSeq.sorted.foreach { case (k, v) => put(k); put(v) }
+      put(t.schema.map(_.catalogString).getOrElse(""))
+    }
+
+  /** MD5 over the strings `putTap` feeds for each tap, with a 0 byte
+    * after every tap; the first 6 bytes as 12 hex digits. */
+  private def digest(inputs: Seq[Tap])(
+      putTap: (Tap, String => Unit) => Unit): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     // length-prefix every component so the encoding is injective — a
     // plain delimiter join would let Tap("x,y") collide with
@@ -236,10 +240,7 @@ object Pipeline {
       md.update(b)
     }
     inputs.foreach { t =>
-      t.paths.foreach(put)
-      put(t.format)
-      t.options.toSeq.sorted.foreach { case (k, v) => put(k); put(v) }
-      put(t.schema.map(_.catalogString).getOrElse(""))
+      putTap(t, put)
       md.update(0.toByte) // tap boundary
     }
     md.digest().take(6).map("%02x".format(_)).mkString

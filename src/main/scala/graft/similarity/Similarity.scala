@@ -27,7 +27,7 @@ object Similarity extends Serializable {
     * lambdas evaluate interpreted, and the dot product is the hot loop of
     * every similarity operator here.
     */
-  private def withCosineKernel(
+  private[graft] def withCosineKernel(
       df: DataFrame, aCol: String, bCol: String, out: String): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = df.schema.add(StructField(out, DoubleType, false))
@@ -1829,15 +1829,15 @@ object Similarity extends Serializable {
     * re-joined against the corpus for payloads. The grouping shuffle
     * widens by tables × vector per row, ~12× less traffic than the
     * pair re-join carried at expected bucket size ~12 (and per-member
-    * norm hoisting cuts verify flops 3×). `verifyInGroup = false`
-    * selects the exploded-pair + payload-re-join pipeline — kept as
-    * the measurement/verification arm; both emit row-identical output
-    * including bit-identical sims (spec-pinned on an over-cap
-    * fixture, probe-pinned at the x30 rung). Prefer the join arm only
-    * when vectors are so wide relative to bucket occupancy that
-    * tables × |corpus| × vecBytes exceeds the pair-stream traffic —
-    * at expected bucket size b̄ the join arm moves ~b̄× more bytes, so
-    * that regime means bucket occupancy ≈ 1 (bits oversized for n).
+    * norm hoisting cuts verify flops 3×). The output is row-identical,
+    * bit-identical sims included, to the exploded-pair + payload
+    * re-join pipeline (withBucketsKernel → cappedBucketGroups →
+    * emitPairs → withCosineKernel; SimilaritySpec pins both equal on
+    * an over-cap fixture). That pipeline moves less only when vectors
+    * are so wide relative to bucket occupancy that tables × |corpus| ×
+    * vecBytes exceeds the pair-stream traffic — at expected bucket
+    * size b̄ the join moves ~b̄× more bytes, so that regime means
+    * bucket occupancy ≈ 1 (bits oversized for n).
     *
     * An over-cap bucket is NOT dropped silently: it contributes one
     * deterministic representative pair, (min id, max id) — exact
@@ -1851,13 +1851,10 @@ object Similarity extends Serializable {
     * `UNION SELECT min(id), max(id) ... HAVING COUNT(*) > maxBucketSize`
     * for the representative arm.
     *
-    * @param cacheCorpus persist the (id, vector) projection across its
-    *   uses (the auto-sizing count + bucketing; with
-    *   `verifyInGroup = false`, also the verify re-join). Off by
-    *   default: at corpus scale a cache is a full materialization of
-    *   the input; recomputing the pruned two-column scan is the safe
-    *   default (same measured tradeoff as q34's uncached filter
-    *   chain, NOTES.md).
+    * The (id, vector) projection is not cached: at corpus scale a cache
+    * is a full materialization of the input, and recomputing the pruned
+    * two-column scan is the cheaper default (same measured tradeoff as
+    * q34's uncached filter chain, NOTES.md).
     */
   def nearDupPairs(
       corpus: DataFrame,
@@ -1865,21 +1862,18 @@ object Similarity extends Serializable {
       threshold: Double,
       bits: Int = graft.ops.Sizing.Auto,
       tables: Int = graft.ops.Sizing.Auto,
-      maxBucketSize: Int = 1000,
-      cacheCorpus: Boolean = false,
-      verifyInGroup: Boolean = true): DataFrame = {
-    val c0 = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      maxBucketSize: Int = 1000): DataFrame = {
+    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
         col("id"))
-    val c = if (cacheCorpus) c0.cache() else c0
     // Auto-sizing (default): derive the (bits, tables) pair from a
     // cheap pruned count so the random-collision knee tracks THIS
     // corpus, not a fixture (Sizing scaladoc has the rules + the
-    // measured round-7 knee). The in-group path needs the same count
-    // either way (its grouping partitions are sized from the banded
-    // VOLUME, see below), so it is computed once off the raw corpus —
-    // a pruned single-column scan, metadata-cheap on parquet.
-    lazy val nRows: Long = corpus.select(col(idCol)).count()
+    // measured round-7 knee). The grouping partitions need the same
+    // count (they are sized from the banded VOLUME, see below), so it
+    // is computed once off the raw corpus — a pruned single-column
+    // scan, metadata-cheap on parquet.
+    val nRows: Long = corpus.select(col(idCol)).count()
     val bitsN =
       if (bits == graft.ops.Sizing.Auto) graft.ops.Sizing.lshBits(nRows)
       else bits
@@ -1887,76 +1881,53 @@ object Similarity extends Serializable {
       if (tables == graft.ops.Sizing.Auto)
         graft.ops.Sizing.lshTables(bitsN, threshold)
       else tables
-    if (verifyInGroup) {
-      // IN-GROUP verify (round 11, the default): the vectors ride the
-      // one grouping shuffle as struct members and every bucket's
-      // pairs are cosine-verified INSIDE the group, so the ~0.2%-
-      // survivor pair stream is never materialized, never
-      // distinct'ed, and never re-joined against the corpus. The
-      // round-11 stage attribution measured the old exploded-pair
-      // path at x30 as: kernel 0.7 s, grouping 1.4 s, 24M-pair
-      // distinct 3.4 s, and ~10.7 s of verify-join — 24M pairs
-      // carrying two vector payloads each, for 57k survivors. The
-      // grouping shuffle widens (tables × vector per row) but that is
-      // ~12× less traffic than the pair re-join at expected bucket
-      // size ~12 (and per-member hoisted norms cut the verify flops
-      // 3×). Output is row-identical INCLUDING sims (same dot/norm/
-      // division order — spec pins both pipelines equal on an
-      // over-cap fixture).
-      // Pre-partition the WIDE member stream by bucket so the capped
-      // grouping aggregates AFTER the exchange (EnsureRequirements
-      // elides the agg's own): a map-side object-agg over this stream
-      // sees ~n×tables/partitions distinct buckets with ~1 member
-      // each — partials that merge nothing while their object map
-      // (overhead > payload) and the fallback's transient serialized
-      // copy OOM'ed the x100 rung at 16g. Post-shuffle the per-task
-      // key count is totalBuckets/partitions (~23k at x100) and the
-      // buffers hold exactly the final groups. Trade documented: a
-      // pathological over-cap mega-bucket's FULL membership now
-      // streams through one reducer (capped buffer, so memory stays
-      // bounded — time skew only); the narrow path's map-side capping
-      // kept that traffic at cap×partitions.
-      // The grouping exchange's width must track the banded VOLUME
-      // (tables × n wide rows), not the session's partition default:
-      // pinned at 32 partitions, the x300 embeddings rung put ~1 GB of
-      // deserialized aggregation state on every task — OOM at 16 g and
-      // a 23× wall-clock blowup for 3× data at 48 g (round-13 stage
-      // ladder; Sizing.groupingPartitions scaladoc). ~12 bytes per
-      // float dim + struct/id overhead estimates the OBJECT form of a
-      // member row; the floor keeps fixture-scale plans unchanged.
-      val parts = graft.ops.Sizing.groupingPartitions(
-        nRows * tablesN, 12L * dim + 72,
-        corpus.sparkSession.sparkContext.defaultParallelism)
-      val banded = withBucketsKernel(c, "v", tablesN, bitsN, dim)
-        .select(col("id"), col("v"), col("bucket"))
-        .repartition(parts, col("bucket"))
-      val m = struct(col("id"), col("v"))
-      val grouped = graft.dedup.Dedup.cappedMemberGroups(
-        banded, m, col("id"), maxBucketSize, "graft.neardup")
-      return verifyGroupsKernel(grouped, c.schema("id").dataType,
-        threshold).distinct()
-    }
-    val buckets = withBucketsKernel(c, "v", tablesN, bitsN, dim)
-      .select(col("id"), col("bucket"))
-    // the shared capped-bucket grouping (Dedup.cappedBucketGroups):
-    // bounded buffers, single-consumer over-cap representative collapse,
-    // observable capped counts
-    val grouped = graft.dedup.Dedup
-      .cappedBucketGroups(buckets, maxBucketSize, "graft.neardup")
-    val pairs = graft.dedup.Dedup
-      .emitPairs(grouped, c.schema("id").dataType)
-      .distinct()
-    // shuffle_hash on the corpus sides for the same reason as
-    // Dedup.verifyJaccard's hint: never sort the pair stream once the
-    // vector payload attaches (NOTES.md "verify-join A/B")
-    withCosineKernel(pairs
-      .join(c.select(col("id").as("id1"), col("v").as("v1"))
-        .hint("shuffle_hash"), "id1")
-      .join(c.select(col("id").as("id2"), col("v").as("v2"))
-        .hint("shuffle_hash"), "id2"),
-      "v1", "v2", "sim")
-      .filter(col("sim") >= threshold)
-      .select("id1", "id2", "sim")
+    // IN-GROUP verify (round 11): the vectors ride the
+    // one grouping shuffle as struct members and every bucket's
+    // pairs are cosine-verified INSIDE the group, so the ~0.2%-
+    // survivor pair stream is never materialized, never
+    // distinct'ed, and never re-joined against the corpus. The
+    // round-11 stage attribution measured the old exploded-pair
+    // path at x30 as: kernel 0.7 s, grouping 1.4 s, 24M-pair
+    // distinct 3.4 s, and ~10.7 s of verify-join — 24M pairs
+    // carrying two vector payloads each, for 57k survivors. The
+    // grouping shuffle widens (tables × vector per row) but that is
+    // ~12× less traffic than the pair re-join at expected bucket
+    // size ~12 (and per-member hoisted norms cut the verify flops
+    // 3×). Output is row-identical to the exploded-pair pipeline
+    // INCLUDING sims (same dot/norm/division order — SimilaritySpec
+    // pins both equal on an over-cap fixture).
+    // Pre-partition the WIDE member stream by bucket so the capped
+    // grouping aggregates AFTER the exchange (EnsureRequirements
+    // elides the agg's own): a map-side object-agg over this stream
+    // sees ~n×tables/partitions distinct buckets with ~1 member
+    // each — partials that merge nothing while their object map
+    // (overhead > payload) and the fallback's transient serialized
+    // copy OOM'ed the x100 rung at 16g. Post-shuffle the per-task
+    // key count is totalBuckets/partitions (~23k at x100) and the
+    // buffers hold exactly the final groups. Trade documented: a
+    // pathological over-cap mega-bucket's FULL membership now
+    // streams through one reducer (capped buffer, so memory stays
+    // bounded — time skew only); the narrow path's map-side capping
+    // kept that traffic at cap×partitions.
+    // The grouping exchange's width must track the banded VOLUME
+    // (tables × n wide rows), not the session's partition default:
+    // pinned at 32 partitions, the x300 embeddings rung put ~1 GB of
+    // deserialized aggregation state on every task — OOM at 16 g and
+    // a 23× wall-clock blowup for 3× data at 48 g (round-13 stage
+    // ladder; Sizing.groupingPartitions scaladoc). ~12 bytes per
+    // float dim + struct/id overhead estimates the OBJECT form of a
+    // member row; the floor keeps fixture-scale plans unchanged.
+    val parts = graft.ops.Sizing.groupingPartitions(
+      nRows * tablesN, 12L * dim + 72,
+      corpus.sparkSession.sparkContext.defaultParallelism)
+    val banded = withBucketsKernel(c, "v", tablesN, bitsN, dim)
+      .select(col("id"), col("v"), col("bucket"))
+      .repartition(parts, col("bucket"))
+    val m = struct(col("id"), col("v"))
+    val grouped = graft.dedup.Dedup.cappedMemberGroups(
+      banded, m, col("id"), maxBucketSize, "graft.neardup")
+    verifyGroupsKernel(grouped, c.schema("id").dataType,
+      threshold).distinct()
   }
 
   /** The in-group verify tail of [[nearDupPairs]]: per bucket, sort
@@ -2036,7 +2007,7 @@ object Similarity extends Serializable {
     *
     *  - test row count ≤ `maxBroadcastTest`: the test set is a bounded
     *    driver statistic (the same assumption as Decontaminate's
-    *    broadcastTest lever — test sets are benchmark-sized), shipped
+    *    broadcast test side — test sets are benchmark-sized), shipped
     *    in the task closure; the corpus is scanned ONCE map-only — no
     *    join, no shuffle, output only the contaminated rows.
     *  - larger, test set CLUSTERED (the benchmark shape — routing
@@ -2096,9 +2067,9 @@ object Similarity extends Serializable {
     * un-persisted shuffle lineage (a join, a wide aggregation), AQE
     * materializes that exchange as an EXTRA JOB just to finalize the
     * partitioning for the sample, and the lineage then re-runs in
-    * full for the chosen arm. Persist such corpora first (the
-    * `cacheCorpus` discipline); the call emits a stderr warning when
-    * it detects this shape (plan inspection only — no job). */
+    * full for the chosen arm. Persist such corpora first; the call
+    * emits a stderr warning when it detects this shape (plan
+    * inspection only — no job). */
   def semanticContamination(
       corpus: DataFrame, corpusId: String, corpusVec: String,
       test: DataFrame, testId: String, testVec: String,
@@ -2115,7 +2086,7 @@ object Similarity extends Serializable {
           "un-cached shuffle — the arm-choice sample's .rdd will " +
           "materialize that exchange as an extra AQE job and the " +
           "chosen arm re-runs the lineage in full; persist the " +
-          "corpus first (cacheCorpus discipline).")
+          "corpus first.")
       // Persist the test projection once for the whole large-test
       // path: the cell seed job, the k-means pass, the radii sample
       // and the chosen arm all re-scan it otherwise (round-10 advice:
@@ -2239,7 +2210,7 @@ object Similarity extends Serializable {
     * AQE materialize the exchange as an extra job (the trainKmeans
     * comment's hazard). Plan inspection only, runs no job. A cached
     * upstream shows as an InMemoryTableScan leaf (no exchange in this
-    * plan), so the cacheCorpus discipline silences it naturally. */
+    * plan), so persisting the corpus first silences it naturally. */
   private def hasUnpersistedShuffle(df: DataFrame): Boolean =
     df.queryExecution.sparkPlan.exists(
       _.isInstanceOf[
@@ -2597,21 +2568,19 @@ object Similarity extends Serializable {
       threshold: Double,
       nlist: Int = graft.ops.Sizing.Auto,
       trainIters: Int = 1,
-      maxClusterSize: Int = 100000,
-      cacheCorpus: Boolean = false): DataFrame = {
+      maxClusterSize: Int = 100000): DataFrame = {
     require(nlist >= 1 || nlist == graft.ops.Sizing.Auto,
       s"nlist must be >= 1 (or Sizing.Auto), got $nlist")
     val spark = corpus.sparkSession
-    val c0 = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .repartition(spark.sparkContext.defaultParallelism, col("id"))
-    val c = if (cacheCorpus) c0.cache() else c0
     // Auto-sizing (default): nlist ~ n/targetCellSize keeps cell
     // population — and so the in-cell all-pairs work per vector —
     // constant as the corpus grows (the CellScaleProbe-measured lever;
     // Sizing.semDedupNlist). Explicit nlist skips the count pass.
     val nlistN =
       if (nlist == graft.ops.Sizing.Auto)
-        graft.ops.Sizing.semDedupNlist(c0.select(col("id")).count())
+        graft.ops.Sizing.semDedupNlist(c.select(col("id")).count())
       else nlist
     val cents = trainKmeans(corpus, idCol, vecCol, nlistN, trainIters)
     val buckets = assignNearest(c, cents, 1, 1)
@@ -2661,12 +2630,9 @@ object Similarity extends Serializable {
     * (hadron's runOnce idiom, /root/reference/src/Hadron/
     * Controller.hs:724-725); assignment is map-only; the only shuffles
     * are the ONE cell grouping and the two narrow (id, vec) verify
-    * joins.
-    *
-    * @param cacheCorpus persist the two-column (id, vec) projection
-    *   across its three uses (assignment + both verify joins). Same
-    *   default-off tradeoff as `nearDupPairs`: at corpus scale a cache
-    *   is a full materialization of the input.
+    * joins. The two-column (id, vec) projection is not cached, for the
+    * same reason as in `nearDupPairs`: at corpus scale a cache is a
+    * full materialization of the input.
     */
   def semDedup(
       corpus: DataFrame,
@@ -2674,10 +2640,9 @@ object Similarity extends Serializable {
       threshold: Double,
       nlist: Int = graft.ops.Sizing.Auto,
       trainIters: Int = 1,
-      maxClusterSize: Int = 100000,
-      cacheCorpus: Boolean = false): DataFrame =
+      maxClusterSize: Int = 100000): DataFrame =
     semDedupPairs(corpus, idCol, vecCol, threshold, nlist, trainIters,
-        maxClusterSize, cacheCorpus)
+        maxClusterSize)
       .groupBy(col("id2").as("id"))
       .agg(
         min(col("id1")).as("dup_of"),

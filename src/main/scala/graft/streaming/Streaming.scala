@@ -58,24 +58,21 @@ object Streaming {
 
   /** Stream-static dimension enrichment — the ingest-time join every
     * event pipeline runs (attach the user/customer/document attributes
-    * to each arriving record). The static side is broadcast by default:
+    * to each arriving record). The static side is always broadcast:
     * each micro-batch then joins map-only, the stream side never
     * shuffles, and the dimension is re-resolved per batch (Spark
     * re-plans the static side each trigger, so a dim TABLE that changes
     * between triggers is picked up). Works identically on a batch
-    * DataFrame — which is how the oracle checks it. Set
-    * `broadcastDim=false` for a dimension too large to hash — the join
-    * becomes a per-batch shuffle join (at that size consider
-    * restructuring to stream-stream with watermarks instead).
+    * DataFrame — which is how the oracle checks it. A dimension too
+    * large to hash calls for a stream-stream join with watermarks
+    * instead.
     */
   def enrich(
       stream: DataFrame,
       dim: DataFrame,
-      joinKeys: Seq[String],
-      broadcastDim: Boolean = true): DataFrame = {
+      joinKeys: Seq[String]): DataFrame = {
     require(joinKeys.nonEmpty, "enrich needs at least one join key")
-    stream.join(
-      if (broadcastDim) broadcast(dim) else dim, joinKeys)
+    stream.join(broadcast(dim), joinKeys)
   }
 
   /** Stream-stream interval join — match each left event to the right

@@ -31,25 +31,40 @@ class ContractSpec extends AnyFunSuite {
     assert(dups.isEmpty, s"duplicate catalog names: $dups")
   }
 
-  test("library packages read no environment variables") {
-    // tuning belongs in explicit parameters; only the Bench/Verify
-    // driver contract and SparkEntry's deployment paths read the env
+  /** `pattern` matches in the library packages' sources, as
+    * "file: match" strings. */
+  private def librarySourceHits(pattern: scala.util.matching.Regex)
+      : List[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     val pkgs = Seq("ops", "dedup", "similarity", "streaming", "functions",
       "plans", "pipeline", "tap")
-    val offenders = pkgs.flatMap { pkg =>
+    pkgs.flatMap { pkg =>
       val root = Paths.get("src/main/scala/graft", pkg)
       assert(Files.isDirectory(root), s"missing source dir $root")
       val walk = Files.walk(root)
       try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
-        .filter { f: Path =>
-          val src = Files.readString(f)
-          src.contains("sys.env") || src.contains("System.getenv")
-        }.map(_.toString).toList
+        .flatMap { f: Path =>
+          pattern.findAllIn(Files.readString(f)).map(m => s"$f: $m")
+        }.toList
       finally walk.close()
-    }
+    }.toList
+  }
+
+  test("library packages read no environment variables") {
+    // tuning belongs in explicit parameters; only the Bench/Verify
+    // driver contract and SparkEntry's deployment paths read the env
+    val offenders = librarySourceHits("sys\\.env|System\\.getenv".r)
     assert(offenders.isEmpty, s"env reads in library code: $offenders")
+  }
+
+  test("library operators take no cache/broadcast plan-choice flags") {
+    // one plan per operator call: a physical choice is either fixed or
+    // made by code that measures its input (Sizing, Spark's size-based
+    // join selection), never by a per-caller Boolean
+    val offenders = librarySourceHits(
+      "\\b(cache|broadcast)[A-Z]\\w*\\s*:\\s*Boolean".r)
+    assert(offenders.isEmpty, s"cache/broadcast levers: $offenders")
   }
 
   test("oracle SQL only references fixture tables") {

@@ -56,39 +56,6 @@ class DecontaminateSpec extends SparkSpec {
     assert(c2 == 0L && f2 == 0.0)
   }
 
-  test("broadcastTest=false produces identical output") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b c d e f g h i j"), (2L, "k l m n o p q r s t"))
-      .toDF("doc_id", "text")
-    val test = Seq((9L, "c d e f g h i j k l")).toDF("doc_id", "text")
-    def run(b: Boolean) = Decontaminate.contamination(
-        docs, col("doc_id"), col("text"),
-        test, col("doc_id"), col("text"), n = 5, broadcastTest = b)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    assert(run(true) == run(false))
-  }
-
-  test("bloom pre-filter arm is bit-identical to the plain shuffle arm") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f g h i j"),
-      (2L, "k l m n o p q r s t"),
-      (3L, "c d e f g zz yy xx ww vv")).toDF("doc_id", "text")
-    val test = Seq((9L, "c d e f g h i j k l")).toDF("doc_id", "text")
-    def run(bloom: Long) = Decontaminate.contamination(
-        docs, col("doc_id"), col("text"),
-        test, col("doc_id"), col("text"), n = 5, broadcastTest = false,
-        bloomExpectedItems = bloom)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    // the exact join after the bloom keeps output identical regardless
-    // of false positives
-    assert(run(0L) == run(100L))
-  }
-
   test("contamination counts distinct grams once each") {
     import spark.implicits._
     // training doc repeats the leaked trigram; distinct-gram semantics

@@ -201,21 +201,15 @@ class DedupKernelSpec extends SparkSpec {
     // at exactly 1.0. Same contract as nearDupPairs (SimilaritySpec).
     val text = "the quick brown fox jumps over the lazy dog again and again"
     val df = (1L to 30L).map(i => (i, text)).toDF("doc_id", "text")
-    def run(cache: Boolean) =
-      Dedup.minhashLsh(df, col("doc_id"), col("text"),
-        shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
-        maxBucketSize = 10, cacheSignatures = cache)
-    val cappedDf = run(cache = true)
+    val cappedDf = Dedup.minhashLsh(df, col("doc_id"), col("text"),
+      shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
+      maxBucketSize = 10)
     val capped = cappedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(capped == Set((1L, 30L, 1.0)))
     // the recall loss is observable: all 3 band buckets were capped
     val m = cappedDf.queryExecution.observedMetrics("graft.minhash")
     assert(m.getAs[Long]("capped_buckets") == 3L)
-    // identical output with the signature cache off (the scale setting)
-    val uncached = run(cache = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(uncached == capped)
   }
 
   test("minhashLsh in-group and joined verify arms are row-identical " +
@@ -231,14 +225,15 @@ class DedupKernelSpec extends SparkSpec {
     val cluster = (1L to 15L)
       .map(i => (1000000L + i, clusterText)).toDF("doc_id", "text")
     val df = fixture.unionByName(cluster)
-    def run(inGroup: Boolean) =
-      Dedup.minhashLsh(df, col("doc_id"), col("text"),
-        shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
-        maxBucketSize = 10, verifyInGroup = inGroup)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val inGroup = run(inGroup = true)
-    val joined = run(inGroup = false)
+    def rows(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val inGroup = rows(Dedup.minhashLsh(df, col("doc_id"), col("text"),
+      shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
+      maxBucketSize = 10))
+    val joined = rows(graft.JoinedVerifyReference.minhashLsh(
+      df, col("doc_id"), col("text"),
+      shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
+      maxBucketSize = 10))
     assert(inGroup.nonEmpty)
     // the over-cap cluster's representative pair is present in both
     assert(inGroup.contains((1000001L, 1000015L, 1.0)))
@@ -260,31 +255,25 @@ class DedupKernelSpec extends SparkSpec {
         .map { t => acc.add(1); t }.toDF("doc_id", "text")
       (df, acc)
     }
-    def run(df: org.apache.spark.sql.DataFrame,
-        cache: Boolean, hint: Long) =
+    def run(df: org.apache.spark.sql.DataFrame, hint: Long) =
       Dedup.minhashLsh(df, col("doc_id"), col("text"),
         shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
-        cacheSignatures = cache, rowsHint = hint)
+        rowsHint = hint)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // rowsHint set, no cache: the banding pass is the ONLY execution
+    // rowsHint set: the banding pass is the ONLY execution
     val (d1, a1) = instrumented()
-    val hinted = run(d1, cache = false, hint = n.toLong)
+    val hinted = run(d1, hint = n.toLong)
     assert(a1.value == n.toLong, s"rowsHint arm ran upstream ${a1.value / n}x")
-    // no hint + cacheSignatures: the sizing count materializes the
-    // cache the banding pass reuses — still exactly one execution
-    val (d2, a2) = instrumented()
-    val cached = run(d2, cache = true, hint = -1L)
-    assert(a2.value == n.toLong, s"cached arm ran upstream ${a2.value / n}x")
-    // no hint, no cache (round 15): plan statistics carry the sizing
+    // no hint (round 15): plan statistics carry the sizing
     // cardinality (a LocalRelation-rooted plan knows its bytes), so
     // upstream STILL runs exactly once — no sizing count() job
-    val (d3, a3) = instrumented()
-    val bare = run(d3, cache = false, hint = -1L)
-    assert(a3.value == n.toLong, s"bare arm ran upstream ${a3.value / n}x")
+    val (d2, a2) = instrumented()
+    val bare = run(d2, hint = -1L)
+    assert(a2.value == n.toLong, s"bare arm ran upstream ${a2.value / n}x")
     // an RDD-rooted plan reports the unknown-size sentinel — the
     // sizing count() is the LAST resort and re-executes upstream once
-    // (the round-13 ADVICE case rowsHint/cacheSignatures exist for)
+    // (the round-13 ADVICE case rowsHint exists for)
     val accR = spark.sparkContext.longAccumulator("upstreamRdd")
     val dfR = spark.createDataFrame(
       spark.sparkContext.parallelize(base.toSeq, 2)
@@ -292,11 +281,10 @@ class DedupKernelSpec extends SparkSpec {
       new org.apache.spark.sql.types.StructType()
         .add("doc_id", org.apache.spark.sql.types.LongType)
         .add("text", org.apache.spark.sql.types.StringType))
-    val bareRdd = run(dfR, cache = false, hint = -1L)
+    val bareRdd = run(dfR, hint = -1L)
     assert(accR.value == 2L * n,
       s"rdd arm ran upstream ${accR.value / n}x, expected 2x")
-    assert(hinted == cached && cached == bare && bare == bareRdd &&
-      bare.nonEmpty)
+    assert(hinted == bare && bare == bareRdd && bare.nonEmpty)
   }
 
   test("ngramNovelty == a plain-Scala df model over the (verified) " +

@@ -107,16 +107,14 @@ class WinnowSpec extends SparkSpec {
       (2L, "completely original content with no overlap whatsoever here"),
       (3L, "ab")) // shorter than k: absent
       .toDF("id", "text")
-    def run(bt: Boolean) = Dedup.winnowContamination(
+    val out = Dedup.winnowContamination(
         docs, col("id"), col("text"), test, col("id"), col("text"),
-        k = 20, w = 8, broadcastTest = bt)
+        k = 20, w = 8)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val out = run(true)
     assert(out(1L)._2 >= 1L, s"quote not detected: $out")
     assert(out(2L)._2 == 0L)
     assert(!out.contains(3L))
-    assert(run(false) == out)
   }
 
   test("winnowPairs counts shared fingerprints and enforces minShared") {

@@ -33,13 +33,12 @@ class ClassifierSpec extends SparkSpec {
   }
 
   private def run(
-      train: Seq[(String, String)], score: Seq[(Long, String)],
-      broadcastModel: Boolean = false): Map[Long, (String, Long, Long)] = {
+      train: Seq[(String, String)], score: Seq[(Long, String)])
+      : Map[Long, (String, Long, Long)] = {
     import spark.implicits._
     Classifier.nbLinear(
         train.toDF("label", "text"), col("label"), col("text"),
-        score.toDF("id", "text"), col("id"), col("text"),
-        broadcastModel = broadcastModel)
+        score.toDF("id", "text"), col("id"), col("text"))
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getLong(3))))
@@ -77,7 +76,6 @@ class ClassifierSpec extends SparkSpec {
     }
     val expected = naive(train, docs)
     assert(run(train, docs) == expected)
-    assert(run(train, docs, broadcastModel = true) == expected)
   }
 
   test("plan shape: token counts aggregate once — the model's consumers " +

@@ -76,18 +76,6 @@ class KeywordsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("broadcastVocab=false produces identical output") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "p q p"), (2L, "q r"), (3L, "p r r s")).toDF("doc_id", "text")
-    def run(b: Boolean) = Keywords.tfidfTopTerms(
-        df, col("doc_id"), col("text"), k = 2, broadcastVocab = b)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3)))
-      .toSet
-    assert(run(true) == run(false))
-  }
-
   // ---- dictionaryTag -------------------------------------------------
 
   /** Brute positional model: overlapping occurrences of term in text. */

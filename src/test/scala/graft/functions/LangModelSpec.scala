@@ -33,13 +33,12 @@ class LangModelSpec extends SparkSpec {
 
   private def run(
       train: Seq[(Long, String)], score: Seq[(Long, String)],
-      minCount: Long = 1L,
-      broadcastModel: Boolean = false): Map[Long, (Long, Long, Double)] = {
+      minCount: Long = 1L): Map[Long, (Long, Long, Double)] = {
     import spark.implicits._
     LangModel.bigramLmScore(
         train.toDF("id", "text"), col("id"), col("text"),
         score.toDF("id", "text"), col("id"), col("text"),
-        minBigramCount = minCount, broadcastModel = broadcastModel)
+        minBigramCount = minCount)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
@@ -67,7 +66,6 @@ class LangModelSpec extends SparkSpec {
     }
     val expected = naive(docs, docs)
     assert(run(docs, docs) == expected)
-    assert(run(docs, docs, broadcastModel = true) == expected)
   }
 
   test("minBigramCount prunes numerators but never denominators") {
@@ -148,13 +146,12 @@ class LangModelSpec extends SparkSpec {
   }
 
   private def run3(
-      train: Seq[(Long, String)], score: Seq[(Long, String)],
-      broadcastModel: Boolean = false): Map[Long, (Long, Long, Double)] = {
+      train: Seq[(Long, String)], score: Seq[(Long, String)])
+      : Map[Long, (Long, Long, Double)] = {
     import spark.implicits._
     try LangModel.trigramLmScore(
         train.toDF("id", "text"), col("id"), col("text"),
-        score.toDF("id", "text"), col("id"), col("text"),
-        broadcastModel = broadcastModel)
+        score.toDF("id", "text"), col("id"), col("text"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
@@ -186,7 +183,6 @@ class LangModelSpec extends SparkSpec {
     }
     val expected = naive3(docs, docs)
     assert(run3(docs, docs) == expected)
-    assert(run3(docs, docs, broadcastModel = true) == expected)
   }
 
   test("documents with fewer than two tokens are absent from the output") {

@@ -174,6 +174,35 @@ class PipelineSpec extends SparkSpec {
     assert(s3 != s1)
   }
 
+  test("fingerprint and contentFingerprint digests are pinned, so " +
+      "Stage.auto tap paths and RSSkip memo hits survive a rebuild") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.types._
+    val taps = Seq(
+      Tap(Seq("/data/a", "/data/b")),
+      Tap(Seq("/data/c.csv"), "csv", Map("sep" -> ";", "header" -> "true"),
+        Some(new StructType().add("k", LongType).add("v", StringType))))
+    assert(Pipeline.fingerprint(taps) == "60428def1108")
+    // the listing signature embeds each file's absolute path, so the
+    // pinned file sits at a fixed path with a fixed mtime
+    val dir = Paths.get("/tmp/graft-pipelinespec-fingerprint-pin")
+    val part = dir.resolve("part-0.csv")
+    Files.createDirectories(dir)
+    try {
+      Files.write(part, "a,b\n1,2\n".getBytes("UTF-8"))
+      Files.setLastModifiedTime(part,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L))
+      Files.write(dir.resolve("_SUCCESS"), Array.empty[Byte])
+      assert(Pipeline.contentFingerprint(spark, Seq(
+        Tap(Seq(dir.toString), "csv"),
+        Tap(Seq(s"$dir-absent"), "csv"))) == "5688b01228cc")
+    } finally {
+      Files.deleteIfExists(dir.resolve("_SUCCESS"))
+      Files.deleteIfExists(part)
+      Files.deleteIfExists(dir)
+    }
+  }
+
   test("DOCUMENTED HAZARD: a changed op with unchanged (name, inputs, " +
       "tmpRoot) is served the stale memoized output under RSSkip") {
     // The fingerprint covers input bindings, not the op closure — this is

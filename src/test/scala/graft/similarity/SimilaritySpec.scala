@@ -164,8 +164,7 @@ class SimilaritySpec extends SparkSpec {
     val metrics = cappedDf.queryExecution.observedMetrics("graft.neardup")
     assert(metrics.getAs[Long]("capped_buckets") == 2L)
     val uncapped = Similarity.nearDupPairs(df, "vec_id", "embedding",
-      dim = 64, threshold = 0.9, bits = 4, tables = 2, maxBucketSize = 1000,
-      cacheCorpus = true)
+      dim = 64, threshold = 0.9, bits = 4, tables = 2, maxBucketSize = 1000)
     assert(uncapped.count() == 50L * 49 / 2)
   }
 
@@ -184,13 +183,15 @@ class SimilaritySpec extends SparkSpec {
       (5L, vec(5)), (6L, vec(6)), (7L, vec(7))) ++
       (100L to 130L).map(i => (i, hot))
     val df = rows.toDF("vec_id", "embedding")
-    def run(inGroup: Boolean) = Similarity.nearDupPairs(
-        df, "vec_id", "embedding", dim = 64, threshold = 0.9,
-        bits = 4, tables = 3, maxBucketSize = 10,
-        verifyInGroup = inGroup)
+    def triples(out: org.apache.spark.sql.DataFrame) = out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
-    val a = run(true); val b = run(false)
+    val a = triples(Similarity.nearDupPairs(
+      df, "vec_id", "embedding", dim = 64, threshold = 0.9,
+      bits = 4, tables = 3, maxBucketSize = 10))
+    val b = triples(graft.JoinedVerifyReference.nearDupPairs(
+      df, "vec_id", "embedding", dim = 64, threshold = 0.9,
+      bits = 4, tables = 3, maxBucketSize = 10))
     // exact double equality on sims — the kernels must be bit-identical
     assert(a == b)
     assert(a.exists(p => p._1 == 1L && p._2 == 2L))
@@ -202,16 +203,19 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     // binary ids: the external value is Array[Byte], which is not
     // Comparable — without the guard this surfaces as a task-time
-    // ClassCastException inside the id1 < id2 sort
+    // ClassCastException inside the id1 < id2 sort. The in-group
+    // verify and emitPairs (through the joined reference) each guard.
     val df = Seq((Array[Byte](1), Array.fill(8)(1.0f)),
                  (Array[Byte](2), Array.fill(8)(1.0f)))
       .toDF("vec_id", "embedding")
-    for (arm <- Seq(true, false)) {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.nearDupPairs(df, "vec_id", "embedding",
-          dim = 8, threshold = 0.9, bits = 4, tables = 2,
-          verifyInGroup = arm)
-      }
+    val builds: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
+      () => Similarity.nearDupPairs(df, "vec_id", "embedding",
+        dim = 8, threshold = 0.9, bits = 4, tables = 2),
+      () => graft.JoinedVerifyReference.nearDupPairs(df, "vec_id",
+        "embedding", dim = 8, threshold = 0.9, bits = 4, tables = 2,
+        maxBucketSize = 1000))
+    for (build <- builds) {
+      val e = intercept[IllegalArgumentException](build())
       assert(e.getMessage.contains("binary"), e.getMessage)
       assert(e.getMessage.contains("id1 < id2"), e.getMessage)
     }
@@ -396,7 +400,7 @@ class SimilaritySpec extends SparkSpec {
     val m = capped.queryExecution.observedMetrics("graft.semdedup")
     assert(m.getAs[Long]("capped_buckets") == 1L)
     val full = Similarity.semDedup(df, "vec_id", "embedding",
-      threshold = 0.9, nlist = 1, trainIters = 1, cacheCorpus = true)
+      threshold = 0.9, nlist = 1, trainIters = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(full == (2L to 50L).map(i => i -> 1L).toMap) // all blame id 1
   }

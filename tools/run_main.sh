@@ -7,6 +7,9 @@
 #
 #   tools/run_main.sh graft.Bench [args...]          # env as usual
 #
+# tools/ab_block.sh and tools/plan_diff.sh (graft.Explain, old vs new
+# plans) run their arms through this script with GRAFT_CLASSES_DIR.
+#
 # The snapshot is refreshed from target/scala-2.13/classes at launch;
 # recompiles during the run cannot mix class versions into it.
 set -euo pipefail
@@ -40,8 +43,9 @@ if ! pgrep -x java >/dev/null 2>&1; then
 fi
 SNAP=$(mktemp -d /tmp/graft_classes_XXXX)
 trap 'rm -rf "$SNAP"' EXIT
-# GRAFT_CLASSES_DIR lets tools/ab_block.sh point each arm at its own
-# compiled classes (e.g. an old-tree arm) without copying the script.
+# GRAFT_CLASSES_DIR lets tools/ab_block.sh and tools/plan_diff.sh point
+# each arm at its own compiled classes (e.g. an old-tree arm) without
+# copying the script.
 cp -r "${GRAFT_CLASSES_DIR:-/root/repo/target/scala-2.13/classes}"/. "$SNAP"/
 
 ADD_OPENS=""
