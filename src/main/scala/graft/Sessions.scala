@@ -110,5 +110,14 @@ object Sessions {
       // themselves the sweep is a no-op (they run seconds, snapshots
       // barely ever fire mid-run).
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
+      // `file:` paths through Hadoop's local filesystem minus its chmod/
+      // readlink/ls forks (graft.tap.ForkFreeRawLocalFileSystem), for
+      // FileSystem and FileContext callers alike. Hadoop caches one
+      // FileSystem per scheme and user, whatever the conf: a `file:`
+      // instance created in this JVM before the session keeps serving.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.tap.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.tap.ForkFreeLocalFs].getName)
       .withExtensions(registerExtensions)
 }

@@ -10,9 +10,12 @@ import graft.tap.Tap
   * hdfsChmod :412, hdfsCat :427, randomFilename :447, hdfsGet :456).
   * Hadron shells out to `hadoop fs -…` and re-stems `ls` output with a
   * vendored LCS; every call here goes through the Hadoop `FileSystem` Java
-  * API instead — no process spawn, no path re-stemming, and the same code
-  * serves local paths, HDFS and object stores (the scheme picks the
-  * implementation).
+  * API instead — no path re-stemming, and the same code serves local
+  * paths, HDFS and object stores (the scheme picks the implementation).
+  * No process spawn either: on `file:` paths a `Sessions.builder` session
+  * runs Hadoop's local filesystem without its chmod/readlink/ls forks
+  * (graft.tap.ForkFreeRawLocalFileSystem), which `ForkGuardSpec` checks
+  * for every call here.
   */
 object Fs {
   private def fs(spark: SparkSession, path: String) =
