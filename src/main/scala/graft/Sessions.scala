@@ -19,7 +19,8 @@ object Sessions {
   }
 
   /** graft's native Catalyst extensions, registered the supported way
-    * (SparkSessionExtensions) — usable from `call_function` and SQL.
+    * (SparkSessionExtensions): functions usable from `call_function` and
+    * SQL, and the planner strategy of graft's own logical nodes.
     */
   def registerExtensions(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     def inject(name: String, cls: Class[_], arity: Int, signature: String)(
@@ -73,6 +74,17 @@ object Sessions {
           c(1), org.apache.spark.sql.types.DoubleType),
         intLit(c(2), "topk_by", "k"))
     }
+    inject("minhash_shingles", classOf[graft.plans.MinhashShingles], 2,
+      "minhash_shingles(text, k)") { c =>
+      graft.plans.MinhashShingles(c.head, intLit(c(1), "minhash_shingles", "k"))
+    }
+    inject("minhash_band_keys", classOf[graft.plans.MinhashBandKeys], 3,
+      "minhash_band_keys(vms, numHashes, bands)") { c =>
+      val Seq(numHashes, bands) =
+        ints("minhash_band_keys", c.tail, "numHashes", "bands")
+      graft.plans.MinhashBandKeys(c.head, numHashes, bands)
+    }
+    ext.injectPlannerStrategy(_ => graft.plans.BucketJaccardPairsStrategy)
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

@@ -65,16 +65,18 @@ object Components {
   /** @param pairs (id1, id2) rows, undirected, any extra columns ignored
     * @param maxDriverEdges fast-path bound: a pair graph at or under
     *   this many (distinct, directed) edges is collected and solved
-    *   with driver union-find — one job instead of one-per-round. The
+    *   with driver union-find — two jobs (the gate's aggregate, then
+    *   the collect of the raw pair rows, persisted by the first so
+    *   `pairs` runs once) instead of one-per-round. The
     *   pair graph is the dedup output, orders of magnitude smaller
     *   than the corpus, so at test scale it is a bounded driver
     *   statistic (the runOnce idiom); at 100 TB it can still be huge,
-    *   so the edge COUNT (already paid: it builds the cache the
-    *   distributed rounds need anyway) gates the collect and anything
+    *   so an edge-count bound (2 x the raw pair rows, never below the
+    *   distinct directed edges) gates the collect and anything
     *   larger takes the label-propagation path unchanged. The gate is
     *   a row count backed by a byte gate (`maxDriverBytes`): String
     *   ids are measured by actual total length in the same job that
-    *   materializes the edge cache, so a million long-URL ids cannot
+    *   counts the rows, so a million long-URL ids cannot
     *   blow the driver heap just because the row count looked small.
     *   Only integral and String ids take the fast path (see
     *   [[driverOrdering]]); other types go distributed regardless.
@@ -103,117 +105,134 @@ object Components {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     import org.apache.spark.sql.types._
     val spark = pairs.sparkSession
-    val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      .distinct()
-      .cache() // probed every round (and by the fast-path gate)
-    val idOrd = driverOrdering(edges.schema("src").dataType)
-    // one job materializes the cache AND yields both gate statistics
-    val (nEdges, estBytes) = edges.schema("src").dataType match {
-      case StringType =>
-        val r = edges
-          .agg(count(lit(1)), sum(length(col("src")) + length(col("dst"))))
-          .head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      case _ =>
-        val n = edges.count()
-        (n, n * 16L)
-    }
-    if (idOrd.isDefined && nEdges <= maxDriverEdges && estBytes <= maxDriverBytes) {
-      // driver union-find (min-root): identical fixed point as the
-      // label propagation — component = min id reachable
-      val ord = idOrd.get
-      val es = edges.collect()
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
+    val raw = pairs.select(col("id1"), col("id2"))
+    val idType = raw.schema("id1").dataType
+    val idOrd = driverOrdering(idType)
+    val isString = idType == StringType
+    // The raw pair rows, computed once: the fast path's gate and collect
+    // and the distributed path's edge table all read them.
+    val rawRows = raw.rdd.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // Fast-path gate over the raw rows: the distinct directed edges
+      // number at most 2 x the rows (each row gives both directions,
+      // repeats and reversals only fold), so both bounds below only ever
+      // overestimate the edge table's. One job: per-task partial (rows,
+      // id bytes) sums, folded on the driver.
+      lazy val (nEdges, estBytes) = {
+        val (n, b) = rawRows.mapPartitions { rows =>
+          def len(v: Any): Long =
+            if (v == null) 0L else v.asInstanceOf[String].length.toLong
+          var n = 0L; var b = 0L
+          rows.foreach { r =>
+            n += 1
+            b += (if (isString) len(r.get(0)) + len(r.get(1)) else 16L)
+          }
+          Iterator.single((n, b))
+        }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+        (2L * n, 2L * b)
       }
-      es.foreach { r =>
-        val a = r.get(0); val b = r.get(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { // min id becomes the root
-          if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      if (idOrd.isDefined && nEdges <= maxDriverEdges && estBytes <= maxDriverBytes) {
+        // driver union-find (min-root) over the raw rows, a second job:
+        // identical fixed point as the label propagation — component =
+        // min id reachable
+        val ord = idOrd.get
+        val es = rawRows.collect()
+        val parent = new java.util.HashMap[Any, Any]()
+        def find(x: Any): Any = {
+          var r = x
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x // path compression
+          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          r
         }
+        es.foreach { r =>
+          val a = r.get(0); val b = r.get(1)
+          if (!parent.containsKey(a)) parent.put(a, a)
+          if (!parent.containsKey(b)) parent.put(b, b)
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) { // min id becomes the root
+            if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+          }
+        }
+        val outSchema = StructType(Seq(
+          StructField("id", idType, false),
+          StructField("component", idType, false)))
+        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+        val it = parent.keySet().iterator()
+        while (it.hasNext) {
+          val id = it.next()
+          rows.add(org.apache.spark.sql.Row(id, find(id)))
+        }
+        return spark.createDataFrame(rows, outSchema)
       }
-      val outSchema = StructType(Seq(
-        StructField("id", edges.schema("src").dataType, false),
-        StructField("component", edges.schema("src").dataType, false)))
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      val it = parent.keySet().iterator()
-      while (it.hasNext) {
-        val id = it.next()
-        rows.add(org.apache.spark.sql.Row(id, find(id)))
+      val rawDf = spark.createDataFrame(rawRows, raw.schema)
+      val edges = rawDf.select(col("id1").as("src"), col("id2").as("dst"))
+        .union(rawDf.select(col("id2").as("src"), col("id1").as("dst")))
+        .distinct()
+        .cache() // probed every round
+      var labels = edges.select(col("src").as("id")).distinct()
+        .withColumn("lbl", col("id"))
+        .localCheckpoint(true)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        // One action per round (two with doubling) — the convergence
+        // probe rides the final checkpoint's job as an OBSERVED metric
+        // (rounds are job-overhead bound at small label counts). The
+        // round-17 form: CollectMetrics in the codegen'd plan replaces
+        // the earlier typed mapPartitions + accumulator, which paid an
+        // external-Row round-trip over every label row per round; the
+        // metric is also exact under task retries (accumulators were
+        // zero-vs-nonzero only).
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
+          .select(col("src").as("id"), col("lbl"))
+        // `own` tags each node's current-label row, so ONE groupBy yields
+        // both the gathered label (min over own + neighbors) and the
+        // previous one (min over the single own row) — no join back to
+        // the prior labels, which would be an extra shuffle every round.
+        val gathered0 = labels.withColumn("own", lit(true))
+          .union(nbrMin.withColumn("own", lit(false)))
+          .groupBy("id")
+          .agg(
+            min(col("lbl")).as("lbl"),
+            min(when(col("own"), col("lbl"))).as("prev"))
+        val jumped =
+          if (!pointerDoubling) gathered0
+          else {
+            // pointer doubling: follow the gathered label to ITS gathered
+            // label. Monotone (gathered.lbl(y) <= y for every node y, own
+            // row included) and component-preserving (labels are always
+            // member ids), so the fixed point is unchanged. Checkpointed
+            // first: the jump consumes the gather twice. Labels are
+            // always node ids, so the left join's fallback never actually
+            // fires; coalesce keeps it total.
+            val gathered = gathered0.localCheckpoint(true)
+            gathered
+              .join(gathered.select(col("id").as("lbl"), col("lbl").as("lbl2")),
+                Seq("lbl"), "left")
+              .select(col("id"),
+                coalesce(col("lbl2"), col("lbl")).as("lbl"), col("prev"))
+          }
+        val obsName = s"graft.cc_changed_$iter"
+        val sel = jumped
+          .observe(obsName, // null-safe: exact parity with a Java !=
+            count(when(not(col("lbl") <=> col("prev")), lit(1))).as("n"))
+          .select(col("id"), col("lbl"))
+        val next = sel.localCheckpoint(true)
+        converged =
+          sel.queryExecution.observedMetrics(obsName).getLong(0) == 0L
+        labels = next
+        iter += 1
       }
       edges.unpersist()
-      return spark.createDataFrame(rows, outSchema)
-    }
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // One action per round (two with doubling) — the convergence
-      // probe rides the final checkpoint's job as an OBSERVED metric
-      // (rounds are job-overhead bound at small label counts). The
-      // round-17 form: CollectMetrics in the codegen'd plan replaces
-      // the earlier typed mapPartitions + accumulator, which paid an
-      // external-Row round-trip over every label row per round; the
-      // metric is also exact under task retries (accumulators were
-      // zero-vs-nonzero only).
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .select(col("src").as("id"), col("lbl"))
-      // `own` tags each node's current-label row, so ONE groupBy yields
-      // both the gathered label (min over own + neighbors) and the
-      // previous one (min over the single own row) — no join back to
-      // the prior labels, which would be an extra shuffle every round.
-      val gathered0 = labels.withColumn("own", lit(true))
-        .union(nbrMin.withColumn("own", lit(false)))
-        .groupBy("id")
-        .agg(
-          min(col("lbl")).as("lbl"),
-          min(when(col("own"), col("lbl"))).as("prev"))
-      val jumped =
-        if (!pointerDoubling) gathered0
-        else {
-          // pointer doubling: follow the gathered label to ITS gathered
-          // label. Monotone (gathered.lbl(y) <= y for every node y, own
-          // row included) and component-preserving (labels are always
-          // member ids), so the fixed point is unchanged. Checkpointed
-          // first: the jump consumes the gather twice. Labels are
-          // always node ids, so the left join's fallback never actually
-          // fires; coalesce keeps it total.
-          val gathered = gathered0.localCheckpoint(true)
-          gathered
-            .join(gathered.select(col("id").as("lbl"), col("lbl").as("lbl2")),
-              Seq("lbl"), "left")
-            .select(col("id"),
-              coalesce(col("lbl2"), col("lbl")).as("lbl"), col("prev"))
-        }
-      val obsName = s"graft.cc_changed_$iter"
-      val sel = jumped
-        .observe(obsName, // null-safe: exact parity with a Java !=
-          count(when(not(col("lbl") <=> col("prev")), lit(1))).as("n"))
-        .select(col("id"), col("lbl"))
-      val next = sel.localCheckpoint(true)
-      converged =
-        sel.queryExecution.observedMetrics(obsName).getLong(0) == 0L
-      labels = next
-      iter += 1
-    }
-    edges.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "graph diameter exceeds maxIter; raise it")
-    labels.select(col("id"), col("lbl").as("component"))
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds — " +
+            "graph diameter exceeds maxIter; raise it")
+      labels.select(col("id"), col("lbl").as("component"))
+    } finally rawRows.unpersist()
   }
 
   /** Keep exactly one document per duplicate cluster: the min-id

@@ -15,74 +15,53 @@ import graft.functions.{Hashing, Text}
   */
 object Dedup {
 
-  /** Shingle + base-hash kernel as a typed per-partition map.
+  /** Shingle + base-hash kernel: the `minhash_shingles` generator
+    * ([[graft.plans.MinhashShingles]]) after an exchange on the id.
     *
     * The Column formulation (Text.charShingles + Hashing.md5Mod inside
     * nested `transform`s) is semantically identical but runs interpreted —
     * Spark does not codegen lambda bodies of higher-order functions, and
-    * profiling showed ~29 ms/document of expression-tree overhead. This
-    * kernel does the same work in ~0.1 ms/doc. Equivalence with the
-    * Column version is asserted by DedupKernelSpec.
+    * profiling showed ~29 ms/document of expression-tree overhead. The
+    * kernel does the same work in ~0.1 ms/doc, on Catalyst's row format
+    * (no external `Row`, no boxed longs). Equivalence with the Column
+    * version is asserted by DedupKernelSpec.
     *
     * Output schema: (id <input type>, vms array<bigint>) — the DISTINCT
-    * md5-mod hashes of the doc's k-char shingles, in first-occurrence
-    * order. The string shingles themselves are never emitted: every
-    * consumer (LSH banding, jaccard verify, posting lists) operates on the
-    * hashed-shingle set, and serializing ~300 strings/doc was the single
-    * biggest cost of the old shape.
+    * md5-mod hashes of the doc's k-char shingles, ascending; no row for a
+    * null text or one shorter than `k`. The string shingles themselves
+    * are never emitted: every consumer (LSH banding, jaccard verify,
+    * posting lists) operates on the hashed-shingle set, and serializing
+    * ~300 strings/doc was the single biggest cost of the old shape.
     */
   private[graft] def shingleDocs(
       df: DataFrame,
       idCol: Column,
       textCol: Column,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.types._
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val base = df.select(idCol.as("id"), textCol.cast("string").as("__text"))
+    df.select(idCol.as("id"), textCol.cast("string").as("__text"))
       .repartition(par, col("id")) // kernel runs post-exchange, not at scan parallelism
-    val schema = StructType(Seq(
-      base.schema("id"),
-      StructField("vms", ArrayType(LongType, false), false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    base.mapPartitions { rows =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.flatMap { r =>
-        val text = r.getString(1)
-        if (text == null || text.length < k) Iterator.empty
-        else {
-          // dedupe on the STRING shingle first (matches list_distinct in
-          // the oracle), then hash; hash collisions fold identically in
-          // the oracle's md5-mod space
-          val seen = new java.util.LinkedHashSet[String]()
-          var i = 0
-          while (i <= text.length - k) { seen.add(text.substring(i, i + k)); i += 1 }
-          // shared hash tail (sorted: set semantics downstream are
-          // unchanged, and the jaccard verify intersects two-pointer)
-          val vms = Hashing.hashGramSet(seen, md)
-          Iterator(org.apache.spark.sql.Row(r.get(0), vms.toIndexedSeq))
-        }
-      }
-    }(enc)
+      .select(col("id"),
+        call_function("minhash_shingles", col("__text"), lit(k)).as("vms"))
   }
 
   /** Minhash signature of a hashed-gram set — THE scalar permutation
-    * fold (`Hashing.permute`'s arithmetic) shared by the batch band
+    * fold (`Hashing.permute`'s arithmetic) shared by the band-key
     * kernel and `Streaming.nearDupStream`, whose contract is
     * bit-identity with the batch operator. One definition so the
     * constants can never drift between batch and stream.
     */
   private[graft] def minhashSignature(
-      vms: Iterable[Long], numHashes: Int): Array[Long] = {
+      vms: Array[Long], numHashes: Int): Array[Long] = {
     val sig = new Array[Long](numHashes)
     var i = 0
     while (i < numHashes) {
       var min = Long.MaxValue
-      val it = vms.iterator
-      while (it.hasNext) {
-        val v = it.next()
-        val h = (v * (i + 1) + 40503L * i) % Hashing.MinhashP
+      var j = 0
+      while (j < vms.length) {
+        val h = (vms(j) * (i + 1) + 40503L * i) % Hashing.MinhashP
         if (h < min) min = h
+        j += 1
       }
       sig(i) = min; i += 1
     }
@@ -105,53 +84,19 @@ object Dedup {
     sb.toString
   }
 
-  /** Minhash signature + LSH band keys as a typed kernel (same rationale
-    * as shingleDocs: HOF lambdas don't codegen; this loop is the hot
-    * path). Emits `bands` rows per doc: (id, "band|sig,sig,...").
-    */
-  private[graft] def bandBuckets(
-      docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val rowsPerBand = numHashes / bands
-    val in = docs.select(col("id"), col("vms"))
-    val schema = StructType(Seq(
-      in.schema("id"), StructField("bucket", StringType, false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val sig = minhashSignature(r.getSeq[Long](1), numHashes)
-        (0 until bands).iterator.map { b =>
-          org.apache.spark.sql.Row(r.get(0), bandKey(sig, b, rowsPerBand))
-        }
-      }
-    }(enc)
-  }
+  /** The `bands` LSH band keys of a hashed-shingle set column, as
+    * `array<string>`: the `minhash_band_keys` expression
+    * ([[graft.plans.MinhashBandKeys]], [[minhashSignature]] then
+    * [[bandKey]]), which runs inside whole-stage codegen. */
+  private def bandKeys(vms: Column, numHashes: Int, bands: Int): Column =
+    call_function("minhash_band_keys", vms, lit(numHashes), lit(bands))
 
-  /** [[bandBuckets]] with the hashed-shingle set riding along — the
-    * in-group verify's member stream (round 13): (id, vms, bucket),
-    * `bands` rows per doc. Same signature fold and band-key format. */
-  private[graft] def bandBucketsWide(
-      docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val rowsPerBand = numHashes / bands
-    val in = docs.select(col("id"), col("vms"))
-    val schema = StructType(Seq(
-      in.schema("id"),
-      StructField("vms", ArrayType(LongType, false), false),
-      StructField("bucket", StringType, false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val vms = r.getSeq[Long](1)
-        val sig = minhashSignature(vms, numHashes)
-        (0 until bands).iterator.map { b =>
-          org.apache.spark.sql.Row(r.get(0), vms, bandKey(sig, b, rowsPerBand))
-        }
-      }
-    }(enc)
-  }
+  /** Minhash signature + LSH band keys: `bands` rows per doc,
+    * (id, "band|sig,sig,..."). */
+  private[graft] def bandBuckets(
+      docs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    docs.select(col("id"),
+      explode(bandKeys(col("vms"), numHashes, bands)).as("bucket"))
 
   /** Open-addressing (id1, id2) → count map over primitive long arrays —
     * the pair buffer of `emitPairCounts` for integral id types. The
@@ -396,8 +341,10 @@ object Dedup {
     * aggregates map-side. Replaces a posting-list self-join: one
     * grouping shuffle instead of join-build + probe + pair shuffle.
     */
-  /** THE capped-bucket grouping, shared by every single-corpus candidate
-    * generator (minhashLsh, simhashPairs, Similarity.nearDupPairs):
+  /** THE capped-bucket grouping of the single-corpus candidate
+    * generators (simhashPairs; Similarity.nearDupPairs through
+    * [[cappedMemberGroups]]; minhashLsh's bucket walk keeps the same
+    * over-cap contract without an aggregate):
     * ONE grouping shuffle of (bucket, id) rows; `collect_list_capped`
     * bounds every aggregation buffer (map-side partials and the merge
     * alike); over-cap buckets collapse to their deterministic
@@ -445,7 +392,8 @@ object Dedup {
     * the operator. The over-cap semantics here and in
     * cappedBucketGroups are ONE contract (VERDICT r4 #2 discipline);
     * SimilaritySpec pins the two pipelines output-equal on an
-    * over-cap fixture. */
+    * over-cap fixture. Used by Similarity.nearDupPairs; minhashLsh
+    * walks sorted buckets instead (graft.plans.BucketJaccardPairs). */
   private[graft] def cappedMemberGroups(
       banded: DataFrame,
       member: org.apache.spark.sql.Column,
@@ -470,8 +418,9 @@ object Dedup {
 
   /** Fail fast (at plan-construction time, with the operator named)
     * when an id column's external type has no natural `Comparable`
-    * order — [[emitPairs]] and Similarity's in-group verify both sort
-    * ids with `a.asInstanceOf[Comparable[Any]]` inside tasks to emit
+    * order — [[emitPairs]], [[minhashLsh]]'s bucket walk and
+    * Similarity's in-group verify sort ids with
+    * `a.asInstanceOf[Comparable[Any]]` inside tasks to emit
     * the id1 < id2 convention, and a binary/array/struct id would
     * otherwise surface as a mid-job ClassCastException. The whitelist
     * is exactly the atomic Catalyst types whose external row values
@@ -532,14 +481,26 @@ object Dedup {
     *   group on band key → exact-Jaccard verify of every in-bucket pair
     *   (id1 < id2) on the shingle sets → distinct pairs.
     *
-    * Scale notes: the explode emits `bands` rows per doc (band key + id
-    * + shingle set), the ONE grouping shuffles on band key, and pairs
-    * are verified inside their bucket — so the quadratic blowup is
-    * confined to real near-duplicate buckets.
+    * What runs where, all on Catalyst's row format (no external `Row`):
+    *  - after an exchange on the id, the `minhash_shingles` generator
+    *    hashes each document's shingle set ([[shingleDocs]]);
+    *  - `minhash_band_keys` (inside whole-stage codegen) and an explode
+    *    give `bands` rows of (id, vms, bucket) per document, the ONE
+    *    shuffle hash-partitions them on the bucket;
+    *  - a `Sort` on the bucket (which spills) feeds
+    *    [[graft.plans.BucketJaccardPairs]], which walks one bucket run at
+    *    a time and verifies its pairs with the two-pointer intersect
+    *    over the ascending hash sets — the quadratic work is confined to
+    *    real near-duplicate buckets;
+    *  - a pair found in several buckets comes out of each, and the final
+    *    `distinct()` folds the identical triples.
+    * Memory: the walk holds at most `maxBucketSize` members of one bucket
+    * (their hash sets), plus the two representatives below.
     *
     * An over-cap band bucket (boilerplate text) is NOT dropped silently:
     * it contributes one deterministic representative pair, (min id,
-    * max id) — exact aggregates over the whole bucket, reproducible in
+    * max id) — exact aggregates over the whole bucket in the id's
+    * internal order, as `min_by`/`max_by` pick them, reproducible in
     * any engine — which then passes through the same Jaccard verify. A
     * cluster of >maxBucketSize near-identical documents (the
     * highest-value dedup target) therefore still surfaces instead of
@@ -548,7 +509,9 @@ object Dedup {
     * prevent). Same contract as `Similarity.nearDupPairs`; mirror both
     * arms in any oracle: `HAVING COUNT(*) <= maxBucketSize` for the pair
     * arm, `UNION SELECT min(id), max(id) ... HAVING COUNT(*) >
-    * maxBucketSize` for the representative arm.
+    * maxBucketSize` for the representative arm. Capped and active
+    * (two or more members) bucket counts are observable as
+    * `queryExecution.observedMetrics("graft.minhash")` after an action.
     *
     * SIZING (round 15, closing the round-14 ADVICE wart): the
     * grouping-partition count (Sizing.groupingPartitions) needs the
@@ -587,7 +550,7 @@ object Dedup {
       maxBucketSize: Int = 1000,
       rowsHint: Long = -1L): DataFrame = {
     val docs = shingleDocs(df, idCol, textCol, shingleK)
-      .select(col("id"), col("vms"))
+    requireOrderableId(docs.schema("id").dataType, "minhashLsh")
     // Sizing cardinality: hint > plan statistics (round 15: NO job —
     // parquet scans know their bytes driver-side; sizing only needs
     // the magnitude) > pruned count() as the last resort when the plan
@@ -596,96 +559,42 @@ object Dedup {
       if (rowsHint >= 0) rowsHint
       else graft.ops.Sizing.planRowsEstimate(df)
         .getOrElse(df.select(idCol).count())
-    // IN-GROUP Jaccard verify (round 13) — the same rewrite the
-    // embedding family got in round 11, for the same measured reason:
-    // a joined verify attaches two multi-KB vms payloads to the
-    // candidate-pair stream, and at the 1.5M-doc x300 rung that step
-    // alone went 11.8 s → 127 s for exactly-3× candidate volume
-    // (PairStageProbe: every cardinality linear, the verify join 10.8×
-    // — non-spillable hash builds + a ~100 GB widened pair stream on
-    // an 8 g box). Here the shingle sets ride the ONE grouping shuffle
-    // as struct members (bands × n wide rows — ~6× less traffic than
-    // the pair re-join at the measured ~13-member mean bucket) and
-    // pairs are intersected INSIDE the group; the survivor stream is
-    // emitted verified. Output is row-identical to the joined pipeline
-    // (bandBuckets → cappedBucketGroups → emitPairs → verifyJaccard)
-    // INCLUDING jaccard values (same sorted-set two-pointer loop;
-    // DedupKernelSpec pins both equal on an over-cap fixture).
     // Grouping partitions sized from the banded VOLUME
-    // (Sizing.groupingPartitions — the nearDupPairs discipline).
-    // 64 MB/task target (not the 128 MB default): the member structs
-    // deserialize into collect buffers on every concurrent task, and
-    // the x300 rung measured 8 g/32-thread runs at the heap edge with
-    // 128 MB-class task state — halving the target doubles the task
-    // count for the same total work and buys the headroom cheaply.
+    // (Sizing.groupingPartitions — the nearDupPairs discipline), at a
+    // 64 MB/task target (not the 128 MB default): the hash sets ride
+    // the shuffle with every band row, and halving the target doubles
+    // the task count for the same total work.
     val parts = graft.ops.Sizing.groupingPartitions(
       bands.toLong * nRows, 8L * 1024,
       df.sparkSession.sparkContext.defaultParallelism,
       targetBytesPerTask = 64L << 20)
-    val banded = bandBucketsWide(docs, numHashes, bands)
-      .repartition(parts, col("bucket"))
-    val grouped = cappedMemberGroups(
-      banded, struct(col("id"), col("vms")), col("id"),
-      maxBucketSize, "graft.minhash")
-    verifyJaccardGroupsKernel(
-      grouped, docs.schema("id").dataType, threshold).distinct()
+    bucketPairs(docs, numHashes, bands, threshold, maxBucketSize, parts)
   }
 
-  /** The in-group verify tail of [[minhashLsh]]: per bucket, sort the
-    * (id, vms) members by id (the emitPairs id1 < id2 convention) and
-    * emit (id1, id2, jaccard) for every in-bucket pair at or above
-    * `threshold`. The jaccard arithmetic is BIT-IDENTICAL to
-    * [[verifyJaccard]] on the same pair: the same two-pointer common
-    * count over the (sorted — see shingleDocs) hash sets, the same
-    * `common / (|a| + |b| - common)` division. A pair sharing several
-    * band buckets re-verifies in each (true near-dups only — the tiny
-    * survivor set × bands extra intersects) and the caller's
-    * `.distinct()` folds the identical triples — the same contract as
-    * Similarity.verifyGroupsKernel. */
-  private def verifyJaccardGroupsKernel(groups: DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
-      threshold: Double): DataFrame = {
-    import org.apache.spark.sql.types._
-    requireOrderableId(idType, "minhashLsh in-group verify")
-    val outSchema = StructType(Seq(
-      StructField("id1", idType, false),
-      StructField("id2", idType, false),
-      StructField("jaccard", DoubleType, false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    implicit val anyOrd: Ordering[Any] =
-      (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
-    groups.select(col("ids")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val ms = r.getSeq[org.apache.spark.sql.Row](0).sortBy(_.get(0))
-        val k = ms.length
-        val ids = new Array[Any](k)
-        val sets = new Array[Seq[Long]](k)
-        var x = 0
-        while (x < k) {
-          ids(x) = ms(x).get(0)
-          sets(x) = ms(x).getSeq[Long](1)
-          x += 1
-        }
-        (0 until k).iterator.flatMap { i =>
-          ((i + 1) until k).iterator.flatMap { j =>
-            val a = sets(i); val b = sets(j)
-            var p = 0; var q = 0; var common = 0
-            while (p < a.length && q < b.length) {
-              val xa = a(p); val yb = b(q)
-              if (xa == yb) { common += 1; p += 1; q += 1 }
-              else if (xa < yb) p += 1
-              else q += 1
-            }
-            val jac = common.toDouble / (a.length + b.length - common)
-            if (jac >= threshold)
-              Iterator.single(
-                org.apache.spark.sql.Row(ids(i), ids(j), jac))
-            else Iterator.empty
-          }
-        }
-      }
-    }(enc)
+  /** [[minhashLsh]] from its shingle sets on: band rows of (id, vms,
+    * bucket) hash-partitioned `parts` ways on the bucket, the bucket
+    * walk with its `graft.minhash` metric, distinct pairs. */
+  private[graft] def bucketPairs(
+      docs: DataFrame,
+      numHashes: Int,
+      bands: Int,
+      threshold: Double,
+      maxBucketSize: Int,
+      parts: Int): DataFrame = {
+    val banded = docs
+      .select(col("id"), col("vms"),
+        explode(bandKeys(col("vms"), numHashes, bands)).as("bucket"))
+      .repartition(parts, col("bucket"))
+    org.apache.spark.sql.GraftRows.ofRows(docs.sparkSession,
+        graft.plans.BucketJaccardPairs(
+          banded.queryExecution.analyzed, threshold, maxBucketSize))
+      .observe("graft.minhash",
+        sum(when(col("bucket_size") > maxBucketSize, 1L).otherwise(0L))
+          .as("capped_buckets"),
+        count(when(col("bucket_size") > 0, 1)).as("active_buckets"))
+      .filter(col("bucket_size") === 0)
+      .select(col("id1"), col("id2"), col("jaccard"))
+      .distinct()
   }
 
   /** Cross-corpus (incremental) MinHash-LSH near-dup pairs: candidates
@@ -762,33 +671,18 @@ object Dedup {
     * `Stage` with `RSSkip` and feed it to [[minhashLshAgainstPrepared]]
     * for each increment: the corpus-side shingle+md5+signature pass
     * (the expensive arm at deployment scale) runs once per corpus
-    * epoch, not once per increment. One kernel emits sigs and band
-    * keys together — no second pass, no groupBy to reassemble.
+    * epoch, not once per increment. One projection emits the hash set
+    * and its band keys together — no second pass, no groupBy to
+    * reassemble.
     */
   def corpusMinhashTable(
       corpus: DataFrame, corpId: Column, corpText: Column,
       shingleK: Int = 8,
       numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val rowsPerBand = numHashes / bands
-    val sigs = shingleDocs(corpus, corpId, corpText, shingleK)
-      .select(col("id"), col("vms"))
-    val schema = StructType(Seq(
-      sigs.schema("id"),
-      StructField("vms", ArrayType(LongType, false), false),
-      StructField("buckets", ArrayType(StringType, false), false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    sigs.mapPartitions { rows =>
-      rows.map { r =>
-        val vms = r.getSeq[Long](1)
-        val sig = minhashSignature(vms, numHashes)
-        val buckets = (0 until bands).map(b => bandKey(sig, b, rowsPerBand))
-        org.apache.spark.sql.Row(r.get(0), vms, buckets)
-      }
-    }(enc)
-  }
+      bands: Int = 4): DataFrame =
+    shingleDocs(corpus, corpId, corpText, shingleK)
+      .select(col("id"), col("vms"),
+        bandKeys(col("vms"), numHashes, bands).as("buckets"))
 
   /** [[minhashLshAgainst]] against a PREPARED corpus table (from
     * [[corpusMinhashTable]], usually re-read from a tap): only the

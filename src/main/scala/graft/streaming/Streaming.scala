@@ -562,17 +562,12 @@ object Streaming {
         if (text == null || text.length < shingleK) Iterator.empty
         else {
           val md = java.security.MessageDigest.getInstance("MD5")
-          val seen = new java.util.LinkedHashSet[String]()
-          var i = 0
-          while (i <= text.length - shingleK) {
-            seen.add(text.substring(i, i + shingleK)); i += 1
-          }
-          val vms = graft.functions.Hashing.hashGramSet(seen, md)
-          // the batch operator's own signature fold and band-key format
-          // (Dedup.minhashSignature/bandKey) — shared code, not a copy,
+          // the batch operator's own shingle hash, signature fold and
+          // band-key format (MinhashKernels.shingleHashes,
+          // Dedup.minhashSignature/bandKey) — shared code, not a copy,
           // so batch/stream bit-identity cannot drift
-          val sig = graft.dedup.Dedup
-            .minhashSignature(vms.toIndexedSeq, numHashes)
+          val vms = graft.plans.MinhashKernels.shingleHashes(text, shingleK, md)
+          val sig = graft.dedup.Dedup.minhashSignature(vms, numHashes)
           (0 until bands).iterator.map { b =>
             (graft.dedup.Dedup.bandKey(sig, b, rowsPerBand), id,
               sig.toSeq, t)

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** Compile-time doorway to `SparkSession.internalCreateDataFrame`
@@ -17,6 +18,10 @@ import org.apache.spark.sql.types.StructType
   * Used by [[graft.ops.Prefix]]'s two-pass prefix kernels, whose pass-2
   * output is a k-long append to rows that already live in the internal
   * format; anything else should keep using the public constructors.
+  *
+  * `ofRows` is the same doorway to `Dataset.ofRows`: a DataFrame over a
+  * logical plan holding graft's own nodes (`graft.plans.BucketJaccardPairs`),
+  * which the public API cannot build.
   */
 object GraftRows {
   def internalDataFrame(
@@ -25,4 +30,7 @@ object GraftRows {
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -75,6 +75,38 @@ class ComponentsSpec extends SparkSpec {
     assert(fast == dist)
   }
 
+  test("fast path over duplicated and reversed pair rows runs at most " +
+      "two jobs and gives the distributed path's components") {
+    import spark.implicits._
+    var calls = 0
+    def jobsAndResult(pairs: org.apache.spark.sql.DataFrame,
+        maxDriverEdges: Long): (Int, Set[(Any, Any)]) = {
+      calls += 1
+      val group = s"graft-components-fast-path-$calls"
+      spark.sparkContext.setJobGroup(group, "components job probe")
+      try {
+        val out = Components.connectedComponents(pairs,
+          maxDriverEdges = maxDriverEdges)
+        val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
+        (jobs.length, out.collect().map(r => (r.get(0), r.get(1))).toSet)
+      } finally spark.sparkContext.clearJobGroup()
+    }
+    val longs = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 2L),
+      (7L, 8L), (8L, 7L), (8L, 7L)).toDF("id1", "id2")
+    val strings = Seq(("b", "a"), ("a", "b"), ("b", "c"), ("c", "b"),
+      ("\uD83D\uDE00", "\uE000"), ("\uE000", "\uD83D\uDE00"))
+      .toDF("id1", "id2")
+    for (pairs <- Seq(longs, strings)) {
+      val (jobs, fast) = jobsAndResult(pairs, 1000000L)
+      assert(jobs <= 2, s"fast path ran $jobs jobs")
+      val (_, dist) = jobsAndResult(pairs, 0L)
+      assert(fast == dist && fast.nonEmpty)
+    }
+    // String ids keep Spark's byte order for the component label
+    val (_, s) = jobsAndResult(strings, 1000000L)
+    assert(s.contains(("\uD83D\uDE00", "\uE000")))
+  }
+
   test("empty pair list yields empty components") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")

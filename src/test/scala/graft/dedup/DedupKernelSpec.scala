@@ -467,7 +467,7 @@ class DedupKernelSpec extends SparkSpec {
     // no join-back
     assert(c(novPlan, "Scan parquet") == 1,
       s"novelty re-scans the corpus:\n$novPlan")
-    assert(c(novPlan, "MapPartitions") == 1,
+    assert(c(novPlan, "Generate minhash_shingles") == 1,
       s"novelty runs the kernel more than once:\n$novPlan")
     assert(c(novPlan, "(?m)^\\s*\\S*\\s*\\+?-? ?Window ") >= 1 ||
       novPlan.contains("Window"), "df window missing")
@@ -557,6 +557,51 @@ class DedupKernelSpec extends SparkSpec {
     // representative-pair arm must ride the same projection, not fork it
     val aggNodes = "collect_list_capped".r.findAllIn(plan).size
     assert(aggNodes <= 2, s"band-bucket grouping duplicated in plan:\n$plan")
+  }
+
+  test("minhashLsh plan pin: Catalyst rows from shingles to pairs, one " +
+      "bucket exchange feeding a Sort, the shingle Generate above the id " +
+      "exchange") {
+    import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val out = Dedup.minhashLsh(df, col("doc_id"), col("text"),
+      shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3)
+    val plan = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val text = plan.toString
+    assert(!text.contains("ObjectHashAggregate"), text)
+    assert(!text.contains("DeserializeToObject"), text)
+    assert("Exchange hashpartitioning\\(bucket#".r.findAllIn(text).size == 1,
+      text)
+    val walks = plan.collect { case w: graft.plans.BucketJaccardPairsExec => w }
+    assert(walks.size == 1, text)
+    walks.head.child match {
+      case s: SortExec =>
+        assert(s.sortOrder.map(_.child.semanticHash()) ==
+          Seq(walks.head.bucket.semanticHash()), text)
+        s.child match {
+          case ex: ShuffleExchangeExec => assert(ex.outputPartitioning
+            .toString.startsWith("hashpartitioning(bucket#"), text)
+          case other => fail(s"the Sort is not over the exchange:\n$other")
+        }
+      case other => fail(s"bucket walk is not over a Sort:\n$other")
+    }
+    val gens = plan.collect {
+      case g: GenerateExec
+          if g.generator.isInstanceOf[graft.plans.MinhashShingles] => g
+    }
+    assert(gens.size == 1, text)
+    def exchanges(p: SparkPlan) =
+      p.collect { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+    assert(exchanges(gens.head).exists(_.startsWith("hashpartitioning(id#")),
+      text)
+    // no `!` missing-input marker, logical or physical
+    assert(!out.queryExecution.optimizedPlan.toString.contains("!BucketJaccardPairs"))
+    assert(!text.contains("!BucketJaccardPairs"), text)
   }
 
   test("minhashLsh finds the fixture's planted near-duplicates") {
