@@ -7,10 +7,20 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Hashing, Text, Vectors}
 import graft.ops.GroupReduce
 import graft.tap.FanOut
+import graft.oracle.Fragments._
 
 /** Driver contract — one `catalog` [[SparkEntry.Query]] per operator
   * from SURVEY.md §2, each with a DuckDB-equivalent oracle over the same
   * parquet tables; `queries` and `oracleSql` are name-keyed views of it.
+  *
+  * The oracles are the independent half of that contract: DuckDB SQL
+  * written from each operator's specification, never derived from or
+  * calling graft's Spark code. A new oracle splices the shared pieces in
+  * [[graft.oracle.Fragments]] (md5-derived integers, shingles, the
+  * MinHash signature and bands, the fixed-point log, cosines, ...) into
+  * a `raw` string instead of copying their SQL: `raw`, not `s`, keeps a
+  * regex backslash such as `'\s+'` verbatim, and a literal `$` is
+  * written `$$`.
   *
   * Oracle-determinism conventions used throughout:
   *  - sums of doubles go through DECIMAL(18,4) per element (exact, order-
@@ -122,33 +132,20 @@ object SparkEntry {
     * `.crc` sidecars. Hadoop's local filesystem never fsyncs them; what
     * those files cost was its chmod/readlink forks, gone since
     * graft.tap.ForkFreeRawLocalFileSystem. Without the forks a RAM-backed
-    * root measured no gain over ext4 /tmp (graft.Bench q96 at sf0.1,
-    * 8 cores requested on a 4-core box, 8 alternating pairs: medians
-    * 2.38 s on /dev/shm vs 2.26 s, /dev/shm faster in 4). /dev/shm is
-    * still taken when it is a writable directory with at least
-    * [[ShmFloorBytes]] usable ([[ephemeralCkptBase]]), which keeps
-    * throwaway files off the disk. Production deployments that need
-    * durable restart semantics point SPARK_GRAFT_STREAM_CKPT_DIR at real
-    * storage — the default is only for checkpoints whose lifetime is
-    * one process anyway. */
+    * root measured no gain over ext4 /tmp (graft.Bench at sf0.1 on a
+    * 4-core box, /dev/shm vs /tmp in alternating pairs, per-query
+    * medians: q73 2.52 vs 2.43 s, q93 1.52 vs 1.52 s, q96 2.23 vs 2.21 s
+    * over 5 pairs, q160 1.54 vs 1.55 s, q168 1.74 vs 1.79 s over 11 —
+    * every gap inside both arms' interquartile spread), so the root is
+    * java.io.tmpdir. Production deployments that need durable restart
+    * semantics point SPARK_GRAFT_STREAM_CKPT_DIR at real storage — the
+    * default is only for checkpoints whose lifetime is one process
+    * anyway. */
   private[graft] lazy val streamCkptRoot: java.nio.file.Path = {
-    val base = sys.env.get("SPARK_GRAFT_STREAM_CKPT_DIR")
-      .getOrElse(ephemeralCkptBase(ShmFloorBytes))
+    val base = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT_DIR",
+      System.getProperty("java.io.tmpdir"))
     deleteTreeOnExit(java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(base), "graft_ckpt_"), "graft-ckpt-cleanup")
-  }
-
-  /** Usable space /dev/shm needs to host the ephemeral checkpoints: a
-    * full tmpfs would fail a stream mid-batch. */
-  private val ShmFloorBytes = 1L << 30
-
-  /** /dev/shm when it is a writable directory with at least `floorBytes`
-    * usable, else java.io.tmpdir. */
-  private[graft] def ephemeralCkptBase(floorBytes: Long): String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= floorBytes)
-      shm.getPath
-    else System.getProperty("java.io.tmpdir")
   }
 
   /** Fresh checkpoint dir for one streaming run. */
@@ -266,8 +263,8 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"))
 
   private val q02Sql =
-    """SELECT lower(tok) AS word, COUNT(*) AS n FROM (
-         SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS tok
+    raw"""SELECT lower(tok) AS word, COUNT(*) AS n FROM (
+         SELECT unnest(${wsTokens("text")}) AS tok
          FROM documents) GROUP BY 1"""
 
   // ------------------------------------------------------------------
@@ -578,35 +575,9 @@ object SparkEntry {
       maxBucketSize = 1000)
 
   private val q18Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket HAVING COUNT(*) <= 1000),
-       pairs AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
-       verified AS (
-         SELECT id1, id2,
-           len(list_intersect(d1.vms, d2.vms)) AS common,
-           len(d1.vms) AS n1, len(d2.vms) AS n2
-         FROM pairs JOIN sigs d1 ON id1 = d1.id JOIN sigs d2 ON id2 = d2.id)
+    raw"""WITH ${minhashBands(8, 12, 3)},
+       ${cappedPairs("pairs", 1000)},
+       ${pairOverlap}
        SELECT id1, id2, CAST(common AS DOUBLE) / (n1 + n2 - common) AS jaccard
        FROM verified WHERE CAST(common AS DOUBLE) / (n1 + n2 - common) >= 0.3"""
 
@@ -622,22 +593,8 @@ object SparkEntry {
       charsHint = docChars(s, dir))
 
   private val q19Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       hdocs AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       posting AS (SELECT id, unnest(vms) AS sh FROM hdocs),
-       rare AS (SELECT sh FROM posting GROUP BY sh HAVING COUNT(*) <= 100),
-       fp AS (SELECT id, p.sh FROM posting p JOIN rare r ON p.sh = r.sh),
-       sizes AS (SELECT id, COUNT(*) AS nsh FROM fp GROUP BY id),
-       common AS (
-         SELECT a.id AS id1, b.id AS id2, COUNT(*) AS common
-         FROM fp a JOIN fp b ON a.sh = b.sh AND a.id < b.id
-         GROUP BY a.id, b.id)
+    raw"""WITH ${shingleDocs(8)},
+       ${rareShingleOverlap(100)}
        SELECT id1, id2, CAST(common AS DOUBLE) / (s1.nsh + s2.nsh - common) AS jaccard
        FROM common JOIN sizes s1 ON id1 = s1.id JOIN sizes s2 ON id2 = s2.id
        WHERE CAST(common AS DOUBLE) / (s1.nsh + s2.nsh - common) >= 0.3"""
@@ -655,25 +612,7 @@ object SparkEntry {
         col("keep_id"), col("n_dups"))
 
   private val q20Sql =
-    """WITH toks AS (
-         SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk FROM documents),
-       hashes AS (
-         SELECT doc_id, [substr(md5(t), 1, 16) for t in tk] AS hs FROM toks WHERE len(tk) > 0),
-       simhashed AS (
-         SELECT doc_id,
-           CAST(list_sum([
-             CASE WHEN 2 * list_sum([
-                 (strpos('0123456789abcdef', substr(h, b//4 + 1, 1)) - 1) // CAST(pow(2, 3 - (b % 4)) AS INTEGER) % 2
-               for h in hs]) >= len(hs)
-             THEN CAST(pow(2, 31 - b) AS BIGINT) ELSE 0 END
-           for b in range(0, 32)]) AS BIGINT) AS hi,
-           CAST(list_sum([
-             CASE WHEN 2 * list_sum([
-                 (strpos('0123456789abcdef', substr(h, b//4 + 1, 1)) - 1) // CAST(pow(2, 3 - (b % 4)) AS INTEGER) % 2
-               for h in hs]) >= len(hs)
-             THEN CAST(pow(2, 63 - b) AS BIGINT) ELSE 0 END
-           for b in range(32, 64)]) AS BIGINT) AS lo
-         FROM hashes)
+    raw"""WITH ${simhashDocs}
        SELECT printf('%08x%08x', hi, lo) AS sh,
          MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
        FROM simhashed GROUP BY 1 HAVING COUNT(*) > 1"""
@@ -690,21 +629,21 @@ object SparkEntry {
       Text.qualityScore(col("text")).as("quality"))
 
   private val q21Sql =
-    """WITH base AS (
+    raw"""WITH base AS (
          SELECT doc_id, text,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk
+           ${wsTokens("text")} AS tk
          FROM documents),
        m AS (
          SELECT doc_id,
            len(tk) AS n_tokens,
            CASE WHEN len(text) > 0 THEN
-             CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
+             ${punctRatio}
              ELSE 0.0 END AS punct_ratio,
            CASE WHEN len(text) > 0 THEN
              CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
              ELSE 0.0 END AS alpha_ratio,
            CASE WHEN len(tk) > 0 THEN
-             CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
+             ${stopwordRatio}
              ELSE 0.0 END AS stopword_ratio,
            len(text) AS n_chars
          FROM base)
@@ -724,18 +663,13 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"))
 
   private val q22Sql =
-    """WITH scored AS (
+    raw"""WITH scored AS (
          SELECT lang,
-           len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS en,
-           len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'], lower(t)))) AS de,
-           len(list_filter(tk, t -> list_contains(['le','la','les','de','et','est','un','une','dans','que'], lower(t)))) AS fr
-         FROM (SELECT lang, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk FROM documents)),
+           ${langCounts("tk")}
+         FROM (SELECT lang, ${wsTokens("text")} AS tk FROM documents)),
        pred AS (
          SELECT lang,
-           CASE WHEN en = 0 AND de = 0 AND fr = 0 THEN 'und'
-                WHEN en >= de AND en >= fr THEN 'en'
-                WHEN de >= fr THEN 'de'
-                ELSE 'fr' END AS pred
+           ${langGuess} AS pred
          FROM scored)
        SELECT lang, pred, COUNT(*) AS n FROM pred GROUP BY lang, pred"""
 
@@ -754,13 +688,13 @@ object SparkEntry {
         (sum(col("ntok")).cast("double") / count(lit(1))).as("avg_tokens"))
 
   private val q23Sql =
-    """SELECT source,
+    raw"""SELECT source,
          CAST(SUM(ntok) AS BIGINT) AS total_tokens,
          CAST(SUM(n_chars) AS BIGINT) AS total_chars,
          COUNT(*) AS n_docs,
          CAST(SUM(ntok) AS DOUBLE) / COUNT(*) AS avg_tokens
        FROM (SELECT source, n_chars,
-               len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS ntok
+               len(${wsTokens("text")}) AS ntok
              FROM documents)
        GROUP BY source"""
 
@@ -776,17 +710,13 @@ object SparkEntry {
   }
 
   private val q26Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        scored AS (
          SELECT query_id, vec_id AS corpus_id,
-           list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-             (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-              sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) AS sim
+           ${cosine("qe", "e")} AS sim
          FROM q CROSS JOIN v WHERE query_id <> vec_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q27 — LSH approximate nearest neighbors (extension:
@@ -804,38 +734,17 @@ object SparkEntry {
   }
 
   private val q27Sql =
-    """WITH planes AS (
-         SELECT t.t, p.p, d.d,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5('t' || t.t || ':p' || p.p || ':d' || d.d), j, 1)) - 1) * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)]) AS BIGINT) - 2147483648 AS w
-         FROM (SELECT range AS t FROM range(0,2)) t
-         CROSS JOIN (SELECT range AS p FROM range(0,8)) p
-         CROSS JOIN (SELECT range AS d FROM range(0,64)) d),
-       vx AS (
-         SELECT vec_id, dd.d,
-           CAST(round(CAST(embedding[dd.d + 1] AS DOUBLE) * 1048576) AS BIGINT) AS xi
-         FROM embeddings CROSS JOIN (SELECT range AS d FROM range(0,64)) dd),
-       proj AS (
-         SELECT vec_id, pl.t, pl.p, SUM(vx.xi * pl.w) AS s
-         FROM vx JOIN planes pl ON vx.d = pl.d
-         GROUP BY vec_id, pl.t, pl.p),
-       sigs AS (
-         SELECT vec_id, t,
-           CAST(t AS VARCHAR) || '|' || string_agg(CASE WHEN s >= 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-         FROM proj GROUP BY vec_id, t),
-       v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${srpBuckets(2, 8)},
+       ${embeddingVecs()},
        cands AS (
          SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS corpus_id
          FROM sigs q JOIN sigs c ON q.bucket = c.bucket
          WHERE q.vec_id % 25 = 0 AND q.vec_id <> c.vec_id),
        scored AS (
          SELECT query_id, corpus_id,
-           list_sum([qv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]) /
-             (sqrt(list_sum([qv.e[i] * qv.e[i] for i in range(1, len(qv.e)+1)])) *
-              sqrt(list_sum([cv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]))) AS sim
+           ${cosine("qv.e", "cv.e")} AS sim
          FROM cands JOIN v qv ON query_id = qv.vec_id JOIN v cv ON corpus_id = cv.vec_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q28 — the monoidal N-way joinStep itself as a query
@@ -913,7 +822,7 @@ object SparkEntry {
   }
 
   private val q30Sql =
-    """WITH emb2 AS (
+    raw"""WITH emb2 AS (
          SELECT vec_id, embedding FROM embeddings
          UNION ALL
          SELECT vec_id + 1000000,
@@ -921,34 +830,9 @@ object SparkEntry {
                  ELSE embedding[i] END
             for i in range(1, len(embedding)+1)] AS embedding
          FROM embeddings),
-       planes AS (
-         SELECT t.t, p.p, d.d,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5('t' || t.t || ':p' || p.p || ':d' || d.d), j, 1)) - 1) * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)]) AS BIGINT) - 2147483648 AS w
-         FROM (SELECT range AS t FROM range(0,8)) t
-         CROSS JOIN (SELECT range AS p FROM range(0,12)) p
-         CROSS JOIN (SELECT range AS d FROM range(0,64)) d),
-       vx AS (
-         SELECT vec_id, dd.d,
-           CAST(round(CAST(embedding[dd.d + 1] AS DOUBLE) * 1048576) AS BIGINT) AS xi
-         FROM emb2 CROSS JOIN (SELECT range AS d FROM range(0,64)) dd),
-       proj AS (
-         SELECT vec_id, pl.t, pl.p, SUM(vx.xi * pl.w) AS s
-         FROM vx JOIN planes pl ON vx.d = pl.d
-         GROUP BY vec_id, pl.t, pl.p),
-       sigs AS (
-         SELECT vec_id, t,
-           CAST(t AS VARCHAR) || '|' || string_agg(CASE WHEN s >= 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-         FROM proj GROUP BY vec_id, t),
-       ok_buckets AS (
-         SELECT bucket FROM sigs GROUP BY bucket HAVING COUNT(*) <= 1000),
-       pairs AS (
-         SELECT a.vec_id AS id1, b.vec_id AS id2
-         FROM sigs a JOIN sigs b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(vec_id) AS id1, max(vec_id) AS id2
-         FROM sigs GROUP BY bucket HAVING COUNT(*) > 1000),
-       v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM emb2)
+       ${srpBuckets(8, 12, "emb2")},
+       ${cappedPairs("pairs", 1000, buckets = "sigs", id = "vec_id")},
+       ${embeddingVecs("emb2")}
        SELECT id1, id2,
          list_sum([v1.e[i] * v2.e[i] for i in range(1, len(v1.e)+1)]) /
            (sqrt(list_sum([v1.e[i] * v1.e[i] for i in range(1, len(v1.e)+1)])) *
@@ -1021,7 +905,7 @@ object SparkEntry {
   }
 
   private val q32Sql =
-    """WITH m AS (
+    raw"""WITH m AS (
          SELECT source,
            octet_length(encode(text)) AS length,
            md5(coalesce(text, '')) AS h,
@@ -1030,9 +914,9 @@ object SparkEntry {
          FROM documents),
        d AS (
          SELECT source, length,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(h, j, 1)) - 1) * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)]) AS BIGINT) % 1920 + 1 AS w,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(h, j, 1)) - 1) * CAST(pow(16, 16 - j) AS BIGINT) for j in range(9, 17)]) AS BIGINT) % 1080 + 1 AS hh,
-           CAST(CAST(list_sum([(strpos('0123456789abcdef', substr(hf, j, 1)) - 1) * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)]) AS BIGINT) % 1000 AS DOUBLE) / 1000 AS f0,
+           ${hexBigint("h", 1, 8)} % 1920 + 1 AS w,
+           ${hexBigint("h", 9, 16)} % 1080 + 1 AS hh,
+           CAST(${hexBigint("hf", 1, 8)} % 1000 AS DOUBLE) / 1000 AS f0,
            1 + CAST(floor(CAST(greatest(duration - 1, 0) AS DOUBLE) / 2000) AS BIGINT) AS frames
          FROM m)
        SELECT source AS media_type,
@@ -1059,36 +943,18 @@ object SparkEntry {
   }
 
   private val q33Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        cents AS (SELECT vec_id AS cent_id, e AS ce FROM v ORDER BY vec_id LIMIT 16),
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        asg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT v.vec_id, v.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM v CROSS JOIN cents c) WHERE r = 1),
+         ${nearestCentroids("v", "vec_id", "e", "cents")}),
        probe AS (
-         SELECT query_id, qe, cent_id FROM (
-           SELECT q.query_id, q.qe, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-               list_sum([q.qe[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([q.qe[i] * q.qe[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM q CROSS JOIN cents c) WHERE r <= 4),
+         ${nearestCentroids("q", "query_id", "qe", "cents", 4)}),
        scored AS (
          SELECT p.query_id, a.vec_id AS corpus_id,
-           list_sum([p.qe[i] * a.e[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([p.qe[i] * p.qe[i] for i in range(1, 65)])) *
-              sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)]))) AS sim
+           ${cosine64("p.qe", "a.e")} AS sim
          FROM probe p JOIN asg a USING (cent_id) WHERE p.query_id <> a.vec_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q34 — the composed training-data pipeline, end to end: language
@@ -1141,22 +1007,14 @@ object SparkEntry {
   }
 
   private val q34Sql =
-    """WITH base0 AS (
+    raw"""WITH base0 AS (
          SELECT doc_id, text,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk
+           ${wsTokens("text")} AS tk
          FROM documents),
        scored AS (
          SELECT doc_id, text, tk,
-           len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS en,
-           len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'], lower(t)))) AS de,
-           len(list_filter(tk, t -> list_contains(['le','la','les','de','et','est','un','une','dans','que'], lower(t)))) AS fr,
-           least(CAST(len(text) AS DOUBLE) / 500.0, 1.0) * 0.4 +
-           greatest(1.0 - (CASE WHEN len(text) > 0 THEN
-             CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
-             ELSE 0.0 END) * 4, 0.0) * 0.3 +
-           least((CASE WHEN len(tk) > 0 THEN
-             CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
-             ELSE 0.0 END) * 5, 1.0) * 0.3 AS q
+           ${langCounts("tk")},
+           ${qualityScore} AS q
          FROM base0),
        filt AS (
          SELECT doc_id, text, tk, q FROM scored
@@ -1168,35 +1026,9 @@ object SparkEntry {
            ORDER BY doc_id) AS rn
          FROM filt),
        kept1 AS (SELECT doc_id, text, tk, q FROM fpd WHERE rn = 1),
-       docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM kept1 WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket HAVING COUNT(*) <= 1000),
-       pairs AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
-       verified AS (
-         SELECT id1, id2,
-           len(list_intersect(d1.vms, d2.vms)) AS common,
-           len(d1.vms) AS n1, len(d2.vms) AS n2
-         FROM pairs JOIN sigs d1 ON id1 = d1.id JOIN sigs d2 ON id2 = d2.id),
+       ${minhashBands(8, 12, 3, from = "kept1")},
+       ${cappedPairs("pairs", 1000)},
+       ${pairOverlap},
        dups AS (
          SELECT DISTINCT id2 FROM verified
          WHERE CAST(common AS DOUBLE) / (n1 + n2 - common) >= 0.3)
@@ -1243,22 +1075,14 @@ object SparkEntry {
   }
 
   private val q35Sql =
-    """WITH base0 AS (
+    raw"""WITH base0 AS (
          SELECT doc_id, text,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk
+           ${wsTokens("text")} AS tk
          FROM documents),
        scored AS (
          SELECT doc_id, text, tk,
-           len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS en,
-           len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'], lower(t)))) AS de,
-           len(list_filter(tk, t -> list_contains(['le','la','les','de','et','est','un','une','dans','que'], lower(t)))) AS fr,
-           least(CAST(len(text) AS DOUBLE) / 500.0, 1.0) * 0.4 +
-           greatest(1.0 - (CASE WHEN len(text) > 0 THEN
-             CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
-             ELSE 0.0 END) * 4, 0.0) * 0.3 +
-           least((CASE WHEN len(tk) > 0 THEN
-             CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
-             ELSE 0.0 END) * 5, 1.0) * 0.3 AS q
+           ${langCounts("tk")},
+           ${qualityScore} AS q
          FROM base0),
        filt AS (
          SELECT doc_id, text, tk FROM scored
@@ -1293,9 +1117,9 @@ object SparkEntry {
         sum(col("n_chars").cast("long")).as("total_chars"))
 
   private val q36Sql =
-    """WITH h AS (
+    raw"""WITH h AS (
          SELECT doc_id, n_chars,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':s1'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("CAST(doc_id AS VARCHAR) || ':s1'")} AS u
          FROM documents)
        SELECT CASE WHEN u < 0.8 THEN 'train'
                    WHEN u < (0.8 + 0.1) THEN 'val'
@@ -1321,9 +1145,9 @@ object SparkEntry {
         sum(col("n_chars").cast("long")).as("total_chars"))
 
   private val q38Sql =
-    """WITH h AS (
+    raw"""WITH h AS (
          SELECT source, n_chars,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':mix1'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("CAST(doc_id AS VARCHAR) || ':mix1'")} AS u
          FROM documents)
        SELECT source,
          COUNT(*) AS n_docs,
@@ -1381,9 +1205,7 @@ object SparkEntry {
   }
 
   private val q40Sql =
-    """WITH v AS (
-         SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e
-         FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        s AS (
          SELECT vec_id, e,
            CASE WHEN list_max([abs(x) for x in e]) > 0
@@ -1400,9 +1222,7 @@ object SparkEntry {
              (sqrt(CAST(list_sum([qc[i] * qc[i] for i in range(1, len(qc)+1)]) AS DOUBLE)) *
               sqrt(CAST(list_sum([c[i] * c[i] for i in range(1, len(c)+1)]) AS DOUBLE))) AS sim
          FROM q CROSS JOIN qv WHERE query_id <> vec_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q37 — duplicate CLUSTERS via connected components over the q18
@@ -1419,45 +1239,13 @@ object SparkEntry {
         maxBucketSize = 1000))
 
   private val q37Sql =
-    """WITH RECURSIVE docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket HAVING COUNT(*) <= 1000),
-       cand AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
+    raw"""WITH RECURSIVE ${minhashBands(8, 12, 3)},
+       ${cappedPairs("cand", 1000)},
        verified AS (
          SELECT id1, id2
          FROM cand JOIN sigs d1 ON id1 = d1.id JOIN sigs d2 ON id2 = d2.id
-         WHERE CAST(len(list_intersect(d1.vms, d2.vms)) AS DOUBLE) /
-           (len(d1.vms) + len(d2.vms) - len(list_intersect(d1.vms, d2.vms))) >= 0.3),
-       edges AS (
-         SELECT id1 AS a, id2 AS b FROM verified
-         UNION SELECT id2, id1 FROM verified),
-       reach(a, b) AS (
-         SELECT a, b FROM edges
-         UNION
-         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       comp AS (
-         SELECT a AS id, LEAST(a, MIN(b)) AS component
-         FROM reach GROUP BY a)
+         WHERE ${jaccard} >= 0.3),
+       ${components}
        SELECT id, component FROM comp"""
 
   // ------------------------------------------------------------------
@@ -1472,46 +1260,9 @@ object SparkEntry {
       maxHamming = 3, bands = 4, maxBucketSize = 1000)
 
   private val q41Sql =
-    """WITH toks AS (
-         SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk FROM documents),
-       hashes AS (
-         SELECT doc_id, [substr(md5(t), 1, 16) for t in tk] AS hs FROM toks WHERE len(tk) > 0),
-       simhashed AS (
-         SELECT doc_id,
-           CAST(list_sum([
-             CASE WHEN 2 * list_sum([
-                 (strpos('0123456789abcdef', substr(h, b//4 + 1, 1)) - 1) // CAST(pow(2, 3 - (b % 4)) AS INTEGER) % 2
-               for h in hs]) >= len(hs)
-             THEN CAST(pow(2, 31 - b) AS BIGINT) ELSE 0 END
-           for b in range(0, 32)]) AS BIGINT) AS hi,
-           CAST(list_sum([
-             CASE WHEN 2 * list_sum([
-                 (strpos('0123456789abcdef', substr(h, b//4 + 1, 1)) - 1) // CAST(pow(2, 3 - (b % 4)) AS INTEGER) % 2
-               for h in hs]) >= len(hs)
-             THEN CAST(pow(2, 63 - b) AS BIGINT) ELSE 0 END
-           for b in range(32, 64)]) AS BIGINT) AS lo
-         FROM hashes),
-       zerosh AS (
-         SELECT doc_id, CAST(0 AS BIGINT) AS hi, CAST(0 AS BIGINT) AS lo
-         FROM toks WHERE len(tk) = 0),
-       sigs AS (SELECT * FROM simhashed UNION ALL SELECT * FROM zerosh),
-       bands AS (
-         SELECT doc_id, unnest([
-             0 * 4294967296 + hi // 65536,
-             1 * 4294967296 + hi % 65536,
-             2 * 4294967296 + lo // 65536,
-             3 * 4294967296 + lo % 65536]) AS bucket
-         FROM sigs),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket
-         HAVING COUNT(*) BETWEEN 2 AND 1000),
-       cand AS (
-         SELECT a.doc_id AS id1, b.doc_id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(doc_id) AS id1, max(doc_id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000)
+    raw"""WITH ${simhashDocs},
+       ${simhashBands},
+       ${cappedPairs("cand", 1000, id = "doc_id", minSize = 2)}
        SELECT id1, id2, hamming FROM (
          SELECT c.id1, c.id2,
            CAST(bit_count(xor(s1.hi, s2.hi)) +
@@ -1538,69 +1289,21 @@ object SparkEntry {
   }
 
   private val q42Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       fx AS (SELECT vec_id, e, [CAST(round(x * 1048576.0) AS BIGINT) for x in e] AS f FROM v),
-       seed AS (
-         SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS BIGINT) AS cent_id, e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       a1 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN seed s) WHERE r = 1),
-       u1 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a1),
-       s1 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u1 GROUP BY cent_id, i),
-       n1 AS (SELECT cent_id, COUNT(*) AS cnt FROM a1 GROUP BY cent_id),
-       m1 AS (SELECT s1.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s1 JOIN n1 USING (cent_id) GROUP BY s1.cent_id),
-       c1 AS (SELECT sd.cent_id, COALESCE(m1.ce, sd.ce) AS ce FROM seed sd LEFT JOIN m1 USING (cent_id)),
-       a2 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN c1 s) WHERE r = 1),
-       u2 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a2),
-       s2 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u2 GROUP BY cent_id, i),
-       n2 AS (SELECT cent_id, COUNT(*) AS cnt FROM a2 GROUP BY cent_id),
-       m2 AS (SELECT s2.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s2 JOIN n2 USING (cent_id) GROUP BY s2.cent_id),
-       c2 AS (SELECT c1.cent_id, COALESCE(m2.ce, c1.ce) AS ce FROM c1 LEFT JOIN m2 USING (cent_id)),
+    raw"""WITH ${embeddingVecs()},
+       ${fixedPointVecs},
+       ${md5Seeds(8)},
+       ${lloydStep(1, "seed")},
+       ${lloydStep(2, "c1")},
        asg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT v.vec_id, v.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM v CROSS JOIN c2 c) WHERE r = 1),
+         ${nearestCentroids("v", "vec_id", "e", "c2")}),
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        probe AS (
-         SELECT query_id, qe, cent_id FROM (
-           SELECT q.query_id, q.qe, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-               list_sum([q.qe[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([q.qe[i] * q.qe[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM q CROSS JOIN c2 c) WHERE r <= 2),
+         ${nearestCentroids("q", "query_id", "qe", "c2", 2)}),
        scored AS (
          SELECT p.query_id, a.vec_id AS corpus_id,
-           list_sum([p.qe[i] * a.e[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([p.qe[i] * p.qe[i] for i in range(1, 65)])) *
-              sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)]))) AS sim
+           ${cosine64("p.qe", "a.e")} AS sim
          FROM probe p JOIN asg a USING (cent_id) WHERE p.query_id <> a.vec_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q43 — benchmark decontamination (extension:
@@ -1621,8 +1324,8 @@ object SparkEntry {
   }
 
   private val q43Sql =
-    """WITH toks AS (
-         SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk
+    raw"""WITH toks AS (
+         SELECT doc_id, ${wsTokens("text")} AS tk
          FROM documents),
        grams AS (
          SELECT doc_id,
@@ -1630,7 +1333,7 @@ object SparkEntry {
          FROM toks WHERE len(tk) >= 13),
        hs AS (
          SELECT doc_id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(g), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for g in gs]) AS sh
+           ${hashSet("gs", "g")} AS sh
          FROM grams),
        teh AS (
          SELECT DISTINCT unnest(sh) AS s FROM hs WHERE doc_id % 20 = 0),
@@ -1659,13 +1362,13 @@ object SparkEntry {
       .withColumnRenamed("id", "doc_id")
 
   private val q44Sql =
-    """WITH d AS (
+    raw"""WITH d AS (
          SELECT doc_id, regexp_replace(text, ' table ', chr(10), 'g') AS t
          FROM documents),
        l AS (
          SELECT doc_id, t,
            list_filter(string_split(t, chr(10)), x -> x <> '') AS lines,
-           list_filter(regexp_split_to_array(t, '\s+'), x -> x <> '') AS tk
+           ${wsTokens("t")} AS tk
          FROM d),
        m AS (
          SELECT doc_id,
@@ -1699,9 +1402,9 @@ object SparkEntry {
       .withColumnRenamed("id", "doc_id")
 
   private val q45Sql =
-    """WITH h AS (
+    raw"""WITH h AS (
          SELECT source, doc_id,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':s1'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("CAST(doc_id AS VARCHAR) || ':s1'")} AS u
          FROM documents),
        r AS (
          SELECT source, doc_id,
@@ -1719,8 +1422,8 @@ object SparkEntry {
       .withColumnRenamed("id", "doc_id")
 
   private val q46Sql =
-    """WITH toks AS (
-         SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS term
+    raw"""WITH toks AS (
+         SELECT doc_id, unnest(${wsTokens("text")}) AS term
          FROM documents),
        tf AS (SELECT doc_id, term, COUNT(*) AS c FROM toks GROUP BY doc_id, term),
        dfreq AS (SELECT term, COUNT(*) AS d FROM tf GROUP BY term),
@@ -1795,46 +1498,11 @@ object SparkEntry {
   }
 
   private val q48Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       tagged AS (
-         SELECT id, bucket, CASE WHEN id % 10 = 0 THEN 'i' ELSE 'c' END AS side
-         FROM bands),
-       bk AS (
-         SELECT bucket,
-           COUNT(CASE WHEN side = 'i' THEN 1 END) AS ni,
-           COUNT(CASE WHEN side = 'c' THEN 1 END) AS nc,
-           MIN(CASE WHEN side = 'i' THEN id END) AS min_i,
-           MIN(CASE WHEN side = 'c' THEN id END) AS min_c
-         FROM tagged GROUP BY bucket
-         HAVING COUNT(CASE WHEN side = 'i' THEN 1 END) >= 1
-            AND COUNT(CASE WHEN side = 'c' THEN 1 END) >= 1),
-       cand AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM tagged a JOIN tagged b ON a.bucket = b.bucket
-           AND a.side = 'i' AND b.side = 'c'
-         JOIN bk ON a.bucket = bk.bucket
-         WHERE bk.ni <= 1000 AND bk.nc <= 1000
-         UNION
-         SELECT min_i AS id1, min_c AS id2 FROM bk
-         WHERE ni > 1000 OR nc > 1000)
+    raw"""WITH ${minhashBands(8, 12, 3)},
+       ${sidedPairs("id % 10 = 0", 1000)}
        SELECT id1, id2, jaccard FROM (
          SELECT id1, id2,
-           CAST(len(list_intersect(d1.vms, d2.vms)) AS DOUBLE) /
-             (len(d1.vms) + len(d2.vms) - len(list_intersect(d1.vms, d2.vms))) AS jaccard
+           ${jaccard} AS jaccard
          FROM cand JOIN based d1 ON id1 = d1.id JOIN based d2 ON id2 = d2.id)
        WHERE jaccard >= 0.3"""
 
@@ -1880,11 +1548,11 @@ object SparkEntry {
       t(s, dir, "documents"), col("text"), k = 256)
 
   private val q50Sql =
-    """WITH vals AS (
+    raw"""WITH vals AS (
          SELECT DISTINCT text AS v FROM documents WHERE text IS NOT NULL),
        h AS (
          SELECT v,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(v || ':kmv'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("v || ':kmv'")} AS u
          FROM vals),
        kept AS (SELECT u FROM h ORDER BY u ASC, v ASC LIMIT 256),
        agg AS (SELECT COUNT(*) AS n_kept, MAX(u) AS uk FROM kept)
@@ -1910,46 +1578,9 @@ object SparkEntry {
       pointerDoubling = true)
 
   private val q51Sql =
-    """WITH RECURSIVE toks AS (
-         SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk FROM documents),
-       hashes AS (
-         SELECT doc_id, [substr(md5(t), 1, 16) for t in tk] AS hs FROM toks WHERE len(tk) > 0),
-       simhashed AS (
-         SELECT doc_id,
-           CAST(list_sum([
-             CASE WHEN 2 * list_sum([
-                 (strpos('0123456789abcdef', substr(h, b//4 + 1, 1)) - 1) // CAST(pow(2, 3 - (b % 4)) AS INTEGER) % 2
-               for h in hs]) >= len(hs)
-             THEN CAST(pow(2, 31 - b) AS BIGINT) ELSE 0 END
-           for b in range(0, 32)]) AS BIGINT) AS hi,
-           CAST(list_sum([
-             CASE WHEN 2 * list_sum([
-                 (strpos('0123456789abcdef', substr(h, b//4 + 1, 1)) - 1) // CAST(pow(2, 3 - (b % 4)) AS INTEGER) % 2
-               for h in hs]) >= len(hs)
-             THEN CAST(pow(2, 63 - b) AS BIGINT) ELSE 0 END
-           for b in range(32, 64)]) AS BIGINT) AS lo
-         FROM hashes),
-       zerosh AS (
-         SELECT doc_id, CAST(0 AS BIGINT) AS hi, CAST(0 AS BIGINT) AS lo
-         FROM toks WHERE len(tk) = 0),
-       sigs AS (SELECT * FROM simhashed UNION ALL SELECT * FROM zerosh),
-       bands AS (
-         SELECT doc_id, unnest([
-             0 * 4294967296 + hi // 65536,
-             1 * 4294967296 + hi % 65536,
-             2 * 4294967296 + lo // 65536,
-             3 * 4294967296 + lo % 65536]) AS bucket
-         FROM sigs),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket
-         HAVING COUNT(*) BETWEEN 2 AND 1000),
-       cand AS (
-         SELECT a.doc_id AS id1, b.doc_id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(doc_id) AS id1, max(doc_id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
+    raw"""WITH RECURSIVE ${simhashDocs},
+       ${simhashBands},
+       ${cappedPairs("cand", 1000, id = "doc_id", minSize = 2)},
        verified AS (
          SELECT id1, id2 FROM (
            SELECT c.id1, c.id2,
@@ -1958,16 +1589,7 @@ object SparkEntry {
            JOIN sigs s1 ON c.id1 = s1.doc_id
            JOIN sigs s2 ON c.id2 = s2.doc_id)
          WHERE hamming <= 3),
-       edges AS (
-         SELECT id1 AS a, id2 AS b FROM verified
-         UNION SELECT id2, id1 FROM verified),
-       reach(a, b) AS (
-         SELECT a, b FROM edges
-         UNION
-         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       comp AS (
-         SELECT a AS id, LEAST(a, MIN(b)) AS component
-         FROM reach GROUP BY a)
+       ${components}
        SELECT id, component FROM comp"""
 
   // ------------------------------------------------------------------
@@ -1997,30 +1619,19 @@ object SparkEntry {
   }
 
   private val q52Sql =
-    """WITH base0 AS (
+    raw"""WITH base0 AS (
          SELECT source, text,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk
+           ${wsTokens("text")} AS tk
          FROM documents),
        scored AS (
          SELECT source, text, tk,
-           len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS en,
-           len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'], lower(t)))) AS de,
-           len(list_filter(tk, t -> list_contains(['le','la','les','de','et','est','un','une','dans','que'], lower(t)))) AS fr,
-           least(CAST(len(text) AS DOUBLE) / 500.0, 1.0) * 0.4 +
-           greatest(1.0 - (CASE WHEN len(text) > 0 THEN
-             CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
-             ELSE 0.0 END) * 4, 0.0) * 0.3 +
-           least((CASE WHEN len(tk) > 0 THEN
-             CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
-             ELSE 0.0 END) * 5, 1.0) * 0.3 AS q
+           ${langCounts("tk")},
+           ${qualityScore} AS q
          FROM base0),
        rep AS (
          SELECT source,
            len(tk) AS ntok,
-           CASE WHEN en = 0 AND de = 0 AND fr = 0 THEN 'und'
-                WHEN en >= de AND en >= fr THEN 'en'
-                WHEN de >= fr THEN 'de'
-                ELSE 'fr' END AS lid,
+           ${langGuess} AS lid,
            q,
            md5(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS fp
          FROM scored)
@@ -2110,26 +1721,9 @@ object SparkEntry {
   }
 
   private val q57Sql =
-    """WITH v AS (
-         SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e
-         FROM embeddings),
-       seed AS (
-         SELECT CAST(row_number() OVER (
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT) AS c,
-           e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-       cb AS (
-         SELECT t.s, seed.c,
-           [ce[t.s*8 + j] for j in range(1, 9)] AS ent
-         FROM seed CROSS JOIN range(0, 8) t(s)),
-       enc AS (
-         SELECT vec_id, s, ent FROM (
-           SELECT v.vec_id, cb.s, cb.c, cb.ent,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id, cb.s ORDER BY
-               list_sum([(v.e[cb.s*8 + j] - cb.ent[j]) *
-                         (v.e[cb.s*8 + j] - cb.ent[j])
-                         for j in range(1, 9)]) ASC, cb.c ASC) AS r
-           FROM v CROSS JOIN cb) WHERE r = 1),
+    raw"""WITH ${embeddingVecs()},
+       ${pqCodebook},
+       ${pqEncode},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        parts AS (
          SELECT q.query_id, enc.vec_id AS corpus_id, enc.s,
@@ -2138,24 +1732,8 @@ object SparkEntry {
            list_sum([enc.ent[j] * enc.ent[j]
                      for j in range(1, 9)]) AS snorm
          FROM q CROSS JOIN enc WHERE q.query_id <> enc.vec_id),
-       agg AS (
-         SELECT query_id, corpus_id,
-           list_sum(list(sdot ORDER BY s)) AS dot,
-           list_sum(list(snorm ORDER BY s)) AS rnorm2
-         FROM parts GROUP BY query_id, corpus_id),
-       qn AS (
-         SELECT query_id,
-           sqrt(list_sum([qe[i]*qe[i] for i in range(1, 65)])) AS qnorm
-         FROM q),
-       scored AS (
-         SELECT a.query_id, a.corpus_id,
-           CASE WHEN a.rnorm2 > 0 AND qn.qnorm > 0
-                THEN a.dot / (qn.qnorm * sqrt(a.rnorm2)) ELSE 0.0 END AS sim
-         FROM agg a JOIN qn USING (query_id))
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${pqScores}
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q58 — SemDeDup semantic dedup (extension: Similarity.semDedup,
@@ -2173,40 +1751,15 @@ object SparkEntry {
       .withColumnRenamed("id", "vec_id")
 
   private val q58Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       fx AS (SELECT vec_id, e, [CAST(round(x * 1048576.0) AS BIGINT) for x in e] AS f FROM v),
-       seed AS (
-         SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS BIGINT) AS cent_id, e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       a1 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN seed s) WHERE r = 1),
-       u1 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a1),
-       s1 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u1 GROUP BY cent_id, i),
-       n1 AS (SELECT cent_id, COUNT(*) AS cnt FROM a1 GROUP BY cent_id),
-       m1 AS (SELECT s1.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s1 JOIN n1 USING (cent_id) GROUP BY s1.cent_id),
-       c1 AS (SELECT sd.cent_id, COALESCE(m1.ce, sd.ce) AS ce FROM seed sd LEFT JOIN m1 USING (cent_id)),
+    raw"""WITH ${embeddingVecs()},
+       ${fixedPointVecs},
+       ${md5Seeds(8)},
+       ${lloydStep(1, "seed")},
        asg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT v.vec_id, v.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM v CROSS JOIN c1 c) WHERE r = 1),
+         ${nearestCentroids("v", "vec_id", "e", "c1")}),
        p AS (
          SELECT a.vec_id AS id1, b.vec_id AS id2,
-           list_sum([a.e[i] * b.e[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-              sqrt(list_sum([b.e[i] * b.e[i] for i in range(1, 65)]))) AS sim
+           ${cosine64("a.e", "b.e")} AS sim
          FROM asg a JOIN asg b ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id)
        SELECT id2 AS vec_id, MIN(id1) AS dup_of, arg_min(sim, id1) AS sim
        FROM p WHERE sim >= 0.35 GROUP BY id2"""
@@ -2230,29 +1783,7 @@ object SparkEntry {
   }
 
   private val q59Sql =
-    """WITH tk AS (
-         SELECT doc_id,
-           list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
-             x -> x <> '') AS tk
-         FROM documents),
-       bi AS (
-         SELECT doc_id, unnest(tk[1:len(tk)-1]) AS w1,
-           unnest(tk[2:len(tk)]) AS w2
-         FROM tk WHERE len(tk) >= 2),
-       c12 AS (
-         SELECT w1, w2, COUNT(*) AS c12 FROM bi
-         WHERE doc_id % 10 < 8 GROUP BY w1, w2),
-       c1 AS (SELECT w1, SUM(c12) AS c1 FROM c12 GROUP BY w1),
-       vv AS (
-         SELECT COUNT(DISTINCT w) AS v FROM
-           (SELECT unnest(tk) AS w FROM tk WHERE doc_id % 10 < 8)),
-       sc AS (
-         SELECT b.doc_id,
-           ((COALESCE(m.c12, 0) + 1) * 1048576)
-             // (COALESCE(c.c1, 0) + (SELECT v FROM vv)) AS fx
-         FROM bi b
-         LEFT JOIN c12 m ON b.w1 = m.w1 AND b.w2 = m.w2
-         LEFT JOIN c1 c ON b.w1 = c.w1)
+    raw"""WITH ${bigramLm}
        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
          CAST(SUM(fx) AS BIGINT) AS lm_fx_sum,
          CAST(SUM(fx) AS DOUBLE) / COUNT(*) / 1048576.0 AS score
@@ -2311,10 +1842,9 @@ object SparkEntry {
   }
 
   private val q61Sql =
-    """WITH tc AS (
+    raw"""WITH tc AS (
          SELECT doc_id,
-           len(list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
-             x -> x <> '')) AS tok
+           len(${wsTokens("coalesce(text, '')")}) AS tok
          FROM documents),
        rt AS (
          SELECT doc_id, tok,
@@ -2347,20 +1877,7 @@ object SparkEntry {
       k = 20, w = 8, minShared = 2L, maxBucketSize = 100000)
 
   private val q62Sql =
-    """WITH g AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-       c AS (
-         SELECT doc_id,
-           [ CAST(list_sum([(strpos('0123456789abcdef', substr(md5(substr(t, i, 20)), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) * 1048576 + (i - 1)
-             for i in range(1, len(t) - 20 + 2) ] AS comb
-         FROM g WHERE len(t) >= 20),
-       sel AS (
-         SELECT doc_id, CASE WHEN len(comb) >= 8
-           THEN list_distinct([ list_min(comb[s:s+7])
-                                for s in range(1, len(comb) - 8 + 2) ])
-           ELSE [list_min(comb)] END AS fps
-         FROM c),
-       fh AS (
-         SELECT DISTINCT doc_id, unnest(fps) // 1048576 AS fh FROM sel),
+    raw"""WITH ${winnowHashes(20, 8)},
        p AS (
          SELECT a.doc_id AS id1, b.doc_id AS id2
          FROM fh a JOIN fh b ON a.fh = b.fh AND a.doc_id < b.doc_id)
@@ -2411,7 +1928,7 @@ object SparkEntry {
   }
 
   private val q63Sql =
-    """WITH w AS (
+    raw"""WITH w AS (
          SELECT doc_id,
            [array_to_string(ws[(i-1)*12+1:(i-1)*12+12], ' ')
             for i in range(1, ((len(ws)+11)//12)+1)] AS chunks
@@ -2423,33 +1940,12 @@ object SparkEntry {
          FROM w),
        docs AS (
          SELECT id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
+           ${shingles("text", 8)} AS shingles
          FROM paras WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket HAVING COUNT(*) <= 1000),
-       pairs AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
-       verified AS (
-         SELECT id1, id2,
-           len(list_intersect(d1.vms, d2.vms)) AS common,
-           len(d1.vms) AS n1, len(d2.vms) AS n2
-         FROM pairs JOIN sigs d1 ON id1 = d1.id JOIN sigs d2 ON id2 = d2.id)
+       ${minhashSigs(12)},
+       ${bandKeys(12, 3)},
+       ${cappedPairs("pairs", 1000)},
+       ${pairOverlap}
        SELECT id1, id2, CAST(common AS DOUBLE) / (n1 + n2 - common) AS jaccard,
          id1 // 1048576 AS doc1, id2 // 1048576 AS doc2
        FROM verified
@@ -2475,14 +1971,12 @@ object SparkEntry {
   }
 
   private val q64Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        tr AS (SELECT vec_id, e FROM v WHERE vec_id % 25 <> 0),
        te AS (SELECT vec_id AS test_id, e AS te FROM v WHERE vec_id % 25 = 0),
        scored AS (
          SELECT tr.vec_id, te.test_id,
-           list_sum([tr.e[i] * te.te[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([tr.e[i] * tr.e[i] for i in range(1, 65)])) *
-              sqrt(list_sum([te.te[i] * te.te[i] for i in range(1, 65)]))) AS sim
+           ${cosine64("tr.e", "te.te")} AS sim
          FROM tr CROSS JOIN te),
        best AS (
          SELECT vec_id, test_id, sim FROM (
@@ -2510,10 +2004,9 @@ object SparkEntry {
   }
 
   private val q65Sql =
-    """WITH tk AS (
+    raw"""WITH tk AS (
          SELECT doc_id, lang,
-           list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
-             x -> x <> '') AS tk
+           ${wsTokens("coalesce(text, '')")} AS tk
          FROM documents),
        ttk AS (
          SELECT lang AS l, unnest(tk) AS t FROM tk WHERE doc_id % 10 < 8),
@@ -2556,44 +2049,18 @@ object SparkEntry {
   }
 
   private val q66Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        cents AS (SELECT vec_id AS cent_id, e AS ce FROM v ORDER BY vec_id LIMIT 8),
-       seed AS (
-         SELECT CAST(row_number() OVER (
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT) AS c,
-           e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-       cb AS (
-         SELECT t.s, seed.c,
-           [ce[t.s*8 + j] for j in range(1, 9)] AS ent
-         FROM seed CROSS JOIN range(0, 8) t(s)),
+       ${pqCodebook},
        asg AS (
          SELECT vec_id, cent_id FROM (
            SELECT v.vec_id, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
+             ${centroidRank("v.vec_id", "v.e", "c")}
            FROM v CROSS JOIN cents c) WHERE r = 1),
-       enc AS (
-         SELECT vec_id, s, ent FROM (
-           SELECT v.vec_id, cb.s, cb.c, cb.ent,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id, cb.s ORDER BY
-               list_sum([(v.e[cb.s*8 + j] - cb.ent[j]) *
-                         (v.e[cb.s*8 + j] - cb.ent[j])
-                         for j in range(1, 9)]) ASC, cb.c ASC) AS r
-           FROM v CROSS JOIN cb) WHERE r = 1),
+       ${pqEncode},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        probe AS (
-         SELECT query_id, qe, cent_id FROM (
-           SELECT q.query_id, q.qe, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-               list_sum([q.qe[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([q.qe[i] * q.qe[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM q CROSS JOIN cents c) WHERE r <= 2),
+         ${nearestCentroids("q", "query_id", "qe", "cents", 2)}),
        parts AS (
          SELECT p.query_id, a.vec_id AS corpus_id, enc.s,
            list_sum([p.qe[enc.s*8 + j] * enc.ent[j]
@@ -2603,24 +2070,8 @@ object SparkEntry {
          FROM probe p JOIN asg a USING (cent_id)
          JOIN enc ON enc.vec_id = a.vec_id
          WHERE p.query_id <> a.vec_id),
-       agg AS (
-         SELECT query_id, corpus_id,
-           list_sum(list(sdot ORDER BY s)) AS dot,
-           list_sum(list(snorm ORDER BY s)) AS rnorm2
-         FROM parts GROUP BY query_id, corpus_id),
-       qn AS (
-         SELECT query_id,
-           sqrt(list_sum([qe[i]*qe[i] for i in range(1, 65)])) AS qnorm
-         FROM q),
-       scored AS (
-         SELECT a.query_id, a.corpus_id,
-           CASE WHEN a.rnorm2 > 0 AND qn.qnorm > 0
-                THEN a.dot / (qn.qnorm * sqrt(a.rnorm2)) ELSE 0.0 END AS sim
-         FROM agg a JOIN qn USING (query_id))
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${pqScores}
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q67 — cross-corpus incremental SemDeDup (extension:
@@ -2640,37 +2091,14 @@ object SparkEntry {
   }
 
   private val q67Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        b AS (SELECT vec_id, e FROM v WHERE vec_id % 10 <> 0),
        inc AS (SELECT vec_id, e FROM v WHERE vec_id % 10 = 0),
        fx AS (SELECT vec_id, e, [CAST(round(x * 1048576.0) AS BIGINT) for x in e] AS f FROM b),
-       seed AS (
-         SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS BIGINT) AS cent_id, e AS ce
-         FROM b ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       a1 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN seed s) WHERE r = 1),
-       u1 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a1),
-       s1 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u1 GROUP BY cent_id, i),
-       n1 AS (SELECT cent_id, COUNT(*) AS cnt FROM a1 GROUP BY cent_id),
-       m1 AS (SELECT s1.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s1 JOIN n1 USING (cent_id) GROUP BY s1.cent_id),
-       c1 AS (SELECT sd.cent_id, COALESCE(m1.ce, sd.ce) AS ce FROM seed sd LEFT JOIN m1 USING (cent_id)),
+       ${md5Seeds(8, "b")},
+       ${lloydStep(1, "seed")},
        basg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT b.vec_id, b.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY
-               list_sum([b.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([b.e[i] * b.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM b CROSS JOIN c1 c) WHERE r = 1),
+         ${nearestCentroids("b", "vec_id", "e", "c1")}),
        iasg AS (
          SELECT vec_id, e, cent_id FROM (
            SELECT i.vec_id, i.e, c.cent_id,
@@ -2707,17 +2135,10 @@ object SparkEntry {
   }
 
   private val q68Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        cents AS (SELECT vec_id AS cent_id, e AS ce FROM v ORDER BY vec_id LIMIT 8),
        asg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT v.vec_id, v.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM v CROSS JOIN cents c) WHERE r = 1),
+         ${nearestCentroids("v", "vec_id", "e", "cents")}),
        res AS (
          SELECT a.vec_id, a.cent_id,
            [CAST(CAST(a.e[i] - c.ce[i] AS FLOAT) AS DOUBLE) for i in range(1, 65)] AS re
@@ -2740,14 +2161,7 @@ object SparkEntry {
            FROM res r0 CROSS JOIN cb) WHERE rr = 1),
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        probe AS (
-         SELECT query_id, qe, cent_id FROM (
-           SELECT q.query_id, q.qe, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-               list_sum([q.qe[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([q.qe[i] * q.qe[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM q CROSS JOIN cents c) WHERE r <= 2),
+         ${nearestCentroids("q", "query_id", "qe", "cents", 2)}),
        parts AS (
          SELECT p.query_id, enc.vec_id AS corpus_id, enc.cent_id, enc.s,
            list_sum([p.qe[enc.s*8 + j] * enc.ent[j]
@@ -2783,10 +2197,7 @@ object SparkEntry {
          FROM agg a
          JOIN qc ON a.query_id = qc.query_id AND a.cent_id = qc.cent_id
          JOIN qn ON a.query_id = qn.query_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q69 — perplexity-stratified corpus sampling (composition: LangModel
@@ -2818,29 +2229,7 @@ object SparkEntry {
   }
 
   private val q69Sql =
-    """WITH tk AS (
-         SELECT doc_id,
-           list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
-             x -> x <> '') AS tk
-         FROM documents),
-       bi AS (
-         SELECT doc_id, unnest(tk[1:len(tk)-1]) AS w1,
-           unnest(tk[2:len(tk)]) AS w2
-         FROM tk WHERE len(tk) >= 2),
-       c12 AS (
-         SELECT w1, w2, COUNT(*) AS c12 FROM bi
-         WHERE doc_id % 10 < 8 GROUP BY w1, w2),
-       c1 AS (SELECT w1, SUM(c12) AS c1 FROM c12 GROUP BY w1),
-       vv AS (
-         SELECT COUNT(DISTINCT w) AS v FROM
-           (SELECT unnest(tk) AS w FROM tk WHERE doc_id % 10 < 8)),
-       sc AS (
-         SELECT b.doc_id,
-           ((COALESCE(m.c12, 0) + 1) * 1048576)
-             // (COALESCE(c.c1, 0) + (SELECT v FROM vv)) AS fx
-         FROM bi b
-         LEFT JOIN c12 m ON b.w1 = m.w1 AND b.w2 = m.w2
-         LEFT JOIN c1 c ON b.w1 = c.w1),
+    raw"""WITH ${bigramLm},
        doc AS (
          SELECT doc_id,
            CAST(SUM(fx) AS DOUBLE) / COUNT(*) / 1048576.0 AS score
@@ -2850,7 +2239,7 @@ object SparkEntry {
            CASE WHEN score >= 0.035 THEN 'head'
                 WHEN score >= 0.0335 THEN 'middle'
                 ELSE 'tail' END AS bucket,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':ppl'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("CAST(doc_id AS VARCHAR) || ':ppl'")} AS u
          FROM doc)
        SELECT bucket, COUNT(*) AS n_docs,
          CAST(SUM(CASE WHEN u < (CASE bucket WHEN 'head' THEN 1.0
@@ -2871,51 +2260,17 @@ object SparkEntry {
         threshold = 0.35, nlist = 8, trainIters = 1))
 
   private val q70Sql =
-    """WITH RECURSIVE v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       fx AS (SELECT vec_id, e, [CAST(round(x * 1048576.0) AS BIGINT) for x in e] AS f FROM v),
-       seed AS (
-         SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS BIGINT) AS cent_id, e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       a1 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN seed s) WHERE r = 1),
-       u1 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a1),
-       s1 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u1 GROUP BY cent_id, i),
-       n1 AS (SELECT cent_id, COUNT(*) AS cnt FROM a1 GROUP BY cent_id),
-       m1 AS (SELECT s1.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s1 JOIN n1 USING (cent_id) GROUP BY s1.cent_id),
-       c1 AS (SELECT sd.cent_id, COALESCE(m1.ce, sd.ce) AS ce FROM seed sd LEFT JOIN m1 USING (cent_id)),
+    raw"""WITH RECURSIVE ${embeddingVecs()},
+       ${fixedPointVecs},
+       ${md5Seeds(8)},
+       ${lloydStep(1, "seed")},
        asg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT v.vec_id, v.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM v CROSS JOIN c1 c) WHERE r = 1),
+         ${nearestCentroids("v", "vec_id", "e", "c1")}),
        verified AS (
          SELECT a.vec_id AS id1, b.vec_id AS id2
          FROM asg a JOIN asg b ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-         WHERE list_sum([a.e[i] * b.e[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-              sqrt(list_sum([b.e[i] * b.e[i] for i in range(1, 65)]))) >= 0.35),
-       edges AS (
-         SELECT id1 AS a, id2 AS b FROM verified
-         UNION SELECT id2, id1 FROM verified),
-       reach(a, b) AS (
-         SELECT a, b FROM edges
-         UNION
-         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       comp AS (
-         SELECT a AS id, LEAST(a, MIN(b)) AS component
-         FROM reach GROUP BY a)
+         WHERE ${cosine64("a.e", "b.e")} >= 0.35),
+       ${components}
        SELECT id, component FROM comp"""
 
   // ------------------------------------------------------------------
@@ -2936,10 +2291,9 @@ object SparkEntry {
   }
 
   private val q71Sql =
-    """WITH tk AS (
+    raw"""WITH tk AS (
          SELECT doc_id,
-           list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
-             x -> x <> '') AS tk
+           ${wsTokens("coalesce(text, '')")} AS tk
          FROM documents),
        tr AS (
          SELECT doc_id, unnest(tk[1:len(tk)-2]) AS w1,
@@ -3001,20 +2355,7 @@ object SparkEntry {
   }
 
   private val q72Sql =
-    """WITH g AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-       c AS (
-         SELECT doc_id,
-           [ CAST(list_sum([(strpos('0123456789abcdef', substr(md5(substr(t, i, 20)), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) * 1048576 + (i - 1)
-             for i in range(1, len(t) - 20 + 2) ] AS comb
-         FROM g WHERE len(t) >= 20),
-       sel AS (
-         SELECT doc_id, CASE WHEN len(comb) >= 8
-           THEN list_distinct([ list_min(comb[s:s+7])
-                                for s in range(1, len(comb) - 8 + 2) ])
-           ELSE [list_min(comb)] END AS fps
-         FROM c),
-       fh AS (
-         SELECT DISTINCT doc_id, unnest(fps) // 1048576 AS fh FROM sel),
+    raw"""WITH ${winnowHashes(20, 8)},
        teh AS (SELECT DISTINCT fh FROM fh WHERE doc_id % 20 = 0),
        corp AS (SELECT doc_id, fh FROM fh WHERE doc_id % 20 <> 0),
        nfp AS (SELECT doc_id, COUNT(*) AS n_fp FROM corp GROUP BY doc_id),
@@ -3064,20 +2405,15 @@ object SparkEntry {
   }
 
   private val q73Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
+    raw"""WITH ${shingleDocs(8)},
        based AS (
          SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
+           ${hashSet("shingles")} AS vms
          FROM docs),
        sigs AS (
-         SELECT id, [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
+         SELECT id, ${minhashSig(12)} AS sig
          FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
+       ${bandKeys(12, 3)},
        pairs AS (
          SELECT DISTINCT a.id AS id1, b.id AS id2
          FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id),
@@ -3122,46 +2458,11 @@ object SparkEntry {
   }
 
   private val q75Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       tagged AS (
-         SELECT id, bucket, CASE WHEN id % 10 = 1 THEN 'i' ELSE 'c' END AS side
-         FROM bands),
-       bk AS (
-         SELECT bucket,
-           COUNT(CASE WHEN side = 'i' THEN 1 END) AS ni,
-           COUNT(CASE WHEN side = 'c' THEN 1 END) AS nc,
-           MIN(CASE WHEN side = 'i' THEN id END) AS min_i,
-           MIN(CASE WHEN side = 'c' THEN id END) AS min_c
-         FROM tagged GROUP BY bucket
-         HAVING COUNT(CASE WHEN side = 'i' THEN 1 END) >= 1
-            AND COUNT(CASE WHEN side = 'c' THEN 1 END) >= 1),
-       cand AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM tagged a JOIN tagged b ON a.bucket = b.bucket
-           AND a.side = 'i' AND b.side = 'c'
-         JOIN bk ON a.bucket = bk.bucket
-         WHERE bk.ni <= 1000 AND bk.nc <= 1000
-         UNION
-         SELECT min_i AS id1, min_c AS id2 FROM bk
-         WHERE ni > 1000 OR nc > 1000)
+    raw"""WITH ${minhashBands(8, 12, 3)},
+       ${sidedPairs("id % 10 = 1", 1000)}
        SELECT id1, id2, jaccard FROM (
          SELECT id1, id2,
-           CAST(len(list_intersect(d1.vms, d2.vms)) AS DOUBLE) /
-             (len(d1.vms) + len(d2.vms) - len(list_intersect(d1.vms, d2.vms))) AS jaccard
+           ${jaccard} AS jaccard
          FROM cand JOIN based d1 ON id1 = d1.id JOIN based d2 ON id2 = d2.id)
        WHERE jaccard >= 0.3"""
 
@@ -3480,37 +2781,7 @@ object SparkEntry {
       k = 10)
 
   private val q78Sql =
-    """WITH toks AS (
-         SELECT doc_id,
-           unnest(list_filter(string_split_regex(lower(coalesce(text, '')),
-             '\s+'), x -> x <> '')) AS tok
-         FROM documents),
-       tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-       dl AS (
-         SELECT doc_id,
-           len(list_filter(string_split_regex(lower(coalesce(text, '')),
-             '\s+'), x -> x <> '')) AS dl
-         FROM documents),
-       corpus AS (SELECT count(*) AS n, sum(dl) AS sum_dl FROM dl),
-       q(query_id, tok) AS (VALUES
-         ('hash_join', 'hash'), ('hash_join', 'join'),
-         ('window_stream', 'window'), ('window_stream', 'agg'),
-         ('window_stream', 'stream'),
-         ('slow_scan', 'slow'), ('slow_scan', 'scan')),
-       df AS (
-         SELECT tf.tok, count(*) AS df FROM tf
-         WHERE tf.tok IN (SELECT tok FROM q) GROUP BY 1),
-       scored AS (
-         SELECT q.query_id, tf.doc_id,
-           (2*(2*c.n - 2*df.df + 1)*1048576 + (2*df.df + 1))
-             // (2*(2*df.df + 1)) AS idf_fp,
-           (2*(44*tf.tf*c.sum_dl)*1048576
-              + (20*tf.tf*c.sum_dl + 6*c.sum_dl + 18*dl.dl*c.n))
-             // (2*(20*tf.tf*c.sum_dl + 6*c.sum_dl + 18*dl.dl*c.n)) AS tfc_fp
-         FROM q JOIN tf ON q.tok = tf.tok
-         JOIN df ON q.tok = df.tok
-         JOIN dl ON tf.doc_id = dl.doc_id
-         CROSS JOIN corpus c),
+    raw"""WITH ${bm25Terms},
        agg AS (
          SELECT query_id, doc_id,
            CAST(sum((2*idf_fp*tfc_fp + 1048576) // (2*1048576)) AS BIGINT)
@@ -3670,16 +2941,12 @@ object SparkEntry {
       t(s, dir, "documents"), Seq("lang"), col("text"), k = 72)
 
   private val q83Sql =
-    """WITH vals AS (
+    raw"""WITH vals AS (
          SELECT DISTINCT lang AS g, text AS v FROM documents
          WHERE text IS NOT NULL),
        h AS (
          SELECT g, v,
-           CAST(list_sum([(strpos('0123456789abcdef',
-               substr(md5(v || ':kmv'), j, 1)) - 1) *
-               CAST(pow(16, 13 - j) AS BIGINT)
-             for j in range(1, 14)]) AS BIGINT)
-             / 4503599627370496.0 AS u
+           ${md5Unit("v || ':kmv'")} AS u
          FROM vals),
        kept AS (
          SELECT g, u,
@@ -3959,7 +3226,7 @@ object SparkEntry {
   }
 
   private val q90Sql =
-    """WITH pairs AS (
+    raw"""WITH pairs AS (
          SELECT DISTINCT l_partkey AS p, 10000000 + l_suppkey AS s
          FROM lineitem),
        e AS (SELECT p AS u, s AS v FROM pairs
@@ -3968,27 +3235,7 @@ object SparkEntry {
        nn AS (SELECT count(*) AS n FROM nodes),
        deg AS (SELECT u, count(*) AS d FROM e GROUP BY 1),
        r0 AS (SELECT id, (1048576 // n) AS r FROM nodes, nn),
-       c1 AS (SELECT e.v AS id, sum(r0.r // deg.d) AS cs
-              FROM e JOIN r0 ON e.u = r0.id
-              JOIN deg ON deg.u = e.u GROUP BY 1),
-       r1 AS (SELECT nodes.id,
-                (15 * 1048576 // (100 * nn.n))
-                  + (85 * coalesce(c1.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c1 ON nodes.id = c1.id, nn),
-       c2 AS (SELECT e.v AS id, sum(r1.r // deg.d) AS cs
-              FROM e JOIN r1 ON e.u = r1.id
-              JOIN deg ON deg.u = e.u GROUP BY 1),
-       r2 AS (SELECT nodes.id,
-                (15 * 1048576 // (100 * nn.n))
-                  + (85 * coalesce(c2.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c2 ON nodes.id = c2.id, nn),
-       c3 AS (SELECT e.v AS id, sum(r2.r // deg.d) AS cs
-              FROM e JOIN r2 ON e.u = r2.id
-              JOIN deg ON deg.u = e.u GROUP BY 1),
-       r3 AS (SELECT nodes.id,
-                (15 * 1048576 // (100 * nn.n))
-                  + (85 * coalesce(c3.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c3 ON nodes.id = c3.id, nn)
+       ${pageRankRounds(3, "(15 * 1048576 // (100 * nn.n))")}
        SELECT id, CAST(r AS BIGINT) AS rank_fp FROM r3
        ORDER BY r DESC, id ASC LIMIT 20"""
 
@@ -4007,16 +3254,13 @@ object SparkEntry {
       .select(col("id").as("doc_id"), col("n_tokens"), col("dsir_fx"))
 
   private val q91Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT doc_id, source,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+           unnest(${wsTokens("text")}) AS t
          FROM documents),
        bt AS (
          SELECT doc_id, source,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)
-             * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)])
-             % 1024 AS BIGINT) AS b
+           ${md5Bigint("t", 8, 1024)} AS b
          FROM toks),
        qc AS (SELECT b, count(*) AS qn FROM bt GROUP BY b),
        pc AS (SELECT b, count(*) AS pn FROM bt
@@ -4030,20 +3274,7 @@ object SparkEntry {
              FROM qc LEFT JOIN pc USING (b)
            UNION ALL SELECT pt + 1024 FROM ptot
            UNION ALL SELECT qt + 1024 FROM qtot)),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        w AS (
          SELECT qc.b, (lp.fx - lpt.fx) - (lq.fx - lqt.fx) AS lam
          FROM qc LEFT JOIN pc USING (b), ptot, qtot
@@ -4160,31 +3391,11 @@ object SparkEntry {
       .select(col("id").as("doc_id"), col("n_tokens"), col("entropy_fx"))
 
   private val q94Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+           unnest(${wsTokens("text")}) AS t
          FROM documents),
-       tc AS (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY 1, 2),
-       nd AS (SELECT doc_id, sum(c) AS n FROM tc GROUP BY 1),
-       vals(v) AS (
-         SELECT DISTINCT c FROM tc UNION SELECT DISTINCT n FROM nd),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
-       sc AS (SELECT tc.doc_id, sum(tc.c * lgf.fx) AS s
-              FROM tc JOIN lgf ON lgf.v = tc.c GROUP BY 1),
+       ${tokenLogCounts},
        e AS (SELECT nd.doc_id, nd.n,
                lgf.fx - (sc.s // nd.n) AS entropy_fx
              FROM nd JOIN lgf ON lgf.v = nd.n JOIN sc USING (doc_id))
@@ -4303,28 +3514,12 @@ object SparkEntry {
         col("key_fp"))
 
   private val q97Sql =
-    """WITH RECURSIVE d AS (
+    raw"""WITH RECURSIVE d AS (
          SELECT doc_id, n_chars,
-           CAST(list_sum([(strpos('0123456789abcdef',
-               substr(md5(CAST(doc_id AS VARCHAR) || ':wsample'), j, 1)) - 1)
-             * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)])
-             AS BIGINT) AS v
+           ${md5Bigint("CAST(doc_id AS VARCHAR) || ':wsample'", 8)} AS v
          FROM documents WHERE n_chars IS NOT NULL AND n_chars >= 1),
        vals(v) AS (SELECT DISTINCT v + 1 FROM d),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        keys AS (
          SELECT d.doc_id, d.n_chars,
            ((32 * 1048576 - lgf.fx) << 20) // d.n_chars AS key_fp
@@ -4375,9 +3570,8 @@ object SparkEntry {
       minCount = 20L, k = 100)
 
   private val q99Sql =
-    """WITH RECURSIVE toks AS (
-         SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-           x -> x <> '') AS tk
+    raw"""WITH RECURSIVE toks AS (
+         SELECT doc_id, ${wsTokens("text")} AS tk
          FROM documents),
        uni AS (SELECT u AS w, count(*) AS c FROM (
                  SELECT unnest(tk) AS u FROM toks) GROUP BY 1),
@@ -4392,20 +3586,7 @@ object SparkEntry {
        vals(v) AS (
          SELECT DISTINCT n FROM bi UNION SELECT DISTINCT c FROM uni
          UNION SELECT t_tot FROM tt UNION SELECT b_tot FROM bt),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        scored AS (
          SELECT bi.w1, bi.w2, bi.n,
            ln.fx + 2 * lt.fx - lb.fx - lx.fx - ly.fx AS pmi_fx
@@ -4453,37 +3634,7 @@ object SparkEntry {
   }
 
   private val q100Sql =
-    """WITH toks AS (
-         SELECT doc_id,
-           unnest(list_filter(string_split_regex(lower(coalesce(text, '')),
-             '\s+'), x -> x <> '')) AS tok
-         FROM documents),
-       tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-       dl AS (
-         SELECT doc_id,
-           len(list_filter(string_split_regex(lower(coalesce(text, '')),
-             '\s+'), x -> x <> '')) AS dl
-         FROM documents),
-       corpus AS (SELECT count(*) AS n, sum(dl) AS sum_dl FROM dl),
-       q(query_id, tok) AS (VALUES
-         ('hash_join', 'hash'), ('hash_join', 'join'),
-         ('window_stream', 'window'), ('window_stream', 'agg'),
-         ('window_stream', 'stream'),
-         ('slow_scan', 'slow'), ('slow_scan', 'scan')),
-       df AS (
-         SELECT tf.tok, count(*) AS df FROM tf
-         WHERE tf.tok IN (SELECT tok FROM q) GROUP BY 1),
-       scored AS (
-         SELECT q.query_id, tf.doc_id,
-           (2*(2*c.n - 2*df.df + 1)*1048576 + (2*df.df + 1))
-             // (2*(2*df.df + 1)) AS idf_fp,
-           (2*(44*tf.tf*c.sum_dl)*1048576
-              + (20*tf.tf*c.sum_dl + 6*c.sum_dl + 18*dl.dl*c.n))
-             // (2*(20*tf.tf*c.sum_dl + 6*c.sum_dl + 18*dl.dl*c.n)) AS tfc_fp
-         FROM q JOIN tf ON q.tok = tf.tok
-         JOIN df ON q.tok = df.tok
-         JOIN dl ON tf.doc_id = dl.doc_id
-         CROSS JOIN corpus c),
+    raw"""WITH ${bm25Terms},
        bmagg AS (
          SELECT query_id, doc_id,
            CAST(sum((2*idf_fp*tfc_fp + 1048576) // (2*1048576)) AS BIGINT)
@@ -4494,17 +3645,12 @@ object SparkEntry {
            row_number() OVER (PARTITION BY query_id
              ORDER BY score_fp DESC, doc_id ASC) AS rank
          FROM bmagg QUALIFY rank <= 50),
-       v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e
-             FROM embeddings),
+       ${embeddingVecs()},
        qv(qid, vid) AS (VALUES
          ('hash_join', 0), ('window_stream', 100), ('slow_scan', 200)),
        vscored AS (
          SELECT qv.qid, v.vec_id AS id,
-           list_sum([qe.e[i] * v.e[i] for i in range(1, len(v.e)+1)]) /
-             (sqrt(list_sum([qe.e[i] * qe.e[i]
-                for i in range(1, len(qe.e)+1)])) *
-              sqrt(list_sum([v.e[i] * v.e[i]
-                for i in range(1, len(v.e)+1)]))) AS sim
+           ${cosine("qe.e", "v.e")} AS sim
          FROM qv JOIN v qe ON qe.vec_id = qv.vid
          CROSS JOIN v WHERE v.vec_id <> qv.vid),
        vr AS (
@@ -4639,51 +3785,19 @@ object SparkEntry {
   }
 
   private val q104Sql =
-    """WITH RECURSIVE docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket HAVING COUNT(*) <= 1000),
-       cand AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
+    raw"""WITH RECURSIVE ${minhashBands(8, 12, 3)},
+       ${cappedPairs("cand", 1000)},
        verified AS (
          SELECT id1, id2
          FROM cand JOIN sigs d1 ON id1 = d1.id JOIN sigs d2 ON id2 = d2.id
-         WHERE CAST(len(list_intersect(d1.vms, d2.vms)) AS DOUBLE) /
-           (len(d1.vms) + len(d2.vms) - len(list_intersect(d1.vms, d2.vms))) >= 0.3),
-       edges AS (
-         SELECT id1 AS a, id2 AS b FROM verified
-         UNION SELECT id2, id1 FROM verified),
-       reach(a, b) AS (
-         SELECT a, b FROM edges
-         UNION
-         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       comp AS (
-         SELECT a AS id, LEAST(a, MIN(b)) AS component
-         FROM reach GROUP BY a),
+         WHERE ${jaccard} >= 0.3),
+       ${components},
        keyed AS (
          SELECT d.doc_id, coalesce(comp.component, d.doc_id) AS split_key
          FROM documents d LEFT JOIN comp ON d.doc_id = comp.id),
        h AS (
          SELECT doc_id, split_key,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(split_key AS VARCHAR) || ':lk1'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("CAST(split_key AS VARCHAR) || ':lk1'")} AS u
          FROM keyed)
        SELECT doc_id, split_key,
          CASE WHEN u < 0.8 THEN 'train'
@@ -4705,7 +3819,7 @@ object SparkEntry {
       .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
 
   private val q105Sql =
-    """WITH w(g, w) AS (VALUES
+    raw"""WITH w(g, w) AS (VALUES
          ('src1', 1), ('src2', 1), ('src3', 2), ('src4', 1)),
        wc AS (
          SELECT w.g, w.w, count(*) AS n
@@ -4722,10 +3836,7 @@ object SparkEntry {
          SELECT d.source
          FROM documents d
          JOIN wc ON d.source = wc.g CROSS JOIN star
-         WHERE CAST(list_sum([(strpos('0123456789abcdef',
-             substr(md5(CAST(d.doc_id AS VARCHAR) || ':mx1'), j, 1)) - 1)
-             * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)])
-             AS HUGEINT) * (CAST(star.w AS HUGEINT) * wc.n)
+         WHERE CAST(${hexInt("md5(CAST(d.doc_id AS VARCHAR) || ':mx1')", 1, 13)} AS HUGEINT) * (CAST(star.w AS HUGEINT) * wc.n)
            < CAST(wc.w AS HUGEINT) * star.n * 4503599627370496)
        SELECT source, count(*) AS n_kept FROM kept GROUP BY 1"""
 
@@ -4745,15 +3856,15 @@ object SparkEntry {
   }
 
   private val q106Sql =
-    """WITH va AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS v
+    raw"""WITH va AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS v
                    FROM events WHERE event_type = 'view'),
        vb AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS v
               FROM events WHERE event_type = 'purchase'),
        ha AS (SELECT v,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(v || ':kmv'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("v || ':kmv'")} AS u
          FROM va),
        hb AS (SELECT v,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(v || ':kmv'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("v || ':kmv'")} AS u
          FROM vb),
        ka AS (SELECT u, v FROM ha ORDER BY u ASC, v ASC LIMIT 64),
        kb AS (SELECT u, v FROM hb ORDER BY u ASC, v ASC LIMIT 64),
@@ -4855,25 +3966,11 @@ object SparkEntry {
       .head.getLong(0)
 
   private val q108Sql =
-    """WITH pos AS (
-         SELECT doc_id,
-           unnest(range(1, len(text)-24+2)) AS pos,
-           unnest([md5(substr(text, i, 24))
-                   for i in range(1, len(text)-24+2)]) AS h
-         FROM documents WHERE len(text) >= 24),
+    raw"""WITH ${windowHashes(24)},
        dup AS (SELECT h FROM pos GROUP BY h HAVING count(*) > 1),
        dp AS (SELECT doc_id, pos FROM pos
               WHERE h IN (SELECT h FROM dup)),
-       b AS (SELECT doc_id, pos,
-               CASE WHEN pos > coalesce(max(pos + 23) OVER (
-                      PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND 1 PRECEDING) + 1, 0)
-                    THEN 1 ELSE 0 END AS brk
-             FROM dp),
-       sp AS (SELECT doc_id, pos,
-                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-              FROM b)
+       ${windowSpans(24)}
        SELECT doc_id,
          CAST(min(pos) AS BIGINT) AS span_start,
          CAST(max(pos) + 24 - min(pos) AS BIGINT) AS span_len
@@ -4917,7 +4014,7 @@ object SparkEntry {
   }
 
   private val q109Sql =
-    """WITH d AS (
+    raw"""WITH d AS (
          SELECT doc_id, CAST(n_chars AS BIGINT) AS tok,
            TRY_CAST(substr(source, 4) AS INT) % 4 AS m
          FROM documents),
@@ -4928,7 +4025,7 @@ object SparkEntry {
          FROM d),
        u AS (
          SELECT doc_id, tok, e,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':ep14'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) / 4503599627370496.0 AS uh
+           ${md5Unit("CAST(doc_id AS VARCHAR) || ':ep14'")} AS uh
          FROM ep),
        c AS (
          SELECT doc_id, tok,
@@ -4974,12 +4071,7 @@ object SparkEntry {
   }
 
   private val q110Sql =
-    """WITH pos AS (
-         SELECT doc_id,
-           unnest(range(1, len(text)-24+2)) AS pos,
-           unnest([md5(substr(text, i, 24))
-                   for i in range(1, len(text)-24+2)]) AS h
-         FROM documents WHERE len(text) >= 24),
+    raw"""WITH ${windowHashes(24)},
        dp AS (
          SELECT doc_id, pos FROM (
            SELECT doc_id, pos,
@@ -4987,16 +4079,7 @@ object SparkEntry {
              row_number() OVER (PARTITION BY h
                                 ORDER BY doc_id, pos) AS rn
            FROM pos) WHERE n > 1 AND rn > 1),
-       b AS (SELECT doc_id, pos,
-               CASE WHEN pos > coalesce(max(pos + 23) OVER (
-                      PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND 1 PRECEDING) + 1, 0)
-                    THEN 1 ELSE 0 END AS brk
-             FROM dp),
-       sp AS (SELECT doc_id, pos,
-                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-              FROM b),
+       ${windowSpans(24)},
        spans AS (
          SELECT doc_id, min(pos) AS s, max(pos) + 24 - min(pos) AS l
          FROM sp GROUP BY doc_id, sid),
@@ -5044,28 +4127,14 @@ object SparkEntry {
   }
 
   private val q111Sql =
-    """WITH pos AS (
-         SELECT doc_id,
-           unnest(range(1, len(text)-24+2)) AS pos,
-           unnest([md5(substr(text, i, 24))
-                   for i in range(1, len(text)-24+2)]) AS h
-         FROM documents WHERE len(text) >= 24 AND doc_id % 20 <> 0),
+    raw"""WITH ${windowHashes(24, "doc_id % 20 <> 0")},
        tg AS (
          SELECT DISTINCT unnest([md5(substr(text, i, 24))
                    for i in range(1, len(text)-24+2)]) AS h
          FROM documents WHERE len(text) >= 24 AND doc_id % 20 = 0),
        dp AS (SELECT doc_id, pos FROM pos
               WHERE h IN (SELECT h FROM tg)),
-       b AS (SELECT doc_id, pos,
-               CASE WHEN pos > coalesce(max(pos + 23) OVER (
-                      PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND 1 PRECEDING) + 1, 0)
-                    THEN 1 ELSE 0 END AS brk
-             FROM dp),
-       sp AS (SELECT doc_id, pos,
-                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-              FROM b)
+       ${windowSpans(24)}
        SELECT doc_id,
          CAST(min(pos) AS BIGINT) AS span_start,
          CAST(max(pos) + 24 - min(pos) AS BIGINT) AS span_len
@@ -5088,7 +4157,7 @@ object SparkEntry {
   }
 
   private val q112Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        b AS (SELECT vec_id, [CASE WHEN x >= 0 THEN 1 ELSE 0 END for x in e] AS bits FROM v),
        q AS (SELECT vec_id AS query_id, bits AS qb FROM b WHERE vec_id % 25 = 0),
        ham AS (
@@ -5103,16 +4172,11 @@ object SparkEntry {
            FROM ham) WHERE rn <= 40),
        scored AS (
          SELECT c.query_id, c.corpus_id,
-           list_sum([qv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]) /
-             (sqrt(list_sum([qv.e[i] * qv.e[i] for i in range(1, len(qv.e)+1)])) *
-              sqrt(list_sum([cv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]))) AS sim
+           ${cosine("qv.e", "cv.e")} AS sim
          FROM cand c
          JOIN v cv ON c.corpus_id = cv.vec_id
          JOIN v qv ON c.query_id = qv.vec_id)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q113 — temperature-weighted corpus assembly (extension:
@@ -5132,7 +4196,7 @@ object SparkEntry {
       .select("doc_id", "lang", "copy_idx")
 
   private val q113Sql =
-    """WITH counts AS (
+    raw"""WITH counts AS (
          SELECT lang AS g, CAST(COUNT(*) AS HUGEINT) AS n
          FROM documents WHERE lang IS NOT NULL GROUP BY lang),
        w AS (SELECT g, n,
@@ -5146,7 +4210,7 @@ object SparkEntry {
          FROM w CROSS JOIN tot),
        rh AS (
          SELECT d.doc_id, d.lang, p.copies, p.thresh,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR) || ':tmix'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) AS h
+           ${md5Bigint("CAST(d.doc_id AS VARCHAR) || ':tmix'", 13)} AS h
          FROM documents d JOIN plan p ON d.lang = p.g),
        tt AS (
          SELECT doc_id, lang,
@@ -5168,34 +4232,15 @@ object SparkEntry {
       approx = q27(s, dir), exact = q26(s, dir), k = 10)
 
   private val q114Sql =
-    """WITH planes AS (
-         SELECT t.t, p.p, d.d,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5('t' || t.t || ':p' || p.p || ':d' || d.d), j, 1)) - 1) * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)]) AS BIGINT) - 2147483648 AS w
-         FROM (SELECT range AS t FROM range(0,2)) t
-         CROSS JOIN (SELECT range AS p FROM range(0,8)) p
-         CROSS JOIN (SELECT range AS d FROM range(0,64)) d),
-       vx AS (
-         SELECT vec_id, dd.d,
-           CAST(round(CAST(embedding[dd.d + 1] AS DOUBLE) * 1048576) AS BIGINT) AS xi
-         FROM embeddings CROSS JOIN (SELECT range AS d FROM range(0,64)) dd),
-       proj AS (
-         SELECT vec_id, pl.t, pl.p, SUM(vx.xi * pl.w) AS s
-         FROM vx JOIN planes pl ON vx.d = pl.d
-         GROUP BY vec_id, pl.t, pl.p),
-       sigs AS (
-         SELECT vec_id, t,
-           CAST(t AS VARCHAR) || '|' || string_agg(CASE WHEN s >= 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-         FROM proj GROUP BY vec_id, t),
-       v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${srpBuckets(2, 8)},
+       ${embeddingVecs()},
        lcands AS (
          SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS corpus_id
          FROM sigs q JOIN sigs c ON q.bucket = c.bucket
          WHERE q.vec_id % 25 = 0 AND q.vec_id <> c.vec_id),
        lscored AS (
          SELECT query_id, corpus_id,
-           list_sum([qv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]) /
-             (sqrt(list_sum([qv.e[i] * qv.e[i] for i in range(1, len(qv.e)+1)])) *
-              sqrt(list_sum([cv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]))) AS sim
+           ${cosine("qv.e", "cv.e")} AS sim
          FROM lcands JOIN v qv ON query_id = qv.vec_id JOIN v cv ON corpus_id = cv.vec_id),
        approxk AS (
          SELECT query_id, corpus_id FROM (
@@ -5204,9 +4249,7 @@ object SparkEntry {
        qv2 AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        bscored AS (
          SELECT query_id, vec_id AS corpus_id,
-           list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-             (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-              sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) AS sim
+           ${cosine("qe", "e")} AS sim
          FROM qv2 CROSS JOIN v WHERE query_id <> vec_id),
        exactk AS (
          SELECT query_id, corpus_id FROM (
@@ -5238,19 +4281,14 @@ object SparkEntry {
   }
 
   private val q115Sql =
-    """WITH v AS (SELECT vec_id, label, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH v AS (SELECT vec_id, label, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
        q AS (SELECT vec_id AS query_id, label AS ql, e AS qe FROM v WHERE vec_id % 25 = 0),
        scored AS (
          SELECT query_id, vec_id AS corpus_id,
-           list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-             (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-              sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) AS sim
+           ${cosine("qe", "e")} AS sim
          FROM q CROSS JOIN v
          WHERE query_id <> vec_id AND label <> ql)
-       SELECT query_id, corpus_id, sim, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY sim DESC, corpus_id ASC) AS rank
-         FROM scored) WHERE rank <= 10"""
+       ${topBySim(10)}"""
 
   // ------------------------------------------------------------------
   // q116 — kNN label agreement (extension: Similarity.labelAgreement):
@@ -5271,13 +4309,11 @@ object SparkEntry {
   }
 
   private val q116Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        scored AS (
          SELECT query_id, vec_id AS corpus_id,
-           list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-             (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-              sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) AS sim
+           ${cosine("qe", "e")} AS sim
          FROM q CROSS JOIN v WHERE query_id <> vec_id),
        nb AS (
          SELECT query_id, corpus_id FROM (
@@ -5312,22 +4348,8 @@ object SparkEntry {
       charsHint = docChars(s, dir))
 
   private val q117Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       hdocs AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       posting AS (SELECT id, unnest(vms) AS sh FROM hdocs),
-       rare AS (SELECT sh FROM posting GROUP BY sh HAVING COUNT(*) <= 100),
-       fp AS (SELECT id, p.sh FROM posting p JOIN rare r ON p.sh = r.sh),
-       sizes AS (SELECT id, COUNT(*) AS nsh FROM fp GROUP BY id),
-       common AS (
-         SELECT a.id AS id1, b.id AS id2, COUNT(*) AS common
-         FROM fp a JOIN fp b ON a.sh = b.sh AND a.id < b.id
-         GROUP BY a.id, b.id)
+    raw"""WITH ${shingleDocs(8)},
+       ${rareShingleOverlap(100)}
        SELECT id1, id2,
          CAST(common AS DOUBLE) / least(s1.nsh, s2.nsh) AS containment,
          CAST(s1.nsh AS BIGINT) AS n1, CAST(s2.nsh AS BIGINT) AS n2
@@ -5469,47 +4491,16 @@ object SparkEntry {
   }
 
   private val q120Sql =
-    """WITH u AS (
+    raw"""WITH u AS (
          SELECT doc_id, n_chars,
-           'HTTP://' ||
-           CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END ||
-           source || '.Example.COM' ||
-           CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE '' END ||
-           '/Docs/' || CAST(doc_id % 56 AS VARCHAR) ||
-           CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END ||
-           '?utm_source=feed&b=2&a=1' ||
-           CASE WHEN doc_id % 5 = 0 THEN '&utm_campaign=x' ELSE '' END ||
-           CASE WHEN doc_id % 7 = 0 THEN '#sec-2' ELSE '' END AS url
+           ${syntheticUrl} AS url
          FROM documents),
-       p AS (
-         SELECT doc_id, n_chars,
-           lower(regexp_extract(trim(url),
-             '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-           regexp_replace(trim(url),
-             '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest
-         FROM u),
-       h AS (
-         SELECT doc_id, n_chars, scheme,
-           regexp_replace(lower(regexp_extract(rest, '^([^/?#]*)', 1)),
-             '^www\.', '') AS hp,
-           regexp_replace(regexp_replace(rest, '^[^/?#]*', ''),
-             '#.*$', '') AS pq
-         FROM p),
+       ${urlParts("doc_id, n_chars")},
        c AS (
          SELECT doc_id, n_chars,
-           scheme || '://' ||
-           CASE WHEN scheme = 'http' THEN regexp_replace(hp, ':80$', '')
-                WHEN scheme = 'https' THEN regexp_replace(hp, ':443$', '')
-                ELSE hp END ||
-           regexp_replace(regexp_extract(pq, '^([^?]*)', 1), '/+$', '') ||
-           CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS curl
+           ${canonicalUrl} AS curl
          FROM (
-           SELECT *, array_to_string(list_sort(list_filter(
-               string_split(regexp_extract(pq, '\?(.*)$', 1), '&'),
-               x -> x <> '' AND NOT regexp_matches(x,
-                 '^(utm_[^=]*|fbclid|gclid|msclkid|ref)(=|$)'))),
-             '&') AS qs
-           FROM h)),
+           ${urlQuery})),
        r AS (
          SELECT curl, doc_id, n_chars,
            ROW_NUMBER() OVER (PARTITION BY curl
@@ -5535,40 +4526,15 @@ object SparkEntry {
       .withColumnRenamed("rank", "proto_rank")
 
   private val q121Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       fx AS (SELECT vec_id, e, [CAST(round(x * 1048576.0) AS BIGINT) for x in e] AS f FROM v),
-       seed AS (
-         SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS BIGINT) AS cent_id, e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       a1 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN seed s) WHERE r = 1),
-       u1 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a1),
-       s1 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u1 GROUP BY cent_id, i),
-       n1 AS (SELECT cent_id, COUNT(*) AS cnt FROM a1 GROUP BY cent_id),
-       m1 AS (SELECT s1.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s1 JOIN n1 USING (cent_id) GROUP BY s1.cent_id),
-       c1 AS (SELECT sd.cent_id, COALESCE(m1.ce, sd.ce) AS ce FROM seed sd LEFT JOIN m1 USING (cent_id)),
+    raw"""WITH ${embeddingVecs()},
+       ${fixedPointVecs},
+       ${md5Seeds(8)},
+       ${lloydStep(1, "seed")},
        asg AS (
-         SELECT vec_id, e, cent_id FROM (
-           SELECT v.vec_id, v.e, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
-           FROM v CROSS JOIN c1 c) WHERE r = 1),
+         ${nearestCentroids("v", "vec_id", "e", "c1")}),
        proto AS (
          SELECT a.vec_id, a.cent_id AS cell,
-           list_sum([a.e[i] * c.ce[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-              sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) AS sim
+           ${cosine64("a.e", "c.ce")} AS sim
          FROM asg a JOIN c1 c ON a.cent_id = c.cent_id),
        r AS (
          SELECT vec_id, cell, sim,
@@ -5610,18 +4576,18 @@ object SparkEntry {
   }
 
   private val q122Sql =
-    """WITH base AS (
+    raw"""WITH base AS (
          SELECT doc_id, lang, text,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk
+           ${wsTokens("text")} AS tk
          FROM documents),
        m AS (
          SELECT doc_id, lang,
            len(tk) AS n_tokens,
            CASE WHEN len(text) > 0 THEN
-             CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
+             ${punctRatio}
              ELSE 0.0 END AS punct_ratio,
            CASE WHEN len(tk) > 0 THEN
-             CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
+             ${stopwordRatio}
              ELSE 0.0 END AS stopword_ratio,
            len(text) AS n_chars
          FROM base),
@@ -5675,48 +4641,17 @@ object SparkEntry {
   }
 
   private val q123Sql =
-    """WITH u AS (
+    raw"""WITH u AS (
          SELECT doc_id, text,
-           'HTTP://' ||
-           CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END ||
-           source || '.Example.COM' ||
-           CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE '' END ||
-           '/Docs/' || CAST(doc_id % 56 AS VARCHAR) ||
-           CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END ||
-           '?utm_source=feed&b=2&a=1' ||
-           CASE WHEN doc_id % 5 = 0 THEN '&utm_campaign=x' ELSE '' END ||
-           CASE WHEN doc_id % 7 = 0 THEN '#sec-2' ELSE '' END AS url
+           ${syntheticUrl} AS url
          FROM documents),
-       p AS (
-         SELECT doc_id, text,
-           lower(regexp_extract(trim(url),
-             '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-           regexp_replace(trim(url),
-             '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest
-         FROM u),
-       h AS (
-         SELECT doc_id, text, scheme,
-           regexp_replace(lower(regexp_extract(rest, '^([^/?#]*)', 1)),
-             '^www\.', '') AS hp,
-           regexp_replace(regexp_replace(rest, '^[^/?#]*', ''),
-             '#.*$', '') AS pq
-         FROM p),
+       ${urlParts("doc_id, text")},
        c AS (
          SELECT doc_id,
-           scheme || '://' ||
-           CASE WHEN scheme = 'http' THEN regexp_replace(hp, ':80$', '')
-                WHEN scheme = 'https' THEN regexp_replace(hp, ':443$', '')
-                ELSE hp END ||
-           regexp_replace(regexp_extract(pq, '^([^?]*)', 1), '/+$', '') ||
-           CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS curl,
+           ${canonicalUrl} AS curl,
            md5(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS fp
          FROM (
-           SELECT *, array_to_string(list_sort(list_filter(
-               string_split(regexp_extract(pq, '\?(.*)$', 1), '&'),
-               x -> x <> '' AND NOT regexp_matches(x,
-                 '^(utm_[^=]*|fbclid|gclid|msclkid|ref)(=|$)'))),
-             '&') AS qs
-           FROM h))
+           ${urlQuery}))
        SELECT i.doc_id, i.curl, i.fp
        FROM c i
        WHERE i.doc_id % 3 = 2
@@ -5739,10 +4674,9 @@ object SparkEntry {
       .withColumnRenamed("id", "doc_id")
 
   private val q124Sql =
-    """WITH t AS (
+    raw"""WITH t AS (
          SELECT doc_id,
-           CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS BIGINT) AS w,
+           CAST(len(${wsTokens("text")}) AS BIGINT) AS w,
            md5(CAST(doc_id AS VARCHAR) || ':s124') || ':' ||
              CAST(doc_id AS VARCHAR) AS ord
          FROM documents),
@@ -5783,58 +4717,20 @@ object SparkEntry {
   }
 
   private val q125Sql =
-    """WITH RECURSIVE docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
-       based AS (
-         SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
-         FROM docs),
-       sigs AS (
-         SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
-         FROM based),
-       bands AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigs CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       ok_buckets AS (
-         SELECT bucket FROM bands GROUP BY bucket HAVING COUNT(*) <= 1000),
-       cand AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN ok_buckets c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bands GROUP BY bucket HAVING COUNT(*) > 1000),
+    raw"""WITH RECURSIVE ${minhashBands(8, 12, 3)},
+       ${cappedPairs("cand", 1000)},
        verified AS (
          SELECT id1, id2
          FROM cand JOIN sigs d1 ON id1 = d1.id JOIN sigs d2 ON id2 = d2.id
-         WHERE CAST(len(list_intersect(d1.vms, d2.vms)) AS DOUBLE) /
-           (len(d1.vms) + len(d2.vms) - len(list_intersect(d1.vms, d2.vms))) >= 0.3),
-       edges AS (
-         SELECT id1 AS a, id2 AS b FROM verified
-         UNION SELECT id2, id1 FROM verified),
-       reach(a, b) AS (
-         SELECT a, b FROM edges
-         UNION
-         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       comp AS (
-         SELECT a AS id, LEAST(a, MIN(b)) AS component
-         FROM reach GROUP BY a),
+         WHERE ${jaccard} >= 0.3),
+       ${components},
        qtk AS (
          SELECT doc_id AS id,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk,
+           ${wsTokens("text")} AS tk,
            text FROM documents),
        qual AS (
          SELECT id,
-           least(CAST(len(text) AS DOUBLE) / 500.0, 1.0) * 0.4
-             + greatest(1.0 - (CASE WHEN len(text) > 0 THEN
-                 CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
-                 ELSE 0.0 END) * 4, 0.0) * 0.3
-             + least((CASE WHEN len(tk) > 0 THEN
-                 CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
-                 ELSE 0.0 END) * 5, 1.0) * 0.3 AS q
+           ${qualityScore} AS q
          FROM qtk),
        members AS (
          SELECT c.id, c.component, q.q FROM comp c JOIN qual q USING (id)),
@@ -5880,14 +4776,14 @@ object SparkEntry {
   }
 
   private val q126Sql =
-    """WITH s0 AS (
+    raw"""WITH s0 AS (
          SELECT doc_id, lang,
            replace(replace(text, ' line ', chr(10) || '- line '),
                    ' batch ', '...' || chr(10) || ' batch ') AS d
          FROM documents),
        m AS (
          SELECT doc_id, lang, d,
-           list_filter(regexp_split_to_array(d, '\s+'), x -> x <> '') AS ws,
+           ${wsTokens("d")} AS ws,
            string_split(d, chr(10)) AS lines
          FROM s0),
        r AS (
@@ -5940,7 +4836,7 @@ object SparkEntry {
       .select("doc_id", "lang", "copy_idx")
 
   private val q127Sql =
-    """WITH RECURSIVE counts AS (
+    raw"""WITH RECURSIVE counts AS (
          SELECT lang AS g, CAST(COUNT(*) AS HUGEINT) AS n
          FROM documents WHERE lang IS NOT NULL GROUP BY lang),
        ord AS (
@@ -5964,7 +4860,7 @@ object SparkEntry {
          FROM rec WHERE g IS NOT NULL),
        rh AS (
          SELECT d.doc_id, d.lang, p.copies, p.thresh,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR) || ':unimax'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) AS h
+           ${md5Bigint("CAST(d.doc_id AS VARCHAR) || ':unimax'", 13)} AS h
          FROM documents d JOIN plan p ON d.lang = p.g),
        tt AS (
          SELECT doc_id, lang,
@@ -6093,25 +4989,11 @@ object SparkEntry {
   }
 
   private val q130Sql =
-    """WITH pos AS (
-         SELECT doc_id,
-           unnest(range(1, len(text)-24+2)) AS pos,
-           unnest([md5(substr(text, i, 24))
-                   for i in range(1, len(text)-24+2)]) AS h
-         FROM documents WHERE len(text) >= 24),
+    raw"""WITH ${windowHashes(24)},
        dup AS (SELECT h FROM pos GROUP BY h HAVING count(*) > 1),
        dp AS (SELECT doc_id, pos FROM pos
               WHERE h IN (SELECT h FROM dup)),
-       b AS (SELECT doc_id, pos,
-               CASE WHEN pos > coalesce(max(pos + 23) OVER (
-                      PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND 1 PRECEDING) + 1, 0)
-                    THEN 1 ELSE 0 END AS brk
-             FROM dp),
-       sp AS (SELECT doc_id, pos,
-                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS sid
-              FROM b),
+       ${windowSpans(24)},
        spans AS (
          SELECT doc_id,
            CAST(max(pos) + 24 - min(pos) AS BIGINT) AS span_len
@@ -6158,15 +5040,14 @@ object SparkEntry {
   }
 
   private val q131Sql =
-    """SELECT lang, COUNT(*) AS n_docs,
+    raw"""SELECT lang, COUNT(*) AS n_docs,
          CAST(SUM(nw) AS BIGINT) AS n_words,
          CAST(SUM(nt) AS BIGINT) AS n_subtokens,
          CAST(CASE WHEN SUM(nw) > 0
            THEN (SUM(nt) * 10000) // SUM(nw) ELSE 0 END AS BIGINT)
            AS fertility_bp
        FROM (SELECT lang,
-               len(list_filter(regexp_split_to_array(d, '\s+'),
-                 x -> x <> '')) AS nw,
+               len(${wsTokens("d")}) AS nw,
                len(regexp_extract_all(d,
                  '[A-Za-z0-9]+|[^A-Za-z0-9 \t\n\r]')) AS nt
              FROM (SELECT lang,
@@ -6198,15 +5079,13 @@ object SparkEntry {
   }
 
   private val q132Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        ex AS (
          SELECT query_id, corpus_id FROM (
            SELECT query_id, vec_id AS corpus_id,
              ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY
-               list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-                 (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-                  sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) DESC,
+               ${cosine("qe", "e")} DESC,
                vec_id ASC) AS rank
            FROM q CROSS JOIN v WHERE query_id <> vec_id) WHERE rank <= 10),
        vt AS (SELECT vec_id, e[1:16] AS e FROM v),
@@ -6253,18 +5132,14 @@ object SparkEntry {
   }
 
   private val q133Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e
+    raw"""WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e
          FROM embeddings WHERE vec_id % 5 = 0),
        nn AS (
          SELECT query_id, corpus_id, sim FROM (
            SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-             list_sum([q.e[i] * c.e[i] for i in range(1, len(c.e)+1)]) /
-               (sqrt(list_sum([q.e[i] * q.e[i] for i in range(1, len(q.e)+1)])) *
-                sqrt(list_sum([c.e[i] * c.e[i] for i in range(1, len(c.e)+1)]))) AS sim,
+             ${cosine("q.e", "c.e")} AS sim,
              ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-               list_sum([q.e[i] * c.e[i] for i in range(1, len(c.e)+1)]) /
-                 (sqrt(list_sum([q.e[i] * q.e[i] for i in range(1, len(q.e)+1)])) *
-                  sqrt(list_sum([c.e[i] * c.e[i] for i in range(1, len(c.e)+1)]))) DESC,
+               ${cosine("q.e", "c.e")} DESC,
                c.vec_id ASC) AS rank
            FROM v q CROSS JOIN v c WHERE q.vec_id <> c.vec_id)
          WHERE rank <= 8),
@@ -6315,9 +5190,9 @@ object SparkEntry {
   }
 
   private val q134Sql =
-    """WITH tk AS (
+    raw"""WITH tk AS (
          SELECT source,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ws
+           ${wsTokens("text")} AS ws
          FROM documents),
        g AS (
          SELECT source,
@@ -6357,7 +5232,7 @@ object SparkEntry {
   }
 
   private val q135Sql =
-    """WITH s0 AS (
+    raw"""WITH s0 AS (
          SELECT doc_id,
            replace(replace(text, ' sort ', '.' || chr(10) || ' sort '),
                    ' query ', ' javascript query ')
@@ -6369,8 +5244,7 @@ object SparkEntry {
          SELECT doc_id, d,
            CAST(len(lines) AS BIGINT) AS n_lines,
            list_filter(lines, l ->
-             len(list_filter(regexp_split_to_array(l, '\s+'),
-                             x -> x <> '')) >= 5
+             len(${wsTokens("l")}) >= 5
              AND (ends_with(rtrim(l), '.') OR ends_with(rtrim(l), '!')
                   OR ends_with(rtrim(l), '?') OR ends_with(rtrim(l), '"'))
              AND NOT contains(lower(l), 'javascript')) AS kept
@@ -6413,11 +5287,11 @@ object SparkEntry {
       Text.wordShingles(Text.tokens(col("text")), 3), buckets = 10)
 
   private val q136Sql =
-    """WITH b AS (
+    raw"""WITH b AS (
          SELECT min(doc_id) AS lo, max(doc_id) + 1 AS hi FROM documents),
        tk AS (
          SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ws
+           ${wsTokens("text")} AS ws
          FROM documents),
        g AS (
          SELECT doc_id,
@@ -6461,20 +5335,14 @@ object SparkEntry {
         col("n_group").as("n_source"))
 
   private val q137Sql =
-    """WITH qtk AS (
+    raw"""WITH qtk AS (
          SELECT doc_id, source,
-           list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk,
+           ${wsTokens("text")} AS tk,
            text
          FROM documents),
        qual AS (
          SELECT doc_id, source,
-           least(CAST(len(text) AS DOUBLE) / 500.0, 1.0) * 0.4
-             + greatest(1.0 - (CASE WHEN len(text) > 0 THEN
-                 CAST(len(text) - len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / CAST(len(text) AS DOUBLE)
-                 ELSE 0.0 END) * 4, 0.0) * 0.3
-             + least((CASE WHEN len(tk) > 0 THEN
-                 CAST(len(list_filter(tk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS DOUBLE) / CAST(len(tk) AS DOUBLE)
-                 ELSE 0.0 END) * 5, 1.0) * 0.3 AS q
+           ${qualityScore} AS q
          FROM qtk),
        ranked AS (
          SELECT source, doc_id,
@@ -6503,38 +5371,18 @@ object SparkEntry {
       .withColumnRenamed("id", "vec_id")
 
   private val q138Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       fx AS (SELECT vec_id, e, [CAST(round(x * 1048576.0) AS BIGINT) for x in e] AS f FROM v),
-       seed AS (
-         SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS BIGINT) AS cent_id, e AS ce
-         FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       a1 AS (
-         SELECT vec_id, f, cent_id FROM (
-           SELECT fx.vec_id, fx.f, s.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY fx.vec_id ORDER BY
-               list_sum([fx.e[i] * s.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([fx.e[i] * fx.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([s.ce[i] * s.ce[i] for i in range(1, 65)]))) DESC,
-               s.cent_id ASC) AS r
-           FROM fx CROSS JOIN seed s) WHERE r = 1),
-       u1 AS (SELECT cent_id, unnest(f) AS xf, unnest(range(1, 65)) AS i FROM a1),
-       s1 AS (SELECT cent_id, i, SUM(xf) AS sf FROM u1 GROUP BY cent_id, i),
-       n1 AS (SELECT cent_id, COUNT(*) AS cnt FROM a1 GROUP BY cent_id),
-       m1 AS (SELECT s1.cent_id, list(CAST(sf AS DOUBLE) / cnt / 1048576.0 ORDER BY i) AS ce
-              FROM s1 JOIN n1 USING (cent_id) GROUP BY s1.cent_id),
-       c1 AS (SELECT sd.cent_id, COALESCE(m1.ce, sd.ce) AS ce FROM seed sd LEFT JOIN m1 USING (cent_id)),
+    raw"""WITH ${embeddingVecs()},
+       ${fixedPointVecs},
+       ${md5Seeds(8)},
+       ${lloydStep(1, "seed")},
        asg AS (
          SELECT vec_id, cent_id FROM (
            SELECT v.vec_id, c.cent_id,
-             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-               list_sum([v.e[i] * c.ce[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([c.ce[i] * c.ce[i] for i in range(1, 65)]))) DESC,
-               c.cent_id ASC) AS r
+             ${centroidRank("v.vec_id", "v.e", "c")}
            FROM v CROSS JOIN c1 c) WHERE r = 1),
        h AS (
          SELECT vec_id, cent_id AS cell,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR) || ':cbs'), j, 1)) - 1) * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)]) AS BIGINT) AS hh
+           ${md5Bigint("CAST(vec_id AS VARCHAR) || ':cbs'", 13)} AS hh
          FROM asg),
        r AS (
          SELECT cell, vec_id,
@@ -6560,30 +5408,22 @@ object SparkEntry {
     graft.dedup.Dedup.gradePairs(pred = q18(s, dir), truth = q19(s, dir))
 
   private val q139Sql =
-    """WITH docsA AS (
+    raw"""WITH docsA AS (
          SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8) for i in range(1, len(text)-8+2)]) AS shingles
+           ${shingles("text", 8)} AS shingles
          FROM documents WHERE len(text) >= 8),
        basedA AS (
          SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
+           ${hashSet("shingles")} AS vms
          FROM docsA),
        sigsA AS (
          SELECT id, vms,
-           [list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, 12)] AS sig
+           ${minhashSig(12)} AS sig
          FROM basedA),
        bandsA AS (
-         SELECT id, CAST(b AS VARCHAR) || '|' || array_to_string(sig[b*4+1 : b*4+4], ',') AS bucket
-         FROM sigsA CROSS JOIN (VALUES (0),(1),(2)) AS t(b)),
-       okA AS (
-         SELECT bucket FROM bandsA GROUP BY bucket HAVING COUNT(*) <= 1000),
-       pairsA AS (
-         SELECT a.id AS id1, b.id AS id2
-         FROM bandsA a JOIN bandsA b ON a.bucket = b.bucket AND a.id < b.id
-         JOIN okA c ON a.bucket = c.bucket
-         UNION
-         SELECT min(id) AS id1, max(id) AS id2
-         FROM bandsA GROUP BY bucket HAVING COUNT(*) > 1000),
+         SELECT id, ${bandKey(4)} AS bucket
+         FROM sigsA CROSS JOIN ${bandIds(3)}),
+       ${cappedPairs("pairsA", 1000, buckets = "bandsA", ok = "okA")},
        predp AS (
          SELECT DISTINCT id1, id2 FROM (
            SELECT id1, id2,
@@ -6633,13 +5473,11 @@ object SparkEntry {
       select = 4, lambdaEighths = 4)
 
   private val q140Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        scored AS (
          SELECT query_id, vec_id AS corpus_id,
-           list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-             (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-              sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) AS sim
+           ${cosine("qe", "e")} AS sim
          FROM q CROSS JOIN v WHERE query_id <> vec_id),
        topk AS (
          SELECT query_id, corpus_id, sim FROM (
@@ -6738,13 +5576,11 @@ object SparkEntry {
   }
 
   private val q141Sql =
-    """WITH RECURSIVE tkA AS (
-         SELECT list_filter(regexp_split_to_array(text, '\s+'),
-           x -> x <> '') AS ws
+    raw"""WITH RECURSIVE tkA AS (
+         SELECT ${wsTokens("text")} AS ws
          FROM documents WHERE lang = 'en'),
        tkB AS (
-         SELECT list_filter(regexp_split_to_array(text, '\s+'),
-           x -> x <> '') AS ws
+         SELECT ${wsTokens("text")} AS ws
          FROM documents WHERE lang <> 'en'),
        toksA AS (
          SELECT unnest([ws[i] || ' ' || ws[i+1]
@@ -6767,20 +5603,7 @@ object SparkEntry {
          UNION SELECT DISTINCT b_cnt + 1 FROM j
          UNION SELECT na + v FROM tot
          UNION SELECT nb + v FROM tot),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        scored AS (
          SELECT j.unit, j.a_cnt, j.b_cnt,
            (j.a_cnt + 1) * (la.fx - lda.fx - lb.fx + ldb.fx) AS contrib_fx
@@ -6824,31 +5647,11 @@ object SparkEntry {
   }
 
   private val q142Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+           unnest(${wsTokens("text")}) AS t
          FROM documents),
-       tc AS (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY 1, 2),
-       nd AS (SELECT doc_id, sum(c) AS n FROM tc GROUP BY 1),
-       vals(v) AS (
-         SELECT DISTINCT c FROM tc UNION SELECT DISTINCT n FROM nd),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
-       sc AS (SELECT tc.doc_id, sum(tc.c * lgf.fx) AS s
-              FROM tc JOIN lgf ON lgf.v = tc.c GROUP BY 1),
+       ${tokenLogCounts},
        e AS (SELECT nd.doc_id, lgf.fx - (sc.s // nd.n) AS entropy_fx
              FROM nd JOIN lgf ON lgf.v = nd.n JOIN sc USING (doc_id)),
        scores AS (
@@ -6886,13 +5689,9 @@ object SparkEntry {
       .withColumn("moved", col("shard_a") =!= col("shard_b"))
 
   private val q143Sql =
-    """WITH sc AS (
+    raw"""WITH sc AS (
          SELECT doc_id, s.s AS s,
-           CAST(list_sum([(strpos('0123456789abcdef',
-             substr(md5(CAST(doc_id AS VARCHAR) || '#' ||
-               CAST(s.s AS VARCHAR) || ':rdv'), j, 1)) - 1)
-             * CAST(pow(16, 13 - j) AS BIGINT)
-             for j in range(1, 14)]) AS BIGINT) AS h
+           ${md5Bigint("CAST(doc_id AS VARCHAR) || '#' || CAST(s.s AS VARCHAR) || ':rdv'", 13)} AS h
          FROM documents CROSS JOIN (SELECT unnest(range(0, 11)) AS s) s),
        a AS (
          SELECT doc_id, s FROM (
@@ -6929,31 +5728,11 @@ object SparkEntry {
   }
 
   private val q144Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+           unnest(${wsTokens("text")}) AS t
          FROM documents),
-       tc AS (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY 1, 2),
-       nd AS (SELECT doc_id, sum(c) AS n FROM tc GROUP BY 1),
-       vals(v) AS (
-         SELECT DISTINCT c FROM tc UNION SELECT DISTINCT n FROM nd),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
-       sc AS (SELECT tc.doc_id, sum(tc.c * lgf.fx) AS s
-              FROM tc JOIN lgf ON lgf.v = tc.c GROUP BY 1),
+       ${tokenLogCounts},
        e AS (SELECT nd.doc_id, lgf.fx - (sc.s // nd.n) AS entropy_fx
              FROM nd JOIN lgf ON lgf.v = nd.n JOIN sc USING (doc_id)),
        jd AS (
@@ -6988,12 +5767,9 @@ object SparkEntry {
       .withColumnRenamed("id", "doc_id")
 
   private val q145Sql =
-    """WITH RECURSIVE d AS (
+    raw"""WITH RECURSIVE d AS (
          SELECT doc_id, CAST(coalesce(n_chars, 0) AS BIGINT) AS tok,
-           CAST(list_sum([(strpos('0123456789abcdef',
-             substr(md5(CAST(doc_id AS VARCHAR) || ':ffd'), j, 1)) - 1)
-             * CAST(pow(16, 13 - j) AS BIGINT)
-             for j in range(1, 14)]) % 4 AS BIGINT) AS segment
+           ${md5Bigint("CAST(doc_id AS VARCHAR) || ':ffd'", 13, 4)} AS segment
          FROM documents),
        o AS (
          SELECT *, ROW_NUMBER() OVER (PARTITION BY segment
@@ -7117,7 +5893,7 @@ object SparkEntry {
   }
 
   private val q147Sql =
-    """WITH pairs AS (
+    raw"""WITH pairs AS (
          SELECT DISTINCT l_partkey AS p, 10000000 + l_suppkey AS s
          FROM lineitem),
        e AS (SELECT p AS u, s AS v FROM pairs
@@ -7129,30 +5905,7 @@ object SparkEntry {
        deg AS (SELECT u, count(*) AS d FROM e GROUP BY 1),
        r0 AS (SELECT id, CASE WHEN seed THEN 1048576 // m ELSE 0 END AS r
               FROM nodes, mm),
-       c1 AS (SELECT e.v AS id, sum(r0.r // deg.d) AS cs
-              FROM e JOIN r0 ON e.u = r0.id
-              JOIN deg ON deg.u = e.u GROUP BY 1),
-       r1 AS (SELECT nodes.id,
-                (CASE WHEN nodes.seed
-                      THEN 15 * 1048576 // (100 * mm.m) ELSE 0 END)
-                  + (85 * coalesce(c1.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c1 ON nodes.id = c1.id, mm),
-       c2 AS (SELECT e.v AS id, sum(r1.r // deg.d) AS cs
-              FROM e JOIN r1 ON e.u = r1.id
-              JOIN deg ON deg.u = e.u GROUP BY 1),
-       r2 AS (SELECT nodes.id,
-                (CASE WHEN nodes.seed
-                      THEN 15 * 1048576 // (100 * mm.m) ELSE 0 END)
-                  + (85 * coalesce(c2.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c2 ON nodes.id = c2.id, mm),
-       c3 AS (SELECT e.v AS id, sum(r2.r // deg.d) AS cs
-              FROM e JOIN r2 ON e.u = r2.id
-              JOIN deg ON deg.u = e.u GROUP BY 1),
-       r3 AS (SELECT nodes.id,
-                (CASE WHEN nodes.seed
-                      THEN 15 * 1048576 // (100 * mm.m) ELSE 0 END)
-                  + (85 * coalesce(c3.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c3 ON nodes.id = c3.id, mm)
+       ${pageRankRounds(3, "(CASE WHEN nodes.seed THEN 15 * 1048576 // (100 * mm.m) ELSE 0 END)", ctx = "mm")}
        SELECT id, CAST(r AS BIGINT) AS trust_fp FROM r3
        ORDER BY r DESC, id ASC LIMIT 20"""
 
@@ -7177,7 +5930,7 @@ object SparkEntry {
   }
 
   private val q148Sql =
-    """WITH pairs AS (
+    raw"""WITH pairs AS (
          SELECT DISTINCT l_partkey AS p, 10000000 + l_suppkey AS s
          FROM lineitem),
        e AS (SELECT DISTINCT u, v FROM (
@@ -7193,24 +5946,15 @@ object SparkEntry {
        w1 AS (
          SELECT s0.walk_id, adj.v AS node
          FROM s0 JOIN adj ON adj.u = s0.walk_id
-           AND adj.rk = 1 + (CAST(list_sum([(strpos('0123456789abcdef',
-             substr(md5(CAST(s0.walk_id AS VARCHAR) || '#1:rw'), j, 1)) - 1)
-             * CAST(pow(16, 13 - j) AS BIGINT)
-             for j in range(1, 14)]) AS BIGINT) % adj.d)),
+           AND adj.rk = 1 + (${md5Bigint("CAST(s0.walk_id AS VARCHAR) || '#1:rw'", 13)} % adj.d)),
        w2 AS (
          SELECT w1.walk_id, adj.v AS node
          FROM w1 JOIN adj ON adj.u = w1.node
-           AND adj.rk = 1 + (CAST(list_sum([(strpos('0123456789abcdef',
-             substr(md5(CAST(w1.walk_id AS VARCHAR) || '#2:rw'), j, 1)) - 1)
-             * CAST(pow(16, 13 - j) AS BIGINT)
-             for j in range(1, 14)]) AS BIGINT) % adj.d)),
+           AND adj.rk = 1 + (${md5Bigint("CAST(w1.walk_id AS VARCHAR) || '#2:rw'", 13)} % adj.d)),
        w3 AS (
          SELECT w2.walk_id, adj.v AS node
          FROM w2 JOIN adj ON adj.u = w2.node
-           AND adj.rk = 1 + (CAST(list_sum([(strpos('0123456789abcdef',
-             substr(md5(CAST(w2.walk_id AS VARCHAR) || '#3:rw'), j, 1)) - 1)
-             * CAST(pow(16, 13 - j) AS BIGINT)
-             for j in range(1, 14)]) AS BIGINT) % adj.d))
+           AND adj.rk = 1 + (${md5Bigint("CAST(w2.walk_id AS VARCHAR) || '#3:rw'", 13)} % adj.d))
        SELECT walk_id, CAST(0 AS BIGINT) AS step, walk_id AS node FROM s0
        UNION ALL SELECT walk_id, CAST(1 AS BIGINT), node FROM w1
        UNION ALL SELECT walk_id, CAST(2 AS BIGINT), node FROM w2
@@ -7292,7 +6036,7 @@ object SparkEntry {
   }
 
   private val q150Sql =
-    """WITH w AS (
+    raw"""WITH w AS (
          SELECT doc_id,
            list_filter(string_split_regex(
              coalesce(text, '') ||
@@ -7307,16 +6051,11 @@ object SparkEntry {
          FROM w WHERE len(ws) > 0),
        sc AS (
          SELECT doc_id,
-           len(list_filter(ctk, t -> list_contains(['the','of','and','to','in','a','is','that','it','for'], lower(t)))) AS en,
-           len(list_filter(ctk, t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'], lower(t)))) AS de,
-           len(list_filter(ctk, t -> list_contains(['le','la','les','de','et','est','un','une','dans','que'], lower(t)))) AS fr
+           ${langCounts("ctk")}
          FROM c),
        l AS (
          SELECT doc_id,
-           CASE WHEN en = 0 AND de = 0 AND fr = 0 THEN 'und'
-                WHEN en >= de AND en >= fr THEN 'en'
-                WHEN de >= fr THEN 'de'
-                ELSE 'fr' END AS pred
+           ${langGuess} AS pred
          FROM sc),
        g AS (SELECT doc_id, pred, count(*) AS c FROM l GROUP BY 1, 2),
        m AS (SELECT doc_id, sum(c) AS n_chunks FROM g GROUP BY 1),
@@ -7822,9 +6561,8 @@ object SparkEntry {
       window = 3, minCount = 20L, k = 100)
 
   private val q161Sql =
-    """WITH RECURSIVE toks AS (
-         SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-           x -> x <> '') AS tk
+    raw"""WITH RECURSIVE toks AS (
+         SELECT doc_id, ${wsTokens("text")} AS tk
          FROM documents),
        uni AS (SELECT u AS w, count(*) AS c FROM (
                  SELECT unnest(tk) AS u FROM toks) GROUP BY 1),
@@ -7842,20 +6580,7 @@ object SparkEntry {
        vals(v) AS (
          SELECT DISTINCT n FROM pr UNION SELECT DISTINCT c FROM uni
          UNION SELECT t_tot FROM tt UNION SELECT p_tot FROM pt),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        scored AS (
          SELECT pr.w1, pr.w2, pr.n,
            ln.fx + 2 * lt.fx - lp.fx - lx.fx - ly.fx AS pmi_fx
@@ -7991,13 +6716,9 @@ object SparkEntry {
       col("doc_id"), threshold = 100L)
 
   private val q165Sql =
-    """WITH m AS (
+    raw"""WITH m AS (
          SELECT doc_id,
-           [CAST(list_sum([(strpos('0123456789abcdef',
-                substr(md5(coalesce(substr(text, 1, 40), '') || ':' || i),
-                  j, 1)) - 1)
-              * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)])
-              AS BIGINT) % 1000
+           [${md5Bigint("coalesce(substr(text, 1, 40), '') || ':' || i", 8)} % 1000
             for i in range(0, 8)] AS k
          FROM documents),
        s AS (
@@ -8037,7 +6758,7 @@ object SparkEntry {
   }
 
   private val q166Sql =
-    """WITH li AS (
+    raw"""WITH li AS (
          SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
          WHERE l_orderkey % 5 = 0),
        wt AS (
@@ -8049,27 +6770,7 @@ object SparkEntry {
        nn AS (SELECT count(*) AS n FROM nodes),
        sw AS (SELECT u, sum(w) AS s FROM e GROUP BY 1),
        r0 AS (SELECT id, 1048576 // n AS r FROM nodes, nn),
-       c1 AS (SELECT e.v AS id, sum((r0.r * e.w) // sw.s) AS cs
-              FROM e JOIN r0 ON e.u = r0.id
-              JOIN sw ON sw.u = e.u GROUP BY 1),
-       r1 AS (SELECT nodes.id,
-                (15 * 1048576) // (100 * nn.n)
-                  + (85 * coalesce(c1.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c1 ON nodes.id = c1.id, nn),
-       c2 AS (SELECT e.v AS id, sum((r1.r * e.w) // sw.s) AS cs
-              FROM e JOIN r1 ON e.u = r1.id
-              JOIN sw ON sw.u = e.u GROUP BY 1),
-       r2 AS (SELECT nodes.id,
-                (15 * 1048576) // (100 * nn.n)
-                  + (85 * coalesce(c2.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c2 ON nodes.id = c2.id, nn),
-       c3 AS (SELECT e.v AS id, sum((r2.r * e.w) // sw.s) AS cs
-              FROM e JOIN r2 ON e.u = r2.id
-              JOIN sw ON sw.u = e.u GROUP BY 1),
-       r3 AS (SELECT nodes.id,
-                (15 * 1048576) // (100 * nn.n)
-                  + (85 * coalesce(c3.cs, 0)) // 100 AS r
-              FROM nodes LEFT JOIN c3 ON nodes.id = c3.id, nn)
+       ${pageRankRounds(3, "(15 * 1048576) // (100 * nn.n)", weighted = true)}
        SELECT id, CAST(r AS BIGINT) AS rank_fp FROM r3
        ORDER BY r DESC, id ASC LIMIT 20"""
 
@@ -8126,16 +6827,13 @@ object SparkEntry {
   }
 
   private val q168Sql =
-    """WITH vals AS (
+    raw"""WITH vals AS (
          SELECT DISTINCT date_trunc('day', ts) AS d,
            CAST(user_id AS VARCHAR) AS v
          FROM events WHERE user_id IS NOT NULL),
        h AS (
          SELECT d, v,
-           CAST(list_sum([(strpos('0123456789abcdef',
-                substr(md5(v || ':kmv'), j, 1)) - 1)
-              * CAST(pow(16, 13 - j) AS BIGINT) for j in range(1, 14)])
-              AS BIGINT) / 4503599627370496.0 AS u
+           ${md5Unit("v || ':kmv'")} AS u
          FROM vals),
        kept AS (
          SELECT d, u,
@@ -8171,7 +6869,7 @@ object SparkEntry {
   }
 
   private val q169Sql =
-    """WITH v AS (
+    raw"""WITH v AS (
          SELECT vec_id // 4 AS doc, vec_id % 4 AS pos,
            [CAST(x AS DOUBLE) for x in embedding] AS e
          FROM embeddings),
@@ -8179,9 +6877,7 @@ object SparkEntry {
              WHERE doc % 25 = 0),
        s AS (
          SELECT q.qd, q.qpos, v.doc AS cd,
-           list_sum([q.qe[i] * v.e[i] for i in range(1, 65)]) /
-             (sqrt(list_sum([q.qe[i] * q.qe[i] for i in range(1, 65)])) *
-              sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])))
+           ${cosine64("q.qe", "v.e")}
              AS sim
          FROM q CROSS JOIN v),
        m AS (
@@ -8490,14 +7186,10 @@ object SparkEntry {
       charsHint = docChars(s, dir))
 
   private val q176Sql =
-    """WITH docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8)
-             for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
+    raw"""WITH ${shingleDocs(8)},
        based AS (
          SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
+           ${hashSet("shingles")} AS vms
          FROM docs),
        grams AS (SELECT id, unnest(vms) AS g FROM based),
        dfs AS (SELECT g, count(*) AS df FROM grams GROUP BY 1)
@@ -8627,13 +7319,11 @@ object SparkEntry {
   }
 
   private val q179Sql =
-    """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    raw"""WITH ${embeddingVecs()},
        q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id % 25 = 0),
        bscored AS (
          SELECT query_id, vec_id AS corpus_id,
-           list_sum([qe[i] * e[i] for i in range(1, len(e)+1)]) /
-             (sqrt(list_sum([qe[i] * qe[i] for i in range(1, len(qe)+1)])) *
-              sqrt(list_sum([e[i] * e[i] for i in range(1, len(e)+1)]))) AS sim
+           ${cosine("qe", "e")} AS sim
          FROM q CROSS JOIN v WHERE query_id <> vec_id),
        brute AS (
          SELECT query_id, corpus_id, rank FROM (
@@ -8654,9 +7344,7 @@ object SparkEntry {
            FROM ham) WHERE rn <= 40),
        cscored AS (
          SELECT c.query_id, c.corpus_id,
-           list_sum([qv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]) /
-             (sqrt(list_sum([qv.e[i] * qv.e[i] for i in range(1, len(qv.e)+1)])) *
-              sqrt(list_sum([cv.e[i] * cv.e[i] for i in range(1, len(cv.e)+1)]))) AS sim
+           ${cosine("qv.e", "cv.e")} AS sim
          FROM cand c
          JOIN v cv ON c.corpus_id = cv.vec_id
          JOIN v qv ON c.query_id = qv.vec_id),
@@ -8705,12 +7393,12 @@ object SparkEntry {
              for i in range(1, len(tk)-$n+2)]) AS gram
          FROM toks WHERE len(tk) >= $n"""
     }.mkString(" UNION ALL ")
-    s"""WITH d0 AS (
+    raw"""WITH d0 AS (
          SELECT doc_id AS id, text, len(text) AS L FROM documents
          WHERE text IS NOT NULL AND len(text) > 0),
        toks AS (
          SELECT id, L,
-           list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
+           ${wsTokens("text")}
              AS tk
          FROM d0),
        tg AS ($arms),
@@ -8945,14 +7633,10 @@ object SparkEntry {
       charsHint = docChars(s, dir))
 
   private val q187Sql =
-    """WITH RECURSIVE docs AS (
-         SELECT doc_id AS id,
-           list_distinct([substr(text, i, 8)
-             for i in range(1, len(text)-8+2)]) AS shingles
-         FROM documents WHERE len(text) >= 8),
+    raw"""WITH RECURSIVE ${shingleDocs(8)},
        based AS (
          SELECT id,
-           list_distinct([CAST(list_sum([(strpos('0123456789abcdef', substr(md5(sh), j, 1)) - 1) * CAST(pow(16, 15 - j) AS BIGINT) for j in range(1, 16)]) % 1000000007 AS BIGINT) for sh in shingles]) AS vms
+           ${hashSet("shingles")} AS vms
          FROM docs),
        nq AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM based),
        grams AS (SELECT id, unnest(vms) AS g FROM based),
@@ -8961,20 +7645,7 @@ object SparkEntry {
          GROUP BY 1 HAVING count(*) <= 100),
        vals(v) AS (
          SELECT DISTINCT df FROM gdf UNION SELECT nn FROM nq),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        ln AS (SELECT fx AS lnfx FROM lgf JOIN nq ON lgf.v = nq.nn),
        wt AS (SELECT g, ln.lnfx - lgf.fx AS w
               FROM gdf JOIN lgf ON lgf.v = gdf.df, ln),
@@ -9013,7 +7684,7 @@ object SparkEntry {
       .withColumnRenamed("qid", "user_id")
 
   private val q188Sql =
-    """WITH RECURSIVE base AS (
+    raw"""WITH RECURSIVE base AS (
          SELECT user_id AS qid, event_id AS doc,
            CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS s,
            CAST(CASE event_type WHEN 'purchase' THEN 3
@@ -9023,20 +7694,7 @@ object SparkEntry {
          WHERE user_id IS NOT NULL AND event_id IS NOT NULL
            AND value IS NOT NULL),
        vals(v) AS (SELECT unnest(range(2, 12))),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        disc AS (SELECT v - 1 AS rnk,
                   (CAST(1 AS BIGINT) << 40) // fx AS d FROM lgf),
        ranked AS (
@@ -9123,7 +7781,7 @@ object SparkEntry {
   }
 
   private val q190Sql =
-    """WITH RECURSIVE sa AS (
+    raw"""WITH RECURSIVE sa AS (
          SELECT CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT)
            // 1000 AS bin, count(*) AS n_a
          FROM events WHERE event_type = 'click' AND value IS NOT NULL
@@ -9146,20 +7804,7 @@ object SparkEntry {
          FROM j, t),
        vals(v) AS (SELECT DISTINCT x FROM c UNION SELECT DISTINCT y
                    FROM c),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20)
+       ${ilog2Fx()}
        SELECT c.bin, CAST(c.bin * 1000 AS BIGINT) AS bin_lo,
          CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
          CAST(c.x - c.y AS BIGINT) AS delta,
@@ -9210,10 +7855,9 @@ object SparkEntry {
       minCount = 5L, k = 10)
 
   private val q192Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT source AS src,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS w
+           unnest(${wsTokens("text")}) AS w
          FROM documents WHERE source IS NOT NULL),
        sw AS (SELECT src, w, count(*) AS ysw FROM toks GROUP BY 1, 2),
        wt AS (SELECT w, sum(ysw) AS yw FROM sw GROUP BY 1),
@@ -9230,21 +7874,7 @@ object SparkEntry {
          SELECT DISTINCT a1 FROM j UNION SELECT DISTINCT b1 FROM j
          UNION SELECT DISTINCT a2 FROM j UNION SELECT DISTINCT b2
          FROM j),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT vv, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= vv
-                GROUP BY vv),
-       lg AS (
-         SELECT vv, ((vv << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT vv,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT vv, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.vv, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (vv) WHERE i = 20),
+       ${ilog2Fx(col = "vv")},
        scored AS (
          SELECT j.src, j.w AS term, j.ysw AS y_sw, j.yw AS y_w,
            (f1.fx - f2.fx) - (f3.fx - f4.fx) AS delta_fx
@@ -9274,16 +7904,8 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q193Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
-       r AS (
-         SELECT g, v,
-           ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn,
-           count(*) OVER (PARTITION BY g) AS n
-         FROM b),
+    raw"""WITH ${eventCents},
+       ${rankedCents},
        m AS (
          SELECT g, max(n) AS n,
            max(CASE WHEN rn <= (n + 1) // 2 THEN v END) AS med
@@ -9319,21 +7941,7 @@ object SparkEntry {
   }
 
   private val q194Sql =
-    """WITH va AS (
-         SELECT CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v,
-           count(*) AS na
-         FROM events WHERE event_type = 'click' AND value IS NOT NULL
-         GROUP BY 1),
-       vb AS (
-         SELECT CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v,
-           count(*) AS nb
-         FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-         GROUP BY 1),
-       j AS (
-         SELECT COALESCE(va.v, vb.v) AS v, COALESCE(na, 0) AS na,
-           COALESCE(nb, 0) AS nb
-         FROM va FULL OUTER JOIN vb ON va.v = vb.v),
-       t AS (SELECT sum(na) AS ta, sum(nb) AS tb FROM j),
+    raw"""WITH ${clickPurchaseCents},
        c AS (
          SELECT v, sum(na) OVER (ORDER BY v) AS ca,
            sum(nb) OVER (ORDER BY v) AS cb
@@ -9359,16 +7967,8 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q195Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
-       r AS (
-         SELECT g, v,
-           ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn,
-           count(*) OVER (PARTITION BY g) AS n
-         FROM b),
+    raw"""WITH ${eventCents},
+       ${rankedCents},
        k AS (SELECT g, v, rn, n, (n * 500) // 10000 AS lo FROM r),
        a AS (
          SELECT g, max(n) AS n,
@@ -9400,16 +8000,8 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q196Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
-       r AS (
-         SELECT g, v,
-           ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn,
-           count(*) OVER (PARTITION BY g) AS n
-         FROM b),
+    raw"""WITH ${eventCents},
+       ${rankedCents},
        q(q_bp) AS (VALUES (2500), (5000), (7500), (9900))
        SELECT g AS event_type, CAST(q_bp AS BIGINT) AS q_bp,
          CAST(n AS BIGINT) AS n, CAST(v AS BIGINT) AS value
@@ -9429,16 +8021,8 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q197Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
-       r AS (
-         SELECT g, v,
-           ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn,
-           count(*) OVER (PARTITION BY g) AS n
-         FROM b),
+    raw"""WITH ${eventCents},
+       ${rankedCents},
        k AS (SELECT g, v, rn, n, (n * 500) // 10000 AS lo FROM r),
        f AS (
          SELECT g, max(n) AS n, max(lo) AS lo,
@@ -9478,21 +8062,7 @@ object SparkEntry {
   }
 
   private val q198Sql =
-    """WITH va AS (
-         SELECT CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v,
-           count(*) AS na
-         FROM events WHERE event_type = 'click' AND value IS NOT NULL
-         GROUP BY 1),
-       vb AS (
-         SELECT CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v,
-           count(*) AS nb
-         FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-         GROUP BY 1),
-       j AS (
-         SELECT COALESCE(va.v, vb.v) AS v, COALESCE(na, 0) AS na,
-           COALESCE(nb, 0) AS nb
-         FROM va FULL OUTER JOIN vb ON va.v = vb.v),
-       t AS (SELECT sum(na) AS ta, sum(nb) AS tb FROM j),
+    raw"""WITH ${clickPurchaseCents},
        c AS (
          SELECT v, na, nb,
            sum(na) OVER (ORDER BY v) - na
@@ -9518,11 +8088,7 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q199Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
+    raw"""WITH ${eventCents},
        r AS (
          SELECT g, v,
            ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn
@@ -9547,16 +8113,8 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q200Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
-       r AS (
-         SELECT g, v,
-           ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn,
-           count(*) OVER (PARTITION BY g) AS n
-         FROM b),
+    raw"""WITH ${eventCents},
+       ${rankedCents},
        f AS (
          SELECT g, max(n) AS n,
            max(CASE WHEN rn = greatest(1, (n * 2500 + 9999) // 10000)
@@ -9638,10 +8196,9 @@ object SparkEntry {
       .withColumnRenamed("src", "source")
 
   private val q202Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT source AS src,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS w
+           unnest(${wsTokens("text")}) AS w
          FROM documents WHERE source IS NOT NULL),
        sw AS (SELECT src, w, count(*) AS freq FROM toks GROUP BY 1, 2
               HAVING count(*) >= 2),
@@ -9652,21 +8209,7 @@ object SparkEntry {
          FROM sw),
        vals(vv) AS (
          SELECT DISTINCT rk FROM r UNION SELECT DISTINCT freq FROM r),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT vv, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= vv
-                GROUP BY vv),
-       lg AS (
-         SELECT vv, ((vv << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT vv,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT vv, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.vv, (init.ipart * 1048576 + lg.acc) >> 10 AS fx
-               FROM lg JOIN init USING (vv) WHERE i = 20),
+       ${ilog2Fx(col = "vv", shift = 10)},
        xy AS (
          SELECT r.src, fx1.fx AS x, fx2.fx AS y
          FROM r JOIN lgf fx1 ON fx1.vv = r.rk
@@ -9703,22 +8246,8 @@ object SparkEntry {
       .withColumnRenamed("g", "o_orderpriority")
 
   private val q203Sql =
-    """WITH RECURSIVE vals AS (SELECT unnest(range(1, 11)) AS vv),
-       powers AS (SELECT unnest(range(0, 43)) AS e),
-       init AS (SELECT vv, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= vv
-                GROUP BY vv),
-       lg AS (
-         SELECT vv, ((vv << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT vv,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT vv, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.vv, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (vv) WHERE i = 20),
+    raw"""WITH RECURSIVE vals AS (SELECT unnest(range(1, 11)) AS vv),
+       ${ilog2Fx(col = "vv")},
        base AS (
          SELECT o_orderpriority AS g,
            CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
@@ -9799,10 +8328,9 @@ object SparkEntry {
       col("doc_id"), col("text"), minTotal = 20L)
 
   private val q205Sql =
-    """WITH toks AS (
+    raw"""WITH toks AS (
          SELECT doc_id AS id,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS w
+           unnest(${wsTokens("text")}) AS w
          FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
        nn AS (SELECT count(*) AS N FROM documents
               WHERE doc_id IS NOT NULL AND text IS NOT NULL),
@@ -9831,11 +8359,7 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q206Sql =
-    """WITH b AS (
-         SELECT event_type AS g,
-           CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
-         FROM events
-         WHERE event_type IS NOT NULL AND value IS NOT NULL),
+    raw"""WITH ${eventCents},
        cells AS (SELECT g, v, count(*) AS c FROM b GROUP BY 1, 2),
        cm AS (SELECT g, v, c,
                 sum(c) OVER (PARTITION BY g ORDER BY v) AS cum
@@ -9874,7 +8398,7 @@ object SparkEntry {
       .withColumnRenamed("g", "event_type")
 
   private val q207Sql =
-    """WITH b AS (
+    raw"""WITH b AS (
          SELECT event_type AS g, CAST(event_id AS VARCHAR) AS id,
            CAST(CAST(value AS DECIMAL(18,4)) * 100 AS BIGINT) AS v
          FROM events
@@ -9889,9 +8413,7 @@ object SparkEntry {
               FROM f0),
        reps AS (SELECT unnest(range(0, 32)) AS bb),
        mem AS (SELECT g, v, bb FROM b CROSS JOIN reps
-               WHERE strpos('0123456789abcdef',
-                 substr(md5(id || ':bs:' || CAST(bb AS VARCHAR)), 1, 1))
-                 - 1 < 8),
+               WHERE ${hexDigit("md5(id || ':bs:' || CAST(bb AS VARCHAR))", "1")} < 8),
        rm AS (SELECT g, bb, count(*) AS nb,
                 sum(CAST(v AS HUGEINT)) AS sb
               FROM mem GROUP BY 1, 2),
@@ -9973,10 +8495,9 @@ object SparkEntry {
       .filter(col("flesch_mil").isNotNull)
 
   private val q209Sql =
-    """WITH b AS (
+    raw"""WITH b AS (
          SELECT doc_id,
-           len(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS w,
+           len(${wsTokens("text")}) AS w,
            greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS s,
            len(regexp_extract_all(lower(text), '[aeiouy]+')) AS y
          FROM documents
@@ -10016,40 +8537,19 @@ object SparkEntry {
   }
 
   private val q210Sql =
-    """WITH RECURSIVE toks AS (
+    raw"""WITH RECURSIVE toks AS (
          SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+           unnest(${wsTokens("text")}) AS t
          FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
            AND n_chars IS NOT NULL),
-       tc AS (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY 1, 2),
-       nd AS (SELECT doc_id, sum(c) AS n FROM tc GROUP BY 1),
-       vals(v) AS (
-         SELECT DISTINCT c FROM tc UNION SELECT DISTINCT n FROM nd),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
-       sc AS (SELECT tc.doc_id, sum(tc.c * lgf.fx) AS s
-              FROM tc JOIN lgf ON lgf.v = tc.c GROUP BY 1),
+       ${tokenLogCounts},
        e AS (SELECT nd.doc_id, lgf.fx - (sc.s // nd.n) AS entropy_fx
              FROM nd JOIN lgf ON lgf.v = nd.n JOIN sc USING (doc_id)),
        j AS (
          SELECT d.doc_id,
            CAST(d.n_chars >= 300 AS VARCHAR) AS ca,
            CAST(e.entropy_fx >= 4500000 AS VARCHAR) AS cb,
-           CAST(len(list_filter(regexp_split_to_array(d.text, '\s+'),
-             x -> x <> '')) >= 50 AS VARCHAR) AS cc
+           CAST(len(${wsTokens("d.text")}) >= 50 AS VARCHAR) AS cc
          FROM documents d JOIN e ON d.doc_id = e.doc_id
          WHERE d.n_chars IS NOT NULL),
        r3 AS (
@@ -10128,7 +8628,7 @@ object SparkEntry {
       window = 5, minScoreFx = 1L)
 
   private val q212Sql =
-    """WITH RECURSIVE d AS (
+    raw"""WITH RECURSIVE d AS (
          SELECT p_partkey AS id, lower(p_name) AS k, p_brand AS fb,
            p_type AS ft, CAST(p_size AS VARCHAR) AS fs
          FROM part WHERE p_partkey IS NOT NULL AND p_name IS NOT NULL),
@@ -10143,20 +8643,7 @@ object SparkEntry {
          SELECT DISTINCT qv FROM qb
          UNION SELECT DISTINCT qv FROM qt
          UNION SELECT DISTINCT qv FROM qs),
-       powers AS (SELECT unnest(range(0,43)) AS e),
-       init AS (SELECT v, max(e) AS ipart FROM vals
-                JOIN powers ON (CAST(1 AS BIGINT) << e) <= v GROUP BY v),
-       lg AS (
-         SELECT v, ((v << 20) >> ipart) AS x, CAST(0 AS BIGINT) AS acc,
-           0 AS i FROM init
-         UNION ALL
-         SELECT v,
-           CASE WHEN x2 >= 2097152 THEN x2 >> 1 ELSE x2 END,
-           CASE WHEN x2 >= 2097152 THEN (acc << 1) | 1 ELSE acc << 1 END,
-           i + 1
-         FROM (SELECT v, (x*x) >> 20 AS x2, acc, i FROM lg WHERE i < 20)),
-       lgf AS (SELECT lg.v, init.ipart * 1048576 + lg.acc AS fx
-               FROM lg JOIN init USING (v) WHERE i = 20),
+       ${ilog2Fx()},
        wb AS (SELECT qb.val, lgf.fx AS w FROM qb
               JOIN lgf ON lgf.v = qb.qv),
        wt AS (SELECT qt.val, lgf.fx AS w FROM qt
@@ -10199,16 +8686,13 @@ object SparkEntry {
       .withColumnRenamed("id", "doc_id")
 
   private val q213Sql =
-    """WITH toks AS (
+    raw"""WITH toks AS (
          SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+           unnest(${wsTokens("text")}) AS t
          FROM documents WHERE doc_id IS NOT NULL),
        bt AS (
          SELECT doc_id,
-           CAST(list_sum([(strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)
-             * CAST(pow(16, 8 - j) AS BIGINT) for j in range(1, 9)])
-             % 512 AS BIGINT) AS slot
+           ${md5Bigint("t", 8, 512)} AS slot
          FROM toks)
        SELECT doc_id, slot, count(*) AS n FROM bt GROUP BY 1, 2"""
 
@@ -10224,9 +8708,8 @@ object SparkEntry {
       col("text"), minCount = 5L)
 
   private val q214Sql =
-    """WITH toks AS (
-         SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
-             x -> x <> '')) AS t
+    raw"""WITH toks AS (
+         SELECT unnest(${wsTokens("text")}) AS t
          FROM documents),
        c AS (SELECT t AS term, count(*) AS freq FROM toks
              GROUP BY 1 HAVING count(*) >= 5)

@@ -334,13 +334,6 @@ object Dedup {
     }
   }
 
-  /** Emit all (id1 < id2) pairs from each group's id list — the shared
-    * tail of every bucketed candidate generator (LSH bands, inverted
-    * index). Groups are size-capped by the caller, so per-row work is
-    * bounded; the pair stream feeds a groupBy/distinct that partial-
-    * aggregates map-side. Replaces a posting-list self-join: one
-    * grouping shuffle instead of join-build + probe + pair shuffle.
-    */
   /** THE capped-bucket grouping of the single-corpus candidate
     * generators (simhashPairs; Similarity.nearDupPairs through
     * [[cappedMemberGroups]]; minhashLsh's bucket walk keeps the same
@@ -439,6 +432,13 @@ object Dedup {
     }
   }
 
+  /** Emit all (id1 < id2) pairs from each group's id list — the shared
+    * tail of every bucketed candidate generator (LSH bands, inverted
+    * index). Groups are size-capped by the caller, so per-row work is
+    * bounded; the pair stream feeds a groupBy/distinct that partial-
+    * aggregates map-side. Replaces a posting-list self-join: one
+    * grouping shuffle instead of join-build + probe + pair shuffle.
+    */
   private[graft] def emitPairs(groups: DataFrame, idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.types._
     requireOrderableId(idType, "emitPairs")

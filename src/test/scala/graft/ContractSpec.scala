@@ -67,6 +67,53 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"cache/broadcast levers: $offenders")
   }
 
+  /** Text that only the oracle fragment library may hold: each is the
+    * signature of one recurring DuckDB piece of `graft.oracle.Fragments`
+    * (the md5 hex-digit read, the MinHash hash family, the fixed-point
+    * log's squaring step and its integer part). */
+  private val fragmentSignatures = Seq(
+    "strpos('0123456789abcdef'", "40503 * i", "(x*x) >> 20", "<< e) <=")
+
+  private def source(path: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+
+  test("oracle fragments are not inlined outside Fragments.scala") {
+    val lib = source("src/main/scala/graft/oracle/Fragments.scala")
+    val missing = fragmentSignatures.filterNot(lib.contains)
+    assert(missing.isEmpty, s"signatures not in Fragments.scala: $missing")
+    val entry = source("src/main/scala/graft/SparkEntry.scala")
+    val inlined = fragmentSignatures.filter(entry.contains)
+    assert(inlined.isEmpty,
+      s"SparkEntry.scala inlines oracle fragments (splice graft.oracle." +
+        s"Fragments instead): $inlined")
+  }
+
+  test("oracle fragments stay independent of graft") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def sources(root: String): List[Path] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val oracleDir = Paths.get("src/main/scala/graft/oracle")
+    val oracleFiles = sources(oracleDir.toString)
+    assert(oracleFiles.nonEmpty, s"no sources under $oracleDir")
+    // the package clause names graft.oracle itself; any other graft
+    // symbol would make the oracle depend on the engine it checks
+    val graftRefs = oracleFiles.flatMap { f =>
+      "\\bgraft\\.(?!oracle\\b)[A-Za-z_]\\w*".r
+        .findAllIn(Files.readString(f)).map(m => s"$f: $m")
+    }
+    assert(graftRefs.isEmpty, s"oracle code references graft: $graftRefs")
+    val users = sources("src/main/scala")
+      .filterNot(_.startsWith(oracleDir))
+      .filterNot(_.endsWith("SparkEntry.scala"))
+      .filter(f => "\\bgraft\\.oracle\\b|\\boracle\\.Fragments\\b".r
+        .findFirstIn(Files.readString(f)).isDefined)
+    assert(users.isEmpty, s"only SparkEntry may use graft.oracle: $users")
+  }
+
   test("oracle SQL only references fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings",

@@ -6,8 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** The catalog's ephemeral memory-sink streams clean up after
   * themselves whether they succeed or throw: no sink temp view, no
-  * checkpoint directory left behind. Their checkpoint root is /dev/shm
-  * only while it has room.
+  * checkpoint directory left behind.
   */
 class StreamCleanupSpec extends SparkSpec {
 
@@ -44,15 +43,5 @@ class StreamCleanupSpec extends SparkSpec {
       assert(out.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
       assert(leftovers("cleanupspec_ok").isEmpty)
     } finally graft.pipeline.Fs.delete(spark, dir.toString)
-  }
-
-  test("ephemeral checkpoints fall back to java.io.tmpdir when /dev/shm " +
-      "has less usable space than the floor") {
-    val tmpdir = System.getProperty("java.io.tmpdir")
-    assert(SparkEntry.ephemeralCkptBase(Long.MaxValue) == tmpdir)
-    val shm = new java.io.File("/dev/shm")
-    val expected =
-      if (shm.isDirectory && shm.canWrite) "/dev/shm" else tmpdir
-    assert(SparkEntry.ephemeralCkptBase(0L) == expected)
   }
 }
