@@ -84,7 +84,7 @@ object Sessions {
         ints("minhash_band_keys", c.tail, "numHashes", "bands")
       graft.plans.MinhashBandKeys(c.head, numHashes, bands)
     }
-    ext.injectPlannerStrategy(_ => graft.plans.BucketJaccardPairsStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.BucketPairsStrategy)
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

@@ -5408,21 +5408,7 @@ object SparkEntry {
     graft.dedup.Dedup.gradePairs(pred = q18(s, dir), truth = q19(s, dir))
 
   private val q139Sql =
-    raw"""WITH docsA AS (
-         SELECT doc_id AS id,
-           ${shingles("text", 8)} AS shingles
-         FROM documents WHERE len(text) >= 8),
-       basedA AS (
-         SELECT id,
-           ${hashSet("shingles")} AS vms
-         FROM docsA),
-       sigsA AS (
-         SELECT id, vms,
-           ${minhashSig(12)} AS sig
-         FROM basedA),
-       bandsA AS (
-         SELECT id, ${bandKey(4)} AS bucket
-         FROM sigsA CROSS JOIN ${bandIds(3)}),
+    raw"""WITH ${minhashBands(8, 12, 3, suffix = "A")},
        ${cappedPairs("pairsA", 1000, buckets = "bandsA", ok = "okA")},
        predp AS (
          SELECT DISTINCT id1, id2 FROM (
@@ -5431,14 +5417,7 @@ object SparkEntry {
              len(d1.vms) AS n1, len(d2.vms) AS n2
            FROM pairsA JOIN sigsA d1 ON id1 = d1.id JOIN sigsA d2 ON id2 = d2.id)
          WHERE CAST(common AS DOUBLE) / (n1 + n2 - common) >= 0.3),
-       postingB AS (SELECT id, unnest(vms) AS sh FROM basedA),
-       rareB AS (SELECT sh FROM postingB GROUP BY sh HAVING COUNT(*) <= 100),
-       fpB AS (SELECT id, p.sh FROM postingB p JOIN rareB r ON p.sh = r.sh),
-       sizesB AS (SELECT id, COUNT(*) AS nsh FROM fpB GROUP BY id),
-       commonB AS (
-         SELECT a.id AS id1, b.id AS id2, COUNT(*) AS common
-         FROM fpB a JOIN fpB b ON a.sh = b.sh AND a.id < b.id
-         GROUP BY a.id, b.id),
+       ${rareShingleOverlap(100, suffix = "B", hashed = "basedA")},
        truthp AS (
          SELECT DISTINCT id1, id2
          FROM commonB JOIN sizesB s1 ON id1 = s1.id JOIN sizesB s2 ON id2 = s2.id

@@ -334,88 +334,13 @@ object Dedup {
     }
   }
 
-  /** THE capped-bucket grouping of the single-corpus candidate
-    * generators (simhashPairs; Similarity.nearDupPairs through
-    * [[cappedMemberGroups]]; minhashLsh's bucket walk keeps the same
-    * over-cap contract without an aggregate):
-    * ONE grouping shuffle of (bucket, id) rows; `collect_list_capped`
-    * bounds every aggregation buffer (map-side partials and the merge
-    * alike); over-cap buckets collapse to their deterministic
-    * [min, max] representative IN the same projection — exact
-    * aggregates over the whole bucket, NOT the capped arrival-ordered
-    * sample — so the grouping subtree has exactly ONE consumer (a
-    * second arm recomputes the whole bucket shuffle; measured +1 s at
-    * sf0.1). Capped-bucket counts are observable via
-    * `queryExecution.observedMetrics(metricName)` after any action —
-    * the retune signal for bands/bits/cap. One definition so the
-    * over-cap semantics can never drift between operators (they did
-    * once — VERDICT r4 #2).
-    */
-  private[graft] def cappedBucketGroups(
-      banded: DataFrame,
-      maxBucketSize: Int,
-      metricName: String): DataFrame =
-    banded.groupBy("bucket")
-      .agg(
-        call_function("collect_list_capped", col("id"),
-          lit(maxBucketSize)).as("ids"),
-        count(lit(1)).as("n"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .filter(col("n") >= 2)
-      .observe(metricName,
-        sum(when(col("n") > maxBucketSize, 1L).otherwise(0L))
-          .as("capped_buckets"),
-        count(lit(1)).as("active_buckets"))
-      .select(
-        when(col("n") <= maxBucketSize, col("ids"))
-          .otherwise(array(col("min_id"), col("max_id"))).as("ids"))
-
-  /** [[cappedBucketGroups]] generalized to a PAYLOAD-carrying member
-    * struct (round 11): collects `member` capped, and over-cap buckets
-    * collapse to [argmin_idOrder member, argmax_idOrder member] — the
-    * SAME deterministic [min, max] representative contract as
-    * cappedBucketGroups (min_by/max_by over the WHOLE bucket, exact
-    * aggregates, never the capped arrival-ordered sample; `idOrder`
-    * must be unique per member or the payload choice is arbitrary).
-    * Exists so a verify stage can run INSIDE the group (the vectors
-    * ride the one grouping shuffle) instead of re-joining payloads
-    * onto an exploded pair stream — at x30 the pair stream was 24M
-    * rows of which 0.24% survived verify, and the re-join dominated
-    * the operator. The over-cap semantics here and in
-    * cappedBucketGroups are ONE contract (VERDICT r4 #2 discipline);
-    * SimilaritySpec pins the two pipelines output-equal on an
-    * over-cap fixture. Used by Similarity.nearDupPairs; minhashLsh
-    * walks sorted buckets instead (graft.plans.BucketJaccardPairs). */
-  private[graft] def cappedMemberGroups(
-      banded: DataFrame,
-      member: org.apache.spark.sql.Column,
-      idOrder: org.apache.spark.sql.Column,
-      maxBucketSize: Int,
-      metricName: String): DataFrame =
-    banded.groupBy("bucket")
-      .agg(
-        call_function("collect_list_capped", member,
-          lit(maxBucketSize)).as("ids"),
-        count(lit(1)).as("n"),
-        min_by(member, idOrder).as("minm"),
-        max_by(member, idOrder).as("maxm"))
-      .filter(col("n") >= 2)
-      .observe(metricName,
-        sum(when(col("n") > maxBucketSize, 1L).otherwise(0L))
-          .as("capped_buckets"),
-        count(lit(1)).as("active_buckets"))
-      .select(
-        when(col("n") <= maxBucketSize, col("ids"))
-          .otherwise(array(col("minm"), col("maxm"))).as("ids"))
-
   /** Fail fast (at plan-construction time, with the operator named)
     * when an id column's external type has no natural `Comparable`
-    * order — [[emitPairs]], [[minhashLsh]]'s bucket walk and
-    * Similarity's in-group verify sort ids with
-    * `a.asInstanceOf[Comparable[Any]]` inside tasks to emit
-    * the id1 < id2 convention, and a binary/array/struct id would
-    * otherwise surface as a mid-job ClassCastException. The whitelist
+    * order — the bucket walk ([[graft.plans.BucketPairs]]) and the other
+    * pair emitters sort ids with `a.asInstanceOf[Comparable[Any]]`
+    * inside tasks to emit the id1 < id2 convention, and a
+    * binary/array/struct id would otherwise surface as a mid-job
+    * ClassCastException. The whitelist
     * is exactly the atomic Catalyst types whose external row values
     * implement Comparable (boxed numerics, BigDecimal, String,
     * Boolean, java.sql.Date/Timestamp, LocalDateTime). */
@@ -430,33 +355,6 @@ object Dedup {
         s"id column type ${other.simpleString} has none — map the id to a " +
         "numeric/string/decimal/date/timestamp key first")
     }
-  }
-
-  /** Emit all (id1 < id2) pairs from each group's id list — the shared
-    * tail of every bucketed candidate generator (LSH bands, inverted
-    * index). Groups are size-capped by the caller, so per-row work is
-    * bounded; the pair stream feeds a groupBy/distinct that partial-
-    * aggregates map-side. Replaces a posting-list self-join: one
-    * grouping shuffle instead of join-build + probe + pair shuffle.
-    */
-  private[graft] def emitPairs(groups: DataFrame, idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types._
-    requireOrderableId(idType, "emitPairs")
-    val pairSchema = StructType(Seq(
-      StructField("id1", idType, false), StructField("id2", idType, false)))
-    val penc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(pairSchema)
-    implicit val anyOrd: Ordering[Any] =
-      (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
-    groups.select(col("ids")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val ids = r.getSeq[Any](0).sorted
-        for {
-          i <- ids.indices.iterator
-          j <- (i + 1) until ids.length
-        } yield org.apache.spark.sql.Row(ids(i), ids(j))
-      }
-    }(penc)
   }
 
   /** Exact dedup via content hash: one row per distinct content with the
@@ -488,10 +386,10 @@ object Dedup {
     *    give `bands` rows of (id, vms, bucket) per document, the ONE
     *    shuffle hash-partitions them on the bucket;
     *  - a `Sort` on the bucket (which spills) feeds
-    *    [[graft.plans.BucketJaccardPairs]], which walks one bucket run at
-    *    a time and verifies its pairs with the two-pointer intersect
-    *    over the ascending hash sets — the quadratic work is confined to
-    *    real near-duplicate buckets;
+    *    [[graft.plans.BucketPairs]], which walks one bucket run at a
+    *    time and verifies its pairs with the two-pointer intersect over
+    *    the ascending hash sets ([[graft.plans.PairCheck.Jaccard]]) — the
+    *    quadratic work is confined to real near-duplicate buckets;
     *  - a pair found in several buckets comes out of each, and the final
     *    `distinct()` folds the identical triples.
     * Memory: the walk holds at most `maxBucketSize` members of one bucket
@@ -506,10 +404,12 @@ object Dedup {
     * highest-value dedup target) therefore still surfaces instead of
     * yielding zero rows; recall within such a bucket is intentionally
     * partial (full recall is the quadratic blowup the cap exists to
-    * prevent). Same contract as `Similarity.nearDupPairs`; mirror both
-    * arms in any oracle: `HAVING COUNT(*) <= maxBucketSize` for the pair
-    * arm, `UNION SELECT min(id), max(id) ... HAVING COUNT(*) >
-    * maxBucketSize` for the representative arm. Capped and active
+    * prevent). A null id counts toward its bucket's size but is never
+    * paired. The walk defines this rule for every bucket-pair operator
+    * (`nearDupPairs`, `simhashPairs`, `winnowPairs`, `semDedupPairs`);
+    * mirror both arms in any oracle: `HAVING COUNT(*) <= maxBucketSize`
+    * for the pair arm, `UNION SELECT min(id), max(id) ... HAVING
+    * COUNT(*) > maxBucketSize` for the representative arm. Capped and active
     * (two or more members) bucket counts are observable as
     * `queryExecution.observedMetrics("graft.minhash")` after an action.
     *
@@ -550,7 +450,6 @@ object Dedup {
       maxBucketSize: Int = 1000,
       rowsHint: Long = -1L): DataFrame = {
     val docs = shingleDocs(df, idCol, textCol, shingleK)
-    requireOrderableId(docs.schema("id").dataType, "minhashLsh")
     // Sizing cardinality: hint > plan statistics (round 15: NO job —
     // parquet scans know their bytes driver-side; sizing only needs
     // the magnitude) > pruned count() as the last resort when the plan
@@ -585,15 +484,8 @@ object Dedup {
       .select(col("id"), col("vms"),
         explode(bandKeys(col("vms"), numHashes, bands)).as("bucket"))
       .repartition(parts, col("bucket"))
-    org.apache.spark.sql.GraftRows.ofRows(docs.sparkSession,
-        graft.plans.BucketJaccardPairs(
-          banded.queryExecution.analyzed, threshold, maxBucketSize))
-      .observe("graft.minhash",
-        sum(when(col("bucket_size") > maxBucketSize, 1L).otherwise(0L))
-          .as("capped_buckets"),
-        count(when(col("bucket_size") > 0, 1)).as("active_buckets"))
-      .filter(col("bucket_size") === 0)
-      .select(col("id1"), col("id2"), col("jaccard"))
+    graft.plans.BucketPairs.pairs(banded,
+        graft.plans.PairCheck.Jaccard(threshold), maxBucketSize, "graft.minhash")
       .distinct()
   }
 
@@ -1001,28 +893,20 @@ object Dedup {
     * has perfect recall at radius `maxHamming` before any cap, and the
     * exact `bit_count(xor)` verify removes the false positives.
     *
-    * The pair stage is the same capped grouped shape as `minhashLsh`:
-    * ONE grouping shuffle, `collect_list_capped` bounds every bucket
-    * buffer, over-cap buckets collapse to their deterministic
-    * (min id, max id) representative in the same projection, and the
-    * capped count is observable via the `graft.simhash` metric. Mirror
-    * both arms in any oracle exactly as for minhashLsh.
+    * The pair stage is `minhashLsh`'s bucket walk
+    * ([[graft.plans.BucketPairs]] with [[graft.plans.PairCheck.Hamming]]):
+    * ONE grouping shuffle of (id, sh, bucket) rows at the session's
+    * shuffle width, then each bucket's pairs are checked by
+    * `bit_count(xor)` in place — the signature rides the shuffle, so
+    * there is no verify join and nothing is cached. An over-cap bucket
+    * is checked through its deterministic (min id, max id)
+    * representative, and the capped count is observable via the
+    * `graft.simhash` metric. Mirror both arms in any oracle exactly as
+    * for minhashLsh. A pair sharing several bands comes out once.
     *
     * Band keys are packed into one long — band index in the high 32 bits,
     * band value in the low — so the shuffle key is 8 bytes (vs the ~40 B
     * string keys of minhash bands, whose values don't fit a word).
-    *
-    * The (id, sh) table is cached across its three uses (banding +
-    * both verify joins) — the OPPOSITE of minhashLsh, deliberately: a
-    * simhash signature is 8 bytes/doc where a minhash vms array is
-    * ~2.4 KB/doc, so this is the "aggregated small, multiple consumers"
-    * case the repo's cache rule (NOTES.md) says to cache, and the sf0.1
-    * interleaved A/B agrees (cached never loses, wins under CPU
-    * contention — recomputing the per-token md5 kernel 3x is pure
-    * waste). LIFECYCLE: the cache is pinned until the session drops it
-    * — the returned plan carries no unpersist handle, so a long-lived
-    * session calling this repeatedly should `spark.catalog
-    * .clearCache()` between corpora (as Bench does).
     *
     * @return (id1, id2, hamming int) for candidate pairs with
     *   hamming <= maxHamming, id1 < id2
@@ -1048,23 +932,16 @@ object Dedup {
       s"radius guarantee needs bands >= maxHamming + 1 " +
         s"(got bands=$bandsN, maxHamming=$maxHamming)")
     val width = 64 / bandsN
-    val sigs = simhashSignatures(df, idCol, textCol).cache()
-
     val bandCols = (0 until bandsN).map { b =>
       lit(b.toLong << 32) +
         shiftrightunsigned(col("sh"), (bandsN - 1 - b) * width)
           .bitwiseAND(lit((1L << width) - 1))
     }
-    val banded = sigs.select(col("id"), explode(array(bandCols: _*)).as("bucket"))
-    val grouped = cappedBucketGroups(banded, maxBucketSize, "graft.simhash")
-    val pairs = emitPairs(grouped, sigs.schema("id").dataType).distinct()
-
-    pairs
-      .join(sigs.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
-      .join(sigs.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
-      .withColumn("hamming", bit_count(col("sh1").bitwiseXOR(col("sh2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id1", "id2", "hamming")
+    val banded = simhashSignatures(df, idCol, textCol)
+      .select(col("id"), col("sh"), explode(array(bandCols: _*)).as("bucket"))
+    graft.plans.BucketPairs.pairs(banded,
+        graft.plans.PairCheck.Hamming(maxHamming), maxBucketSize, "graft.simhash")
+      .distinct()
   }
 
   /** Line-level exact dedup (the C4/RefinedWeb boilerplate-removal step):
@@ -1655,11 +1532,13 @@ object Dedup {
     *
     * Scale shape: selection is the map-only [[winnowDocs]] kernel (one
     * digest per gram, deque window minima); the posting stream is the
-    * winnowed ~2/(w+1) fraction of grams; grouping is THE shared
-    * capped-bucket primitive (metric "graft.winnow") — a fingerprint
-    * shared by a corpus-wide boilerplate string is exactly the hot
-    * bucket the cap bounds, contributing its (min,max) representative
-    * (counted as ONE shared hash) instead of a quadratic pair set.
+    * winnowed ~2/(w+1) fraction of grams; grouping is the bucket walk
+    * every pair generator shares ([[graft.plans.BucketPairs]] with
+    * [[graft.plans.PairCheck.EveryPair]], metric "graft.winnow") — a
+    * fingerprint shared by a corpus-wide boilerplate string is exactly
+    * the hot bucket the cap bounds, contributing its (min,max)
+    * representative (counted as ONE shared hash) instead of a quadratic
+    * pair set.
     * Mirror both arms in any oracle when the cap can bind.
     */
   def winnowPairs(
@@ -1670,8 +1549,8 @@ object Dedup {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
     val sel = winnowDocs(df, idCol, textCol, k, w)
     val buckets = sel.select(col("id"), explode(col("fhs")).as("bucket"))
-    val grouped = cappedBucketGroups(buckets, maxBucketSize, "graft.winnow")
-    emitPairs(grouped, sel.schema("id").dataType)
+    graft.plans.BucketPairs.pairs(buckets, graft.plans.PairCheck.EveryPair,
+        maxBucketSize, "graft.winnow")
       .groupBy("id1", "id2")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

@@ -59,9 +59,9 @@ object Fragments {
     raw"list_distinct([substr($text, i, $k) for i in range(1, len($text)-$k+2)])"
 
   /** CTE `docs(id, shingles)` over the rows of `from` with at least `k`
-    * characters. */
-  def shingleDocs(k: Int, from: String = "documents"): String =
-    raw"""docs AS (
+    * characters; `suffix` is appended to the CTE name. */
+  def shingleDocs(k: Int, from: String = "documents", suffix: String = ""): String =
+    raw"""docs$suffix AS (
          SELECT doc_id AS id,
            ${shingles("text", k)} AS shingles
          FROM $from WHERE len(text) >= $k)"""
@@ -78,16 +78,16 @@ object Fragments {
     raw"[list_min([(v * (i + 1) + 40503 * i) % 1000000007 for v in vms]) for i in range(0, $n)]"
 
   /** CTEs `based(id, vms)` — the shingle hashes of `docs` — and
-    * `sigs(id, vms, sig)`. */
-  def minhashSigs(numHashes: Int): String =
-    raw"""based AS (
+    * `sigs(id, vms, sig)`; `suffix` is appended to every CTE name. */
+  def minhashSigs(numHashes: Int, suffix: String = ""): String =
+    raw"""based$suffix AS (
          SELECT id,
            ${hashSet("shingles")} AS vms
-         FROM docs),
-       sigs AS (
+         FROM docs$suffix),
+       sigs$suffix AS (
          SELECT id, vms,
            ${minhashSig(numHashes)} AS sig
-         FROM based)"""
+         FROM based$suffix)"""
 
   /** The LSH key of band `b` of signature `sig`: `b|h1,h2,…` over its
     * `rows` hashes. */
@@ -99,17 +99,19 @@ object Fragments {
     raw"(VALUES ${(0 until bands).map(b => s"($b)").mkString(",")}) AS t(b)"
 
   /** CTE `bands(id, bucket)`: the [[bandKey]] of every band of
-    * `sigs.sig`, `numHashes / bands` rows each. */
-  def bandKeys(numHashes: Int, bands: Int): String =
-    raw"""bands AS (
+    * `sigs.sig`, `numHashes / bands` rows each; `suffix` is appended to
+    * both CTE names. */
+  def bandKeys(numHashes: Int, bands: Int, suffix: String = ""): String =
+    raw"""bands$suffix AS (
          SELECT id, ${bandKey(numHashes / bands)} AS bucket
-         FROM sigs CROSS JOIN ${bandIds(bands)})"""
+         FROM sigs$suffix CROSS JOIN ${bandIds(bands)})"""
 
-  /** [[shingleDocs]], [[minhashSigs]] and [[bandKeys]] in one chain. */
+  /** [[shingleDocs]], [[minhashSigs]] and [[bandKeys]] in one chain,
+    * `suffix` appended to every CTE name. */
   def minhashBands(k: Int, numHashes: Int, bands: Int,
-      from: String = "documents"): String =
-    Seq(shingleDocs(k, from), minhashSigs(numHashes),
-      bandKeys(numHashes, bands)).mkString(",\n       ")
+      from: String = "documents", suffix: String = ""): String =
+    Seq(shingleDocs(k, from, suffix), minhashSigs(numHashes, suffix),
+      bandKeys(numHashes, bands, suffix)).mkString(",\n       ")
 
   /** CTEs `ok` and `name(id1, id2)`: every `id1 < id2` pair of ids
     * sharing a bucket of `buckets` with at most `cap` members, and one
@@ -622,22 +624,29 @@ object Fragments {
          FROM va FULL OUTER JOIN vb ON va.v = vb.v),
        t AS (SELECT sum(na) AS ta, sum(nb) AS tb FROM j)"""
 
-  /** CTEs `hdocs`, `posting`, `rare`, `fp`, `sizes(id, nsh)` and
-    * `common(id1, id2, common)`: shingle-hash overlaps of `docs`
-    * counted over the hashes held by at most `maxDf` documents. */
-  def rareShingleOverlap(maxDf: Int): String =
-    raw"""hdocs AS (
+  /** CTEs `posting`, `rare`, `fp`, `sizes(id, nsh)` and
+    * `common(id1, id2, common)`: shingle-hash overlaps of the `(id, vms)`
+    * CTE `hashed`, counted over the hashes held by at most `maxDf`
+    * documents; `suffix` is appended to these CTE names. Without
+    * `hashed`, a CTE `hdocs` hashes the shingles of `docs` first. */
+  def rareShingleOverlap(maxDf: Int, suffix: String = "",
+      hashed: String = ""): String = {
+    val (hdocs, from) =
+      if (hashed.nonEmpty) ("", hashed)
+      else (raw"""hdocs AS (
          SELECT id,
            ${hashSet("shingles")} AS vms
          FROM docs),
-       posting AS (SELECT id, unnest(vms) AS sh FROM hdocs),
-       rare AS (SELECT sh FROM posting GROUP BY sh HAVING COUNT(*) <= $maxDf),
-       fp AS (SELECT id, p.sh FROM posting p JOIN rare r ON p.sh = r.sh),
-       sizes AS (SELECT id, COUNT(*) AS nsh FROM fp GROUP BY id),
-       common AS (
+       """, "hdocs")
+    hdocs + raw"""posting$suffix AS (SELECT id, unnest(vms) AS sh FROM $from),
+       rare$suffix AS (SELECT sh FROM posting$suffix GROUP BY sh HAVING COUNT(*) <= $maxDf),
+       fp$suffix AS (SELECT id, p.sh FROM posting$suffix p JOIN rare$suffix r ON p.sh = r.sh),
+       sizes$suffix AS (SELECT id, COUNT(*) AS nsh FROM fp$suffix GROUP BY id),
+       common$suffix AS (
          SELECT a.id AS id1, b.id AS id2, COUNT(*) AS common
-         FROM fp a JOIN fp b ON a.sh = b.sh AND a.id < b.id
+         FROM fp$suffix a JOIN fp$suffix b ON a.sh = b.sh AND a.id < b.id
          GROUP BY a.id, b.id)"""
+  }
 
   // ---- URL normalization -------------------------------------------
 

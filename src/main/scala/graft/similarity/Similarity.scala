@@ -774,7 +774,7 @@ object Similarity extends Serializable {
     * nlist * partitions, swap the collect for a groupBy(cent) — the
     * kernel's partials are already the map-side combine.
     */
-  private def trainKmeans(
+  private[graft] def trainKmeans(
       corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int): Array[(Long, Array[Double])] = {
     import org.apache.spark.sql.types._
@@ -1812,32 +1812,26 @@ object Similarity extends Serializable {
     * your threshold: recall ≈ 1 − (1 − p^bits)^tables with
     * p = 1 − θ/π.
     *
-    * Pair generation is the capped grouped shape shared with
-    * `Dedup.minhashLsh`: ONE grouping shuffle gathers each bucket's
-    * members (`collect_list_capped` bounds the aggregation buffer),
-    * buckets with more than `maxBucketSize` members never materialize
-    * their full pair set. Without the cap a single hot bucket —
-    * near-zero vectors all share a signature — makes the pair stage
-    * quadratic; the cap is the skew guard that lets this run on a
-    * 100 TB corpus.
-    *
-    * VERIFY runs INSIDE the bucket group by default (round 11): the
-    * vectors ride the grouping shuffle as struct members and each
-    * bucket's pairs are cosine-checked in place, so the candidate pair
-    * stream — measured 24M rows for 57k survivors at the x30 rung, 99.8%
-    * random collisions — is never materialized, distinct'ed, or
-    * re-joined against the corpus for payloads. The grouping shuffle
-    * widens by tables × vector per row, ~12× less traffic than the
-    * pair re-join carried at expected bucket size ~12 (and per-member
-    * norm hoisting cuts verify flops 3×). The output is row-identical,
-    * bit-identical sims included, to the exploded-pair + payload
-    * re-join pipeline (withBucketsKernel → cappedBucketGroups →
-    * emitPairs → withCosineKernel; SimilaritySpec pins both equal on
-    * an over-cap fixture). That pipeline moves less only when vectors
-    * are so wide relative to bucket occupancy that tables × |corpus| ×
-    * vecBytes exceeds the pair-stream traffic — at expected bucket
-    * size b̄ the join moves ~b̄× more bytes, so that regime means
-    * bucket occupancy ≈ 1 (bits oversized for n).
+    * Pair generation is `Dedup.minhashLsh`'s bucket walk
+    * ([[graft.plans.BucketPairs]] with
+    * [[graft.plans.PairCheck.Cosine]]): the vectors ride the ONE
+    * grouping shuffle with their bucket key, a `Sort` on the bucket
+    * (which spills) feeds the walk, and each bucket's pairs are
+    * cosine-checked in place, so the candidate pair stream — measured
+    * 24M rows for 57k survivors at the x30 rung, 99.8% random
+    * collisions — is never materialized, distinct'ed, or re-joined
+    * against the corpus for payloads. The walk holds at most
+    * `maxBucketSize` members of one bucket; without the cap a single hot
+    * bucket — near-zero vectors all share a signature — makes the pair
+    * stage quadratic, and the cap is the skew guard that lets this run
+    * on a 100 TB corpus. The sims are bit-identical to
+    * `withCosineKernel` on the same pair (each member's norm is computed
+    * once per bucket), so the output is row-identical to an
+    * exploded-pair + payload re-join pipeline; that pipeline moves less
+    * only when vectors are so wide relative to bucket occupancy that
+    * tables × |corpus| × vecBytes exceeds the pair-stream traffic — at
+    * expected bucket size b̄ the join moves ~b̄× more bytes, so that
+    * regime means bucket occupancy ≈ 1 (bits oversized for n).
     *
     * An over-cap bucket is NOT dropped silently: it contributes one
     * deterministic representative pair, (min id, max id) — exact
@@ -1846,7 +1840,8 @@ object Similarity extends Serializable {
     * duplicates (the highest-value near-dup target) therefore still
     * surfaces in the output instead of yielding zero rows; recall within
     * such a cluster is intentionally partial (full recall is the
-    * quadratic blowup the cap exists to prevent). Mirror both arms in
+    * quadratic blowup the cap exists to prevent). A null id counts
+    * toward its bucket's size but is never paired. Mirror both arms in
     * any oracle: `HAVING COUNT(*) <= maxBucketSize` for the pair arm,
     * `UNION SELECT min(id), max(id) ... HAVING COUNT(*) > maxBucketSize`
     * for the representative arm.
@@ -1881,34 +1876,6 @@ object Similarity extends Serializable {
       if (tables == graft.ops.Sizing.Auto)
         graft.ops.Sizing.lshTables(bitsN, threshold)
       else tables
-    // IN-GROUP verify (round 11): the vectors ride the
-    // one grouping shuffle as struct members and every bucket's
-    // pairs are cosine-verified INSIDE the group, so the ~0.2%-
-    // survivor pair stream is never materialized, never
-    // distinct'ed, and never re-joined against the corpus. The
-    // round-11 stage attribution measured the old exploded-pair
-    // path at x30 as: kernel 0.7 s, grouping 1.4 s, 24M-pair
-    // distinct 3.4 s, and ~10.7 s of verify-join — 24M pairs
-    // carrying two vector payloads each, for 57k survivors. The
-    // grouping shuffle widens (tables × vector per row) but that is
-    // ~12× less traffic than the pair re-join at expected bucket
-    // size ~12 (and per-member hoisted norms cut the verify flops
-    // 3×). Output is row-identical to the exploded-pair pipeline
-    // INCLUDING sims (same dot/norm/division order — SimilaritySpec
-    // pins both equal on an over-cap fixture).
-    // Pre-partition the WIDE member stream by bucket so the capped
-    // grouping aggregates AFTER the exchange (EnsureRequirements
-    // elides the agg's own): a map-side object-agg over this stream
-    // sees ~n×tables/partitions distinct buckets with ~1 member
-    // each — partials that merge nothing while their object map
-    // (overhead > payload) and the fallback's transient serialized
-    // copy OOM'ed the x100 rung at 16g. Post-shuffle the per-task
-    // key count is totalBuckets/partitions (~23k at x100) and the
-    // buffers hold exactly the final groups. Trade documented: a
-    // pathological over-cap mega-bucket's FULL membership now
-    // streams through one reducer (capped buffer, so memory stays
-    // bounded — time skew only); the narrow path's map-side capping
-    // kept that traffic at cap×partitions.
     // The grouping exchange's width must track the banded VOLUME
     // (tables × n wide rows), not the session's partition default:
     // pinned at 32 partitions, the x300 embeddings rung put ~1 GB of
@@ -1920,80 +1887,21 @@ object Similarity extends Serializable {
     val parts = graft.ops.Sizing.groupingPartitions(
       nRows * tablesN, 12L * dim + 72,
       corpus.sparkSession.sparkContext.defaultParallelism)
-    val banded = withBucketsKernel(c, "v", tablesN, bitsN, dim)
-      .select(col("id"), col("v"), col("bucket"))
-      .repartition(parts, col("bucket"))
-    val m = struct(col("id"), col("v"))
-    val grouped = graft.dedup.Dedup.cappedMemberGroups(
-      banded, m, col("id"), maxBucketSize, "graft.neardup")
-    verifyGroupsKernel(grouped, c.schema("id").dataType,
-      threshold).distinct()
+    bucketPairs(c, dim, threshold, bitsN, tablesN, maxBucketSize, parts)
   }
 
-  /** The in-group verify tail of [[nearDupPairs]]: per bucket, sort
-    * members by id (ascending — the emitPairs id1 < id2 convention),
-    * hoist each member's norm ONCE, and emit (id1, id2, sim) for every
-    * in-bucket pair at or above `threshold`. The sim arithmetic is
-    * BIT-IDENTICAL to `withCosineKernel` on the same pair: same
-    * min-length dot loop over float-to-double promotions, same
-    * full-length norm sums, same sqrt-then-multiply-then-divide order —
-    * hoisting only changes WHEN the norm is computed, not what. A pair
-    * sharing several buckets re-verifies in each (true near-dups only,
-    * ~recall × tables extra cosines on the tiny survivor set) and the
-    * caller's `.distinct()` folds the identical triples.
-    *
-    * Members are kept as the deserialized `Seq[Float]` deliberately: a
-    * round-12 A/B (embstages x30, clean box, medians of 3 in-JVM reps)
-    * measured a per-member `toArray` materialization at 3.39 s vs
-    * 2.91 s for indexing the Seq directly in the O(k²·d) loop — the
-    * deserializer hands back a primitive-backed `ArraySeq.ofFloat`
-    * whose apply the JIT devirtualizes (escape analysis elides the
-    * box), so the copy (~vec bytes × members, ~0.5 GB at x30) buys
-    * nothing and costs ~15%. Don't "de-box" this loop without
-    * re-measuring. */
-  private def verifyGroupsKernel(groups: DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
-      threshold: Double): DataFrame = {
-    import org.apache.spark.sql.types._
-    graft.dedup.Dedup.requireOrderableId(idType, "nearDupPairs in-group verify")
-    val outSchema = StructType(Seq(
-      StructField("id1", idType, false),
-      StructField("id2", idType, false),
-      StructField("sim", DoubleType, false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    implicit val anyOrd: Ordering[Any] =
-      (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
-    groups.select(col("ids")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val ms = r.getSeq[org.apache.spark.sql.Row](0).sortBy(_.get(0))
-        val k = ms.length
-        val ids = new Array[Any](k)
-        val vecs = new Array[Seq[Float]](k)
-        val norms = new Array[Double](k)
-        var x = 0
-        while (x < k) {
-          ids(x) = ms(x).get(0)
-          vecs(x) = ms(x).getSeq[Float](1)
-          norms(x) = normF(vecs(x))
-          x += 1
-        }
-        (0 until k).iterator.flatMap { i =>
-          ((i + 1) until k).iterator.flatMap { j =>
-            val a = vecs(i); val b = vecs(j)
-            val n = math.min(a.length, b.length)
-            var dot = 0.0; var t = 0
-            while (t < n) {
-              dot += a(t).toDouble * b(t).toDouble; t += 1
-            }
-            val sim = dot / (norms(i) * norms(j))
-            if (sim >= threshold)
-              Iterator.single(org.apache.spark.sql.Row(ids(i), ids(j), sim))
-            else Iterator.empty
-          }
-        }
-      }
-    }(enc)
+  /** [[nearDupPairs]] from its (id, v) rows and sizing on: band rows of
+    * (id, v, bucket) hash-partitioned `parts` ways on the bucket, the
+    * bucket walk with its `graft.neardup` metric, distinct pairs. */
+  private[graft] def bucketPairs(
+      c: DataFrame, dim: Int, threshold: Double, bits: Int, tables: Int,
+      maxBucketSize: Int, parts: Int): DataFrame = {
+    val banded = withBucketsKernel(c, "v", tables, bits, dim)
+      .select(col("id"), col("v"), col("bucket"))
+      .repartition(parts, col("bucket"))
+    graft.plans.BucketPairs.pairs(banded,
+        graft.plans.PairCheck.Cosine(threshold), maxBucketSize, "graft.neardup")
+      .distinct()
   }
 
   /** Semantic benchmark decontamination — the embedding-space twin of
@@ -2585,11 +2493,12 @@ object Similarity extends Serializable {
     val cents = trainKmeans(corpus, idCol, vecCol, nlistN, trainIters)
     val buckets = assignNearest(c, cents, 1, 1)
       .select(col("id"), col("cent_id").as("bucket"))
-    val grouped = graft.dedup.Dedup
-      .cappedBucketGroups(buckets, maxClusterSize, "graft.semdedup")
     // each id lives in exactly ONE cell (n=1 assignment), so the pair
-    // stream is duplicate-free by construction — no DISTINCT shuffle
-    val pairs = graft.dedup.Dedup.emitPairs(grouped, c.schema("id").dataType)
+    // stream is duplicate-free by construction — no DISTINCT shuffle.
+    // The walk pairs ids only: a cell holds up to maxClusterSize
+    // members, too many to buffer their vectors per task
+    val pairs = graft.plans.BucketPairs.pairs(buckets,
+      graft.plans.PairCheck.EveryPair, maxClusterSize, "graft.semdedup")
     // shuffle_hash on the corpus sides for the same reason as
     // Dedup.verifyJaccard's hint: never sort the pair stream once the
     // vector payload attaches (NOTES.md "verify-join A/B")
@@ -2622,8 +2531,9 @@ object Similarity extends Serializable {
     *
     * Scale shape: the pair space is confined to k-means cells — size
     * `nlist` like sqrt(corpus) or finer and cells stay bounded — and
-    * `Dedup.cappedBucketGroups` bounds every cell buffer regardless
-    * (metric "graft.semdedup"): an over-cap cell collapses to its
+    * the bucket walk ([[graft.plans.BucketPairs]]) buffers the ids of
+    * at most `maxClusterSize` members of one cell regardless (metric
+    * "graft.semdedup"): an over-cap cell collapses to its
     * deterministic (min,max) representative pair, so a giant cluster of
     * true duplicates still surfaces its max-id member rather than
     * silently vanishing. Centroids are a bounded driver statistic

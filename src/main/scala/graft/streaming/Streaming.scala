@@ -489,11 +489,12 @@ object Streaming {
     * for a given batching.
     *
     * State per bucket is a CAPPED list of (id, signature) —
-    * 8 B + 8·numHashes B per doc; `maxBucketState` is the same
-    * skew guard as `cappedBucketGroups`' over-cap rule: arrivals into a
-    * full bucket still pair against the stored members (dup clusters
-    * keep surfacing) but are not stored, bounding both state size and
-    * per-arrival work at `maxBucketState` comparisons. Over-cap
+    * 8 B + 8·numHashes B per doc; `maxBucketState` is a skew guard
+    * like the batch bucket walk's cap (`graft.plans.BucketPairs`), with
+    * its own rule: arrivals into a full bucket still pair against the
+    * stored members (dup clusters keep surfacing) but are not stored,
+    * bounding both state size and per-arrival work at
+    * `maxBucketState` comparisons. Over-cap
     * arrivals ARE remembered by id (a capped 8·`maxBucketState`-entry
     * set, 8 B each), so a doc re-delivered in a later micro-batch does
     * not re-emit its pairs; only past that second cap can a re-arrival

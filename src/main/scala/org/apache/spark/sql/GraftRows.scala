@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   * format; anything else should keep using the public constructors.
   *
   * `ofRows` is the same doorway to `Dataset.ofRows`: a DataFrame over a
-  * logical plan holding graft's own nodes (`graft.plans.BucketJaccardPairs`),
+  * logical plan holding graft's own nodes (`graft.plans.BucketPairs`),
   * which the public API cannot build.
   */
 object GraftRows {

@@ -114,6 +114,25 @@ class ContractSpec extends AnyFunSuite {
     assert(users.isEmpty, s"only SparkEntry may use graft.oracle: $users")
   }
 
+  test("one bucket walk: the capped-aggregate pair helpers stay deleted") {
+    // graft.plans.BucketPairs holds the over-cap rule and the bucket
+    // metrics of every capped-bucket pair generator; a second grouping
+    // path would let them drift apart again
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val helpers = Seq("cappedBucketGroups", "cappedMemberGroups",
+      "emitPairs(", "verifyGroupsKernel")
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val offenders =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+        .flatMap { f =>
+          val src = Files.readString(f)
+          helpers.filter(src.contains).map(h => s"$f: $h")
+        }
+      finally walk.close()
+    assert(offenders.isEmpty, s"deleted pair helpers are back: $offenders")
+  }
+
   test("oracle SQL only references fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings",

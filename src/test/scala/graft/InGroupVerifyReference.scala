@@ -2,20 +2,26 @@ package graft
 
 import graft.dedup.Dedup
 import graft.functions.Hashing
+import graft.similarity.Similarity
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The external-`Row` MinHash-LSH pipeline that `Dedup.minhashLsh`,
-  * `Dedup.bandBuckets` and `Dedup.corpusMinhashTable` are checked
-  * against: typed `mapPartitions` kernels for the shingle sets and band
-  * keys, a `cappedMemberGroups` aggregate per band bucket and a verify
-  * over each bucket's collected `(id, vms)` members. The library runs
-  * the same steps as Catalyst expressions and a sort-based bucket walk;
-  * both must emit the same rows, scores and metrics. It shares only the
-  * hash, signature and band-key definitions with the library: test use
-  * only.
+/** Reference pipelines, test use only: the capped member-struct
+  * aggregate that the bucket walk (`graft.plans.BucketPairs`) replaced.
+  * Each band bucket's `(id, payload)` members are gathered by a
+  * `collect_list_capped` aggregate ([[cappedMemberGroups]]) and every
+  * pair is verified over the collected list.
+  *  - `minhashLsh`: typed `mapPartitions` kernels for the shingle sets
+  *    and band keys, which `Dedup.minhashLsh`, `Dedup.bandBuckets` and
+  *    `Dedup.corpusMinhashTable` run as Catalyst expressions;
+  *  - `nearDupPairs`: `Similarity.nearDupPairs` as it ran before the
+  *    walk, its cosine verify ([[verifyCosineGroups]]) included.
+  * Both must emit the same rows, scores and metrics as the library.
+  * These copies of the old helpers are references, not library code;
+  * they share only the hash, signature, band-key and bucketing
+  * definitions with the library.
   */
 object InGroupVerifyReference {
 
@@ -102,10 +108,90 @@ object InGroupVerifyReference {
     val docs = shingleDocs(df, idCol, textCol, shingleK)
     val banded = bandBucketsWide(docs, numHashes, bands)
       .repartition(parts, col("bucket"))
-    val grouped = Dedup.cappedMemberGroups(
+    val grouped = cappedMemberGroups(
       banded, struct(col("id"), col("vms")), col("id"),
       maxBucketSize, "graft.minhash")
     verifyGroups(grouped, docs.schema("id").dataType, threshold).distinct()
+  }
+
+  /** One grouping shuffle of (bucket, ...) rows: each bucket of two or
+    * more rows as its capped `member` list, or as the `[argmin, argmax]`
+    * members by `idOrder` when it has more than `maxBucketSize` rows.
+    * Capped and active bucket counts are observed as `metricName`. */
+  def cappedMemberGroups(
+      banded: DataFrame, member: Column, idOrder: Column,
+      maxBucketSize: Int, metricName: String): DataFrame =
+    banded.groupBy("bucket")
+      .agg(
+        call_function("collect_list_capped", member,
+          lit(maxBucketSize)).as("ids"),
+        count(lit(1)).as("n"),
+        min_by(member, idOrder).as("minm"),
+        max_by(member, idOrder).as("maxm"))
+      .filter(col("n") >= 2)
+      .observe(metricName,
+        sum(when(col("n") > maxBucketSize, 1L).otherwise(0L))
+          .as("capped_buckets"),
+        count(lit(1)).as("active_buckets"))
+      .select(
+        when(col("n") <= maxBucketSize, col("ids"))
+          .otherwise(array(col("minm"), col("maxm"))).as("ids"))
+
+  /** (id1, id2, sim) — `Similarity.nearDupPairs` as it ran before the
+    * walk, at an explicit (bits, tables) and `parts` grouping
+    * partitions. */
+  def nearDupPairs(
+      corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
+      threshold: Double, bits: Int, tables: Int,
+      maxBucketSize: Int, parts: Int): DataFrame = {
+    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
+        col("id"))
+    val banded = Similarity.withBucketsKernel(c, "v", tables, bits, dim)
+      .select(col("id"), col("v"), col("bucket"))
+      .repartition(parts, col("bucket"))
+    val grouped = cappedMemberGroups(banded, struct(col("id"), col("v")),
+      col("id"), maxBucketSize, "graft.neardup")
+    verifyCosineGroups(grouped, c.schema("id").dataType, threshold)
+      .distinct()
+  }
+
+  /** Per bucket: sort the (id, v) members by id, compute each member's
+    * norm once and emit every pair whose cosine is at least `threshold`,
+    * with `Similarity.withCosineKernel`'s arithmetic. */
+  private def verifyCosineGroups(
+      groups: DataFrame, idType: DataType, threshold: Double): DataFrame = {
+    Dedup.requireOrderableId(idType, "nearDupPairs in-group verify")
+    val outSchema = StructType(Seq(
+      StructField("id1", idType, false),
+      StructField("id2", idType, false),
+      StructField("sim", DoubleType, false)))
+    implicit val anyOrd: Ordering[Any] =
+      (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    groups.select(col("ids")).mapPartitions { rows =>
+      rows.flatMap { r =>
+        val ms = r.getSeq[Row](0).sortBy(_.get(0))
+        val ids = ms.map(_.get(0))
+        val vecs = ms.map(_.getSeq[Float](1))
+        val norms = vecs.map { a =>
+          var na = 0.0; var t = 0
+          while (t < a.length) { val x = a(t).toDouble; na += x * x; t += 1 }
+          math.sqrt(na)
+        }
+        for {
+          i <- ids.indices.iterator
+          j <- (i + 1) until ids.length
+          sim = {
+            val a = vecs(i); val b = vecs(j)
+            val n = math.min(a.length, b.length)
+            var dot = 0.0; var t = 0
+            while (t < n) { dot += a(t).toDouble * b(t).toDouble; t += 1 }
+            dot / (norms(i) * norms(j))
+          }
+          if sim >= threshold
+        } yield Row(ids(i), ids(j), sim)
+      }
+    }(RowEncoder.encoderFor(outSchema))
   }
 
   /** Per bucket: sort the (id, vms) members by id and emit every pair at

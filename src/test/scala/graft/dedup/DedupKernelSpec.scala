@@ -547,18 +547,6 @@ class DedupKernelSpec extends SparkSpec {
       runC(instrumented()._1, -1L))
   }
 
-  test("minhashLsh plan: the band-bucket grouping has exactly one " +
-      "consumer (a second arm would recompute the whole bucket shuffle)") {
-    val df = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val plan = Dedup.minhashLsh(df, col("doc_id"), col("text"),
-      shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3)
-      .queryExecution.executedPlan.toString
-    // one logical capped aggregation = one partial + one final node; the
-    // representative-pair arm must ride the same projection, not fork it
-    val aggNodes = "collect_list_capped".r.findAllIn(plan).size
-    assert(aggNodes <= 2, s"band-bucket grouping duplicated in plan:\n$plan")
-  }
-
   test("minhashLsh plan pin: Catalyst rows from shingles to pairs, one " +
       "bucket exchange feeding a Sort, the shingle Generate above the id " +
       "exchange") {
@@ -577,7 +565,7 @@ class DedupKernelSpec extends SparkSpec {
     assert(!text.contains("DeserializeToObject"), text)
     assert("Exchange hashpartitioning\\(bucket#".r.findAllIn(text).size == 1,
       text)
-    val walks = plan.collect { case w: graft.plans.BucketJaccardPairsExec => w }
+    val walks = plan.collect { case w: graft.plans.BucketPairsExec => w }
     assert(walks.size == 1, text)
     walks.head.child match {
       case s: SortExec =>
@@ -600,8 +588,8 @@ class DedupKernelSpec extends SparkSpec {
     assert(exchanges(gens.head).exists(_.startsWith("hashpartitioning(id#")),
       text)
     // no `!` missing-input marker, logical or physical
-    assert(!out.queryExecution.optimizedPlan.toString.contains("!BucketJaccardPairs"))
-    assert(!text.contains("!BucketJaccardPairs"), text)
+    assert(!out.queryExecution.optimizedPlan.toString.contains("!BucketPairs"))
+    assert(!text.contains("!BucketPairs"), text)
   }
 
   test("minhashLsh finds the fixture's planted near-duplicates") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Differential spec: `Dedup.minhashLsh`'s Catalyst-row pipeline
-  * (`minhash_shingles`, `minhash_band_keys`, `BucketJaccardPairs`) against
+  * (`minhash_shingles`, `minhash_band_keys`, `BucketPairs`) against
   * the external-`Row` reference it replaced ([[InGroupVerifyReference]]).
   * Rows, `jaccard` bits, the `graft.minhash` metric and the output schema
   * (nullability included) must all be equal.

@@ -229,18 +229,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got.length == 1 && got.head.getDecimal(0).intValue == 1)
   }
 
-  test("nearDupPairs plan: the bucket grouping has exactly one consumer " +
-      "(a second arm would recompute the whole bucket shuffle)") {
-    val plan = Similarity.nearDupPairs(emb, "vec_id", "embedding",
-      dim = 64, threshold = 0.4, bits = 6, tables = 3)
-      .queryExecution.executedPlan.toString
-    // one logical capped aggregation = one partial + one final node; a
-    // duplicated subtree (the round-4 q30 regression: +1s at sf0.1)
-    // would double these
-    val aggNodes = "collect_list_capped".r.findAllIn(plan).size
-    assert(aggNodes <= 2, s"bucket grouping duplicated in plan:\n$plan")
-  }
-
   test("semDedup removes higher-id members of planted duplicate groups " +
       "and keeps everything else") {
     import spark.implicits._
