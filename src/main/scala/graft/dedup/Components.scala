@@ -221,8 +221,7 @@ object Components {
             count(when(not(col("lbl") <=> col("prev")), lit(1))).as("n"))
           .select(col("id"), col("lbl"))
         val next = sel.localCheckpoint(true)
-        converged =
-          sel.queryExecution.observedMetrics(obsName).getLong(0) == 0L
+        converged = graft.util.Observed.metric(sel, obsName).getLong(0) == 0L
         labels = next
         iter += 1
       }

@@ -91,13 +91,6 @@ object Dedup {
   private def bandKeys(vms: Column, numHashes: Int, bands: Int): Column =
     call_function("minhash_band_keys", vms, lit(numHashes), lit(bands))
 
-  /** Minhash signature + LSH band keys: `bands` rows per doc,
-    * (id, "band|sig,sig,..."). */
-  private[graft] def bandBuckets(
-      docs: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    docs.select(col("id"),
-      explode(bandKeys(col("vms"), numHashes, bands)).as("bucket"))
-
   /** Open-addressing (id1, id2) → count map over primitive long arrays —
     * the pair buffer of `emitPairCounts` for integral id types. The
     * generic HashMap[(Any, Any), Long] spends the q19 hot loop boxing two
@@ -449,25 +442,31 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucketSize: Int = 1000,
       rowsHint: Long = -1L): DataFrame = {
-    val docs = shingleDocs(df, idCol, textCol, shingleK)
-    // Sizing cardinality: hint > plan statistics (round 15: NO job —
-    // parquet scans know their bytes driver-side; sizing only needs
-    // the magnitude) > pruned count() as the last resort when the plan
-    // carries no usable size.
+    bucketPairs(shingleDocs(df, idCol, textCol, shingleK), numHashes, bands,
+      threshold, maxBucketSize, bandPartitions(bands, rowsHint, df -> idCol))
+  }
+
+  /** Grouping partitions of a band-row shuffle over the documents of
+    * `sides` (each with its id column), sized from the banded VOLUME
+    * (Sizing.groupingPartitions — the nearDupPairs discipline) at a
+    * 64 MB/task target (not the 128 MB default): the hash sets ride the
+    * shuffle with every band row, and halving the target doubles the
+    * task count for the same total work. Cardinality: `rowsHint >= 0`
+    * pins it; else the largest side's plan statistics (round 15: NO job
+    * — parquet scans know their bytes driver-side; sizing only needs the
+    * magnitude), with a pruned count() only for a side whose plan
+    * carries no usable size. */
+  private def bandPartitions(
+      bands: Int, rowsHint: Long, sides: (DataFrame, Column)*): Int = {
     val nRows =
       if (rowsHint >= 0) rowsHint
-      else graft.ops.Sizing.planRowsEstimate(df)
-        .getOrElse(df.select(idCol).count())
-    // Grouping partitions sized from the banded VOLUME
-    // (Sizing.groupingPartitions — the nearDupPairs discipline), at a
-    // 64 MB/task target (not the 128 MB default): the hash sets ride
-    // the shuffle with every band row, and halving the target doubles
-    // the task count for the same total work.
-    val parts = graft.ops.Sizing.groupingPartitions(
+      else sides.map { case (df, id) =>
+        graft.ops.Sizing.planRowsEstimate(df).getOrElse(df.select(id).count())
+      }.max
+    graft.ops.Sizing.groupingPartitions(
       bands.toLong * nRows, 8L * 1024,
-      df.sparkSession.sparkContext.defaultParallelism,
+      sides.head._1.sparkSession.sparkContext.defaultParallelism,
       targetBytesPerTask = 64L << 20)
-    bucketPairs(docs, numHashes, bands, threshold, maxBucketSize, parts)
   }
 
   /** [[minhashLsh]] from its shingle sets on: band rows of (id, vms,
@@ -496,12 +495,18 @@ object Dedup {
     * re-pairing the corpus against itself (`minhashLsh` over the union
     * would burn the whole pair budget on known corpus-internal dups).
     *
-    * Same single-grouping-shuffle discipline as `minhashLsh`, with one
-    * capped `collect_list_capped` list PER SIDE and the bucket kept only
-    * when both sides are present. An over-cap bucket (either side)
-    * contributes the deterministic (min increment id, min corpus id)
-    * representative pair — exact per-side aggregates, oracle-mirrorable
-    * as a UNION arm like q30's. Capped-bucket counts are observable via
+    * The [[minhashLsh]] plan with both sides in it: each side's band
+    * rows of (id, vms, bucket), tagged with their side, share ONE
+    * shuffle on the bucket, and the cross form of the bucket walk
+    * ([[graft.plans.BucketPairs]]) verifies each bucket's (increment
+    * member, corpus member) pairs in place; the final `distinct()`
+    * folds a pair found in several buckets. The walk owns the
+    * cross-side rules: a bucket counts only when each side has a
+    * non-null id, a side's size counts its non-null ids, and a bucket
+    * over `maxBucketSide` on either side contributes the one
+    * deterministic (min increment id, min corpus id) representative
+    * pair — exact per-side aggregates, oracle-mirrorable as a UNION arm
+    * like q30's. Capped and active bucket counts are observable via
     * `graft.minhash_against`.
     *
     * At deployment scale the corpus side's banding is the expensive arm;
@@ -534,26 +539,18 @@ object Dedup {
       .select(col("id"), col("vms"))
     val corp = shingleDocs(corpus, corpId, corpText, shingleK)
       .select(col("id"), col("vms"))
-    // fail at plan time: the pair encoder and the verify joins type both
-    // sides from the increment's id — a mismatched corpus id type would
-    // otherwise surface as an encoder ClassCastException inside a task
+    // fail at plan time: the walk types both sides from the increment's
+    // id — a mismatched corpus id type would otherwise surface inside a
+    // task
     require(inc.schema("id").dataType == corp.schema("id").dataType,
       s"increment and corpus id types differ: " +
         s"${inc.schema("id").dataType.catalogString} vs " +
         s"${corp.schema("id").dataType.catalogString}")
-
-    crossSidePairs(inc, bandBuckets(corp, numHashes, bands), corp,
+    againstPairs(inc,
+      corp.select(col("id"), col("vms"),
+        explode(bandKeys(col("vms"), numHashes, bands)).as("bucket")),
       numHashes, bands, threshold, maxBucketSide,
-      jaccardBuildParts(
-        // same sizing cascade as minhashLsh (round 16): hint > plan
-        // statistics (no job) > pruned count() last resort, per side
-        if (rowsHint >= 0) rowsHint
-        else math.max(
-          graft.ops.Sizing.planRowsEstimate(increment)
-            .getOrElse(increment.select(incId).count()),
-          graft.ops.Sizing.planRowsEstimate(corpus)
-            .getOrElse(corpus.select(corpId).count())),
-        increment.sparkSession))
+      bandPartitions(bands, rowsHint, increment -> incId, corpus -> corpId))
   }
 
   /** The corpus arm of [[minhashLshAgainst]] as ONE materializable table
@@ -579,7 +576,7 @@ object Dedup {
   /** [[minhashLshAgainst]] against a PREPARED corpus table (from
     * [[corpusMinhashTable]], usually re-read from a tap): only the
     * increment is shingled and banded; the corpus side streams straight
-    * out of the materialized (id, vms, buckets) rows. `numHashes`/
+    * out of the materialized (id, vms, buckets) rows, read once. `numHashes`/
     * `bands` apply to the increment and MUST match the values the
     * corpus table was built with — band keys embed the band index and
     * row width, so a mismatch yields empty buckets, not wrong pairs.
@@ -599,85 +596,37 @@ object Dedup {
       s"increment and prepared-corpus id types differ: " +
         s"${inc.schema("id").dataType.catalogString} vs " +
         s"${prepared.schema("id").dataType.catalogString}")
-    crossSidePairs(inc,
-      prepared.select(col("id"), explode(col("buckets")).as("bucket")),
-      prepared.select(col("id"), col("vms")),
+    // prepared is normally a materialized tap read, so its parquet scan
+    // knows its bytes: no sizing job
+    againstPairs(inc,
+      prepared.select(col("id"), col("vms"), explode(col("buckets")).as("bucket")),
       numHashes, bands, threshold, maxBucketSide,
-      jaccardBuildParts(
-        // same sizing cascade as minhashLshAgainst: hint > plan
-        // statistics (prepared is normally a materialized tap read,
-        // so its parquet scan knows its bytes) > pruned count()
-        if (rowsHint >= 0) rowsHint
-        else math.max(
-          graft.ops.Sizing.planRowsEstimate(increment)
-            .getOrElse(increment.select(incId).count()),
-          graft.ops.Sizing.planRowsEstimate(prepared)
-            .getOrElse(prepared.select(col("id")).count())),
-        increment.sparkSession))
+      bandPartitions(bands, rowsHint, increment -> incId, prepared -> col("id")))
   }
 
-  /** Shared tail of the two `minhashLshAgainst` forms: per-side capped
-    * bucket grouping over the increment's (freshly banded) rows and the
-    * corpus's (id, bucket) rows, cross-side pairs, jaccard verify.
+  /** Shared tail of the two `minhashLshAgainst` forms: the increment's
+    * (freshly banded) and the corpus's (id, vms, bucket) rows, tagged by
+    * side and hash-partitioned `parts` ways on the bucket, the cross-side
+    * bucket walk with its `graft.minhash_against` metric, distinct pairs.
     */
-  private def crossSidePairs(
-      incSigs: DataFrame,
+  private[graft] def againstPairs(
+      inc: DataFrame,
       corpBanded: DataFrame,
-      corpSigs: DataFrame,
       numHashes: Int,
       bands: Int,
       threshold: Double,
       maxBucketSide: Int,
-      buildParts: Int): DataFrame = {
-    val tagged = bandBuckets(incSigs, numHashes, bands)
-      .withColumn("side", lit("i"))
-      .unionByName(corpBanded.withColumn("side", lit("c")))
-
-    val iId = when(col("side") === "i", col("id"))
-    val cId = when(col("side") === "c", col("id"))
-    val grouped = tagged.groupBy("bucket")
-      .agg(
-        call_function("collect_list_capped", iId, lit(maxBucketSide))
-          .as("i_ids"),
-        call_function("collect_list_capped", cId, lit(maxBucketSide))
-          .as("c_ids"),
-        count(iId).as("ni"),
-        count(cId).as("nc"),
-        min(iId).as("min_i"),
-        min(cId).as("min_c"))
-      .filter(col("ni") >= 1 && col("nc") >= 1)
-      .observe("graft.minhash_against",
-        sum(when(col("ni") > maxBucketSide || col("nc") > maxBucketSide,
-          1L).otherwise(0L)).as("capped_buckets"),
-        count(lit(1)).as("active_buckets"))
-      .select(
-        when(col("ni") <= maxBucketSide && col("nc") <= maxBucketSide,
-          col("i_ids")).otherwise(array(col("min_i"))).as("i_ids"),
-        when(col("ni") <= maxBucketSide && col("nc") <= maxBucketSide,
-          col("c_ids")).otherwise(array(col("min_c"))).as("c_ids"))
-
-    val pairs = emitCrossPairs(grouped, incSigs.schema("id").dataType)
+      parts: Int): DataFrame = {
+    val banded = inc
+      .select(col("id"), col("vms"),
+        explode(bandKeys(col("vms"), numHashes, bands)).as("bucket"),
+        lit(true).as("increment"))
+      .unionByName(corpBanded.withColumn("increment", lit(false)))
+      .repartition(parts, col("bucket"))
+    graft.plans.BucketPairs.crossPairs(banded,
+        graft.plans.PairCheck.Jaccard(threshold), maxBucketSide,
+        "graft.minhash_against")
       .distinct()
-
-    verifyJaccard(pairs, incSigs, corpSigs, threshold, buildParts)
-  }
-
-  /** Cross product of each bucket's two id lists: (i, c) per pair. */
-  private[graft] def emitCrossPairs(
-      groups: DataFrame, idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types._
-    val pairSchema = StructType(Seq(
-      StructField("id1", idType, false), StructField("id2", idType, false)))
-    val penc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(pairSchema)
-    groups.select(col("i_ids"), col("c_ids")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val as = r.getSeq[Any](0)
-        val bs = r.getSeq[Any](1)
-        for { a <- as.iterator; b <- bs.iterator }
-          yield org.apache.spark.sql.Row(a, b)
-      }
-    }(penc)
   }
 
   /** Exact n-gram Jaccard dedup via inverted index (no LSH approximation):
@@ -724,7 +673,7 @@ object Dedup {
     * (id1, id2, common, n1, n2). See ngramJaccard's scaladoc for the
     * single-scan, capped-posting-list plan shape.
     *
-    * Both wide exchanges are VOLUME-sized (the jaccardBuildParts /
+    * Both wide exchanges are VOLUME-sized (the minhashLsh /
     * duplicateSpans discipline): the posting stream is ~one row per
     * distinct shingle occurrence (≈ total chars) and at the 32-partition
     * session default a deep corpus puts GB-scale posting-list agg state
@@ -1329,83 +1278,6 @@ object Dedup {
               seg("seg_len").cast("int"))), ""),
           col("t").substr(col("tail_from").cast("int"), length(col("t")))))
           .as("text_clean"))
-  }
-
-  /** Build-side partition count for [[verifyJaccard]]'s shuffled-hash
-    * joins, from the docs-side ROW COUNT: shuffled-hash build sides do
-    * not spill (they OOM), so the per-task build — |docs| × multi-KB
-    * vms payload / partitions — must be sized from VOLUME, not the
-    * session partition default. Round 13 measured the failure the old
-    * fixed-default shape predicted in its own scaladoc: q18 at the
-    * 1.5M-doc x300 rung OOM'd an 8 g JVM and crawled at 24 g (exp
-    * ~1.9), because 1.5M × ~8 KB deserialized / 32 partitions put
-    * ~400 MB of non-spillable hash build on every task. 8 KB/doc
-    * estimates a few-hundred-shingle doc's (id, vms) row in object
-    * form (~2–4 KB of longs + array/row overhead); a 64 MB/task build
-    * target keeps 32 concurrent builds ~2 GB. Fixture/bench scales
-    * stay at the session floor — plans there are unchanged. */
-  private[graft] def jaccardBuildParts(
-      docRows: Long, spark: org.apache.spark.sql.SparkSession): Int =
-    graft.ops.Sizing.groupingPartitions(
-      docRows, 8L * 1024, spark.sparkContext.defaultParallelism,
-      targetBytesPerTask = 64L << 20)
-
-  /** Re-verify candidate pairs with exact Jaccard over the hashed-shingle
-    * sets (deterministic: both sides of the oracle fold hash collisions
-    * identically; at P=1e9+7 the set-jaccard is indistinguishable from
-    * string-shingle jaccard in practice). id1 resolves against `docs1`,
-    * id2 against `docs2` — pass the same table twice for within-corpus
-    * pairs.
-    */
-  private[graft] def verifyJaccard(
-      pairs: DataFrame,
-      docs1: DataFrame,
-      docs2: DataFrame,
-      threshold: Double,
-      buildParts: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    // shuffle_hash, not sort-merge: the pair stream widens to multi-KB
-    // rows once sh1 attaches, and SMJ would SORT that wide stream at
-    // the id2 exchange — the x100 ladder A/B measured the hash join
-    // ~1.5-2x faster and far less spill-noisy (NOTES.md "verify-join
-    // A/B", graft.VerifyJoinProbe). The hint sits on the docs side, so
-    // the per-partition hash build is |docs|/buildParts rows — the
-    // narrow side. The explicit repartition pins the join width to
-    // [[jaccardBuildParts]]'s volume-derived count (the build side
-    // satisfies the join's required distribution, so no extra
-    // exchange); the pair stream follows to the same width.
-    val joined = pairs
-      .join(docs1.select(col("id").as("id1"), col("vms").as("sh1"))
-        .repartition(buildParts, col("id1"))
-        .hint("shuffle_hash"), "id1")
-      .join(docs2.select(col("id").as("id2"), col("vms").as("sh2"))
-        .repartition(buildParts, col("id2"))
-        .hint("shuffle_hash"), "id2")
-      .select("id1", "id2", "sh1", "sh2")
-    // two-pointer intersect over the (sorted — see shingleDocs) hash
-    // sets; array_intersect builds a hash set per row and ran 3x slower
-    val schema = StructType(Seq(
-      joined.schema("id1"), joined.schema("id2"),
-      StructField("jaccard", DoubleType, false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    joined.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val a = r.getSeq[Long](2)
-        val b = r.getSeq[Long](3)
-        var i = 0; var j = 0; var common = 0
-        while (i < a.length && j < b.length) {
-          val x = a(i); val y = b(j)
-          if (x == y) { common += 1; i += 1; j += 1 }
-          else if (x < y) i += 1
-          else j += 1
-        }
-        val jac = common.toDouble / (a.length + b.length - common)
-        if (jac >= threshold)
-          Iterator(org.apache.spark.sql.Row(r.get(0), r.get(1), jac))
-        else Iterator.empty
-      }
-    }(enc)
   }
 
   /** Positions are packed into the low 20 bits of a winnowing

@@ -108,7 +108,7 @@ object Hits {
           val obsName = s"graft.hits_tot_$halfRound"
           val observed = raw0.observe(obsName, sum(col(c)).as("tot"))
           val raw = observed.localCheckpoint()
-          val totRow = observed.queryExecution.observedMetrics(obsName)
+          val totRow = graft.util.Observed.metric(observed, obsName)
           val tot = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
           if (tot > 0)
             raw.select(col("id"),

@@ -97,8 +97,7 @@ object KCore {
       // but a cluster port with retries must replace this with a
       // separate count() (or read only zero-vs-nonzero, the
       // Components pattern, which stays exact).
-      val nKeep = observed.queryExecution.observedMetrics(obsName)
-        .getLong(0)
+      val nKeep = graft.util.Observed.metric(observed, obsName).getLong(0)
       if (nKeep == prevKeep) {
         // keep ⊆ previous keep and |keep| = |previous keep| ⇒ the sets
         // are equal ⇒ this round's semi-joins would keep every edge —

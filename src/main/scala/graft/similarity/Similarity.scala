@@ -2394,11 +2394,14 @@ object Similarity extends Serializable {
     * Returns flagged increment rows: (id, dup_of, sim), dup_of = the
     * smallest qualifying base id (ties by id — deterministic).
     *
-    * Scale shape: per-side capped cell lists (metric
-    * "graft.semdedup_against", the minhashLshAgainst grouping) — an
-    * over-cap cell degrades to its two min ids, one cross pair — and
-    * only CROSS-side pairs materialize: |inc| × cell-fraction work, not
-    * |base|².
+    * Scale shape: both sides' (cell, id) rows, tagged by side, feed the
+    * cross form of the bucket walk ([[graft.plans.BucketPairs]], metric
+    * "graft.semdedup_against", the minhashLshAgainst walk), which pairs
+    * ids only: a cell may hold 100,000 members, too many to buffer their
+    * vectors per task. Only CROSS-side pairs materialize: |inc| ×
+    * cell-fraction work, not |base|². A cell with more than
+    * `maxCellSide` ids on either side yields the one pair of each
+    * side's min id.
     */
   def semDedupAgainst(
       increment: DataFrame, base: DataFrame,
@@ -2424,36 +2427,12 @@ object Similarity extends Serializable {
     val bs = base.select(col(idCol).as("id"), col(vecCol).as("v"))
       .repartition(par, col("id"))
     val tagged = assignNearest(inc, cents, 1, 1)
-      .select(col("cent_id").as("bucket"), col("id"), lit("i").as("side"))
+      .select(col("cent_id").as("bucket"), col("id"), lit(true).as("increment"))
       .unionByName(assignNearest(bs, cents, 1, 1)
-        .select(col("cent_id").as("bucket"), col("id"), lit("c").as("side")))
-
-    val iId = when(col("side") === "i", col("id"))
-    val cId = when(col("side") === "c", col("id"))
-    val grouped = tagged.groupBy("bucket")
-      .agg(
-        call_function("collect_list_capped", iId, lit(maxCellSide))
-          .as("i_ids"),
-        call_function("collect_list_capped", cId, lit(maxCellSide))
-          .as("c_ids"),
-        count(iId).as("ni"),
-        count(cId).as("nc"),
-        min(iId).as("min_i"),
-        min(cId).as("min_c"))
-      .filter(col("ni") >= 1 && col("nc") >= 1)
-      .observe("graft.semdedup_against",
-        sum(when(col("ni") > maxCellSide || col("nc") > maxCellSide,
-          1L).otherwise(0L)).as("capped_buckets"),
-        count(lit(1)).as("active_buckets"))
-      .select(
-        when(col("ni") <= maxCellSide && col("nc") <= maxCellSide,
-          col("i_ids")).otherwise(array(col("min_i"))).as("i_ids"),
-        when(col("ni") <= maxCellSide && col("nc") <= maxCellSide,
-          col("c_ids")).otherwise(array(col("min_c"))).as("c_ids"))
-
+        .select(col("cent_id").as("bucket"), col("id"), lit(false).as("increment")))
     // one cell per id -> the cross-pair stream is duplicate-free
-    val pairs = graft.dedup.Dedup
-      .emitCrossPairs(grouped, inc.schema("id").dataType)
+    val pairs = graft.plans.BucketPairs.crossPairs(tagged,
+      graft.plans.PairCheck.EveryPair, maxCellSide, "graft.semdedup_against")
     withCosineKernel(pairs
       .join(inc.select(col("id").as("id1"), col("v").as("v1")), "id1")
       .join(bs.select(col("id").as("id2"), col("v").as("v2")), "id2"),
@@ -2499,9 +2478,8 @@ object Similarity extends Serializable {
     // members, too many to buffer their vectors per task
     val pairs = graft.plans.BucketPairs.pairs(buckets,
       graft.plans.PairCheck.EveryPair, maxClusterSize, "graft.semdedup")
-    // shuffle_hash on the corpus sides for the same reason as
-    // Dedup.verifyJaccard's hint: never sort the pair stream once the
-    // vector payload attaches (NOTES.md "verify-join A/B")
+    // shuffle_hash on the corpus sides: never sort the pair stream once
+    // the vector payload attaches (NOTES.md "verify-join A/B")
     withCosineKernel(pairs
       .join(c.select(col("id").as("id1"), col("v").as("v1"))
         .hint("shuffle_hash"), "id1")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * `collect_list_capped` aggregate ([[cappedMemberGroups]]) and every
   * pair is verified over the collected list.
   *  - `minhashLsh`: typed `mapPartitions` kernels for the shingle sets
-  *    and band keys, which `Dedup.minhashLsh`, `Dedup.bandBuckets` and
+  *    and band keys, which `Dedup.minhashLsh` and
   *    `Dedup.corpusMinhashTable` run as Catalyst expressions;
   *  - `nearDupPairs`: `Similarity.nearDupPairs` as it ran before the
   *    walk, its cosine verify ([[verifyCosineGroups]]) included.
@@ -66,18 +66,6 @@ object InGroupVerifyReference {
       rows.flatMap { r =>
         val vms = r.getSeq[Long](1)
         bandKeys(vms, numHashes, bands).iterator.map(Row(r.get(0), vms, _))
-      }
-    }(RowEncoder.encoderFor(schema))
-  }
-
-  /** (id, bucket): `bands` rows per doc. */
-  def bandBuckets(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val in = docs.select(col("id"), col("vms"))
-    val schema = StructType(Seq(
-      in.schema("id"), StructField("bucket", StringType, false)))
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        bandKeys(r.getSeq[Long](1), numHashes, bands).iterator.map(Row(r.get(0), _))
       }
     }(RowEncoder.encoderFor(schema))
   }

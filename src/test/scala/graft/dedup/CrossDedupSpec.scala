@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.util.Observed
 import org.apache.spark.sql.functions._
 
 class CrossDedupSpec extends SparkSpec {
@@ -70,7 +71,7 @@ class CrossDedupSpec extends SparkSpec {
       shingleK = 8, numHashes = 12, bands = 3, threshold = 0.3,
       maxBucketSide = 3)
     df.collect()
-    val m = df.queryExecution.observedMetrics("graft.minhash_against")
+    val m = Observed.metric(df, "graft.minhash_against")
     assert(m.getAs[Long]("capped_buckets") >= 1L)
     assert(m.getAs[Long]("active_buckets") >= m.getAs[Long]("capped_buckets"))
   }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.SparkSpec
 import graft.functions.{Hashing, Text}
+import graft.util.Observed
 import org.apache.spark.sql.functions._
 
 /** The typed shingle/hash kernel must be bit-identical to the Column
@@ -208,7 +209,7 @@ class DedupKernelSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(capped == Set((1L, 30L, 1.0)))
     // the recall loss is observable: all 3 band buckets were capped
-    val m = cappedDf.queryExecution.observedMetrics("graft.minhash")
+    val m = Observed.metric(cappedDf, "graft.minhash")
     assert(m.getAs[Long]("capped_buckets") == 3L)
   }
 
@@ -601,7 +602,7 @@ class DedupKernelSpec extends SparkSpec {
     assert(pairs.nonEmpty)
     assert(pairs.forall(_.getDouble(2) >= 0.3))
     // with an unbounded cap no bucket is dropped, and the metric says so
-    val m = out.queryExecution.observedMetrics("graft.minhash")
+    val m = Observed.metric(out, "graft.minhash")
     assert(m.getAs[Long]("capped_buckets") == 0L)
     assert(m.getAs[Long]("active_buckets") > 0L)
   }

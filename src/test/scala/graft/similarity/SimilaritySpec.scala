@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.SparkSpec
 import graft.multimodal.Multimodal
+import graft.util.Observed
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -161,7 +162,7 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((1L, 50L))) // both tables' buckets agree on (min,max)
     // the recall loss is observable: one hot bucket per table was capped
-    val metrics = cappedDf.queryExecution.observedMetrics("graft.neardup")
+    val metrics = Observed.metric(cappedDf, "graft.neardup")
     assert(metrics.getAs[Long]("capped_buckets") == 2L)
     val uncapped = Similarity.nearDupPairs(df, "vec_id", "embedding",
       dim = 64, threshold = 0.9, bits = 4, tables = 2, maxBucketSize = 1000)
@@ -385,7 +386,7 @@ class SimilaritySpec extends SparkSpec {
       threshold = 0.9, nlist = 1, trainIters = 1, maxClusterSize = 10)
     val rows = capped.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(rows == Map(50L -> 1L)) // (min,max) representative only
-    val m = capped.queryExecution.observedMetrics("graft.semdedup")
+    val m = Observed.metric(capped, "graft.semdedup")
     assert(m.getAs[Long]("capped_buckets") == 1L)
     val full = Similarity.semDedup(df, "vec_id", "embedding",
       threshold = 0.9, nlist = 1, trainIters = 1)
@@ -468,7 +469,7 @@ class SimilaritySpec extends SparkSpec {
       maxCellSide = 5)
     val rows = capped.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(rows == Map(101L -> 1L)) // (min_i, min_c) representative
-    val m = capped.queryExecution.observedMetrics("graft.semdedup_against")
+    val m = Observed.metric(capped, "graft.semdedup_against")
     assert(m.getAs[Long]("capped_buckets") == 1L)
   }
 
