@@ -141,20 +141,14 @@ class BucketPairsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", true)
   }
 
-  test("plan pin: one bucket hash exchange feeds one bucket walk, with no " +
-      "capped aggregate, in every self- and cross-side pair generator; " +
-      "simhashPairs has no join and no cache") {
+  /** Asserts each named plan has one bucket hash exchange feeding one
+    * bucket walk over its sort, no capped aggregate, and (simhashPairs)
+    * no join and no cache. */
+  private def assertOneBucketWalk(runs: Seq[(String, DataFrame)]): Unit = {
     import org.apache.spark.sql.execution.{SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
-    val (incDocs, incEmb) = (docs.filter(col("doc_id") % 10 === 0),
-      emb.filter(col("vec_id") % 10 === 0))
-    val runs = ops.map(op => op.name -> op.run(if (op.text) docs else emb, 1000)) ++
-      crossOps.map(op => op.name -> op.run(
-        if (op.text) incDocs else incEmb, if (op.text) docs else emb, 1000))
     for ((name, out) <- runs) {
       val plan: SparkPlan = out.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -179,6 +173,24 @@ class BucketPairsSpec extends SparkSpec {
         assert(!text.contains("InMemoryTableScan"), text)
       }
     }
+  }
+
+  test("plan pin: one bucket hash exchange feeds one bucket walk, with no " +
+      "capped aggregate; simhashPairs has no join and no cache") {
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    assertOneBucketWalk(
+      ops.map(op => op.name -> op.run(if (op.text) docs else emb, 1000)))
+  }
+
+  test("plan pin: every cross-side pair generator has one bucket hash " +
+      "exchange feeding one bucket walk, with no capped aggregate") {
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val (incDocs, incEmb) = (docs.filter(col("doc_id") % 10 === 0),
+      emb.filter(col("vec_id") % 10 === 0))
+    assertOneBucketWalk(crossOps.map(op => op.name -> op.run(
+      if (op.text) incDocs else incEmb, if (op.text) docs else emb, 1000)))
   }
 
   /** Runs `body` with `n` shuffle partitions, none coalesced. */
