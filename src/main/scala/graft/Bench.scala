@@ -35,13 +35,94 @@ import org.apache.spark.sql.SparkSession
   *     (`"metric":"queries_chunk"`, ~8 queries each) so a tail-biased
   *     log truncation can never erase the head of the catalog again
   *     (BENCH_r09 lost q01–q61's per-query data that way).
+  *
+  * Streaming layer: the full-JSON file also carries a `streaming` block,
+  * one record per streaming query, read from the micro-batches of its
+  * timed runs through a StreamingQueryListener ([[StreamLog]]).
   */
 object Bench {
+
+  /** Micro-batch progress of the streams started while `current` names
+    * a bench query. `onQueryStarted` reaches listeners synchronously on
+    * the starting thread, so each run id is owned by the query running
+    * at that moment; progress and termination arrive later on the
+    * listener bus, so read only after [[awaitTerminated]]. */
+  private final class StreamLog
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.apache.spark.sql.streaming.StreamingQueryProgress
+    @volatile var current: Option[String] = None
+    private val owner =
+      scala.collection.concurrent.TrieMap.empty[java.util.UUID, String]
+    private val progress = scala.collection.concurrent.TrieMap
+      .empty[java.util.UUID, Vector[StreamingQueryProgress]]
+    private val ended = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[java.util.UUID]()
+
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      current.foreach(owner.put(e.runId, _))
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      if (owner.contains(e.progress.runId))
+        progress.updateWith(e.progress.runId)(
+          p => Some(p.getOrElse(Vector.empty) :+ e.progress))
+    override def onQueryIdle(e: QueryIdleEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+      ended.add(e.runId)
+      ()
+    }
+
+    /** Waits, up to `timeoutMs`, until every owned run's termination
+      * (posted after its last progress) has been delivered. */
+    def awaitTerminated(timeoutMs: Long): Unit = {
+      val deadline = System.nanoTime() + timeoutMs * 1000000L
+      while (!owner.keys.forall(ended.contains) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    }
+
+    /** `{"runs", "batches" (median per run), "shuffle_partitions" (the
+      * state operators' distinct widths), per-batch medians of
+      * `trigger_ms`, `planning_ms` and `add_batch_ms`, and of the state
+      * operators' summed `state_commit_ms` and `state_updates_ms`}` of
+      * `name`'s runs, or None if it started no stream. */
+    def record(name: String): Option[String] = {
+      val runs = owner.collect { case (r, n) if n == name => r }.toSeq
+      if (runs.isEmpty) None
+      else {
+        val perRun = runs.map(progress.getOrElse(_, Vector.empty))
+        val all = perRun.flatten
+        def med(xs: Seq[Double]): String =
+          if (xs.isEmpty) "null"
+          else BigDecimal(median(xs.sorted))
+            .setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
+        def phase(k: String) = med(all.flatMap(p =>
+          Option(p.durationMs.get(k)).map(_.doubleValue)))
+        def state(f: org.apache.spark.sql.streaming.StateOperatorProgress =>
+            Long) = med(all.map(_.stateOperators.map(f).sum.toDouble))
+        val widths = all.flatMap(_.stateOperators.map(_.numShufflePartitions))
+          .distinct.sorted
+        Some(s"""{"runs":${runs.length},"batches":${med(perRun.map(_.length.toDouble))},""" +
+          s""""shuffle_partitions":${widths.mkString("[", ",", "]")},""" +
+          s""""trigger_ms":${phase("triggerExecution")},""" +
+          s""""planning_ms":${phase("queryPlanning")},""" +
+          s""""add_batch_ms":${phase("addBatch")},""" +
+          s""""state_commit_ms":${state(_.commitTimeMs)},""" +
+          s""""state_updates_ms":${state(_.allUpdatesTimeMs)}}""")
+      }
+    }
+  }
+
+  // xs is pre-sorted; even lengths average the two middle elements
+  private def median(xs: Seq[Double]): Double =
+    if (xs.length % 2 == 1) xs(xs.length / 2)
+    else (xs(xs.length / 2 - 1) + xs(xs.length / 2)) / 2.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val streams = new StreamLog
+    spark.streams.addListener(streams)
 
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
@@ -107,16 +188,15 @@ object Bench {
       if (contextDead) None
       else {
         val cold = runOne(name, fn)
-        val timed = Seq.fill(iters)(runOne(name, fn)).sorted
+        streams.current = Some(name)
+        val timed =
+          try Seq.fill(iters)(runOne(name, fn)).sorted
+          finally streams.current = None
         Some((name, cold, timed))
       }
     }
     val skipped = selected.map(_._1).filterNot(n => runs.exists(_._1 == n))
     val cold = runs.map(_._2).sum
-    // xs is pre-sorted; even lengths average the two middle elements
-    def median(xs: Seq[Double]): Double =
-      if (xs.length % 2 == 1) xs(xs.length / 2)
-      else (xs(xs.length / 2 - 1) + xs(xs.length / 2)) / 2.0
     val results = runs.map { case (name, _, t) => (name, median(t), t.head, t.last) }
 
     // Control: re-time the suite's first query at suite end under the
@@ -233,7 +313,11 @@ object Bench {
     val medlohi = results.map { case (k, med, lo, hi) =>
       "\"" + k + "\":[" + f2(med) + "," + f2(lo) + "," + f2(hi) + "]"
     }.mkString("{", ",", "}")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$cold,"iters":$iters,"nqueries":${results.length},"failed":$failedJson,$diag,"medlohi":$medlohi,"sf":"$sfDir"}"""
+    streams.awaitTerminated(timeoutMs = 30000L)
+    val streaming = results.flatMap { case (k, _, _, _) =>
+      streams.record(k).map("\"" + k + "\":" + _)
+    }.mkString("{", ",", "}")
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$cold,"iters":$iters,"nqueries":${results.length},"failed":$failedJson,$diag,"medlohi":$medlohi,"streaming":$streaming,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (fullJson + "\n").getBytes("UTF-8"))

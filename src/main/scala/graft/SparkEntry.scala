@@ -155,25 +155,38 @@ object SparkEntry {
 
   /** Runs one ephemeral streaming query to completion and returns its
     * result: `start` gets a fresh checkpoint dir and runs while the
-    * session pins 8 shuffle partitions — the query's stateful-stage
-    * width, fixed in its checkpoint when it starts: 8 suffice for the
-    * fixtures and cut each micro-batch's task overhead 4× against the
-    * session's 32, and each run's checkpoint is fresh, so no stored
-    * state depends on it. Then `processAllAvailable` and `stop`, and
-    * `read` copies the result out eagerly while the stream's files
-    * still exist. The checkpoint is dropped in a `finally`: a stream
-    * that throws leaks no checkpoint. */
-  private[graft] def runStream(s: SparkSession, name: String)(
+    * session's `spark.sql.shuffle.partitions` holds the stream's
+    * stateful width — fixed in the checkpoint's offset log when the
+    * query starts, and each run's checkpoint is fresh, so no stored
+    * state depends on it. The width is sized from `input`, the stream
+    * the query reads: its file sources' on-disk bytes through
+    * graft.ops.Sizing.streamWidth, floored at 1 and clamped to the
+    * session's own partitions; a stream whose sources carry no file
+    * size runs at the session width. Every partition loads and commits
+    * its state stores on every micro-batch, so the width is a fixed
+    * per-batch cost: q96's stream-stream join (four stores per
+    * partition) went from a fixed 8 partitions to the sized 1 at 212 →
+    * 16 ms of state commit per batch, 38 → 17 tasks and 2.56 → 2.08 s
+    * per warm pass (perfbench stream_microbatch, seed 42, 4-core box;
+    * NOTES.md "Streaming stateful width"). The session setting is
+    * restored once the query has started. Then `processAllAvailable`
+    * and `stop`, and `read` copies the result out eagerly while the
+    * stream's files still exist. The checkpoint is dropped in a
+    * `finally`: a stream that throws leaks no checkpoint. */
+  private[graft] def runStream(s: SparkSession, name: String,
+      input: Dataset[_])(
       start: String => org.apache.spark.sql.streaming.StreamingQuery)(
       read: => DataFrame): DataFrame = {
     val ckpt = streamCkpt(name)
     try {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+      val sessionWidth = s.conf.get("spark.sql.shuffle.partitions")
+      val width = graft.ops.Sizing.streamWidth(
+        graft.ops.Sizing.streamSourceBytes(input), sessionWidth.toInt)
       val q =
         try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
+          s.conf.set("spark.sql.shuffle.partitions", width.toString)
           start(ckpt.toString)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        } finally s.conf.set("spark.sql.shuffle.partitions", sessionWidth)
       try q.processAllAvailable() finally q.stop()
       read
     } finally dropStagingDir(s, ckpt)
@@ -194,13 +207,15 @@ object SparkEntry {
       stream: => Dataset[_])(select: DataFrame => DataFrame): DataFrame = {
     val sink = name + "_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    try runStream(s, sink) { ckpt =>
-      stream.writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode)
-        .start()
-    }(select(s.table(sink)).localCheckpoint())
-    finally s.catalog.dropTempView(sink)
+    try {
+      val input = stream
+      runStream(s, sink, input) { ckpt =>
+        input.writeStream.format("memory").queryName(sink)
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode)
+          .start()
+      }(select(s.table(sink)).localCheckpoint())
+    } finally s.catalog.dropTempView(sink)
   }
 
   /** Best-effort recursive delete of a PER-RUN staging directory once
@@ -7487,19 +7502,17 @@ object SparkEntry {
       .schema("key BIGINT, id BIGINT, ts TIMESTAMP, v BIGINT")
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
     // FILE sink, not the memory sink q160 uses: this query emits one
-    // row per input row (1M at sf0.1) — a memory sink would hold the
-    // whole output in driver memory, and a bench run measured it at
-    // 2.5× the file-sink cost. The checkpointed parquet sink is also
-    // the shape a production stream would use.
+    // row per input row (100,000 events at sf0.1) — a memory sink would
+    // hold the whole output in driver memory, and a bench run measured
+    // it at 2.5× the file-sink cost. The checkpointed parquet sink is
+    // also the shape a production stream would use.
     val outDir = base.resolve("out")
-    // checkpoint on the RAM-backed ephemeral root (see streamCkptRoot)
-    // — the parquet OUTPUT stays on disk, only the WAL/state deltas
-    // whose lifetime is this run go to memory-speed storage
-    // eager copy of the (narrow) output, then drop the per-run file
-    // sink, whether the stream succeeded or threw — a bench suite
-    // otherwise accumulates 4 runs of 1M-row parquet sinks per
-    // invocation in /tmp
-    try runStream(s, "q183") { ckpt =>
+    // the checkpoint lives under streamCkptRoot, the output under
+    // `base`; eager copy of the (narrow) output, then drop the per-run
+    // file sink, whether the stream succeeded or threw — a bench suite
+    // otherwise accumulates 4 runs of parquet sinks per invocation in
+    // the temp dir. The width is sized from `src`, the file source.
+    try runStream(s, "q183", src) { ckpt =>
       graft.streaming.Streaming.ewmaStream(
           src.as[graft.streaming.Streaming.EwmaPoint], alpha = 4)
         .toDF()

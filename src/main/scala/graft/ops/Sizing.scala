@@ -17,6 +17,12 @@ package graft.ops
   * from a cheap corpus count; oracle/bench queries keep pinning
   * explicit values, so published results never shift under them.
   *
+  * The same input-derived rule sizes partition counts: the grouping
+  * shuffles of the pair and n-gram kernels ([[groupingPartitions]])
+  * and the stateful width of every catalog stream
+  * (`SparkEntry.runStream`, from [[streamSourceBytes]] through
+  * [[streamWidth]]).
+  *
   * All rules are pure integer arithmetic on an APPROXIMATE count —
   * sizing needs the right power of two, so a count that is off by 2x
   * moves the answer by at most one bit.
@@ -216,6 +222,66 @@ object Sizing {
     val need = math.ceil(
       rows.toDouble * bytesPerRow / targetBytesPerTask).toLong
     math.max(floor, math.min(need, 1L << 18).toInt)
+  }
+
+  /** On-disk bytes of a streaming Dataset's file sources — NO Spark
+    * job, one driver-side listing per source path: the sum over the
+    * plan's `StreamingRelation` leaves of the data files under each
+    * source path (globs expanded; names starting with `_` or `.`
+    * skipped, as the file source's own listing skips them). Static
+    * leaves (the dimension side of a stream-static join) are not
+    * counted: they hold no streaming state. Returns None — callers run
+    * at the session width — when the Dataset is not streaming or any
+    * streaming leaf is not a path-backed file source (a `MemoryStream`,
+    * Kafka, a rate source): its size is unknown, and an unknown share
+    * of the input must not shrink the width. */
+  def streamSourceBytes(df: org.apache.spark.sql.Dataset[_]): Option[Long] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.spark.sql.execution.datasources.FileFormat
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val leaves = df.queryExecution.analyzed.collectLeaves().filter(_.isStreaming)
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    def bytes(fs: FileSystem, st: FileStatus): Long =
+      if (!st.isDirectory) st.getLen
+      else fs.listStatus(st.getPath).filterNot(c => hidden(c.getPath))
+        .map(bytes(fs, _)).sum
+    val perLeaf = leaves.map {
+      case r: StreamingRelation
+          if classOf[FileFormat].isAssignableFrom(r.dataSource.providingClass) =>
+        val paths = r.dataSource.paths ++ r.dataSource.options.get("path")
+        if (paths.isEmpty) None
+        else Some(paths.map { p =>
+          val path = new Path(p)
+          val fs = path.getFileSystem(conf)
+          Option(fs.globStatus(path)).toSeq.flatten.map(bytes(fs, _)).sum
+        }.sum)
+      case _ => None
+    }
+    if (perLeaf.nonEmpty && perLeaf.forall(_.isDefined))
+      Some(perLeaf.flatten.sum)
+    else None
+  }
+
+  /** Shuffle width of a streaming query's stateful operators, from its
+    * sources' on-disk bytes ([[streamSourceBytes]]): the
+    * [[groupingPartitions]] rule at 8 state bytes per source byte,
+    * floored at 1 and clamped to `sessionWidth` (the
+    * session's `spark.sql.shuffle.partitions`); unknown bytes run at
+    * `sessionWidth`. With nothing evicted (an effectively infinite
+    * watermark, a Complete-mode aggregate) the state holds at most the
+    * whole input, so the source bytes bound it; the factor of 8 covers
+    * parquet's ~3-4x compression and the two state versions the
+    * HDFS-backed provider keeps in memory. Every partition of a
+    * stateful operator loads and commits its state stores on every
+    * micro-batch, needed or not — a stream-stream join holds four per
+    * partition — so a width past what the state needs is pure
+    * per-batch cost (NOTES.md "Streaming stateful width"). */
+  def streamWidth(sourceBytes: Option[Long], sessionWidth: Int): Int = {
+    require(sessionWidth >= 1, s"sessionWidth $sessionWidth")
+    sourceBytes.fold(sessionWidth) { b =>
+      math.min(sessionWidth, groupingPartitions(b, 8L, 1))
+    }
   }
 
   /** SemDeDup cell count: cells hold ~targetCellSize vectors so the

@@ -134,6 +134,25 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"deleted pair helpers are back: $offenders")
   }
 
+  test("only Sessions.builder sets the shuffle width; nothing pins it " +
+      "to a literal") {
+    // the session's spark.sql.shuffle.partitions is the one width
+    // setting (sized from the cores, or per stream from its input by
+    // SparkEntry.runStream); a pinned literal ignores both
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val pinned = ("(?:\"spark\\.sql\\.shuffle\\.partitions\"|" +
+      "SHUFFLE_PARTITIONS\\.key)\\s*,\\s*\"?\\d").r
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val offenders =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+        .flatMap { f =>
+          pinned.findAllIn(Files.readString(f)).map(m => s"$f: $m")
+        }
+      finally walk.close()
+    assert(offenders.isEmpty, s"shuffle width pinned to a literal: $offenders")
+  }
+
   test("oracle SQL only references fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings",
