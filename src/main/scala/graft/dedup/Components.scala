@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Fixpoint
 
 /** Connected components over a near-duplicate pair list — the step
   * between pairwise dedup output and "keep ONE document per duplicate
@@ -27,7 +28,7 @@ import org.apache.spark.sql.functions._
   * approaches maxIter. Converged when a round changes nothing. Labels
   * are one id + one label wide; at corpus scale the edge table is the
   * candidate-pair output, orders of magnitude smaller than the corpus.
-  * Lineage is truncated per round with eager localCheckpoints, the
+  * Lineage is cut every round ([[graft.ops.Fixpoint.cutObserved]]), the
   * standard Spark idiom for iterative plans (an unbounded plan chain
   * re-analyzes and re-optimizes quadratically).
   */
@@ -171,20 +172,18 @@ object Components {
         .union(rawDf.select(col("id2").as("src"), col("id1").as("dst")))
         .distinct()
         .cache() // probed every round
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("lbl", col("id"))
-        .localCheckpoint(true)
+      var labels = Fixpoint.cut(edges.select(col("src").as("id")).distinct()
+        .withColumn("lbl", col("id")))
       var iter = 0
       var converged = false
       while (!converged && iter < maxIter) {
         // One action per round (two with doubling) — the convergence
-        // probe rides the final checkpoint's job as an OBSERVED metric
-        // (rounds are job-overhead bound at small label counts). The
-        // round-17 form: CollectMetrics in the codegen'd plan replaces
-        // the earlier typed mapPartitions + accumulator, which paid an
-        // external-Row round-trip over every label row per round; the
-        // metric is also exact under task retries (accumulators were
-        // zero-vs-nonzero only).
+        // probe rides the final cut's job as an OBSERVED metric
+        // (rounds are job-overhead bound at small label counts), read
+        // only as zero vs nonzero. The round-17 form: CollectMetrics in
+        // the codegen'd plan replaces the earlier typed mapPartitions +
+        // accumulator, which paid an external-Row round-trip over every
+        // label row per round.
         val nbrMin = edges
           .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
           .select(col("src").as("id"), col("lbl"))
@@ -204,24 +203,22 @@ object Components {
             // pointer doubling: follow the gathered label to ITS gathered
             // label. Monotone (gathered.lbl(y) <= y for every node y, own
             // row included) and component-preserving (labels are always
-            // member ids), so the fixed point is unchanged. Checkpointed
-            // first: the jump consumes the gather twice. Labels are
+            // member ids), so the fixed point is unchanged. Cut first:
+            // the jump consumes the gather twice. Labels are
             // always node ids, so the left join's fallback never actually
             // fires; coalesce keeps it total.
-            val gathered = gathered0.localCheckpoint(true)
+            val gathered = Fixpoint.cut(gathered0)
             gathered
               .join(gathered.select(col("id").as("lbl"), col("lbl").as("lbl2")),
                 Seq("lbl"), "left")
               .select(col("id"),
                 coalesce(col("lbl2"), col("lbl")).as("lbl"), col("prev"))
           }
-        val obsName = s"graft.cc_changed_$iter"
-        val sel = jumped
-          .observe(obsName, // null-safe: exact parity with a Java !=
-            count(when(not(col("lbl") <=> col("prev")), lit(1))).as("n"))
-          .select(col("id"), col("lbl"))
-        val next = sel.localCheckpoint(true)
-        converged = graft.util.Observed.metric(sel, obsName).getLong(0) == 0L
+        val (next, changed) = Fixpoint.cutObserved(jumped,
+          s"graft.cc_changed_$iter", // null-safe: exact parity with a Java !=
+          count(when(not(col("lbl") <=> col("prev")), lit(1))).as("n"),
+          col("id"), col("lbl"))
+        converged = changed.getLong(0) == 0L
         labels = next
         iter += 1
       }

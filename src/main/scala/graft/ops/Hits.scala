@@ -27,103 +27,43 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: edges persisted once; each half-round is one join of
   * the (N-row) score table into the edge table plus a map-side-combined
-  * groupBy, with the same broadcast gate as PageRank — below
-  * `broadcastNodesUpTo` nodes the edge table never shuffles. The
-  * normalizing total rides the half-round's lineage-cut job as an
-  * observed metric (Σraw accumulates during the checkpoint
-  * materialization) and enters the plan as a literal divisor — no
-  * extra aggregation job, no crossJoin; half-rounds between cuts
-  * (cutEveryHalfRounds > 1) fall back to the 1-row-aggregate
-  * broadcast crossJoin, bit-identically.
+  * groupBy, through [[Fixpoint]]'s broadcast gate on the node count —
+  * under it the edge table never shuffles. Each half-round's raw
+  * score table is cut with [[Fixpoint.cutObserved]]: the normalizing
+  * total rides the cut's job as an observed metric and enters the plan
+  * as a literal divisor — no extra aggregation job, no crossJoin.
   */
 object Hits {
 
   val Scale: Long = 1L << 20
 
-  /** @param cutEveryHalfRounds lineage-cut cadence for the per-half-round
-    *   score tables: 1 (default) checkpoints every normalize — the
-    *   round-11 discipline; k>1 checkpoints every k-th half-round,
-    *   letting the in-between raws recompute (~2× one join+agg, since
-    *   normalize reads its input twice) in exchange for k−1 fewer N-row
-    *   materializations per k half-rounds. Output is bit-identical for
-    *   any k — the cut changes WHERE work happens, not what is computed
-    *   (HitsSpec pins k=1 ≡ k=2). Probe lever for the x300 residual
-    *   attribution; the default stays 1 unless measurement says move it. */
   def hits(
       edges: DataFrame,
       srcCol: Column,
       dstCol: Column,
       iters: Int,
-      broadcastNodesUpTo: Long = PageRank.DefaultBroadcastNodesUpTo,
-      cutEveryHalfRounds: Int = 1)
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo)
       : DataFrame = {
     require(iters >= 1, "iters must be positive")
-    require(cutEveryHalfRounds >= 1, "cutEveryHalfRounds must be positive")
-    val e = edges.select(srcCol.cast("long").as("u"),
-      dstCol.cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .persist()
-    try {
-      val nodes = e.select(col("u").as("id"))
-        .union(e.select(col("v").as("id"))).distinct().persist()
-      val n = nodes.count()
-      require(n > 0, "empty graph")
-      val gate = n <= broadcastNodesUpTo
-      // shuffle arm: hash-build the N-row score side (~16 B/row,
-      // N/partitions per task) so no side of the per-round join is
-      // ever SORTED — the edge exchange itself is the algorithm's
-      // message pass and stays. (Pre-partitioned persisted edge
-      // copies per join key were measured and REJECTED: the extra
-      // cache materialization exchanges cost more at x30 than the
-      // saved join exchanges, and x100 was flat — NOTES round 10.)
-      def maybeB(df: DataFrame): DataFrame =
-        if (gate) broadcast(df) else df.hint("shuffle_hash")
+    Fixpoint.holding { held =>
+      val e = held.persist(Fixpoint.edgeTable(edges, srcCol, dstCol))
+      val nodes = held.persist(Fixpoint.nodeIds(e))
+      // shuffle arm (Gate.hashed): pre-partitioned persisted edge copies
+      // per join key were measured and REJECTED — the extra cache
+      // materialization exchanges cost more at x30 than the saved join
+      // exchanges, and x100 was flat (NOTES round 10).
+      val (_, gate) = Fixpoint.sized(nodes, broadcastNodesUpTo)
 
-      // Each half-round's score table (N rows of two longs) is cut off
-      // from its lineage with an eager localCheckpoint: normalize reads
-      // its input TWICE (total + crossJoin arm), so without truncation
-      // the logical plan doubles per half-round and planning + recompute
-      // explode (measured 15.8 s for iters=2 vs 2.7 s for iters=1 at
-      // sf0.1; checkpointing makes iters=2 ~3 s). The materialized table
-      // is tiny at any scale — this is the same discipline PageRank's
-      // scaladoc prescribes for deep loops, made unconditional because
-      // of the double consumption.
-      var halfRound = 0
-      def normalize(raw0: DataFrame, c: String): DataFrame = {
-        halfRound += 1
-        if (halfRound % cutEveryHalfRounds == 0) {
-          // The cut's eager materialization doubles as the totals
-          // pass: Σc rides the SAME job as an observed metric
-          // (CollectMetrics accumulates during the checkpoint
-          // count), so the normalizing total costs no extra job and
-          // no crossJoin — it lands in the plan as a LITERAL divisor,
-          // the identical integer math (round-17; spec pins the
-          // literal-vs-crossJoin arms bit-equal via k=1 ≡ k=2).
-          // EXACTNESS CAVEAT (round-17 ADVICE): the observed total is
-          // load-bearing (it enters the plan as the literal divisor).
-          // CollectMetrics can over-count under task retries /
-          // speculation — exact only in this engine's local-mode,
-          // maxFailures=1 regime; a cluster port with retries must
-          // fall back to the crossJoin form below unconditionally.
-          val obsName = s"graft.hits_tot_$halfRound"
-          val observed = raw0.observe(obsName, sum(col(c)).as("tot"))
-          val raw = observed.localCheckpoint()
-          val totRow = graft.util.Observed.metric(observed, obsName)
-          val tot = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
-          if (tot > 0)
-            raw.select(col("id"),
-              expr(s"($c * ${Scale}L) div ${tot}L").as(c))
-          else raw.select(col("id"), lit(0L).as(c))
-        } else {
-          // un-cut half-rounds have no action to observe on — the
-          // 1-row aggregate broadcast-crossJoins back (Classifier.v1
-          // idiom), no driver round-trip
-          val tot = broadcast(raw0.agg(sum(col(c)).as("tot")))
-          raw0.crossJoin(tot)
-            .select(col("id"),
-              when(col("tot") > 0, expr(s"($c * ${Scale}L) div tot"))
-                .otherwise(0L).as(c))
-        }
+      // the cut's job also sums the raw scores, and the total lands in
+      // the plan as a literal divisor
+      def normalize(raw: DataFrame, c: String, halfRound: Int)
+          : DataFrame = {
+        val (table, totRow) = Fixpoint.cutObserved(raw,
+          s"graft.hits_tot_$halfRound", sum(col(c)).as("tot"))
+        val tot = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
+        if (tot > 0)
+          table.select(col("id"), expr(s"($c * ${Scale}L) div ${tot}L").as(c))
+        else table.select(col("id"), lit(0L).as(c))
       }
 
       // Zero-score nodes are restored ONCE at the end, not per
@@ -136,29 +76,25 @@ object Hits {
       // nonzero-degree nodes; the full node set reappears in the
       // final left joins below, coalesced to 0 — bit-identical to
       // the restore-every-half-round loop (oracle + spec pin it).
-      var hub = nodes.withColumn("h", lit(Scale))
-      var auth: DataFrame = null
-      for (_ <- 1 to iters) {
-        val aRaw = e.join(
-          maybeB(hub.withColumnRenamed("id", "u")), Seq("u"))
-          .groupBy(col("v").as("id")).agg(sum(col("h")).as("a"))
-        auth = normalize(aRaw, "a")
-        val hRaw = e.join(
-          maybeB(auth.withColumnRenamed("id", "v")), Seq("v"))
-          .groupBy(col("u").as("id")).agg(sum(col("a")).as("h"))
-        hub = normalize(hRaw, "h")
+      // The state is (hub, auth); round 1 sets auth.
+      val (hub, auth) = Fixpoint.rounds(
+          (nodes.withColumn("h", lit(Scale)), null: DataFrame), iters) {
+        case ((hub, _), round) =>
+          val aRaw = e.join(
+            gate.hashed(hub.withColumnRenamed("id", "u")), Seq("u"))
+            .groupBy(col("v").as("id")).agg(sum(col("h")).as("a"))
+          val auth = normalize(aRaw, "a", 2 * round - 1)
+          val hRaw = e.join(
+            gate.hashed(auth.withColumnRenamed("id", "v")), Seq("v"))
+            .groupBy(col("u").as("id")).agg(sum(col("a")).as("h"))
+          Some((normalize(hRaw, "h", 2 * round), auth))
       }
-      val out = nodes
+      Fixpoint.cut(nodes
         .join(hub, Seq("id"), "left")
         .join(auth, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("h"), lit(0L)).as("hub_fp"),
-          coalesce(col("a"), lit(0L)).as("auth_fp"))
-        .localCheckpoint()
-      nodes.unpersist()
-      out
-    } finally {
-      e.unpersist()
+          coalesce(col("a"), lit(0L)).as("auth_fp")))
     }
   }
 }

@@ -28,15 +28,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is ONE map-side-combined degree groupBy plus
   * two semi-joins of the (shrinking) edge table against the ≤N-row keep
-  * set — the keep set is the small side and is broadcast under the same
-  * node gate as PageRank's rank table, so past the first round the edge
-  * table never shuffles. Convergence is detected from the keep-set
-  * count the sizing already needs (keep ⊆ previous keep, so equal
-  * cardinality ⇒ equal sets ⇒ fixed point) — no extra job. Driver
-  * state: the loop counter and one long per round. Deep peels
-  * self-truncate lineage every [[PageRank.LineageCutEvery]] rounds
-  * (eager localCheckpoint of the current — already shrunken — edge
-  * set); semantically transparent, spec-pinned against a cut-free run.
+  * set — the keep set is the small side and goes through [[Fixpoint]]'s
+  * broadcast gate, so under it the edge table never shuffles.
+  * Convergence is detected from the keep-set count, read from the keep
+  * set's own cut job (keep ⊆ previous keep, so equal cardinality ⇒
+  * equal sets ⇒ fixed point) — no extra job. Driver state: the loop
+  * counter and one long per round. Both the keep set and each round's
+  * (already shrunken) edge set are cut from their lineage, so the plan
+  * never grows and the result reads only cut leaves.
   */
 object KCore {
 
@@ -46,8 +45,8 @@ object KCore {
     *   point or after `maxRounds` peels, whichever is first. An oracle
     *   unrolling exactly `maxRounds` rounds matches either way.
     * @param broadcastNodesUpTo keep sets up to this size broadcast into
-    *   the semi-joins (default shares [[PageRank.DefaultBroadcastNodesUpTo]]);
-    *   above it both semi-joins fall back to shuffles (result-identical).
+    *   the semi-joins (default [[Fixpoint.BroadcastNodesUpTo]]); above
+    *   it both semi-joins fall back to shuffles (result-identical).
     * @return (node long, deg long) for every node of the peeled graph.
     */
   def kCore(
@@ -56,81 +55,51 @@ object KCore {
       dstCol: Column,
       k: Int,
       maxRounds: Int = 30,
-      broadcastNodesUpTo: Long = PageRank.DefaultBroadcastNodesUpTo,
-      lineageCutEvery: Int = PageRank.LineageCutEvery): DataFrame = {
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    require(lineageCutEvery >= 1, "lineageCutEvery must be positive")
-    val e0 = edges.select(srcCol.cast("long").as("u"),
-        dstCol.cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-    val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-    var cur = sym.persist()
-    var prevKeep = -1L
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      round += 1
-      val deg = cur.groupBy("u").agg(count(lit(1)).as("d"))
-      // The keep set MUST become a plan LEAF (eager localCheckpoint of
-      // ≤N id rows), not a cached subtree: `next` references cur once
-      // directly and twice through keep, so a keep that still carries
-      // cur's logical plan makes the round-r plan hold 3^r copies of
-      // the edge build — the first 7-round peel OOM'd the driver in
-      // generateTreeString before any task ran. As a leaf, plan depth
-      // grows one join layer per round (and the every-lineageCutEvery
-      // edge checkpoint resets even that).
-      // |keep| rides the checkpoint job as an observed metric (the
-      // Hits normalize idiom) instead of a separate count() job —
-      // CollectMetrics accumulates during the eager materialization.
-      val obsName = s"graft.kcore_keep_$round"
-      val observed = deg.filter(col("d") >= k).select(col("u").as("id"))
-        .observe(obsName, count(lit(1)).as("n"))
-      val keep = observed.localCheckpoint(true)
-      // EXACTNESS CAVEAT (round-17 ADVICE): this metric's exact value
-      // is load-bearing (the nKeep == prevKeep fixed-point test).
-      // CollectMetrics accumulators below a shuffle boundary can
-      // OVER-count under task retries/speculation; that regime never
-      // happens in this engine's local-mode, maxFailures=1 deployment,
-      // but a cluster port with retries must replace this with a
-      // separate count() (or read only zero-vs-nonzero, the
-      // Components pattern, which stays exact).
-      val nKeep = graft.util.Observed.metric(observed, obsName).getLong(0)
-      if (nKeep == prevKeep) {
-        // keep ⊆ previous keep and |keep| = |previous keep| ⇒ the sets
-        // are equal ⇒ this round's semi-joins would keep every edge —
-        // fixed point, skip the no-op induce.
-        converged = true
-      } else {
-        prevKeep = nKeep
-        val gate = nKeep <= broadcastNodesUpTo
-        // two independent aliases of the keep set — the same DataFrame
-        // object on both sides of back-to-back joins trips Spark's
-        // ambiguous-self-join detection
-        val keepU = (if (gate) broadcast(keep) else keep)
-          .withColumnRenamed("id", "__ku")
-        val keepV = (if (gate) broadcast(keep) else keep)
-          .withColumnRenamed("id", "__kv")
-        var next = cur
-          .join(keepU, col("u") === col("__ku"), "left_semi")
-          .join(keepV, col("v") === col("__kv"), "left_semi")
-        if (round % lineageCutEvery == 0) {
-          // the eager checkpoint IS a materialized stable leaf — a
-          // persist on top would only re-scan it into a second copy
-          next = next.localCheckpoint(true)
-        } else {
-          next = next.persist()
-          next.count() // materialize before dropping the parent cache
-        }
-        cur.unpersist()
-        // keep's checkpoint blocks (≤ N longs per round) are released
-        // by the ContextCleaner when the round's plans go out of scope
-        cur = next
+    Fixpoint.holding { held =>
+      val e0 = Fixpoint.edgeTable(edges, srcCol, dstCol)
+        .filter(col("u") =!= col("v"))
+      val sym = held.persist(
+        e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct())
+      // state: the current edge set and the previous round's |keep|
+      val (core, _) = Fixpoint.rounds((sym, -1L), maxRounds) {
+        case ((cur, prevKeep), round) =>
+          val deg = cur.groupBy("u").agg(count(lit(1)).as("d"))
+          // The keep set MUST be a plan LEAF (a cut of ≤N id rows), not
+          // a cached subtree: `next` references cur once directly and
+          // twice through keep, so a keep that still carries cur's
+          // logical plan makes the round-r plan hold 3^r copies of the
+          // edge build — the first 7-round peel OOM'd the driver in
+          // generateTreeString before any task ran.
+          val (keep, kept) = Fixpoint.cutObserved(
+            deg.filter(col("d") >= k).select(col("u").as("id")),
+            s"graft.kcore_keep_$round", count(lit(1)).as("n"))
+          val nKeep = kept.getLong(0)
+          // keep ⊆ previous keep and |keep| = |previous keep| ⇒ the sets
+          // are equal ⇒ this round's semi-joins would keep every edge —
+          // fixed point, skip the no-op induce.
+          if (nKeep == prevKeep) None
+          else {
+            val gate = Fixpoint.gate(nKeep, broadcastNodesUpTo)
+            // two independent aliases of the keep set — the same
+            // DataFrame object on both sides of back-to-back joins trips
+            // Spark's ambiguous-self-join detection
+            val next = cur
+              .join(gate(keep).withColumnRenamed("id", "__ku"),
+                col("u") === col("__ku"), "left_semi")
+              .join(gate(keep).withColumnRenamed("id", "__kv"),
+                col("v") === col("__kv"), "left_semi")
+            val table = Fixpoint.cut(next)
+            held.release(cur) // round 1 reads the persisted sym
+            // keep's and cur's cut blocks are released by the
+            // ContextCleaner when the round's plans go out of scope
+            Some((table, nKeep))
+          }
       }
+      core.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+        .select(col("node"), col("deg"))
     }
-    cur.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-      .select(col("node"), col("deg"))
   }
 }

@@ -23,13 +23,13 @@ import org.apache.spark.sql.functions._
   * nondeterminism; pick odd/even `iters` consistently when comparing.
   *
   * Scale shape: edges persisted once; each round is one join of the
-  * N-row label table into the edge table (broadcast below
-  * `broadcastNodesUpTo` nodes — the edge table never shuffles), a
-  * map-side-combined (node, label) count, and a struct-min argmax.
-  * Each round's label table is cut from its lineage with an eager
-  * localCheckpoint — the round reads the previous table TWICE (vote
+  * N-row label table into the edge table (through [[Fixpoint]]'s
+  * broadcast gate on the node count — under it the edge table never
+  * shuffles), a map-side-combined (node, label) count, and a
+  * struct-min argmax. Each round's label table is cut from its lineage
+  * ([[Fixpoint.cut]]) — the round reads the previous table TWICE (vote
   * join + keep-own-label fallback), so without truncation the logical
-  * plan doubles per round (the measured [[Hits]] failure mode).
+  * plan doubles per round.
   */
 object LabelProp {
 
@@ -38,46 +38,32 @@ object LabelProp {
       srcCol: Column,
       dstCol: Column,
       iters: Int,
-      broadcastNodesUpTo: Long = PageRank.DefaultBroadcastNodesUpTo)
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo)
       : DataFrame = {
     require(iters >= 1, "iters must be positive")
-    val e = edges.select(srcCol.cast("long").as("u"),
-      dstCol.cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .persist()
-    try {
-      val nodes = e.select(col("u").as("id"))
-        .union(e.select(col("v").as("id"))).distinct()
-      var labels = nodes.withColumn("lbl", col("id")).localCheckpoint()
-      val n = labels.count()
-      require(n > 0, "empty graph")
-      val gate = n <= broadcastNodesUpTo
-      // shuffle arm: hash-build the N-row label side so no side of
-      // the per-round vote join is ever SORTED; the edge exchange is
-      // the algorithm's message pass and stays. (A pre-partitioned
-      // persisted edge copy was measured and REJECTED — extra cache
-      // materialization exchange outweighed the saved join exchanges
-      // at x30, flat at x100; NOTES round 10.)
-      def maybeB(df: DataFrame): DataFrame =
-        if (gate) broadcast(df) else df.hint("shuffle_hash")
-      for (_ <- 1 to iters) {
+    Fixpoint.holding { held =>
+      val e = held.persist(Fixpoint.edgeTable(edges, srcCol, dstCol))
+      val labels0 = Fixpoint.cut(
+        Fixpoint.nodeIds(e).withColumn("lbl", col("id")))
+      // shuffle arm (Gate.hashed): a pre-partitioned persisted edge copy
+      // was measured and REJECTED — extra cache materialization exchange
+      // outweighed the saved join exchanges at x30, flat at x100; NOTES
+      // round 10.
+      val (_, gate) = Fixpoint.sized(labels0, broadcastNodesUpTo)
+      Fixpoint.rounds(labels0, iters) { (labels, _) =>
         // (count desc, label asc) argmax as a single struct-min: counts
         // are positive, so min over (-count, label) orders correctly
         val votes = e.join(
-          maybeB(labels.withColumnRenamed("id", "u")), Seq("u"))
+          gate.hashed(labels.withColumnRenamed("id", "u")), Seq("u"))
           .groupBy(col("v").as("id"), col("lbl"))
           .agg(count(lit(1)).as("c"))
         val best = votes.groupBy("id")
           .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
           .select(col("id"), col("m.lbl").as("new_lbl"))
-        labels = labels.join(best, Seq("id"), "left")
+        Some(Fixpoint.cut(labels.join(best, Seq("id"), "left")
           .select(col("id"),
-            coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-          .localCheckpoint()
-      }
-      labels.select(col("id"), col("lbl").as("label"))
-    } finally {
-      e.unpersist()
+            coalesce(col("new_lbl"), col("lbl")).as("lbl"))))
+      }.select(col("id"), col("lbl").as("label"))
     }
   }
 }

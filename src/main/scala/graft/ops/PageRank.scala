@@ -24,39 +24,24 @@ import org.apache.spark.sql.functions._
   * Scale shape: degrees are joined into the edge table ONCE and the
   * result persisted — each iteration is then a single rank⋈edges join
   * plus the contributions groupBy (partial-agg'd map-side, ≤ N rows
-  * shuffled). When the node count is at most `broadcastNodesUpTo` the
-  * rank table (N rows of two longs) is broadcast into that join, so
-  * the edge table is never shuffled at all; above the gate it falls
-  * back to a plain shuffle join (same results — pinned by spec).
-  * Driver holds only the loop counter. Deep loops self-truncate:
-  * every [[LineageCutEvery]] iterations the N-row rank table is cut
-  * from its lineage with an eager localCheckpoint (otherwise the plan
-  * grows one join+agg layer per round and optimizer time is
-  * quadratic in depth) — results are bit-identical (spec pins
-  * iters=25 against a cut-free run).
+  * shuffled). The rank table (N rows of two longs) goes through
+  * [[Fixpoint]]'s broadcast gate on the node count, so under it the
+  * edge table is never shuffled at all; above it the round is a
+  * shuffle join (same results — pinned by spec). Driver holds only the
+  * loop counter. Deep loops self-truncate: the rank table is cut from
+  * its lineage every [[Fixpoint.CutEvery]] iterations — results are
+  * bit-identical (spec pins iters=25 against the sequential model).
+  *
+  * [[weightedPageRank]] and [[trustRank]] run the same loop; a variant
+  * fixes only its edge weight, its out-weight aggregate, its
+  * contribution expression and its seed/base rank.
   */
 object PageRank {
 
   val Scale: Long = 1L << 20
 
-  /** Rank tables up to this many nodes are broadcast into the
-    * per-iteration edge join (~16 B/row: 2 M ≈ tens of MB hashed).
-    * Both arms are result-identical (pinned by spec); call sites pass
-    * their own threshold to choose the shuffle arm. */
-  val DefaultBroadcastNodesUpTo: Long = 2L * 1000 * 1000
-
-  /** Rank-table lineage is cut (eager localCheckpoint of N rows of two
-    * longs) every this-many iterations. 5 trades one extra tiny job
-    * per 5 rounds against the quadratic planning growth of an uncut
-    * loop; checkpointing is semantically transparent, so any value
-    * yields bit-identical ranks (PageRankSpec pins iters=25 vs an
-    * effectively-uncut run). */
-  val LineageCutEvery: Int = 5
-
   /** @param edges (srcCol, dstCol) directed edge table; duplicate
     *   edges count twice (pre-`distinct` if that is not intended).
-    * @param lineageCutEvery checkpoint cadence (see [[LineageCutEvery]]);
-    *   semantically transparent at any value — a measurement lever.
     * @return (id, rank_fp long) for every node appearing as src or dst.
     */
   def pageRank(
@@ -66,65 +51,16 @@ object PageRank {
       iters: Int,
       dampingNum: Int = 85,
       dampingDen: Int = 100,
-      broadcastNodesUpTo: Long = DefaultBroadcastNodesUpTo,
-      lineageCutEvery: Int = LineageCutEvery): DataFrame = {
-    require(lineageCutEvery >= 1, "lineageCutEvery must be positive")
-    require(iters >= 1, "iters must be positive")
-    require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
-      s"damping must be a fraction in [0,1], got $dampingNum/$dampingDen")
-    val e = edges.select(srcCol.cast("long").as("u"),
-      dstCol.cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .persist()
-    val nodes = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct().persist()
-    val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-    var eDeg: DataFrame = null
-    try {
-      val n = nodes.count()
-      require(n > 0, "empty graph")
-      val gate = n <= broadcastNodesUpTo
-      // one degree join for the whole run, not one per iteration; deg
-      // has ≤ N rows, so the node gate covers broadcasting it too —
-      // the gated arm never shuffles the edge table.
-      // SHUFFLE arm: the deg join's own exchange already leaves eDeg
-      // hashpartitioned (and sorted) by u, and the CACHE preserves
-      // both — so each round's join reuses it and only the N-row rank
-      // side moves. No explicit repartition: adding one was measured
-      // at +20% on the x100 rung (a redundant E-row exchange on every
-      // cache rebuild). LabelProp/Hits DO repartition — their cached
-      // edge table is a raw scan with no partitioning to reuse.
-      eDeg = e.join(if (gate) broadcast(deg) else deg, Seq("u")).persist()
-      val r0 = Scale / n
-      val base = (dampingDen - dampingNum) * Scale / (dampingDen * n)
-      var rank = nodes.withColumn("r", lit(r0))
-      for (i <- 1 to iters) {
-        val rankU = rank.withColumnRenamed("id", "u")
-        // shuffle arm: hash-build the N-row rank side (~16 B/row —
-        // N/partitions per task, no sort of the edge stream); the
-        // no-spill build-side caveat is bounded by the NODE table,
-        // not the edges, so partition count keeps it small anywhere
-        val contrib = eDeg
-          .join(if (gate) broadcast(rankU) else rankU.hint("shuffle_hash"),
-            Seq("u"))
-          .select(col("v").as("id"), expr("r div d").as("c"))
-          .groupBy("id").agg(sum("c").as("cs"))
-        rank = nodes.join(contrib, Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) + expr(
-              s"($dampingNum * coalesce(cs, 0L)) div $dampingDen"))
-              .as("r"))
-        // deep-loop self-truncation (see LineageCutEvery): skip on the
-        // final round — the tail localCheckpoint below covers it
-        if (i % lineageCutEvery == 0 && i < iters)
-          rank = rank.localCheckpoint()
-      }
-      // materialize before unpersisting the inputs the lineage reads
-      rank = rank.select(col("id"), col("r").as("rank_fp")).localCheckpoint()
-      rank
-    } finally {
-      e.unpersist(); nodes.unpersist()
-      if (eDeg != null) eDeg.unpersist()
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo): DataFrame = {
+    checkArgs(iters, dampingNum, dampingDen)
+    Fixpoint.holding { held =>
+      val e = held.persist(Fixpoint.edgeTable(edges, srcCol, dstCol))
+      val nodes = held.persist(Fixpoint.nodeIds(e))
+      val (n, gate) = Fixpoint.sized(nodes, broadcastNodesUpTo)
+      propagate(held, e, nodes, gate, count(lit(1)).as("d"),
+        expr("r div d"), lit(Scale / n),
+        lit((dampingDen - dampingNum) * Scale / (dampingDen * n)),
+        iters, dampingNum, dampingDen, "rank_fp")
     }
   }
 
@@ -146,9 +82,7 @@ object PageRank {
     * weight — pre-aggregate if that is not intended.
     *
     * Scale shape identical to [[pageRank]]: the Σw join is done ONCE
-    * and persisted with the edges; each iteration is one
-    * broadcast-gated rank⋈edges join + map-side-combined contribution
-    * groupBy; lineage cut every [[LineageCutEvery]] rounds.
+    * and persisted with the edges.
     */
   def weightedPageRank(
       edges: DataFrame,
@@ -158,53 +92,21 @@ object PageRank {
       iters: Int,
       dampingNum: Int = 85,
       dampingDen: Int = 100,
-      broadcastNodesUpTo: Long = DefaultBroadcastNodesUpTo,
-      lineageCutEvery: Int = LineageCutEvery): DataFrame = {
-    require(lineageCutEvery >= 1, "lineageCutEvery must be positive")
-    require(iters >= 1, "iters must be positive")
-    require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
-      s"damping must be a fraction in [0,1], got $dampingNum/$dampingDen")
-    val e = edges.select(srcCol.cast("long").as("u"),
-        dstCol.cast("long").as("v"), weightCol.cast("long").as("w"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .withColumn("w", when(col("w") > 0, col("w"))
-        .otherwise(raise_error(concat(
-          lit("weightedPageRank weights must be positive, got "),
-          col("w")))))
-      .persist()
-    val nodes = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct().persist()
-    val sw = e.groupBy("u").agg(sum(col("w")).as("sw"))
-    var eW: DataFrame = null
-    try {
-      val n = nodes.count()
-      require(n > 0, "empty graph")
-      val gate = n <= broadcastNodesUpTo
-      // one Σw join for the whole run (pageRank's eDeg discipline)
-      eW = e.join(if (gate) broadcast(sw) else sw, Seq("u")).persist()
-      val r0 = Scale / n
-      val base = (dampingDen - dampingNum) * Scale / (dampingDen * n)
-      var rank = nodes.withColumn("r", lit(r0))
-      for (i <- 1 to iters) {
-        val rankU = rank.withColumnRenamed("id", "u")
-        val contrib = eW
-          .join(if (gate) broadcast(rankU) else rankU.hint("shuffle_hash"),
-            Seq("u"))
-          .select(col("v").as("id"), expr("(r * w) div sw").as("c"))
-          .groupBy("id").agg(sum("c").as("cs"))
-        rank = nodes.join(contrib, Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) + expr(
-              s"($dampingNum * coalesce(cs, 0L)) div $dampingDen"))
-              .as("r"))
-        if (i % lineageCutEvery == 0 && i < iters)
-          rank = rank.localCheckpoint()
-      }
-      rank = rank.select(col("id"), col("r").as("rank_fp")).localCheckpoint()
-      rank
-    } finally {
-      e.unpersist(); nodes.unpersist()
-      if (eW != null) eW.unpersist()
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo): DataFrame = {
+    checkArgs(iters, dampingNum, dampingDen)
+    Fixpoint.holding { held =>
+      val e = held.persist(Fixpoint.edgeTable(edges, srcCol, dstCol,
+          weightCol.cast("long").as("w"))
+        .withColumn("w", when(col("w") > 0, col("w"))
+          .otherwise(raise_error(concat(
+            lit("weightedPageRank weights must be positive, got "),
+            col("w"))))))
+      val nodes = held.persist(Fixpoint.nodeIds(e))
+      val (n, gate) = Fixpoint.sized(nodes, broadcastNodesUpTo)
+      propagate(held, e, nodes, gate, sum(col("w")).as("sw"),
+        expr("(r * w) div sw"), lit(Scale / n),
+        lit((dampingDen - dampingNum) * Scale / (dampingDen * n)),
+        iters, dampingNum, dampingDen, "rank_fp")
     }
   }
 
@@ -225,11 +127,8 @@ object PageRank {
     * AND at nodes unreachable from seeds (their trust is exactly 0) —
     * scores are a trust ORDERING, not a distribution.
     *
-    * Scale shape identical to [[pageRank]]: one degree join persisted
-    * for the run, per-iteration rank⋈edges join broadcast-gated by
-    * node count, map-side-combined contributions, lineage cut every
-    * [[LineageCutEvery]] rounds. The seed flag rides the persisted
-    * node table — no per-iteration seed join.
+    * Scale shape identical to [[pageRank]]. The seed flag rides the
+    * persisted node table — no per-iteration seed join.
     *
     * @param seeds one column of trusted node ids (deduplicated here)
     * @return (id, trust_fp long) for every node in the graph
@@ -243,59 +142,79 @@ object PageRank {
       iters: Int,
       dampingNum: Int = 85,
       dampingDen: Int = 100,
-      broadcastNodesUpTo: Long = DefaultBroadcastNodesUpTo,
-      lineageCutEvery: Int = LineageCutEvery): DataFrame = {
-    require(lineageCutEvery >= 1, "lineageCutEvery must be positive")
-    require(iters >= 1, "iters must be positive")
-    require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
-      s"damping must be a fraction in [0,1], got $dampingNum/$dampingDen")
-    val e = edges.select(srcCol.cast("long").as("u"),
-      dstCol.cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .persist()
-    val seedIds = seeds.select(seedCol.cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct()
-    val nodes = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct()
-      .join(seedIds.withColumn("__s", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(false)).as("seed"))
-      .persist()
-    val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-    var eDeg: DataFrame = null
-    try {
-      val n = nodes.count()
-      require(n > 0, "empty graph")
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo): DataFrame = {
+    checkArgs(iters, dampingNum, dampingDen)
+    Fixpoint.holding { held =>
+      val e = held.persist(Fixpoint.edgeTable(edges, srcCol, dstCol))
+      val seedIds = seeds.select(seedCol.cast("long").as("id"))
+        .filter(col("id").isNotNull).distinct()
+      val nodes = held.persist(Fixpoint.nodeIds(e)
+        .join(seedIds.withColumn("__s", lit(true)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__s"), lit(false)).as("seed")))
+      val (_, gate) = Fixpoint.sized(nodes, broadcastNodesUpTo)
       val m = nodes.filter(col("seed")).count()
       require(m > 0,
         "trustRank needs at least one seed id present in the graph")
-      val gate = n <= broadcastNodesUpTo
-      eDeg = e.join(if (gate) broadcast(deg) else deg, Seq("u")).persist()
-      val r0 = Scale / m
-      val seedBase = (dampingDen - dampingNum) * Scale / (dampingDen * m)
-      val baseCol = when(col("seed"), lit(seedBase)).otherwise(lit(0L))
-      var rank = nodes.withColumn("r",
-        when(col("seed"), lit(r0)).otherwise(lit(0L)))
-      for (i <- 1 to iters) {
-        val rankU = rank.select(col("id").as("u"), col("r"))
-        val contrib = eDeg
-          .join(if (gate) broadcast(rankU) else rankU.hint("shuffle_hash"),
-            Seq("u"))
-          .select(col("v").as("id"), expr("r div d").as("c"))
-          .groupBy("id").agg(sum("c").as("cs"))
-        rank = nodes.join(contrib, Seq("id"), "left")
-          .select(col("id"), col("seed"),
-            (baseCol + expr(
-              s"($dampingNum * coalesce(cs, 0L)) div $dampingDen"))
-              .as("r"))
-        if (i % lineageCutEvery == 0 && i < iters)
-          rank = rank.localCheckpoint()
-      }
-      rank = rank.select(col("id"), col("r").as("trust_fp"))
-        .localCheckpoint()
-      rank
-    } finally {
-      e.unpersist(); nodes.unpersist()
-      if (eDeg != null) eDeg.unpersist()
+      def onSeeds(v: Long): Column =
+        when(col("seed"), lit(v)).otherwise(lit(0L))
+      propagate(held, e, nodes, gate, count(lit(1)).as("d"),
+        expr("r div d"), onSeeds(Scale / m),
+        onSeeds((dampingDen - dampingNum) * Scale / (dampingDen * m)),
+        iters, dampingNum, dampingDen, "trust_fp")
     }
+  }
+
+  private def checkArgs(iters: Int, dampingNum: Int, dampingDen: Int)
+      : Unit = {
+    require(iters >= 1, "iters must be positive")
+    require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
+      s"damping must be a fraction in [0,1], got $dampingNum/$dampingDen")
+  }
+
+  /** The propagation loop of every variant, over persisted edge table
+    * `e` (u, v[, w]) and node table `nodes` (id[, extra columns carried
+    * through every round]). `outWeight` aggregates u's out-edges into
+    * the column `contribution` divides by; `r0` is the first round's
+    * rank and `base` each round's teleport mass, both over `nodes`.
+    * Returns (id, `out`), cut.
+    *
+    * One out-weight join for the whole run, not one per iteration; the
+    * aggregate has ≤ N rows, so the node gate covers broadcasting it
+    * too — the gated arm never shuffles the edge table. In the shuffle
+    * arm the join's own exchange already leaves the persisted table
+    * hashpartitioned (and sorted) by u, and the cache preserves both —
+    * so each round's join reuses it and only the N-row rank side moves.
+    * No explicit repartition: adding one was measured at +20% on the
+    * x100 rung (a redundant E-row exchange on every cache rebuild).
+    */
+  private def propagate(
+      held: Fixpoint.Held,
+      e: DataFrame,
+      nodes: DataFrame,
+      gate: Fixpoint.Gate,
+      outWeight: Column,
+      contribution: Column,
+      r0: Column,
+      base: Column,
+      iters: Int,
+      dampingNum: Int,
+      dampingDen: Int,
+      out: String): DataFrame = {
+    val eOut = held.persist(e.join(gate(e.groupBy("u").agg(outWeight)),
+      Seq("u")))
+    val carried = nodes.columns.toSeq.map(col)
+    val rank = Fixpoint.rounds(nodes.withColumn("r", r0), iters) {
+      (rank, i) =>
+        val contrib = eOut
+          .join(gate.hashed(rank.select(col("id").as("u"), col("r"))),
+            Seq("u"))
+          .select(col("v").as("id"), contribution.as("c"))
+          .groupBy("id").agg(sum("c").as("cs"))
+        val next = nodes.join(contrib, Seq("id"), "left")
+          .select(carried :+ (base + expr(
+            s"($dampingNum * coalesce(cs, 0L)) div $dampingDen")).as("r"): _*)
+        Some(Fixpoint.cutOnCadence(next, i, iters))
+    }
+    Fixpoint.cut(rank.select(col("id"), col("r").as(out)))
   }
 }

@@ -25,6 +25,10 @@ import org.apache.spark.sql.functions._
   * build. `steps` is the fixed, caller-visible depth (the oracle
   * unrolls it), never a convergence loop.
   *
+  * Not run through [[Fixpoint]]: the result is the union of every
+  * step's frontier, not a last state, so the loop is an unroll of
+  * `steps` independent tables rather than a fixpoint over one state.
+  *
   * @param starts one column of start node ids; each start is one walk
   *               (walk_id = the start id; deduplicated here)
   * @return (walk_id, step 0.., node) — one row per visited position

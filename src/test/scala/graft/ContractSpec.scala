@@ -134,6 +134,22 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"deleted pair helpers are back: $offenders")
   }
 
+  test("one fixpoint driver: the graph loops cut and observe only " +
+      "through Fixpoint, and their cadence knobs stay deleted") {
+    // graft.ops.Fixpoint holds the cut, its cadence and the
+    // observe-then-cut read; a loop that cuts on its own drifts from
+    // the one cadence and the one exactness note again
+    val banned = Seq("localCheckpoint", ".observe(", "lineageCutEvery",
+      "cutEveryHalfRounds")
+    val offenders = Seq("PageRank", "Hits", "LabelProp", "KCore").flatMap {
+      op =>
+        val f = s"src/main/scala/graft/ops/$op.scala"
+        val src = source(f)
+        banned.filter(src.contains).map(b => s"$f: $b")
+    }
+    assert(offenders.isEmpty, s"loop mechanism outside Fixpoint: $offenders")
+  }
+
   test("only Sessions.builder sets the shuffle width; nothing pins it " +
       "to a literal") {
     // the session's spark.sql.shuffle.partitions is the one width

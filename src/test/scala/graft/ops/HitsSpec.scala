@@ -29,7 +29,7 @@ class HitsSpec extends SparkSpec {
 
   private def run(
       edges: Seq[(Long, Long)], iters: Int,
-      gate: Long = PageRank.DefaultBroadcastNodesUpTo)
+      gate: Long = Fixpoint.BroadcastNodesUpTo)
       : Map[Long, (Long, Long)] = {
     import spark.implicits._
     Hits.hits(edges.toDF("s", "d"), col("s"), col("d"), iters,
@@ -61,22 +61,6 @@ class HitsSpec extends SparkSpec {
       (rnd.nextInt(30).toLong, 100L + rnd.nextInt(30)))
     assert(run(edges, 2) == run(edges, 2, gate = 0L))
     assert(run(edges, 2) == ref(edges, 2))
-  }
-
-  test("lineage-cut cadence does not change output (k=1 ≡ k=2 ≡ k=3)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val edges = (1 to 150).map(_ =>
-      (rnd.nextInt(25).toLong, 50L + rnd.nextInt(25)))
-    def runCut(k: Int): Map[Long, (Long, Long)] =
-      Hits.hits(edges.toDF("s", "d"), col("s"), col("d"), iters = 3,
-          cutEveryHalfRounds = k)
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
-        .toMap
-    val k1 = runCut(1)
-    assert(k1 == runCut(2))
-    assert(k1 == runCut(3))
-    assert(k1 == ref(edges, 3))
   }
 
   test("guards: empty graph and bad iters") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class KCoreSpec extends SparkSpec {
 
   private def run(edges: Seq[(Long, Long)], k: Int, maxRounds: Int = 30,
-      broadcastNodesUpTo: Long = PageRank.DefaultBroadcastNodesUpTo)
+      broadcastNodesUpTo: Long = Fixpoint.BroadcastNodesUpTo)
       : Map[Long, Long] = {
     import spark.implicits._
     KCore.kCore(edges.toDF("src", "dst").repartition(3),

@@ -85,7 +85,7 @@ class PageRankSpec extends SparkSpec {
   test("deep loop (iters=25, five lineage cuts) stays bit-identical " +
       "to the sequential reference") {
     import spark.implicits._
-    // 25 rounds crosses the LineageCutEvery=5 boundary five times; the
+    // 25 rounds crosses the Fixpoint.CutEvery=5 boundary five times; the
     // eager localCheckpoints must be semantically invisible — the only
     // ground truth needed is the same sequential model the shallow
     // tests pin (checkpointing just materializes the identical table).

@@ -2,9 +2,11 @@
 # Interleaved same-box A/B of a query subset between two class trees.
 # Usage: tools/ab_block.sh <classesA> <classesB> <queries-csv> <tag> [rounds]
 # One untimed warm-up round (A then B, outputs discarded) runs first, so
-# round 1's arm A does not run on a cold box. Arms then alternate
-# A,B,A,B... (one full subset bench per arm); each arm's JSON (with
-# flop_control) lands in /tmp/ab_<tag>_<arm><i>.json.
+# round 1's arm A does not run on a cold box. Each round then runs one
+# full subset bench per arm, in alternating order: odd rounds A then B,
+# even rounds B then A, so drift within a round does not always land on
+# the same arm. Each arm's JSON (with flop_control) lands in
+# /tmp/ab_<tag>_<arm><i>.json.
 set -euo pipefail
 A="$1"; B="$2"; QS="$3"; TAG="$4"; ROUNDS="${5:-2}"
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
@@ -20,7 +22,8 @@ for arm in A B; do
     || echo "warm-up arm $arm FAILED"
 done
 for i in $(seq 1 "$ROUNDS"); do
-  for arm in A B; do
+  order="A B"; [ $((i % 2)) -eq 0 ] && order="B A"
+  for arm in $order; do
     dir="$A"; [ "$arm" = B ] && dir="$B"
     out="/tmp/ab_${TAG}_${arm}${i}.json"
     echo "=== arm $arm round $i ($dir) -> $out"
