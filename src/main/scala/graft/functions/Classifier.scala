@@ -47,8 +47,9 @@ object Classifier {
     * is |vocab| × |classes| rows; scoring joins the score-side token
     * stream on token, with no hint — Spark's size-based join selection
     * picks the strategy. The argmax is `topk_by` (bounded,
-    * map-side partial), not a window. CACHE LIFECYCLE: as
-    * `Prefix.runningTotal` — clearCache() between corpora.
+    * map-side partial), not a window. CACHE LIFECYCLE: the persisted
+    * model is pinned by the returned plan — clearCache() between
+    * corpora.
     */
   def nbLinear(
       train: DataFrame, trainLabel: Column, trainText: Column,

@@ -287,45 +287,44 @@ object Collocations extends Serializable {
       // (src, term) uniqueness makes ranks deterministic
       .withColumn("__ord", concat(
         format_string("%016x", lit(bias) - col("freq")), col("w")))
-    graft.ops.Prefix.rankByGroup(sw, "src", "__ord", "__rk") { ranked =>
-      val spark = df.sparkSession
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        ranked.schema("src"),
-        StructField("x", LongType, false),
-        StructField("y", LongType, false)))
-      val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-        .encoderFor(schema)
-      val rkIdx = ranked.schema.fieldIndex("__rk")
-      val fIdx = ranked.schema.fieldIndex("freq")
-      val srcIdx = ranked.schema.fieldIndex("src")
-      val xy = ranked.mapPartitions { rows =>
-        rows.map { r =>
-          val rk = r.getLong(rkIdx)
-          val f = r.getLong(fIdx)
-          require(f < (1L << 43),
-            s"zipfSlopeBySource ilog2Fx domain: freq $f >= 2^43")
-          org.apache.spark.sql.Row(r.get(srcIdx),
-            Dsir.ilog2Fx(rk) >> 10, Dsir.ilog2Fx(f) >> 10)
-        }
-      }(enc)
-      xy.groupBy(col("src"))
-        .agg(count(lit(1)).as("n_terms"),
-          sum(col("x").cast("decimal(38,0)")).as("__sx"),
-          sum(col("y").cast("decimal(38,0)")).as("__sy"),
-          sum((col("x") * col("y")).cast("decimal(38,0)")).as("__sxy"),
-          sum((col("x") * col("x")).cast("decimal(38,0)")).as("__sxx"))
-        .withColumn("__num",
-          col("n_terms") * col("__sxy") - col("__sx") * col("__sy"))
-        .withColumn("__den",
-          col("n_terms") * col("__sxx") - col("__sx") * col("__sx"))
-        .select(col("src"), col("n_terms"),
-          // TRUE floor on the (negative-num, positive-den) ratio
-          expr("CASE WHEN __den = 0 THEN 0L ELSE " +
-            "CAST((__num * 1048576) div __den - " +
-            "(CASE WHEN __num < 0 AND (__num * 1048576) % __den != 0 " +
-            "THEN 1 ELSE 0 END) AS BIGINT) END").as("slope_fx"))
-    }
+    val ranked = graft.ops.Prefix.rankByGroup(sw, "src", "__ord", "__rk")
+    val spark = df.sparkSession
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      ranked.schema("src"),
+      StructField("x", LongType, false),
+      StructField("y", LongType, false)))
+    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
+      .encoderFor(schema)
+    val rkIdx = ranked.schema.fieldIndex("__rk")
+    val fIdx = ranked.schema.fieldIndex("freq")
+    val srcIdx = ranked.schema.fieldIndex("src")
+    val xy = ranked.mapPartitions { rows =>
+      rows.map { r =>
+        val rk = r.getLong(rkIdx)
+        val f = r.getLong(fIdx)
+        require(f < (1L << 43),
+          s"zipfSlopeBySource ilog2Fx domain: freq $f >= 2^43")
+        org.apache.spark.sql.Row(r.get(srcIdx),
+          Dsir.ilog2Fx(rk) >> 10, Dsir.ilog2Fx(f) >> 10)
+      }
+    }(enc)
+    xy.groupBy(col("src"))
+      .agg(count(lit(1)).as("n_terms"),
+        sum(col("x").cast("decimal(38,0)")).as("__sx"),
+        sum(col("y").cast("decimal(38,0)")).as("__sy"),
+        sum((col("x") * col("y")).cast("decimal(38,0)")).as("__sxy"),
+        sum((col("x") * col("x")).cast("decimal(38,0)")).as("__sxx"))
+      .withColumn("__num",
+        col("n_terms") * col("__sxy") - col("__sx") * col("__sy"))
+      .withColumn("__den",
+        col("n_terms") * col("__sxx") - col("__sx") * col("__sx"))
+      .select(col("src"), col("n_terms"),
+        // TRUE floor on the (negative-num, positive-den) ratio
+        expr("CASE WHEN __den = 0 THEN 0L ELSE " +
+          "CAST((__num * 1048576) div __den - " +
+          "(CASE WHEN __num < 0 AND (__num * 1048576) % __den != 0 " +
+          "THEN 1 ELSE 0 END) AS BIGINT) END").as("slope_fx"))
   }
 
   /** EXACT term burstiness — the Fano factor (variance-to-mean

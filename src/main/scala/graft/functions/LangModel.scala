@@ -154,10 +154,9 @@ object LangModel {
     * them as unseen), the same df-cap discipline as the Jaccard posting
     * index.
     *
-    * CACHE LIFECYCLE: same contract as `Prefix.runningTotal` — the
-    * persisted model is pinned by the returned plan; a loop should
-    * `spark.catalog.clearCache()` between corpora, or pre-materialize
-    * the model to a tap.
+    * CACHE LIFECYCLE: the persisted model is pinned by the returned
+    * plan; a loop should `spark.catalog.clearCache()` between corpora,
+    * or pre-materialize the model to a tap.
     */
   def bigramLmScore(
       train: DataFrame, trainId: Column, trainText: Column,

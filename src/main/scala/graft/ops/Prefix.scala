@@ -3,21 +3,36 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed global running totals — the scale-correct form of
+/** Distributed running totals — the scale-correct form of
   * `Window.orderBy(...)` with no partition spec, which Spark executes by
-  * MOVING EVERY ROW TO ONE PARTITION (it even warns). The classic
-  * two-pass prefix-sum instead:
+  * MOVING EVERY ROW TO ONE PARTITION (it even warns), and of
+  * `Window.partitionBy(g).orderBy(...)`, which sorts each group's whole
+  * run inside one task. The classic two-pass prefix sum instead:
   *
-  *   1. range-repartition on the order column (a range exchange — the
-  *      same machinery a global `orderBy` uses, so partitions hold
-  *      contiguous key ranges across the cluster);
-  *   2. per-partition local prefix sums, plus one tiny driver collect of
-  *      per-partition totals (hadron's runOnce idiom — nPartitions
-  *      longs, not data) whose exclusive scan gives each partition its
-  *      starting offset, added back in the same pass.
+  *   1. range-repartition on the (group, order) key (a range exchange —
+  *      the same machinery a global `orderBy` uses, so partitions hold
+  *      contiguous key ranges across the cluster, and a group larger
+  *      than one partition spans several contiguous ones);
+  *   2. per-partition summaries, plus one tiny driver collect (hadron's
+  *      runOnce idiom — O(partitions × columns) longs, not data) whose
+  *      scan gives each partition its starting offsets;
+  *   3. per-partition local running totals from those offsets.
   *
-  * Wall-clock is one exchange + one narrow pass regardless of cluster
-  * size; the only driver state is O(partitions).
+  * ONE-SHUFFLE INVARIANT: both passes read ONE `queryExecution.toRdd` of
+  * the range exchange, so they share one `ShuffleDependency` and one
+  * `RangePartitioner`. The layout pass 1's offsets describe is the
+  * layout pass 2 adds them to by construction: Spark skips the
+  * already-written shuffle-map stage for pass 2 (and for every later
+  * action on the result), and a lost map output is recomputed under
+  * the same sampled bounds. A second exchange over the same input —
+  * a re-planned `repartitionByRange` — would SAMPLE its bounds again
+  * and could put the offsets on the wrong rows. Nothing but the
+  * shuffle files is materialized, so nothing needs releasing: they
+  * live as long as the returned DataFrame is referenced.
+  *
+  * Wall-clock is one exchange plus two narrow passes over its output
+  * (pass 1 reads it unsorted; only pass 2 sorts within partitions);
+  * the only driver state is O(partitions × columns).
   */
 object Prefix {
 
@@ -25,34 +40,13 @@ object Prefix {
     * `orderCol` order (ties broken by the order column's full value —
     * supply a unique key like doc_id for determinism). Output rows keep
     * the range partitioning (sorted within partitions by `orderCol`).
-    *
-    * The materialization of the ranged table between the two passes is
-    * CORRECTNESS-load-bearing, not a speed knob: `repartitionByRange`
-    * SAMPLES the data to pick partition boundaries, so an uncached
-    * recompute of pass 2 could draw different boundaries than the ones
-    * pass 1's totals were computed over — per-partition offsets would
-    * then be added to the wrong rows. Both passes must read the SAME
-    * materialized layout; do not remove the persist.
-    *
-    * @param storageLevel where that mandatory materialization lives.
-    *   MEMORY_AND_DISK default suits working-set-sized inputs; at corpus
-    *   scale pass `StorageLevel.DISK_ONLY` (the table is the full input
-    *   plus ordering — memory caching it evicts everything else), or
-    *   write the ranged table to a tap and run both passes against the
-    *   tap. LIFECYCLE: the persist is pinned until the session drops it
-    *   (the returned plan depends on it, so it cannot be unpersisted
-    *   here) — a loop calling this per increment should
-    *   `spark.catalog.clearCache()` between invocations, or use the
-    *   files.
     */
   def runningTotal(
       df: DataFrame,
       orderCol: String,
       valueCol: String,
-      outCol: String = "running_total",
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
-    runningTotals(df, orderCol, Seq(valueCol -> outCol), storageLevel)
+      outCol: String = "running_total"): DataFrame =
+    runningTotals(df, orderCol, Seq(valueCol -> outCol))
 
   /** [[runningTotal]] over SEVERAL value columns in ONE range exchange
     * and one narrow pass — the shape for cumulative pairs (two-sample
@@ -60,85 +54,194 @@ object Prefix {
     * one exchange + two passes PER column over the same ordered table.
     * Each `(valueCol, outCol)` appends one running total; all share
     * the single `orderCol` range partitioning and per-partition
-    * offset vectors (driver state O(partitions × columns) longs).
+    * offset vectors. The one-group case of [[runningTotalsByGroup]].
     */
   def runningTotals(
       df: DataFrame,
       orderCol: String,
-      valueCols: Seq[(String, String)],
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      valueCols: Seq[(String, String)]): DataFrame =
+    scan(df, None, orderCol, valueCols)
+
+  /** PER-GROUP ranks through a (group, order) RANGE exchange — the
+    * scale-correct form of `row_number() over (partition by g order by
+    * v)`: rank = the per-group running total of 1 (see
+    * [[runningTotalsByGroup]] for the scale shape).
+    *
+    * Rank is a per-group `row_number` ascending by `orderCol`, 1-based;
+    * ties take arbitrary rank order, and may take a different one on
+    * each action over the result (same contract as the window form
+    * without a tiebreaker — callers needing tie determinism must make
+    * `orderCol` unique, or select only tie-invariant outputs such as
+    * the order value at a rank). NULL groups are the caller's to
+    * filter (they'd range-sort first and rank like any other group).
+    */
+  def rankByGroup(
+      df: DataFrame,
+      groupCol: String,
+      orderCol: String,
+      outCol: String = "rank"): DataFrame =
+    runningTotalsByGroup(df.withColumn("__rbg_one", lit(1L)),
+      groupCol, orderCol, Seq("__rbg_one" -> outCol)).drop("__rbg_one")
+
+  /** PER-GROUP running totals through a (group, order) RANGE exchange:
+    * each `(valueCol, outCol)` appends that column's running sum in
+    * ascending `orderCol` order WITHIN its group, resetting at every
+    * group boundary. A group larger than one partition spans several
+    * contiguous partitions, each summed in parallel, with
+    * per-(partition, column) start offsets from one O(partitions ×
+    * columns) driver boundary scan — never a
+    * `partitionBy(g).orderBy(v)` window, whose single-task group runs
+    * cap parallelism at the group count.
+    *
+    * Ties in `orderCol` accumulate in arbitrary order (the window
+    * form without a tiebreaker); consumers selecting a CROSSING row
+    * (first row where the running total passes a threshold) are
+    * tie-safe when the selected OUTPUT is the order value itself —
+    * the crossing lands somewhere in the tie run, and every row of
+    * the run carries the same order value.
+    */
+  def runningTotalsByGroup(
+      df: DataFrame,
+      groupCol: String,
+      orderCol: String,
+      valueCols: Seq[(String, String)]): DataFrame =
+    scan(df, Some(groupCol), orderCol, valueCols)
+
+  /** The one two-pass engine. Without a group column every row is in
+    * the one group, so the global forms are its one-group case.
+    *
+    * Both passes run on InternalRow (queryExecution.toRdd), NOT
+    * Dataset.rdd: the external hop would re-box EVERY field of EVERY
+    * row twice just to sum longs and append longs. The exchange and
+    * sort buffers reuse their rows, so a group value RETAINED across
+    * rows must be copied out (InternalRow.copyValue). NULL values sum
+    * as 0 (the window-cumsum contract).
+    */
+  private def scan(
+      df: DataFrame,
+      groupCol: Option[String],
+      orderCol: String,
+      valueCols: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    require(valueCols.nonEmpty, "runningTotals needs >= 1 value column")
+    require(valueCols.nonEmpty, "a running total needs >= 1 value column")
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism
-    val ranged = df
-      .repartitionByRange(n, col(orderCol))
-      .sortWithinPartitions(orderCol)
-      .persist(storageLevel) // both passes MUST read this same layout
-
-    val vIdxs = valueCols.map { case (v, _) =>
-      ranged.schema.fieldIndex(v) }.toArray
-    val isLong = integralFlags(ranged.schema, valueCols.map(_._1))
+    val schema = df.schema
+    val keys = (groupCol.toSeq :+ orderCol).map(col)
+    val gIdx = groupCol.fold(-1)(schema.fieldIndex)
+    val gType = if (gIdx < 0) NullType else schema(gIdx).dataType
+    val vIdxs = valueCols.map { case (v, _) => schema.fieldIndex(v) }.toArray
+    val isLong = integralFlags(schema, valueCols.map(_._1))
     val k = vIdxs.length
+    def addValues(sums: Array[Long], r: InternalRow): Unit = {
+      var j = 0
+      while (j < k) {
+        val i = vIdxs(j)
+        if (!r.isNullAt(i))
+          sums(j) += (if (isLong(j)) r.getLong(i) else r.getInt(i).toLong)
+        j += 1
+      }
+    }
 
-    // Both passes run on InternalRow (queryExecution.toRdd), NOT
-    // Dataset.rdd: the external hop would re-box EVERY field of EVERY
-    // row twice (toSeq out, CatalystTypeConverters back in) just to
-    // sum longs and append longs. Pass 1 additionally projects to the
-    // value columns only, so the cached columnar layout serves the
-    // narrow read. NULL sums as 0 (the window-cumsum contract).
+    // the ONE range exchange both passes read (see the object doc)
+    val exchanged = df.repartitionByRange(n, keys: _*).queryExecution.toRdd
 
-    // pass 1: per-partition totals -> exclusive-scan offsets (driver,
-    // O(partitions x columns) longs)
-    val totals = ranged
-      .select(valueCols.map { case (v, _) => col(v) }: _*)
-      .queryExecution.toRdd
+    // pass 1, unsorted: per partition the least group, the greatest
+    // group and that greatest group's sums. Sorted by (g, ord), a
+    // group's rows are ONE contiguous run across partitions, so the
+    // only cross-partition state is "the sums of the group straddling
+    // this boundary so far".
+    val summaries: Array[Option[(Any, Any, Array[Long])]] = exchanged
       .mapPartitionsWithIndex { (pid, rows) =>
-        val s = new Array[Long](k)
+        val cmp = groupCompare(gType)
+        var firstG: Any = null
+        var lastG: Any = null
+        var lastSums = new Array[Long](k)
+        var any = false
         rows.foreach { r =>
-          var j = 0
-          while (j < k) {
-            if (!r.isNullAt(j))
-              s(j) += (if (isLong(j)) r.getLong(j) else r.getInt(j).toLong)
-            j += 1
-          }
+          val g = if (gIdx < 0) null else r.get(gIdx, gType)
+          val c = if (any) cmp(g, lastG) else 1
+          if (c > 0) {
+            lastG = InternalRow.copyValue(g)
+            lastSums = new Array[Long](k)
+            if (!any) { firstG = lastG; any = true }
+          } else if (c < 0 && cmp(g, firstG) < 0)
+            firstG = InternalRow.copyValue(g)
+          if (c >= 0) addValues(lastSums, r)
         }
-        Iterator((pid, s))
+        Iterator((pid, if (any) Some((firstG, lastG, lastSums)) else None))
       }
       .collect().sortBy(_._1).map(_._2)
-    // offsets(pid)(j) = column j's sum over partitions before pid
-    val offsets = totals.scanLeft(new Array[Long](k)) { (acc, t) =>
-      Array.tabulate(k)(j => acc(j) + t(j))
+
+    // driver scan in partition order: offsets(pid)(j) = the running
+    // sum of column j that pid's first group carries in
+    val cmp = groupCompare(gType)
+    val offsets = Array.fill(summaries.length)(new Array[Long](k))
+    var curG: Any = null
+    var curSums = new Array[Long](k)
+    var started = false
+    summaries.zipWithIndex.foreach {
+      case (Some((firstG, lastG, lastSums)), pid) =>
+        if (started && cmp(firstG, curG) == 0) offsets(pid) = curSums.clone()
+        if (started && cmp(firstG, curG) == 0 && cmp(lastG, curG) == 0) {
+          var j = 0 // whole partition continues the run
+          while (j < k) { curSums(j) += lastSums(j); j += 1 }
+        } else { curG = lastG; curSums = lastSums.clone() }
+        started = true
+      case (None, _) => // empty: state flows past
     }
 
-    // pass 2: local prefix + partition offset, same partitioning. Each
-    // output row is the input row (copied out of the scan's reused
-    // buffer) joined to its k running totals; RDDScanExec's
-    // UnsafeProjection flattens the pair downstream.
-    val schema = valueCols.foldLeft(ranged.schema) { case (sc, (_, out)) =>
+    // pass 2: the same exchange output sorted within its partitions (a
+    // local sort, no second exchange); local per-group accumulators,
+    // the first group seeded with its offsets, every group change
+    // resets to 0. Each output row is the input row joined to its k
+    // running totals; RDDScanExec's UnsafeProjection flattens (and so
+    // copies) the pair before the next row reuses either buffer.
+    val sorted = org.apache.spark.sql.GraftRows
+      .internalDataFrame(spark, exchanged, schema)
+      .sortWithinPartitions(keys: _*).queryExecution.toRdd
+    val outRdd = sorted.mapPartitionsWithIndex { (pid, rows) =>
+      val cmp = groupCompare(gType)
+      val run = offsets(pid).clone()
+      val right = new GenericInternalRow(k)
+      val joined = new JoinedRow()
+      var prevG: Any = null
+      var first = true
+      rows.map { r =>
+        val g = if (gIdx < 0) null else r.get(gIdx, gType)
+        if (first) { prevG = InternalRow.copyValue(g); first = false }
+        else if (cmp(g, prevG) != 0) {
+          java.util.Arrays.fill(run, 0L)
+          prevG = InternalRow.copyValue(g)
+        }
+        addValues(run, r)
+        var j = 0
+        while (j < k) { right.update(j, run(j)); j += 1 }
+        joined(r, right): InternalRow
+      }
+    }
+    val outSchema = valueCols.foldLeft(schema) { case (sc, (_, out)) =>
       sc.add(StructField(out, LongType, false))
     }
-    val out = ranged.queryExecution.toRdd
-      .mapPartitionsWithIndex { (pid, rows) =>
-        val run = offsets(pid).clone()
-        rows.map { r =>
-          var j = 0
-          while (j < k) {
-            val i = vIdxs(j)
-            if (!r.isNullAt(i))
-              run(j) += (if (isLong(j)) r.getLong(i) else r.getInt(i).toLong)
-            j += 1
-          }
-          val right = new GenericInternalRow(k)
-          j = 0
-          while (j < k) { right.update(j, run(j)); j += 1 }
-          new JoinedRow(r.copy(), right): InternalRow
-        }
-      }
-    org.apache.spark.sql.GraftRows.internalDataFrame(spark, out, schema)
+    org.apache.spark.sql.GraftRows.internalDataFrame(spark, outRdd, outSchema)
+  }
+
+  /** Group identity for both passes and the driver scan: the order the
+    * range exchange sorts by (ascending, nulls first), so a group is
+    * exactly one contiguous run of the sorted layout. Without a group
+    * column (NullType) every value is null and every row one group. */
+  private def groupCompare(
+      gType: org.apache.spark.sql.types.DataType): (Any, Any) => Int = {
+    val ord =
+      if (gType == org.apache.spark.sql.types.NullType) null
+      else org.apache.spark.sql.catalyst.util.TypeUtils
+        .getInterpretedOrdering(gType)
+    (a, b) =>
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else ord.compare(a, b)
   }
 
   /** Plan-time integral check for the prefix value columns: LongType →
@@ -159,196 +262,6 @@ object Prefix {
     }.toArray
   }
 
-  /** PER-GROUP ranks through a (group, order) RANGE exchange — the
-    * scale-correct form of `row_number() over (partition by g order by
-    * v)`, which sorts EACH GROUP'S ENTIRE RUN inside one task: with a
-    * handful of giant groups, parallelism = group count no matter how
-    * big the cluster. Here the corpus range-partitions on the
-    * composite (group, order) key instead — a group larger than one
-    * partition spans SEVERAL contiguous partitions, each ranked in
-    * parallel — and per-partition start offsets come from the same
-    * O(partitions) driver scan [[runningTotal]] uses: a partition's
-    * first group may continue from previous partitions, so its offset
-    * is that group's row count so far (every OTHER group in the
-    * partition starts inside it, offset 0 by construction).
-    *
-    * Rank is a per-group `row_number` ascending by `orderCol`, 1-based;
-    * ties take arbitrary rank order (same contract as the window form
-    * without a tiebreaker — callers needing tie determinism must make
-    * `orderCol` unique). Group values use object equality in the
-    * driver/boundary scans; NULL groups are the caller's to filter
-    * (they'd range-sort first and rank like any other group).
-    *
-    * Bracket shape: `use` receives the ranked table (input columns +
-    * `outCol`), its group-sized (or otherwise SMALL — it gets
-    * `localCheckpoint`ed eagerly) result is materialized, and the
-    * mandatory two-pass persist is dropped before returning — no
-    * session-cache debt survives the call.
-    */
-  def rankByGroup(
-      df: DataFrame,
-      groupCol: String,
-      orderCol: String,
-      outCol: String = "rank",
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)(
-      use: DataFrame => DataFrame): DataFrame =
-    runningTotalsByGroup(df.withColumn("__rbg_one", lit(1L)),
-      groupCol, orderCol, Seq("__rbg_one" -> outCol), storageLevel)(
-      ranked => use(ranked.drop("__rbg_one")))
-
-  /** PER-GROUP running totals through a (group, order) RANGE
-    * exchange — [[rankByGroup]]'s general form (rank = the running
-    * total of 1), and the grouped counterpart of [[runningTotals]]:
-    * each `(valueCol, outCol)` appends that column's running sum in
-    * ascending `orderCol` order WITHIN its group, resetting at every
-    * group boundary. The scale shape is rankByGroup's: a group larger
-    * than one partition spans several contiguous partitions, each
-    * summed in parallel, with per-(partition, column) start offsets
-    * from one O(partitions × columns) driver boundary scan — never a
-    * `partitionBy(g).orderBy(v)` window, whose single-task group runs
-    * cap parallelism at the group count.
-    *
-    * Ties in `orderCol` accumulate in arbitrary order (the window
-    * form without a tiebreaker); consumers selecting a CROSSING row
-    * (first row where the running total passes a threshold) are
-    * tie-safe when the selected OUTPUT is the order value itself —
-    * the crossing lands somewhere in the tie run, and every row of
-    * the run carries the same order value.
-    *
-    * Bracket contract as [[rankByGroup]]: `use`'s (small) result is
-    * localCheckpoint'ed eagerly and the mandatory two-pass persist is
-    * dropped before returning.
-    */
-  def runningTotalsByGroup(
-      df: DataFrame,
-      groupCol: String,
-      orderCol: String,
-      valueCols: Seq[(String, String)],
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)(
-      use: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
-    require(valueCols.nonEmpty, "runningTotalsByGroup needs >= 1 column")
-    val spark = df.sparkSession
-    val n = spark.sparkContext.defaultParallelism
-    val ranged = df
-      .repartitionByRange(n, col(groupCol), col(orderCol))
-      .sortWithinPartitions(groupCol, orderCol)
-      .persist(storageLevel) // both passes MUST read this same layout
-    try {
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-      val gIdx = ranged.schema.fieldIndex(groupCol)
-      val gType = ranged.schema(gIdx).dataType
-      val vIdxs = valueCols.map { case (v, _) =>
-        ranged.schema.fieldIndex(v) }.toArray
-      val isLong = integralFlags(ranged.schema, valueCols.map(_._1))
-      val k = vIdxs.length
-
-      // Both passes on InternalRow, as in [[runningTotals]] — the scan
-      // reuses its row buffer, so any group value RETAINED across rows
-      // (firstG/lastG/prevG) must be copied out (InternalRow.copyValue;
-      // per-row comparisons against the live buffer are fine).
-
-      // pass 1: per-partition (first group, last group, last group's
-      // in-partition sums) -> driver scan in partition order. Sorted
-      // by (g, ord), a group's rows occupy ONE contiguous run across
-      // partitions, so the only cross-partition state is "the sums of
-      // the group straddling this boundary so far". Projected to
-      // (group, values): the cached columnar layout serves the narrow
-      // read, partition indices unchanged (narrow projection).
-      val summaries: Array[Option[(Any, Any, Array[Long])]] = ranged
-        .select(col(groupCol) +: valueCols.map { case (v, _) => col(v) }: _*)
-        .queryExecution.toRdd
-        .mapPartitionsWithIndex { (pid, rows) =>
-          var firstG: Any = null
-          var lastG: Any = null
-          var lastSums = new Array[Long](k)
-          var any = false
-          rows.foreach { r =>
-            val g = r.get(0, gType)
-            if (!any) {
-              val gc = InternalRow.copyValue(g)
-              firstG = gc; lastG = gc; any = true
-            } else if (!java.util.Objects.equals(g, lastG)) {
-              lastG = InternalRow.copyValue(g)
-              lastSums = new Array[Long](k)
-            }
-            var j = 0
-            while (j < k) {
-              if (!r.isNullAt(1 + j))
-                lastSums(j) +=
-                  (if (isLong(j)) r.getLong(1 + j) else r.getInt(1 + j).toLong)
-              j += 1
-            }
-          }
-          Iterator((pid,
-            if (any) Some((firstG, lastG, lastSums)) else None))
-        }
-        .collect().sortBy(_._1).map(_._2)
-
-      val offsets = Array.fill(summaries.length)(new Array[Long](k))
-      var curG: Any = null
-      var curSums = new Array[Long](k)
-      var started = false
-      summaries.zipWithIndex.foreach {
-        case (Some((firstG, lastG, lastSums)), pid) =>
-          offsets(pid) =
-            if (started && java.util.Objects.equals(firstG, curG))
-              curSums.clone()
-            else new Array[Long](k)
-          if (started && java.util.Objects.equals(lastG, curG) &&
-              java.util.Objects.equals(firstG, lastG)) {
-            var j = 0 // whole partition continues the run
-            while (j < k) { curSums(j) += lastSums(j); j += 1 }
-          } else { curG = lastG; curSums = lastSums.clone() }
-          started = true
-        case (None, pid) => // empty: state flows past
-          offsets(pid) = new Array[Long](k)
-      }
-
-      // pass 2: local per-group accumulators, first group seeded with
-      // its cross-partition offsets, every group change resets to 0
-      val schema = valueCols.foldLeft(ranged.schema) {
-        case (sc, (_, out)) => sc.add(StructField(out, LongType, false))
-      }
-      val outRdd = ranged.queryExecution.toRdd
-        .mapPartitionsWithIndex { (pid, rows) =>
-          var run: Array[Long] = null
-          var prevG: Any = null
-          var first = true
-          rows.map { r =>
-            val g = r.get(gIdx, gType)
-            if (first) {
-              run = offsets(pid).clone()
-              prevG = InternalRow.copyValue(g)
-              first = false
-            } else if (!java.util.Objects.equals(g, prevG)) {
-              run = new Array[Long](k)
-              prevG = InternalRow.copyValue(g)
-            }
-            var j = 0
-            while (j < k) {
-              val i = vIdxs(j)
-              if (!r.isNullAt(i))
-                run(j) +=
-                  (if (isLong(j)) r.getLong(i) else r.getInt(i).toLong)
-              j += 1
-            }
-            val right = new GenericInternalRow(k)
-            j = 0
-            while (j < k) { right.update(j, run(j)); j += 1 }
-            new JoinedRow(r.copy(), right): InternalRow
-          }
-        }
-      val out = org.apache.spark.sql.GraftRows
-        .internalDataFrame(spark, outRdd, schema)
-      // eager: the persist must outlive every job that reads it
-      use(out).localCheckpoint(true)
-    } finally ranged.unpersist(false)
-  }
-
   /** Token-budget shard packing: documents in `orderCol` order are cut
     * into contiguous shards of roughly `budget` tokens. shard id =
     * which budget-multiple the document's token range STARTS in, so a
@@ -364,11 +277,9 @@ object Prefix {
       orderCol: String,
       tokenCol: String,
       budget: Long,
-      shardCol: String = "shard",
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      shardCol: String = "shard"): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    runningTotal(df, orderCol, tokenCol, "__run", storageLevel)
+    runningTotal(df, orderCol, tokenCol, "__run")
       .withColumn(shardCol,
         floor((col("__run") - col(tokenCol)) / budget).cast("long"))
       .drop("__run")
@@ -400,11 +311,9 @@ object Prefix {
       df: DataFrame,
       orderCol: String,
       tokenCol: String,
-      seqLen: Long,
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      seqLen: Long): DataFrame = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
-    runningTotal(df, orderCol, tokenCol, "__run", storageLevel)
+    runningTotal(df, orderCol, tokenCol, "__run")
       .filter(col(tokenCol) > 0)
       .withColumn("__s", col("__run") - col(tokenCol).cast("long"))
       .withColumn("seq_id", explode(sequence(

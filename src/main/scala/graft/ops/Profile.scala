@@ -293,7 +293,9 @@ object Profile {
     * two-linear-pass machinery over a range exchange (NEVER a
     * single-partition window): the order key is an encoded
     * fixed-width hex/decimal string so one range column carries the
-    * (score, id) total order. Then one id-keyed join and a 1-row
+    * (score, id) total order. The y pass ranks the x pass's output
+    * rows, so the input is read once by the exchanges (plus the
+    * guard's scalar read) and no join pairs the ranks; then a 1-row
     * aggregate.
     *
     * @param idCol non-negative long id (fixed-width-encodable)
@@ -307,7 +309,6 @@ object Profile {
       yCol: org.apache.spark.sql.Column): DataFrame = {
     val base = df.select(idCol.cast("long").as("id"),
         xCol.cast("long").as("x"), yCol.cast("long").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // loud domain guards: encoding and Σd² bounds (3-scalar read)
     val g = base.agg(min("id").as("mi"), max("x").as("mx"),
       min("x").as("nx"), max("y").as("my"), min("y").as("ny"),
@@ -323,20 +324,16 @@ object Profile {
         s"${g.getLong(5)} — sample upstream (Sampling.sampleByHash)")
     }
     val bias = 1L << 62
-    val one = base.withColumn("__one", lit(1L))
-    val rx = Prefix.runningTotal(
-        one.withColumn("__ord",
-          concat(format_string("%016x", col("x") + bias),
-            format_string("%019d", col("id")))),
-        orderCol = "__ord", valueCol = "__one", outCol = "rx")
-      .select(col("id"), col("rx"))
-    val ry = Prefix.runningTotal(
-        one.withColumn("__ord",
-          concat(format_string("%016x", col("y") + bias),
-            format_string("%019d", col("id")))),
-        orderCol = "__ord", valueCol = "__one", outCol = "ry")
-      .select(col("id"), col("ry"))
-    rx.join(ry, "id")
+    def ranked(in: DataFrame, score: String, out: String): DataFrame =
+      Prefix.runningTotal(
+          in.withColumn("__ord",
+            concat(format_string("%016x", col(score) + bias),
+              format_string("%019d", col("id")))),
+          orderCol = "__ord", valueCol = "__one", outCol = out)
+        .drop("__ord")
+    ranked(ranked(base.withColumn("__one", lit(1L)), "x", "rx"), "y", "ry")
+      // rows with a NULL id are ranked but not counted as pairs
+      .filter(col("id").isNotNull)
       .agg(count(lit(1)).as("n"),
         sum((col("rx") - col("ry")) * (col("rx") - col("ry")))
           .as("sum_d2"))
@@ -561,7 +558,6 @@ object Profile {
     val base = df.select(idCol.cast("long").as("id"),
         scoreCol.cast("long").as("s"))
       .filter(col("id").isNotNull && col("s").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val g = base.agg(min("id").as("mi"), max(abs(col("s"))).as("ms"),
       count(lit(1)).as("n")).collect()(0)
     val n = if (g.isNullAt(2)) 0L else g.getLong(2)
@@ -881,27 +877,25 @@ object Profile {
     val base = df.select(groupCol.as("g"),
         valueCol.cast("long").as("v"))
       .filter(col("g").isNotNull && col("v").isNotNull)
-    Prefix.rankByGroup(base, "g", "v", "__rn") { r1 =>
-      // group-sized (eager, so the corpus-sized ranked table is
-      // scanned once per derived table, not once per plan reference)
-      val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
-        .withColumn("__k", expr("(n + 1) div 2"))
-        .localCheckpoint(true)
-      val med = r1.join(broadcast(cnt), Seq("g"))
-        .filter(col("__rn") === col("__k"))
-        .select(col("g"), col("v").as("median"))
-        .localCheckpoint(true)
-      val dev = r1.join(broadcast(med), Seq("g"))
-        .select(col("g"), abs(col("v") - col("median")).as("d"))
-      Prefix.rankByGroup(dev, "g", "d", "__rnd") { r2 =>
-        val mad = r2.join(broadcast(cnt), Seq("g"))
-          .filter(col("__rnd") === col("__k"))
-          .select(col("g"), col("d").as("mad"))
-        cnt.select(col("g"), col("n"))
-          .join(med, Seq("g")).join(mad, Seq("g"))
-          .select(col("g"), col("n"), col("median"), col("mad"))
-      }
-    }
+    val r1 = Prefix.rankByGroup(base, "g", "v", "__rn")
+    // group-sized (eager, so the corpus-sized ranked table is
+    // scanned once per derived table, not once per plan reference)
+    val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
+      .withColumn("__k", expr("(n + 1) div 2"))
+      .localCheckpoint(true)
+    val med = r1.join(broadcast(cnt), Seq("g"))
+      .filter(col("__rn") === col("__k"))
+      .select(col("g"), col("v").as("median"))
+      .localCheckpoint(true)
+    val dev = r1.join(broadcast(med), Seq("g"))
+      .select(col("g"), abs(col("v") - col("median")).as("d"))
+    val r2 = Prefix.rankByGroup(dev, "g", "d", "__rnd")
+    val mad = r2.join(broadcast(cnt), Seq("g"))
+      .filter(col("__rnd") === col("__k"))
+      .select(col("g"), col("d").as("mad"))
+    cnt.select(col("g"), col("n"))
+      .join(med, Seq("g")).join(mad, Seq("g"))
+      .select(col("g"), col("n"), col("median"), col("mad"))
   }
 
   /** EXACT two-sample Kolmogorov–Smirnov statistic — the UNBINNED
@@ -1023,33 +1017,32 @@ object Profile {
     // ties in v get an arbitrary rank — harmless: the kept multiset
     // is identical under any tie permutation (the rank rule keeps a
     // count, and tied rows are interchangeable by value)
-    Prefix.rankByGroup(base, "g", "v", "__rn") { r1 =>
-      val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
-        .withColumn("__lo", expr(s"(n * ${trimBp}L) div 10000L"))
-        .localCheckpoint(true)
-      r1.join(broadcast(cnt), Seq("g"))
-        .groupBy(col("g"))
-        .agg(max(col("n")).as("n"),
-          coalesce(sum(when(col("__rn") > col("__lo") &&
-            col("__rn") <= col("n") - col("__lo"), 1L)), lit(0L))
-            .as("n_kept"),
-          coalesce(sum(when(col("__rn") > col("__lo") &&
-            col("__rn") <= col("n") - col("__lo"),
-            col("v").cast("decimal(38,0)"))),
-            lit(0L).cast("decimal(38,0)"))
-            .as("__sum"))
-        .select(col("g"), col("n"), col("n_kept"),
-          col("__sum").cast("long").as("sum_kept"),
-          // floor, not truncate: negative product with remainder
-          // rounds one further down (n_kept > 0, so the product's
-          // sign is __sum's sign)
-          expr("CASE WHEN n_kept > 0 THEN " +
-            "CAST((__sum * 1048576) div n_kept - " +
-            "(CASE WHEN __sum < 0 AND " +
-            "(__sum * 1048576) % n_kept != 0 THEN 1 ELSE 0 END) " +
-            "AS BIGINT) ELSE 0L END")
-            .as("mean_fx"))
-    }
+    val r1 = Prefix.rankByGroup(base, "g", "v", "__rn")
+    val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
+      .withColumn("__lo", expr(s"(n * ${trimBp}L) div 10000L"))
+      .localCheckpoint(true)
+    r1.join(broadcast(cnt), Seq("g"))
+      .groupBy(col("g"))
+      .agg(max(col("n")).as("n"),
+        coalesce(sum(when(col("__rn") > col("__lo") &&
+          col("__rn") <= col("n") - col("__lo"), 1L)), lit(0L))
+          .as("n_kept"),
+        coalesce(sum(when(col("__rn") > col("__lo") &&
+          col("__rn") <= col("n") - col("__lo"),
+          col("v").cast("decimal(38,0)"))),
+          lit(0L).cast("decimal(38,0)"))
+          .as("__sum"))
+      .select(col("g"), col("n"), col("n_kept"),
+        col("__sum").cast("long").as("sum_kept"),
+        // floor, not truncate: negative product with remainder
+        // rounds one further down (n_kept > 0, so the product's
+        // sign is __sum's sign)
+        expr("CASE WHEN n_kept > 0 THEN " +
+          "CAST((__sum * 1048576) div n_kept - " +
+          "(CASE WHEN __sum < 0 AND " +
+          "(__sum * 1048576) % n_kept != 0 THEN 1 ELSE 0 END) " +
+          "AS BIGINT) ELSE 0L END")
+          .as("mean_fx"))
   }
 
   /** Population Stability Index between two score samples, per

@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   * cluster — and the group-summary tables ride group-sized broadcast
   * joins. With millions of tiny groups use window forms instead
   * (grouping then supplies the parallelism); these are the
-  * few-giant-groups shapes.
+  * few-giant-groups shapes. The ranked table is a plain DataFrame:
+  * every read of it re-reads the one range shuffle (no second
+  * exchange, no persist to release), and only the group-sized tables
+  * derived from it are checkpointed.
   *
   * All statistics are exact-integer (rank rules + decimal sums +
   * explicit floor division), so a SQL engine replays them
@@ -53,18 +56,17 @@ object RankStats {
     require(qsBp.distinct.size == qsBp.size,
       s"duplicate quantiles: $qsBp")
     val base = basePairs(df, groupCol, valueCol)
-    Prefix.rankByGroup(base, "g", "v", "__rn") { r1 =>
-      val ks = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
-        .withColumn("q_bp",
-          explode(array(qsBp.map(q => lit(q.toLong)): _*)))
-        .withColumn("__k", expr(
-          "greatest(1L, (n * q_bp + 9999L) div 10000L)"))
-        .select(col("g").as("__gk"), col("q_bp"), col("n"), col("__k"))
-        .localCheckpoint(true)
-      r1.join(broadcast(ks),
-          r1("g") === ks("__gk") && r1("__rn") === ks("__k"))
-        .select(col("g"), col("q_bp"), col("n"), col("v").as("value"))
-    }
+    val r1 = Prefix.rankByGroup(base, "g", "v", "__rn")
+    val ks = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
+      .withColumn("q_bp",
+        explode(array(qsBp.map(q => lit(q.toLong)): _*)))
+      .withColumn("__k", expr(
+        "greatest(1L, (n * q_bp + 9999L) div 10000L)"))
+      .select(col("g").as("__gk"), col("q_bp"), col("n"), col("__k"))
+      .localCheckpoint(true)
+    r1.join(broadcast(ks),
+        r1("g") === ks("__gk") && r1("__rn") === ks("__k"))
+      .select(col("g"), col("q_bp"), col("n"), col("v").as("value"))
   }
 
   /** EXACT winsorized mean per group — [[Profile.trimmedMeanByGroup]]'s
@@ -93,37 +95,36 @@ object RankStats {
     require(trimBp >= 0 && trimBp < 5000,
       s"trimBp must be in [0, 5000) basis points, got $trimBp")
     val base = basePairs(df, groupCol, valueCol)
-    Prefix.rankByGroup(base, "g", "v", "__rn") { r1 =>
-      val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
-        .withColumn("__lo", expr(s"(n * ${trimBp}L) div 10000L"))
-        .localCheckpoint(true)
-      // clamp values: rank lo+1 (low fence) and rank n-lo (high
-      // fence); trimBp < 5000 guarantees lo+1 <= n-lo, both exist
-      val fences = r1.join(broadcast(cnt), Seq("g"))
-        .filter(col("__rn") === col("__lo") + 1L ||
-          col("__rn") === col("n") - col("__lo"))
-        .groupBy(col("g"))
-        .agg(max(when(col("__rn") === col("__lo") + 1L, col("v")))
-            .as("v_lo"),
-          max(when(col("__rn") === col("n") - col("__lo"), col("v")))
-            .as("v_hi"))
-        .localCheckpoint(true)
-      r1.join(broadcast(cnt), Seq("g"))
-        .join(broadcast(fences), Seq("g"))
-        .groupBy(col("g"))
-        .agg(max(col("n")).as("n"), max(col("__lo")).as("lo"),
-          max(col("v_lo")).as("v_lo"), max(col("v_hi")).as("v_hi"),
-          sum(greatest(least(col("v"), col("v_hi")), col("v_lo"))
-            .cast("decimal(38,0)")).as("__sum"))
-        .select(col("g"), col("n"), col("lo"), col("v_lo"), col("v_hi"),
-          col("__sum").cast("long").as("sum_w"),
-          // TRUE floor (n > 0 by construction): negative sums round
-          // toward -inf; the oracle replays the same floor correction
-          // explicitly (DuckDB's // truncates like Spark's div)
-          expr("CAST((__sum * 1048576) div n - " +
-            "(CASE WHEN __sum < 0 AND (__sum * 1048576) % n != 0 " +
-            "THEN 1 ELSE 0 END) AS BIGINT)").as("mean_fx"))
-    }
+    val r1 = Prefix.rankByGroup(base, "g", "v", "__rn")
+    val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
+      .withColumn("__lo", expr(s"(n * ${trimBp}L) div 10000L"))
+      .localCheckpoint(true)
+    // clamp values: rank lo+1 (low fence) and rank n-lo (high
+    // fence); trimBp < 5000 guarantees lo+1 <= n-lo, both exist
+    val fences = r1.join(broadcast(cnt), Seq("g"))
+      .filter(col("__rn") === col("__lo") + 1L ||
+        col("__rn") === col("n") - col("__lo"))
+      .groupBy(col("g"))
+      .agg(max(when(col("__rn") === col("__lo") + 1L, col("v")))
+          .as("v_lo"),
+        max(when(col("__rn") === col("n") - col("__lo"), col("v")))
+          .as("v_hi"))
+      .localCheckpoint(true)
+    r1.join(broadcast(cnt), Seq("g"))
+      .join(broadcast(fences), Seq("g"))
+      .groupBy(col("g"))
+      .agg(max(col("n")).as("n"), max(col("__lo")).as("lo"),
+        max(col("v_lo")).as("v_lo"), max(col("v_hi")).as("v_hi"),
+        sum(greatest(least(col("v"), col("v_hi")), col("v_lo"))
+          .cast("decimal(38,0)")).as("__sum"))
+      .select(col("g"), col("n"), col("lo"), col("v_lo"), col("v_hi"),
+        col("__sum").cast("long").as("sum_w"),
+        // TRUE floor (n > 0 by construction): negative sums round
+        // toward -inf; the oracle replays the same floor correction
+        // explicitly (DuckDB's // truncates like Spark's div)
+        expr("CAST((__sum * 1048576) div n - " +
+          "(CASE WHEN __sum < 0 AND (__sum * 1048576) % n != 0 " +
+          "THEN 1 ELSE 0 END) AS BIGINT)").as("mean_fx"))
   }
 
   /** EXACT two-sample Mann–Whitney U — the RANK-based companion of
@@ -247,28 +248,27 @@ object RankStats {
         .otherwise(raise_error(concat(
           lit("weightedQuantilesByGroup weights must be positive, got "),
           col("w")))))
-    Prefix.runningTotalsByGroup(base, "g", "v",
-        Seq("w" -> "__cumw")) { r1 =>
-      val ks = r1.groupBy(col("g"))
-        .agg(count(lit(1)).as("n"), sum(col("w")).as("w_total"))
-        .withColumn("w_total",
-          when(col("w_total") < lit(1L << 49), col("w_total"))
-            .otherwise(raise_error(concat(
-              lit("weightedQuantilesByGroup group weight must stay " +
-                "under 2^49, got "), col("w_total")))))
-        .withColumn("q_bp",
-          explode(array(qsBp.map(q => lit(q.toLong)): _*)))
-        .withColumn("__thresh", expr(
-          "greatest(1L, (w_total * q_bp + 9999L) div 10000L)"))
-        .select(col("g").as("__gk"), col("q_bp"), col("n"),
-          col("w_total"), col("__thresh"))
-        .localCheckpoint(true)
-      r1.join(broadcast(ks), r1("g") === ks("__gk") &&
-          r1("__cumw") >= ks("__thresh") &&
-          r1("__cumw") - r1("w") < ks("__thresh"))
-        .select(col("g"), col("q_bp"), col("n"), col("w_total"),
-          col("v").as("value"))
-    }
+    val r1 = Prefix.runningTotalsByGroup(base, "g", "v",
+        Seq("w" -> "__cumw"))
+    val ks = r1.groupBy(col("g"))
+      .agg(count(lit(1)).as("n"), sum(col("w")).as("w_total"))
+      .withColumn("w_total",
+        when(col("w_total") < lit(1L << 49), col("w_total"))
+          .otherwise(raise_error(concat(
+            lit("weightedQuantilesByGroup group weight must stay " +
+              "under 2^49, got "), col("w_total")))))
+      .withColumn("q_bp",
+        explode(array(qsBp.map(q => lit(q.toLong)): _*)))
+      .withColumn("__thresh", expr(
+        "greatest(1L, (w_total * q_bp + 9999L) div 10000L)"))
+      .select(col("g").as("__gk"), col("q_bp"), col("n"),
+        col("w_total"), col("__thresh"))
+      .localCheckpoint(true)
+    r1.join(broadcast(ks), r1("g") === ks("__gk") &&
+        r1("__cumw") >= ks("__thresh") &&
+        r1("__cumw") - r1("w") < ks("__thresh"))
+      .select(col("g"), col("q_bp"), col("n"), col("w_total"),
+        col("v").as("value"))
   }
 
   /** EXACT Gini concentration per group — "how unequal are the
@@ -301,18 +301,17 @@ object RankStats {
         .otherwise(raise_error(concat(
           lit("giniByGroup values must be non-negative, got "),
           col("v")))))
-    Prefix.rankByGroup(base, "g", "v", "__rn") { r1 =>
-      r1.groupBy(col("g"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("v").cast("decimal(38,0)")).as("__s"),
-          sum((col("__rn") * col("v")).cast("decimal(38,0)")).as("__t"))
-        .select(col("g"), col("n"), col("__s").cast("long").as("sum_v"),
-          (lit(2).cast("decimal(38,0)") * col("__t") -
-            (col("n") + lit(1)).cast("decimal(38,0)") * col("__s"))
-            .cast("long").as("gini_num"),
-          ((col("n")).cast("decimal(38,0)") * col("__s"))
-            .cast("long").as("gini_den"))
-    }
+    val r1 = Prefix.rankByGroup(base, "g", "v", "__rn")
+    r1.groupBy(col("g"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("v").cast("decimal(38,0)")).as("__s"),
+        sum((col("__rn") * col("v")).cast("decimal(38,0)")).as("__t"))
+      .select(col("g"), col("n"), col("__s").cast("long").as("sum_v"),
+        (lit(2).cast("decimal(38,0)") * col("__t") -
+          (col("n") + lit(1)).cast("decimal(38,0)") * col("__s"))
+          .cast("long").as("gini_num"),
+        ((col("n")).cast("decimal(38,0)") * col("__s"))
+          .cast("long").as("gini_den"))
   }
 
   /** Tukey-fence outlier counts per group — the box-plot rule run
@@ -334,30 +333,29 @@ object RankStats {
       groupCol: Column,
       valueCol: Column): DataFrame = {
     val base = basePairs(df, groupCol, valueCol)
-    Prefix.rankByGroup(base, "g", "v", "__rn") { r1 =>
-      val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
-        .withColumn("__k1", expr("greatest(1L, (n * 2500L + 9999L) div 10000L)"))
-        .withColumn("__k3", expr("greatest(1L, (n * 7500L + 9999L) div 10000L)"))
-        .localCheckpoint(true)
-      val quarts = r1.join(broadcast(cnt), Seq("g"))
-        .filter(col("__rn") === col("__k1") ||
-          col("__rn") === col("__k3"))
-        .groupBy(col("g"))
-        .agg(max(when(col("__rn") === col("__k1"), col("v"))).as("q1"),
-          max(when(col("__rn") === col("__k3"), col("v"))).as("q3"))
-        .localCheckpoint(true)
-      r1.join(broadcast(cnt.select(col("g"), col("n"))), Seq("g"))
-        .join(broadcast(quarts), Seq("g"))
-        .groupBy(col("g"))
-        .agg(max(col("n")).as("n"), max(col("q1")).as("q1"),
-          max(col("q3")).as("q3"),
-          coalesce(sum(when(lit(2L) * col("v") <
-            lit(2L) * col("q1") - lit(3L) * (col("q3") - col("q1")),
-            1L)), lit(0L)).as("n_low"),
-          coalesce(sum(when(lit(2L) * col("v") >
-            lit(2L) * col("q3") + lit(3L) * (col("q3") - col("q1")),
-            1L)), lit(0L)).as("n_high"))
-    }
+    val r1 = Prefix.rankByGroup(base, "g", "v", "__rn")
+    val cnt = r1.groupBy(col("g")).agg(count(lit(1)).as("n"))
+      .withColumn("__k1", expr("greatest(1L, (n * 2500L + 9999L) div 10000L)"))
+      .withColumn("__k3", expr("greatest(1L, (n * 7500L + 9999L) div 10000L)"))
+      .localCheckpoint(true)
+    val quarts = r1.join(broadcast(cnt), Seq("g"))
+      .filter(col("__rn") === col("__k1") ||
+        col("__rn") === col("__k3"))
+      .groupBy(col("g"))
+      .agg(max(when(col("__rn") === col("__k1"), col("v"))).as("q1"),
+        max(when(col("__rn") === col("__k3"), col("v"))).as("q3"))
+      .localCheckpoint(true)
+    r1.join(broadcast(cnt.select(col("g"), col("n"))), Seq("g"))
+      .join(broadcast(quarts), Seq("g"))
+      .groupBy(col("g"))
+      .agg(max(col("n")).as("n"), max(col("q1")).as("q1"),
+        max(col("q3")).as("q3"),
+        coalesce(sum(when(lit(2L) * col("v") <
+          lit(2L) * col("q1") - lit(3L) * (col("q3") - col("q1")),
+          1L)), lit(0L)).as("n_low"),
+        coalesce(sum(when(lit(2L) * col("v") >
+          lit(2L) * col("q3") + lit(3L) * (col("q3") - col("q1")),
+          1L)), lit(0L)).as("n_high"))
   }
 
   /** EXACT Kendall tau-b pair counts — the concordance companion of
@@ -476,38 +474,37 @@ object RankStats {
       valueCol: Column): DataFrame = {
     val cells = basePairs(df, groupCol, valueCol)
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
-    Prefix.runningTotalsByGroup(cells, "g", "v", Seq("c" -> "__cum")) {
-      withCum =>
-      val ns = withCum.groupBy(col("g"))
-        .agg(sum(col("c")).as("n")).localCheckpoint(true)
-      val scored = withCum.join(broadcast(ns), Seq("g"))
-        .withColumn("pct_bp", expr("(__cum * 10000L) div n"))
-      val pooled0 = withCum.groupBy(col("v"))
-        .agg(sum(col("c")).as("pc"))
-      val pooledN = ns.agg(sum(col("n")).as("N"))
-        .withColumn("N", when(col("N") < lit(1L << 49), col("N"))
-          .otherwise(raise_error(concat(lit(
-            "quantileMapByGroup pooled count must stay under 2^49, " +
-            "got "), col("N")))))
-        .localCheckpoint(true)
-      // the pooled cumulative rides [[Prefix.runningTotal]]'s own
-      // distinct-value-sized persist (the ksStatistic acceptance);
-      // the mapping extracted from it is ≤ 10⁴ rows and checkpointed
-      val gcum = Prefix.runningTotal(pooled0, orderCol = "v",
-        valueCol = "pc", outCol = "__gcum")
-      val pcts = scored.select(col("pct_bp")).distinct()
-        .crossJoin(pooledN)
-        .withColumn("__k", expr(
-          "greatest(1L, (N * pct_bp + 9999L) div 10000L)"))
-        .localCheckpoint(true)
-      val mapping = gcum.join(broadcast(pcts),
-          gcum("__gcum") >= pcts("__k") &&
-          gcum("__gcum") - gcum("pc") < pcts("__k"))
-        .select(col("pct_bp").as("__pb"), col("v").as("mapped_value"))
-        .localCheckpoint(true)
-      scored.join(broadcast(mapping), col("pct_bp") === col("__pb"))
-        .select(col("g"), col("v"), col("c"), col("n"),
-          col("pct_bp"), col("mapped_value"))
-    }
+    val withCum =
+      Prefix.runningTotalsByGroup(cells, "g", "v", Seq("c" -> "__cum"))
+    val ns = withCum.groupBy(col("g"))
+      .agg(sum(col("c")).as("n")).localCheckpoint(true)
+    val scored = withCum.join(broadcast(ns), Seq("g"))
+      .withColumn("pct_bp", expr("(__cum * 10000L) div n"))
+    val pooled0 = withCum.groupBy(col("v"))
+      .agg(sum(col("c")).as("pc"))
+    val pooledN = ns.agg(sum(col("n")).as("N"))
+      .withColumn("N", when(col("N") < lit(1L << 49), col("N"))
+        .otherwise(raise_error(concat(lit(
+          "quantileMapByGroup pooled count must stay under 2^49, " +
+          "got "), col("N")))))
+      .localCheckpoint(true)
+    // the pooled cumulative rides [[Prefix.runningTotal]]'s own
+    // distinct-value-sized range exchange; the mapping extracted from
+    // it is ≤ 10⁴ rows and checkpointed
+    val gcum = Prefix.runningTotal(pooled0, orderCol = "v",
+      valueCol = "pc", outCol = "__gcum")
+    val pcts = scored.select(col("pct_bp")).distinct()
+      .crossJoin(pooledN)
+      .withColumn("__k", expr(
+        "greatest(1L, (N * pct_bp + 9999L) div 10000L)"))
+      .localCheckpoint(true)
+    val mapping = gcum.join(broadcast(pcts),
+        gcum("__gcum") >= pcts("__k") &&
+        gcum("__gcum") - gcum("pc") < pcts("__k"))
+      .select(col("pct_bp").as("__pb"), col("v").as("mapped_value"))
+      .localCheckpoint(true)
+    scored.join(broadcast(mapping), col("pct_bp") === col("__pb"))
+      .select(col("g"), col("v"), col("c"), col("n"),
+        col("pct_bp"), col("mapped_value"))
   }
 }

@@ -592,10 +592,10 @@ object Sampling {
     * count as 0 (the row is kept for free if reached).
     *
     * Scale shape: one range exchange + two linear passes
-    * ([[Prefix.runningTotal]]'s materialized-layout contract — see its
-    * scaladoc for the persist rationale and the DISK_ONLY lever at
-    * corpus scale); the driver sees O(partitions) longs. The order key
-    * ends with the id, so ties are impossible and the cut is total.
+    * over [[Prefix.runningTotal]]'s one shuffle (see its scaladoc for
+    * why both passes read the same exchange); the driver sees
+    * O(partitions) longs. The order key ends with the id, so ties are
+    * impossible and the cut is total.
     *
     * @return (id, w, cum) for kept rows — `cum` the inclusive running
     *   total in hash order, ≤ `budget`.

@@ -150,6 +150,18 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"loop mechanism outside Fixpoint: $offenders")
   }
 
+  test("one prefix-scan engine: Prefix keeps no persist, cache, " +
+      "localCheckpoint or storage level") {
+    // both passes read one toRdd of the range exchange, so its one
+    // ShuffleDependency is the layout agreement; a materialization
+    // here would be a second copy of the data that no caller releases
+    val banned = Seq(".persist(", ".cache()", "localCheckpoint",
+      "StorageLevel")
+    val src = source("src/main/scala/graft/ops/Prefix.scala")
+    val offenders = banned.filter(src.contains)
+    assert(offenders.isEmpty, s"Prefix materializes its scan: $offenders")
+  }
+
   test("only Sessions.builder sets the shuffle width; nothing pins it " +
       "to a literal") {
     // the session's spark.sql.shuffle.partitions is the one width

@@ -23,21 +23,6 @@ class PrefixSpec extends SparkSpec {
     assert(distributed == window)
   }
 
-  test("runningTotal is identical under DISK_ONLY (the corpus-scale " +
-      "storage level for the mandatory two-pass materialization)") {
-    import spark.implicits._
-    val rng = new scala.util.Random(5)
-    val rows = rng.shuffle((1L to 300L).toList).map(i => (i, (i % 5) + 1))
-    val df = rows.toDF("id", "v").repartition(7)
-    def run(level: org.apache.spark.storage.StorageLevel) =
-      Prefix.runningTotal(df, "id", "v", "run", level)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val disk = run(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val mem = run(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assert(disk == mem)
-    assert(disk(300L) == (1L to 300L).map(i => (i % 5) + 1).sum)
-  }
-
   test("runningTotals: two cumulative columns on ONE range exchange == " +
       "two chained runningTotal calls") {
     import spark.implicits._
@@ -68,7 +53,7 @@ class PrefixSpec extends SparkSpec {
       (1L to 2500L).map(i => ("big_b", i * 3L + 1L)) ++
       Seq(("solo", 99L)))
     val df = rows.toDF("g", "v").repartition(17)
-    val got = Prefix.rankByGroup(df, "g", "v", "rk")(identity)
+    val got = Prefix.rankByGroup(df, "g", "v", "rk")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     val want = df.withColumn("rk", row_number().over(
@@ -86,8 +71,7 @@ class PrefixSpec extends SparkSpec {
     val rows = rng.shuffle(
       (1L to 800L).map(i => ("a", i % 10)) ++ // heavy ties
       (1L to 500L).map(i => ("b", i % 3)))
-    val out = Prefix.rankByGroup(rows.toDF("g", "v"), "g", "v", "rk")(
-        identity)
+    val out = Prefix.rankByGroup(rows.toDF("g", "v"), "g", "v", "rk")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     out.groupBy(_._1).foreach { case (g, rs) =>
       val n = rs.length
@@ -100,26 +84,89 @@ class PrefixSpec extends SparkSpec {
     }
   }
 
-  test("rankByGroup bracket drops its persist (no session-cache debt) " +
-      "and an empty input yields an empty result") {
+  test("rankByGroup compares binary groups by value: a group spanning " +
+      "several partitions keeps one 1..n rank run") {
     import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Prefix.rankByGroup(
-        Seq(("a", 1L)).toDF("g", "v").filter(col("v") < 0L),
-        "g", "v", "rk")(identity)
-      .count()
-    assert(out == 0L)
-    val nonEmpty = Prefix.rankByGroup(
-        Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("g", "v"),
-        "g", "v", "rk")(df => df.groupBy("g").agg(max("rk").as("m")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(nonEmpty == Map("a" -> 2L, "b" -> 1L))
-    // each bracket pins ONLY its localCheckpoint'd (small) result —
-    // the corpus-sized ranged table must be gone. 2 calls above = at
-    // most 2 pinned results; a leaked ranged persist would add 2 more.
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 2,
-      s"rankByGroup leaked ranged persists: $before -> $after")
+    val rows = scala.util.Random.shuffle(
+      (1L to 600L).map(i => (Array[Byte](1, 2), i)) ++
+      (1L to 400L).map(i => (Array[Byte](3), i)))
+    val out = Prefix.rankByGroup(rows.toDF("g", "v").repartition(9),
+        "g", "v", "rk")
+      .collect().map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1),
+        r.getLong(2)))
+    out.groupBy(_._1).foreach { case (g, rs) =>
+      assert(rs.forall(r => r._2 == r._3), s"group $g ranks != values")
+    }
+    assert(out.length == 1000)
+  }
+
+  /** Every Prefix form over one small local input (no exchange of its
+    * own), so each call's only shuffle is its range exchange. */
+  private def forms = {
+    import spark.implicits._
+    val df = Seq(("a", 1L, 3L), ("a", 2L, 4L), ("b", 3L, 5L), ("b", 4L, 0L))
+      .toDF("g", "id", "tok")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "runningTotal" -> (() => Prefix.runningTotal(df, "id", "tok")),
+      "runningTotals" -> (() =>
+        Prefix.runningTotals(df, "id", Seq("tok" -> "c1", "id" -> "c2"))),
+      "rankByGroup" -> (() => Prefix.rankByGroup(df, "g", "id")),
+      "runningTotalsByGroup" -> (() =>
+        Prefix.runningTotalsByGroup(df, "g", "id", Seq("tok" -> "c"))),
+      "packIntoShards" -> (() =>
+        Prefix.packIntoShards(df, "id", "tok", budget = 4L)),
+      "packSequences" -> (() =>
+        Prefix.packSequences(df, "id", "tok", seqLen = 4L)))
+  }
+
+  test("no Prefix form leaves a persistent RDD or a cache entry, and an " +
+      "empty input yields an empty result") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftProbe
+    // the persistent-RDD map holds its values weakly, so an earlier
+    // suite's unreferenced persist can be collected mid-test: count
+    // only the RDDs made after this marker, not the map's size
+    val marker = spark.sparkContext.emptyRDD[Int].id
+    val cached = GraftProbe.cachedEntries(spark)
+    // the results stay referenced until the counts are read
+    val outs = forms.map { case (name, build) =>
+      val out = build()
+      assert(out.collect().nonEmpty, name)
+      name -> out
+    }
+    val maxRank = outs.toMap.apply("rankByGroup")
+      .groupBy("g").agg(max("rank")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(maxRank == Map("a" -> 2L, "b" -> 2L))
+    val empty = Prefix.rankByGroup(
+      Seq(("a", 1L)).toDF("g", "v").filter(col("v") < 0L), "g", "v", "rk")
+    assert(empty.count() == 0L)
+    val fresh = spark.sparkContext.getPersistentRDDs.keys.count(_ > marker)
+    assert(fresh == 0, s"${outs.map(_._1)} left $fresh persistent RDD(s)")
+    assert(GraftProbe.cachedEntries(spark) == cached,
+      s"cache entries $cached -> ${GraftProbe.cachedEntries(spark)}")
+  }
+
+  test("each Prefix form runs ONE range shuffle-map stage over plan build " +
+      "and an action, and the action's pass 2 skips it") {
+    import org.apache.spark.sql.GraftProbe
+    forms.foreach { case (name, build) =>
+      val (out, buildJobs) = GraftProbe.jobs(spark, s"prefix-build-$name")(
+        build())
+      val (_, actionJobs) = GraftProbe.jobs(spark, s"prefix-action-$name")(
+        out.collect())
+      // plan build: the range sampling job, the shuffle-map job and
+      // pass 1
+      assert(buildJobs.size == 3, s"$name build ran $buildJobs")
+      val mapStages = (buildJobs ++ actionJobs).flatMap(_.shuffleMap).toSet
+      assert(mapStages.size == 1,
+        s"$name ran ${mapStages.size} shuffle-map stages: " +
+          s"build $buildJobs, action $actionJobs")
+      assert(actionJobs.size == 1 && actionJobs.head.submitted.size == 1 &&
+        actionJobs.head.skipped == 1,
+        s"$name action must run pass 2 alone over the written shuffle: " +
+          s"$actionJobs")
+    }
   }
 
   test("packIntoShards cuts contiguous shards at budget multiples, " +

@@ -107,24 +107,51 @@ class ProfileSpec extends SparkSpec {
       Seq.empty[Long].toDF("s"), col("s")).count() == 0L)
   }
 
-  test("ksStatistic builds through ONE runningTotals pass: exactly one " +
-      "ranged persist appears at plan build (the chained form pinned " +
-      "two)") {
+  test("ksStatistic builds through ONE runningTotals pass: its plan-build " +
+      "jobs equal one runningTotals call's on the same input (the chained " +
+      "form runs more)") {
     import spark.implicits._
-    // the persistent-RDD map holds its values weakly, so an earlier
-    // suite's unreferenced persist can be collected mid-test: count
-    // only the RDDs made after this marker, not the map's size
-    val marker = spark.sparkContext.emptyRDD[Int].id
-    val ks = Profile.ksStatistic(
-      Seq(1L, 2L, 5L).toDF("s"), col("s"),
-      Seq(2L, 4L).toDF("s"), col("s"))
-    // every runningTotal(s) pass pins its mandatory two-pass
-    // materialization; both cumulative columns riding one exchange
-    // means exactly ONE new pinned table
-    val fresh = spark.sparkContext.getPersistentRDDs.keys.count(_ > marker)
-    assert(fresh == 1,
-      s"expected exactly 1 new ranged persist, got $fresh")
+    import org.apache.spark.sql.GraftProbe
+    val (a, b) = (Seq(1L, 2L, 5L), Seq(2L, 4L))
+    // ksStatistic's own input to the prefix scan: per-side value
+    // counts, full-outer joined on the value, in the biased hex order
+    def side(xs: Seq[Long], out: String) =
+      xs.toDF("v").groupBy("v").agg(count(lit(1)).as(out))
+    val joined = side(a, "na").join(side(b, "nb"), Seq("v"), "full_outer")
+      .select(col("v"), coalesce(col("na"), lit(0L)).as("na"),
+        coalesce(col("nb"), lit(0L)).as("nb"))
+      .withColumn("__ord", format_string("%016x", col("v") + lit(1L << 62)))
+    val (ks, ksJobs) = GraftProbe.jobs(spark, "ks-build")(
+      Profile.ksStatistic(a.toDF("s"), col("s"), b.toDF("s"), col("s")))
+    val (_, oneJobs) = GraftProbe.jobs(spark, "ks-one-pass")(
+      Prefix.runningTotals(joined, "__ord",
+        Seq("na" -> "cum_a", "nb" -> "cum_b")))
+    val (_, chainedJobs) = GraftProbe.jobs(spark, "ks-chained")(
+      Prefix.runningTotal(Prefix.runningTotal(joined, "__ord", "na", "cum_a"),
+        "__ord", "nb", "cum_b"))
+    assert(ksJobs.size == oneJobs.size,
+      s"ksStatistic ran ${ksJobs.size} build jobs, one runningTotals " +
+        s"call ${oneJobs.size}")
+    assert(chainedJobs.size > oneJobs.size)
     assert(ks.schema.fieldNames.contains("ks_num"))
+  }
+
+  test("spearman and percentileNormalize leave no persistent RDD or " +
+      "cache entry") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftProbe
+    val df = Seq((1L, 5L, 2L), (2L, 3L, 9L), (3L, 8L, 1L)).toDF("id", "x", "y")
+    // count only the RDDs made after this marker (the persistent-RDD
+    // map holds its values weakly)
+    val marker = spark.sparkContext.emptyRDD[Int].id
+    val cached = GraftProbe.cachedEntries(spark)
+    val rho = Profile.spearman(df, col("id"), col("x"), col("y"))
+    val pct = Profile.percentileNormalize(df, col("id"), col("x"))
+    assert(rho.collect().length == 1 && pct.collect().length == 3)
+    val fresh = spark.sparkContext.getPersistentRDDs.keys.count(_ > marker)
+    assert(fresh == 0, s"left $fresh persistent RDD(s)")
+    assert(GraftProbe.cachedEntries(spark) == cached,
+      s"cache entries $cached -> ${GraftProbe.cachedEntries(spark)}")
   }
 
   test("trimmedMeanByGroup mean_fx is TRUE floor division — negative " +

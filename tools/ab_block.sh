@@ -6,11 +6,12 @@
 # full subset bench per arm, in alternating order: odd rounds A then B,
 # even rounds B then A, so drift within a round does not always land on
 # the same arm. Each arm's JSON (with flop_control) lands in
-# /tmp/ab_<tag>_<arm><i>.json.
+# /tmp/ab_<tag>_<arm><i>.json; tools/ab_summary.py <tag> reads them.
+# Defaults: 5 rounds, SPARK_GRAFT_CPUS = the machine's cores (nproc).
 set -euo pipefail
-A="$1"; B="$2"; QS="$3"; TAG="$4"; ROUNDS="${5:-2}"
+A="$1"; B="$2"; QS="$3"; TAG="$4"; ROUNDS="${5:-5}"
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 export SPARK_GRAFT_QUERIES="$QS"
 warm=$(mktemp -d)
 trap 'rm -rf "$warm"' EXIT
