@@ -152,9 +152,9 @@ object Prefix {
     // group and that greatest group's sums. Sorted by (g, ord), a
     // group's rows are ONE contiguous run across partitions, so the
     // only cross-partition state is "the sums of the group straddling
-    // this boundary so far".
+    // this boundary so far". collect() returns them in partition order.
     val summaries: Array[Option[(Any, Any, Array[Long])]] = exchanged
-      .mapPartitionsWithIndex { (pid, rows) =>
+      .mapPartitions { rows =>
         val cmp = groupCompare(gType)
         var firstG: Any = null
         var lastG: Any = null
@@ -171,9 +171,9 @@ object Prefix {
             firstG = InternalRow.copyValue(g)
           if (c >= 0) addValues(lastSums, r)
         }
-        Iterator((pid, if (any) Some((firstG, lastG, lastSums)) else None))
+        Iterator(if (any) Some((firstG, lastG, lastSums)) else None)
       }
-      .collect().sortBy(_._1).map(_._2)
+      .collect()
 
     // driver scan in partition order: offsets(pid)(j) = the running
     // sum of column j that pid's first group carries in
@@ -184,8 +184,9 @@ object Prefix {
     var started = false
     summaries.zipWithIndex.foreach {
       case (Some((firstG, lastG, lastSums)), pid) =>
-        if (started && cmp(firstG, curG) == 0) offsets(pid) = curSums.clone()
-        if (started && cmp(firstG, curG) == 0 && cmp(lastG, curG) == 0) {
+        val carried = started && cmp(firstG, curG) == 0
+        if (carried) offsets(pid) = curSums.clone()
+        if (carried && cmp(lastG, curG) == 0) {
           var j = 0 // whole partition continues the run
           while (j < k) { curSums(j) += lastSums(j); j += 1 }
         } else { curG = lastG; curSums = lastSums.clone() }
