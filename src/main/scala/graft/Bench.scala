@@ -38,7 +38,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Streaming layer: the full-JSON file also carries a `streaming` block,
   * one record per streaming query, read from the micro-batches of its
-  * timed runs through a StreamingQueryListener ([[StreamLog]]).
+  * timed runs through a StreamingQueryListener ([[StreamLog]]), with the
+  * broadcasts each timed run made ([[graft.util.BroadcastCount]]).
   */
 object Bench {
 
@@ -58,6 +59,12 @@ object Bench {
       .empty[java.util.UUID, Vector[StreamingQueryProgress]]
     private val ended = java.util.concurrent.ConcurrentHashMap
       .newKeySet[java.util.UUID]()
+    private val broadcasts =
+      scala.collection.concurrent.TrieMap.empty[String, Vector[Long]]
+
+    /** Records that one timed run of `name` made `n` broadcasts. */
+    def broadcastsOf(name: String, n: Long): Unit =
+      broadcasts.updateWith(name)(b => Some(b.getOrElse(Vector.empty) :+ n))
 
     override def onQueryStarted(e: QueryStartedEvent): Unit =
       current.foreach(owner.put(e.runId, _))
@@ -82,8 +89,11 @@ object Bench {
     /** `{"runs", "batches" (median per run), "shuffle_partitions" (the
       * state operators' distinct widths), per-batch medians of
       * `trigger_ms`, `planning_ms` and `add_batch_ms`, and of the state
-      * operators' summed `state_commit_ms` and `state_updates_ms`}` of
-      * `name`'s runs, or None if it started no stream. */
+      * operators' summed `state_commit_ms` and `state_updates_ms`,
+      * `broadcasts` (median per run) and `broadcasts_per_batch` (all
+      * runs' broadcasts over all their batches)}` of `name`'s runs, or
+      * None if it started no stream. A run's broadcasts are the whole
+      * query's: its construction and the sink read count too. */
     def record(name: String): Option[String] = {
       val runs = owner.collect { case (r, n) if n == name => r }.toSeq
       if (runs.isEmpty) None
@@ -100,13 +110,20 @@ object Bench {
             Long) = med(all.map(_.stateOperators.map(f).sum.toDouble))
         val widths = all.flatMap(_.stateOperators.map(_.numShufflePartitions))
           .distinct.sorted
+        val bs = broadcasts.getOrElse(name, Vector.empty)
+        val perBatch =
+          if (bs.isEmpty || all.isEmpty) "null"
+          else BigDecimal(bs.sum.toDouble / all.length)
+            .setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
         Some(s"""{"runs":${runs.length},"batches":${med(perRun.map(_.length.toDouble))},""" +
           s""""shuffle_partitions":${widths.mkString("[", ",", "]")},""" +
           s""""trigger_ms":${phase("triggerExecution")},""" +
           s""""planning_ms":${phase("queryPlanning")},""" +
           s""""add_batch_ms":${phase("addBatch")},""" +
           s""""state_commit_ms":${state(_.commitTimeMs)},""" +
-          s""""state_updates_ms":${state(_.allUpdatesTimeMs)}}""")
+          s""""state_updates_ms":${state(_.allUpdatesTimeMs)},""" +
+          s""""broadcasts":${med(bs.map(_.toDouble))},""" +
+          s""""broadcasts_per_batch":$perBatch}""")
       }
     }
   }
@@ -123,6 +140,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val streams = new StreamLog
     spark.streams.addListener(streams)
+    val broadcasts = graft.util.BroadcastCount.on(spark.sparkContext)
 
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
@@ -189,8 +207,16 @@ object Bench {
       else {
         val cold = runOne(name, fn)
         streams.current = Some(name)
+        // broadcasts are counted outside the timed window: settling
+        // waits for the listener bus to deliver every block update
         val timed =
-          try Seq.fill(iters)(runOne(name, fn)).sorted
+          try Seq.fill(iters) {
+            val before = broadcasts.settled(spark.sparkContext)
+            val sec = runOne(name, fn)
+            streams.broadcastsOf(name,
+              broadcasts.settled(spark.sparkContext) - before)
+            sec
+          }.sorted
           finally streams.current = None
         Some((name, cold, timed))
       }

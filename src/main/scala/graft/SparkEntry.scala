@@ -3464,13 +3464,13 @@ object SparkEntry {
   // ------------------------------------------------------------------
   // q96 — stream-stream interval join (extension: Streaming.intervalJoin):
   // purchases attributed to a same-user view within the following hour,
-  // both sides arriving as independent file streams with out-of-order
-  // batch boundaries (event_id mod 3 splits, maxFilesPerTrigger=1, so a
-  // view and its purchase routinely land in different micro-batches and
-  // the pair must come from join STATE). An effectively-infinite
-  // watermark pins batching-invariance — the emitted pair set equals
-  // the batch join, which is what the oracle runs. Timestamps compare
-  // at micros on both engines (epoch_us / timestamp_micros).
+  // both sides arriving in out-of-order micro-batches (event_id mod 3
+  // splits, maxFilesPerTrigger=1, so a view and its purchase routinely
+  // land in different micro-batches and the pair must come from the
+  // join's per-user state). An effectively-infinite watermark pins
+  // batching-invariance — the emitted pair set equals the batch join,
+  // which is what the oracle runs. Timestamps compare at micros on both
+  // engines (epoch_us / timestamp_micros).
   private def q96(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
       .filter(col("event_type").isin("view", "purchase"))
@@ -3483,15 +3483,12 @@ object SparkEntry {
         .withColumn("b", pmod(col("event_id"), lit(3)).cast("int"))
     }
     val evSchema = ev.schema
-    // ONE file source, self-joined — not two independent sources over
-    // the same staged dir: two sources each track their own offsets,
-    // list the dir and read the batch file separately (2× the source
-    // machinery per micro-batch) while producing the SAME lockstep
-    // batch splits (same dir, same maxFilesPerTrigger=1, same listing
-    // order). Stream-stream SELF-joins are fully supported; the join
-    // state, watermark and emitted pair set are identical — the
-    // batching-invariance contract (infinite watermark) pins the
-    // result either way, and the oracle replays the batch join.
+    // ONE file source feeds both sides — not two independent sources
+    // over the same staged dir: two sources each track their own
+    // offsets, list the dir and read the batch file separately (2× the
+    // source machinery per micro-batch) while producing the SAME
+    // lockstep batch splits. intervalJoin tags and unions the two
+    // filtered branches of it into one keyed stateful reduce.
     val src = s.readStream.schema(evSchema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
     val views = src.filter(col("event_type") === "view")

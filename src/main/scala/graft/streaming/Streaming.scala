@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 import java.sql.Timestamp
 
 /** Structured Streaming extension of the pipeline algebra.
@@ -75,20 +76,61 @@ object Streaming {
     stream.join(broadcast(dim), joinKeys)
   }
 
-  /** Stream-stream interval join — match each left event to the right
-    * events with the same keys whose event time falls in
+  /** Stream-stream interval join — match each left row to the right rows
+    * with the same keys whose event time falls in
     * [left.ts + lowerMicros, left.ts + upperMicros] (the attribution
-    * shape: purchases within an hour of a view). Both sides carry the
-    * watermark and the range condition sits on the raw event-time
-    * columns — exactly what Spark's state cleanup needs to bound the
-    * join buffers: each side retains only rows inside
-    * watermark + interval, so state is O(arrival rate × window), not
-    * O(stream). A row arriving later than `watermark` past the join
-    * frontier can be dropped — size the delay for the pipeline's real
-    * disorder (tests use an effectively-infinite delay to pin
-    * batching-invariance). Works identically on batch DataFrames
-    * (withWatermark is a no-op there), which is how the oracle checks
-    * it. Output columns: left's prefixed `l_`, right's prefixed `r_`.
+    * shape: purchases within an hour of a view). Output columns: left's
+    * prefixed `l_`, right's prefixed `r_`, with their input types.
+    *
+    * LINEAGE: hadron's reduce-side join (`joinMR`/`joinStep`, SURVEY
+    * §2.4, the batch form ported as [[graft.ops.MonoidJoin.joinStep]]):
+    * tag each input, union, group on the join key, and pair the sides in
+    * the reducer. Here the reducer is `flatMapGroupsWithState` and its
+    * per-key `GroupState` buffers the key's unexpired left and right
+    * rows, so a pair whose rows land in different micro-batches comes
+    * from state. Each batch emits new-left × (buffered ∪ new) right and
+    * buffered-left × new-right pairs. One code path serves batch and
+    * stream inputs: on a batch DataFrame each key is reduced once with
+    * empty state, which is the plain equi-join with the range filter
+    * (how the oracle checks it). Both inputs must be streams, or both
+    * batch; rows with a null key or a null event time never match.
+    *
+    * WATERMARK: each side keeps its own `withWatermark(watermark)` on
+    * the shared event-time column, so the global watermark is the min of
+    * the two sides, and the stateful operator drops a row at or behind
+    * the previous batch's watermark as late — the rule Spark's
+    * stream-stream join applies. A row behind a side's state watermark
+    * (the other side's watermark substituted into the range condition,
+    * truncated to ms, less 1 ms: [[IntervalJoin.leftDeadUs]]) is evicted
+    * at the end of the batch — again the join's rule, so the output
+    * multiset equals `left.join(right, cond)` on a stream for every
+    * batching (IntervalJoinSpec). In short, a left row goes once
+    * `l.ts + upper < watermark` and a right row once
+    * `r.ts − lower < watermark`; a key that receives no rows is cleaned
+    * by its event-time timeout. Size the delay for the pipeline's real
+    * disorder: a row later than it past the frontier can be dropped
+    * (an effectively-infinite delay pins batching-invariance).
+    *
+    * COST: one state row per key, rewritten in each batch where the key
+    * receives rows, holding that key's rows within the watermark plus
+    * the interval; the pairing is a per-key nested loop, as the join's
+    * state scan is. The query plans ONE stateful operator with one
+    * state store, where `StreamingSymmetricHashJoinExec` plans four per
+    * partition and broadcasts the session's Hadoop configuration in its
+    * constructor, so in every plan copy of itself: 27 broadcasts per
+    * micro-batch against 3 here (StreamingSpec pins the bound; NOTES.md
+    * has the JFR stacks).
+    *
+    * STATE FORMAT: a checkpoint written by the earlier
+    * `StreamingSymmetricHashJoinExec` form of this operator cannot be
+    * resumed by this one (different operator, different state schema);
+    * restart such a query on a fresh checkpoint location. Catalog
+    * queries checkpoint under a per-process directory deleted at exit
+    * (`SparkEntry.streamCkptRoot`, also under
+    * `SPARK_GRAFT_STREAM_CKPT_DIR`), so only a caller's own durable
+    * `checkpointLocation` is affected. The output carries no
+    * watermarked event-time column, so no event-time stateful operator
+    * can follow it in the same query.
     */
   def intervalJoin(
       left: DataFrame,
@@ -102,17 +144,42 @@ object Streaming {
     require(keys.nonEmpty, "intervalJoin needs at least one equi key")
     require(lowerMicros <= upperMicros,
       s"empty interval: [$lowerMicros, $upperMicros]")
-    val l = left.columns.foldLeft(left)((d, c) => d.withColumnRenamed(c, s"l_$c"))
-      .withWatermark(s"l_$leftTs", watermark)
-    val r = right.columns.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"r_$c"))
-      .withWatermark(s"r_$rightTs", watermark)
-    val cond = keys.map(k => col(s"l_$k") === col(s"r_$k"))
-      .reduce(_ && _) &&
-      col(s"r_$rightTs") >= col(s"l_$leftTs") +
-        expr(s"INTERVAL '$lowerMicros' MICROSECOND") &&
-      col(s"r_$rightTs") <= col(s"l_$leftTs") +
-        expr(s"INTERVAL '$upperMicros' MICROSECOND")
-    l.join(r, cond, "inner")
+    require(left.isStreaming == right.isStreaming,
+      "intervalJoin joins two streams or two batch DataFrames")
+    def q(c: String) = col("`" + c.replace("`", "``") + "`")
+    val (lType, rType) = (left.schema, right.schema)
+    // the tagged union row: keys __k<i>, the event time (watermarked per
+    // side) and its micros, and the side's whole row in its own slot
+    def tagged(side: DataFrame, ts: String, isLeft: Boolean): DataFrame = {
+      val row = struct(side.columns.toSeq.map(q): _*)
+      side.select(keys.zipWithIndex.map { case (k, i) => q(k).as(s"__k$i") } ++
+          Seq(q(ts).as("__ts"), unix_micros(q(ts)).as("__us"),
+            (if (isLeft) row else lit(null).cast(lType)).as("__l"),
+            (if (isLeft) lit(null).cast(rType) else row).as("__r")): _*)
+        .withWatermark("__ts", watermark)
+        .filter(keys.indices.map(i => col(s"__k$i").isNotNull)
+          .reduce(_ && _) && col("__ts").isNotNull)
+    }
+    val u = tagged(left, leftTs, isLeft = true)
+      .union(tagged(right, rightTs, isLeft = false))
+    def buffer(t: StructType) = ArrayType(new StructType()
+      .add("us", LongType, nullable = false).add("row", t, nullable = false),
+      containsNull = false)
+    val stateType = new StructType()
+      .add("l", buffer(lType), nullable = false)
+      .add("r", buffer(rType), nullable = false)
+    val outType = StructType(
+      lType.fields.map(f => f.copy(name = "l_" + f.name)) ++
+        rType.fields.map(f => f.copy(name = "r_" + f.name)))
+    val step = new IntervalJoin(keys.length, lowerMicros, upperMicros,
+      streaming = left.isStreaming)
+    u.groupBy(keys.indices.map(i => col(s"__k$i")): _*)
+      .as[Row, Row](Encoders.row(StructType(u.schema.fields.take(keys.length))),
+        Encoders.row(u.schema))
+      .flatMapGroupsWithState[Row, Row](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(step.apply)(
+        Encoders.row(stateType), Encoders.row(outType))
+      .toDF()
   }
 
   /** Session windows via custom state — `flatMapGroupsWithState`, the

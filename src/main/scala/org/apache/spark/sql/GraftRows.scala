@@ -22,6 +22,9 @@ import org.apache.spark.sql.types.StructType
   * `ofRows` is the same doorway to `Dataset.ofRows`: a DataFrame over a
   * logical plan holding graft's own nodes (`graft.plans.BucketPairs`),
   * which the public API cannot build.
+  *
+  * `drainListeners` waits until the listener bus (`private[spark]`) has
+  * delivered every event posted so far ([[graft.util.BroadcastCount]]).
   */
 object GraftRows {
   def internalDataFrame(
@@ -33,4 +36,7 @@ object GraftRows {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

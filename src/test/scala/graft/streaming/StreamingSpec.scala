@@ -384,6 +384,41 @@ class StreamingSpec extends SparkSpec {
     assert(batch == Set((1L, 10L)))
   }
 
+  test("intervalJoin broadcasts at most 4 times per micro-batch over a " +
+      "3-batch run (Spark's stream-stream join broadcast the Hadoop " +
+      "configuration in every plan copy of itself: ~27 per batch)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val events = MemoryStream[Event]
+    val src = events.toDF()
+    val q = Streaming.intervalJoin(
+        src.filter(col("event_type") === "view"),
+        src.filter(col("event_type") === "purchase"), Seq("user_id"),
+        "ts", "ts", lowerMicros = 0L, upperMicros = 3600L * 1000000L,
+        watermark = "36500 days")
+      .writeStream.format("memory").queryName("ij_broadcasts")
+      .outputMode(OutputMode.Append()).start()
+    val broadcasts = graft.util.BroadcastCount.on(sc)
+    try {
+      val perBatch = (0 until 3).map { b =>
+        val before = broadcasts.settled(sc)
+        events.addData(Event(2L * b, ts(10 * b), 1L, "view", 0.0),
+          Event(2L * b + 1, ts(10 * b + 5), 1L, "purchase", 1.0))
+        q.processAllAvailable()
+        broadcasts.settled(sc) - before
+      }
+      info(s"broadcasts per batch: ${perBatch.mkString(", ")}")
+      assert(perBatch.forall(_ <= 4), perBatch.mkString(","))
+      // each purchase pairs with every earlier view
+      assert(spark.table("ij_broadcasts").count() == 6)
+    } finally {
+      q.stop()
+      sc.removeSparkListener(broadcasts)
+      spark.catalog.dropTempView("ij_broadcasts")
+    }
+  }
+
   // ---- cusumStream ---------------------------------------------------
 
   test("cusumStream carries the recurrence across micro-batches and " +
